@@ -8,9 +8,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bench {
 
-  /** One query's converged timing — shared by the bench and the
-    * order-variance study (tools.BenchOrder) so both measure under the
-    * SAME protocol.
+  /** Every successful run's seconds, plus the last run failure (if any). */
+  final case class Timing(runs: Vector[Double], error: Option[Throwable]) {
+    /** The reported time: the fastest run, or -1 when every run failed. */
+    def best: Double = if (runs.nonEmpty) runs.min else -1.0
+  }
+
+  /** The input directory of every timing main: SPARK_GRAFT_SF_DIR. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** One query's converged timing — shared by the bench and every
+    * tools.Measure mode that times queries, so all of them measure under
+    * the SAME protocol.
     *
     * Boundary hygiene first: one explicit GC at each query BOUNDARY
     * (not per run) — garbage from a heavy predecessor (multi-GB
@@ -44,15 +53,16 @@ object Bench {
     * (monotone) ramp the newest run IS the minimum, which defers
     * convergence until the curve actually flattens.
     * A failed run contributes no time (a near-instant failure would
-    * report a broken query as fast); a query whose every run failed
-    * reports -1.
+    * report a broken query as fast); its error is kept, so a query whose
+    * every run failed yields no times and says why.
     */
   private[graft] def timeQuery(
       spark: SparkSession,
       fn: (SparkSession, String) => DataFrame,
-      sfDir: String): Double = {
+      sfDir: String): Timing = {
     System.gc()
     var times = Vector.empty[Double]
+    var error = Option.empty[Throwable]
     var runs = 0
     def converged: Boolean = times.size >= 4 && {
       val fastest = times.sorted.take(2)
@@ -62,20 +72,19 @@ object Bench {
     while (runs < 12 && !converged) {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
+        catch { case e: Throwable => error = Some(e); false }
       val secs = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       if (ok) times :+= secs
       runs += 1
     }
-    if (times.nonEmpty) times.min else -1.0
+    Timing(times, error)
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.getOrCreate("graft-bench")
     val results = SparkEntry.headlines.map { q =>
-      q.name -> timeQuery(spark, q.fn, sfDir)
+      q.name -> timeQuery(spark, q.fn, sfDir).best
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")

@@ -144,7 +144,7 @@ object Dedup {
     * with the signatures attached back by two id-joins. NOTE: references
     * `signatures` three times (banding + both attach sides); callers for
     * whom the signature map is expensive must pass a MATERIALIZED frame
-    * (NearDupStream checkpoints its batch signatures; Diag caches).
+    * (NearDupStream checkpoints its batch signatures).
     * Emits each candidate pair ONCE (pre-round-8 this emitted one row
     * per colliding band; all consumers treat the output as a set).
     */

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why: the OR-chain is how a blocklist filter arrives from SQL tools
   * and hand-written code, and it scans the text once PER TERM
-  * (O(k·|text|)), where the automaton scans once total (ScaleProbe:
+  * (O(k·|text|)), where the automaton scans once total (`Measure scale`:
   * composed contains grows 4.3× for 16× terms while the automaton stays
   * ~flat). Legal because the rewrite is exactly equivalent, including
   * NULL semantics: for NULL text every `contains` is NULL so the OR is

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.catalog.QueryDef
+import graft.operators.OracleSql.pctlSql
 import graft.tables.Tables
 import graft.textops.TextAnalysis
 import org.apache.spark.sql.{DataFrame, Encoders}
@@ -81,13 +82,6 @@ object AnalyticsQueries {
     // half-way inputs (observed on q70 at sf0.1).
     QueryDef(
       "q69_percentiles", {
-        // Spark formula on a DuckDB sorted list (1-indexed):
-        def pctlSql(list: String, p: String): String =
-          s"""(CASE WHEN floor($p * (n - 1)) = ceil($p * (n - 1))
-             |      THEN CAST($list[CAST($p * (n - 1) AS BIGINT) + 1] AS DOUBLE)
-             |      ELSE (ceil($p * (n - 1)) - $p * (n - 1)) * $list[CAST(floor($p * (n - 1)) AS BIGINT) + 1]
-             |         + ($p * (n - 1) - floor($p * (n - 1))) * $list[CAST(ceil($p * (n - 1)) AS BIGINT) + 1]
-             |      END)""".stripMargin.replaceAll("\n\\s*", " ")
         def q4(x: String): String = s"CAST(round(($x) * 10000) AS BIGINT) / 10000.0"
         s"""WITH c AS (SELECT l_returnflag, ${Exact.centsSql("l_extendedprice")} AS cents, l_quantity
            |           FROM lineitem),
@@ -659,12 +653,6 @@ object AnalyticsQueries {
     // mergeable sketch per group instead of a sorted-list holistic agg.
     QueryDef(
       "q86_approx_quantile", {
-        def pctlSql(list: String, p: String): String =
-          s"""(CASE WHEN floor($p * (n - 1)) = ceil($p * (n - 1))
-             |      THEN CAST($list[CAST($p * (n - 1) AS BIGINT) + 1] AS DOUBLE)
-             |      ELSE (ceil($p * (n - 1)) - $p * (n - 1)) * $list[CAST(floor($p * (n - 1)) AS BIGINT) + 1]
-             |         + ($p * (n - 1) - floor($p * (n - 1))) * $list[CAST(ceil($p * (n - 1)) AS BIGINT) + 1]
-             |      END)""".stripMargin.replaceAll("\n\\s*", " ")
         s"""WITH c AS (SELECT l_returnflag, ${Exact.centsSql("l_extendedprice")} AS cents
            |           FROM lineitem),
            |a AS (SELECT l_returnflag, count(*) AS n,

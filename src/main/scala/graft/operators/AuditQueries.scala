@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.catalog.QueryDef
+import graft.operators.OracleSql.cosineSql
 import graft.tables.Tables
 import graft.textops.TextAnalysis
 import org.apache.spark.sql.functions._
@@ -39,11 +40,6 @@ import org.apache.spark.sql.functions._
   *    |queries|·k rows.
   */
 object AuditQueries {
-
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-  private def cosineSql(a: String, b: String): String =
-    s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
 
   /** q230's stopword probe set (ASCII, lowercase). def: `defs` first. */
   private[operators] def calibStops: Seq[String] = Seq(

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.catalog.QueryDef
+import graft.operators.OracleSql.cosineSql
 import graft.similarity.Similarity
 import graft.tables.Tables
 import graft.textops.TextAnalysis
@@ -3210,9 +3211,9 @@ object CurationQueries {
              |           FROM bx$sfx GROUP BY band, bucket),
              |cand$sfx AS (SELECT CAST(coalesce(sum(m * (m - 1) // 2), 0)
              |               AS BIGINT) AS cands
-             |             FROM bc$sfx WHERE m BETWEEN 2 AND 1000),
+             |             FROM bc$sfx WHERE m BETWEEN 2 AND ${Similarity.DefaultMaxBucket}),
              |live$sfx AS (SELECT band, bucket FROM bc$sfx
-             |             WHERE m BETWEEN 2 AND 1000),
+             |             WHERE m BETWEEN 2 AND ${Similarity.DefaultMaxBucket}),
              |bl$sfx AS (SELECT bx$sfx.* FROM bx$sfx
              |           JOIN live$sfx USING (band, bucket)),
              |cp$sfx AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -3260,13 +3261,13 @@ object CurationQueries {
         // (2.58 vs 2.33 s mean ABBA) exactly because its eager
         // materialization serializes the widths that the lazy plan
         // overlaps. Occupancy m = size(members) under the identical
-        // BETWEEN(2, 1000) guard — the same multiset the former
+        // BETWEEN(2, DefaultMaxBucket) guard — the same multiset the former
         // count(*) aggregate produced.
         val buckets = Similarity.hyperplaneBuckets(uni, np, 8)
           .select(col("vec_id").as("id"), col("band"), col("bucket"))
           .groupBy("band", "bucket")
           .agg(collect_list(col("id")).as("members"))
-          .filter(size(col("members")).between(2, 1000))
+          .filter(size(col("members")).between(2, Similarity.DefaultMaxBucket))
         val cand = buckets
           .select(size(col("members")).cast("long").as("m"))
           .agg(coalesce(
@@ -3738,11 +3739,6 @@ object CurationQueries {
           .as("embedding"))
     base.unionByName(pts).localCheckpoint()
   }
-
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-  private def cosineSql(a: String, b: String): String =
-    s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
 
   /** 56-plane / 8-band hyperplane signature CTEs over `uni` — the
     * wider-band mirror of PipelineQueries.hyperplaneSigCtes: 128 bucket

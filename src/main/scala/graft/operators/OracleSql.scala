@@ -18,4 +18,24 @@ object OracleSql {
   /** Mirror of TextAnalysis.wsTokens over a column/expression. */
   def wsTokens(e: String = "text"): String =
     s"list_filter(string_split_regex($e, '\\s+'), w -> w <> '')"
+
+  /** DuckDB SQL fragment: sequential-double dot product of two float
+    * lists — bit-exact with Similarity.dot.
+    */
+  def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
+
+  /** Cosine of two float lists over [[dotSql]]. */
+  def cosineSql(a: String, b: String): String =
+    s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
+
+  /** Spark's linear-interpolation percentile at fraction `p` over a
+    * 1-indexed DuckDB sorted `list` whose length is the column `n`.
+    */
+  def pctlSql(list: String, p: String): String =
+    s"""(CASE WHEN floor($p * (n - 1)) = ceil($p * (n - 1))
+       |      THEN CAST($list[CAST($p * (n - 1) AS BIGINT) + 1] AS DOUBLE)
+       |      ELSE (ceil($p * (n - 1)) - $p * (n - 1)) * $list[CAST(floor($p * (n - 1)) AS BIGINT) + 1]
+       |         + ($p * (n - 1) - floor($p * (n - 1))) * $list[CAST(ceil($p * (n - 1)) AS BIGINT) + 1]
+       |      END)""".stripMargin.replaceAll("\n\\s*", " ")
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.catalog.QueryDef
 import graft.dedup.Dedup
+import graft.operators.OracleSql.cosineSql
 import graft.similarity.Similarity
 import graft.tables.Tables
 import graft.textops.TextAnalysis
@@ -18,13 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
-  /** DuckDB SQL fragment: sequential-double dot product of two float
-    * lists — bit-exact with Similarity.dot.
-    */
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-  private def cosineSql(a: String, b: String): String =
-    s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
   private def l2Sql(a: String, b: String): String =
     s"list_sum(list_transform(list_zip($a, $b), " +
       "x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))))"

@@ -24,6 +24,13 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** Hyperplane-LSH skew valve: buckets holding more members than this
+    * are dropped before pair expansion (per-bucket work ≤ cap²). One
+    * value for every LSH entry point and for q286's oracle, so the
+    * Spark side and its DuckDB mirror cannot drift apart.
+    */
+  val DefaultMaxBucket = 1000
+
   /** Sequential-fold dot product of two float-array columns, in double. */
   def dot(a: Column, b: Column): Column =
     aggregate(
@@ -471,7 +478,7 @@ object Similarity {
     * per-band recall cost of one more agreeing bit — e.g. 32 planes for
     * ~1M vectors, 48 for ~1B — or raise maxBucket in step. The guard
     * protects against pathological skew, not against under-provisioned
-    * bucket space. ScaleProbe measures both regimes on sign-masked 10×
+    * bucket space. `Measure scale` probes both regimes on sign-masked 10×
     * corpora: knobs held fixed the candidate surface grows ~n²/2^r (45×
     * wall for 10× data), with the sizing rule applied (+log2(10) bits
     * per band) wall tracks the data. Buckets are per-band Longs, so the
@@ -484,7 +491,7 @@ object Similarity {
       bands: Int = 4,
       idCol: String = "vec_id",
       embCol: String = "embedding",
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // keys-only bucket gathering (the Dedup.lshCandidatePairs shape —
     // guide §2.3 "shuffle keys, not payloads"): the (band, bucket)
     // exchange carries (id, band, bucket) rows, never the embeddings —
@@ -557,7 +564,7 @@ object Similarity {
       bands: Int = 4,
       idCol: String = "vec_id",
       embCol: String = "embedding",
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // keys-only per-side bucket gathering + embedding re-attach, the
     // same §2.3 restructure as [[embeddingNearDups]]
     def bucketed(side: DataFrame, out: String): DataFrame =
@@ -733,7 +740,7 @@ object Similarity {
       bands: Int = 4,
       idCol: String = "vec_id",
       embCol: String = "embedding",
-      maxBucket: Int = 1000): DataFrame =
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
     graft.dedup.Dedup.bucketOccupancyStats(
       hyperplaneBuckets(corpus, nPlanes, bands, idCol, embCol), maxBucket)
 

@@ -36,7 +36,7 @@ object BenchDiff {
   /** Default relative regression gate, plus raised per-query floors for
     * the queries whose SESSION-ORDER variance alone was measured past
     * 25% (ADJUDICATIONS.md "Order-variance study" appendix, round 8:
-    * 3-order BenchOrder run; floor = measured max/min spread + ~0.15
+    * 3-order `Measure order` run; floor = measured max/min spread + ~0.15
     * margin). q201_blocklist measured 2.27× but runs 0.1–0.2 s — the
     * 0.25 s absolute floor already guards sub-second jitter. */
   private val defaultGate = 0.25
@@ -139,7 +139,7 @@ object BenchDiff {
       .foreach(q => println(s"[benchdiff] new in suite: $q"))
     if (unexplained.nonEmpty) {
       println(s"[benchdiff] FAIL: ${unexplained.size} regression(s) >25% " +
-        "without an adjudication entry — run QTime A/Bs and record the verdict")
+        "without an adjudication entry — run `Measure time` A/Bs and record the verdict")
       sys.exit(1)
     }
     println("[benchdiff] OK")

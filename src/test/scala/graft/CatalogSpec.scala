@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.util.{Failure, Success, Try}
 
 /** Catalog-wide invariants + spot value checks on sf0.001. */
 class CatalogSpec extends SparkSpec {
@@ -12,11 +13,18 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("every catalog query runs on sf0.001 and returns rows") {
-    SparkEntry.catalog.foreach { q =>
-      val df = q.fn(spark, sf0001)
-      val n = df.count()
-      withClue(s"${q.name}: ") { assert(n > 0, s"${q.name} returned 0 rows") }
+    // run the whole catalog and fail ONCE with every broken query: an
+    // abort at the first failure would leave every later query unchecked
+    val failures = SparkEntry.catalog.flatMap { q =>
+      Try(q.fn(spark, sf0001).count()) match {
+        case Success(n) if n > 0 => None
+        case Success(_) => Some(s"${q.name}: returned 0 rows")
+        case Failure(e) => Some(s"${q.name}: ${e.getClass.getName}: " +
+          String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(""))
+      }
     }
+    assert(failures.isEmpty, s"${failures.size} of ${SparkEntry.catalog.size} " +
+      s"catalog queries failed:\n${failures.mkString("\n")}")
   }
 
   test("entry returns rows") {

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, Final, Partial}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Physical-plan assertions — the 100 TB properties must not regress:
   * filters/columns reach the parquet scan, dims broadcast, aggregations
@@ -740,12 +744,32 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     val edges = Seq((1L, 10L), (1L, 11L), (2L, 10L), (3L, 12L))
       .toDF("c", "p")
-    val composed = graft.graph.Graph.hitsAuthMicro(edges, pin = identity)
-      .queryExecution.executedPlan.toString
+    val composedPlan = graft.graph.Graph.hitsAuthMicro(edges, pin = identity)
+      .queryExecution.executedPlan
+    val composed = composedPlan.toString
     assert(!composed.contains("CartesianProduct"),
       s"normalization constants must broadcast:\n$composed")
     val nAggs = "HashAggregate".r.findAllIn(composed).length
     assert(nAggs >= 4, s"each half-step sum must map-side combine:\n$composed")
+    // the exact map-side-combine invariant the count approximates: every
+    // exchange feeding a FINAL aggregate sits directly on its PARTIAL half
+    val root = composedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    def inMode(p: SparkPlan, m: AggregateMode): Boolean = p match {
+      case h: HashAggregateExec =>
+        h.aggregateExpressions.nonEmpty && h.aggregateExpressions.forall(_.mode == m)
+      case _ => false
+    }
+    val finalInputs = root.collect {
+      case h: HashAggregateExec if inMode(h, Final) => h.child
+    }.collect { case e: Exchange => e }
+    assert(finalInputs.size >= 2, s"half-step sums must aggregate across an exchange:\n$composed")
+    finalInputs.foreach { e =>
+      assert(inMode(e.child, Partial),
+        s"exchange under a final aggregate must carry partial aggregates:\n$e")
+    }
 
     // The pinned production plan: the visible fragment reads checkpointed
     // blocks (the pins are real) and the final max-norm still map-side
