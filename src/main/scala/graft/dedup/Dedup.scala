@@ -91,19 +91,78 @@ object Dedup {
       graft.functions.MinHashFunctions.graftMinHash(
         TextAnalysis.wsTokens(col(textCol)), k, numHashes).as("sig"))
 
-  /** LSH candidate pairs: split the signature into `bands` bands of
-    * H/bands rows; docs sharing any band-hash land in one bucket and form
-    * candidate pairs (a < b). Pair emission is bounded per bucket — a
-    * giant bucket (degenerate shingles) would explode quadratically, so
-    * buckets above `maxBucket` are dropped (logged upstream if needed) —
-    * the standard skew guard at scale.
+  // ---------- bucketed-pair core ----------
+  // Every near-dup join is the MapReduce reduce step: group postings by
+  // key, then emit pairs inside each group. Its one spelling, shared by
+  // the paths here, Similarity's hyperplane paths, NearDupStream and q286.
+
+  /** The skew cap: buckets holding more members are dropped before pair
+    * expansion, so per-bucket work stays ≤ cap² on a degenerate corpus.
+    * The `maxBucket` default of every capped operator and the value the
+    * q30/q106/q286 oracles replay, so Spark and DuckDB cannot drift.
     */
-  def lshCandidates(
-      signatures: DataFrame,
-      idCol: String = "doc_id",
-      bands: Int = 16,
-      maxBucket: Int = 1000): DataFrame =
-    lshCandidatePairs(signatures, idCol, bands, maxBucket)
+  val DefaultMaxBucket = 1000
+
+  /** Capped postings gather: ONE shuffle collects each (band, bucket)'s
+    * `member` values as `out`, keeping only buckets with `minMembers` to
+    * `maxBucket` members. The cap bounds both the holistic member list
+    * and the quadratic pair expansion. Self-joins gather with
+    * `minMembers = 2`; each side of a cross join gathers with 1.
+    */
+  private[graft] def gatherBuckets(
+      postings: DataFrame,
+      member: Column,
+      out: String = "members",
+      minMembers: Int = 2,
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    postings.groupBy("band", "bucket")
+      .agg(collect_list(member).as(out))
+      .filter(size(col(out)).between(minMembers, maxBucket))
+
+  /** In-bucket pair expansion over the `members` array column: every
+    * position pair i < j becomes a struct of (id_a, id_b) = (least,
+    * greatest) of the two members' `id`s plus one field per `carry`
+    * entry built from (x, y). `keep` filters those structs inside the
+    * array, BEFORE the explode materializes them (the prefix filters'
+    * length and positional bounds). Output: distinct (id_a, id_b, `out`
+    * fields) — a pair colliding in several buckets appears once.
+    */
+  private[graft] def bucketPairs(
+      buckets: DataFrame,
+      members: String = "members",
+      id: Column => Column = x => x,
+      carry: Seq[(String, (Column, Column) => Column)] = Nil,
+      keep: Option[Column => Column] = None,
+      out: Seq[String] = Nil): DataFrame = {
+    val ms = col(members)
+    val pairsCol = flatten(transform(ms, (x, i) => {
+      val later = transform(slice(ms, i + 2, size(ms)), y => struct(
+        least(id(x), id(y)).as("id_a") +: greatest(id(x), id(y)).as("id_b") +:
+          carry.map { case (name, f) => f(x, y).as(name) }: _*))
+      keep.fold(later)(filter(later, _))
+    }))
+    buckets
+      .select(explode(pairsCol).as("p"))
+      .select(("id_a" +: "id_b" +: out).map(f => col(s"p.$f").as(f)): _*)
+      .distinct()
+  }
+
+  /** Cross-side expansion: gathers each side's `id` postings under the
+    * cap (`minMembers = 1`), joins the two member lists on (band,
+    * bucket) and emits every (left, right) pair once as (id_a, id_b).
+    * Only cross pairs are emitted, never pairs within one side, and
+    * the id spaces stay independent: equal ids across sides never
+    * merge. Per-bucket expansion is bounded by maxBucket².
+    */
+  private[graft] def crossBucketPairs(
+      left: DataFrame, right: DataFrame, id: String, maxBucket: Int): DataFrame =
+    gatherBuckets(left, col(id), "ml", 1, maxBucket)
+      .join(gatherBuckets(right, col(id), "mr", 1, maxBucket), Seq("band", "bucket"))
+      .select(explode(flatten(transform(col("ml"), x =>
+        transform(col("mr"), y =>
+          struct(x.as("id_a"), y.as("id_b")))))).as("p"))
+      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+      .distinct()
 
   /** Distinct candidate pairs from band buckets, KEYS ONLY: the
     * (band, bucket) exchange carries (id, band, bucket) rows — ~24 B per
@@ -122,32 +181,12 @@ object Dedup {
       signatures: DataFrame,
       idCol: String = "doc_id",
       bands: Int = 16,
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val banded = bandBuckets(signatures, idCol, bands)
       .select(col(idCol).as("id"), col("band"), col("bucket"))
-    // ONE shuffle: gather each bucket's member ids, expand pairs
-    // in-bucket. maxBucket bounds the holistic member list AND the
-    // quadratic pair expansion — the skew guard for degenerate buckets.
-    val buckets = banded.groupBy("band", "bucket")
-      .agg(collect_list(col("id")).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-    val pairsCol = flatten(transform(col("members"), (x, i) =>
-      transform(slice(col("members"), i + 2, size(col("members"))),
-        y => struct(least(x, y).as("id_a"), greatest(x, y).as("id_b")))))
-    buckets
-      .select(explode(pairsCol).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
+    bucketPairs(gatherBuckets(banded, col("id"), maxBucket = maxBucket))
   }
 
-  /** Candidate pairs CARRYING both signatures — [[lshCandidatePairs]]
-    * with the signatures attached back by two id-joins. NOTE: references
-    * `signatures` three times (banding + both attach sides); callers for
-    * whom the signature map is expensive must pass a MATERIALIZED frame
-    * (NearDupStream checkpoints its batch signatures).
-    * Emits each candidate pair ONCE (pre-round-8 this emitted one row
-    * per colliding band; all consumers treat the output as a set).
-    */
   /** (id, sig, band, bucket) rows — one per signature band. The bucket
     * key is xxhash64 over (band, rotl-xor fold of the band's signature
     * rows): all numeric, no per-row string assembly (concat of H longs
@@ -173,11 +212,19 @@ object Dedup {
         }))
         .as(Seq("band", "bucket")))
 
+  /** Candidate pairs CARRYING both signatures — [[lshCandidatePairs]]
+    * with the signatures attached back by two id-joins. NOTE: references
+    * `signatures` three times (banding + both attach sides); callers for
+    * whom the signature map is expensive must pass a MATERIALIZED frame
+    * (NearDupStream checkpoints its batch signatures).
+    * Emits each candidate pair ONCE (pre-round-8 this emitted one row
+    * per colliding band; all consumers treat the output as a set).
+    */
   def lshCandidatesWithSigs(
       signatures: DataFrame,
       idCol: String = "doc_id",
       bands: Int = 16,
-      maxBucket: Int = 1000): DataFrame =
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
     lshCandidatePairs(signatures, idCol, bands, maxBucket)
       .join(signatures.select(col(idCol).as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(signatures.select(col(idCol).as("id_b"), col("sig").as("sig_b")), "id_b")
@@ -204,12 +251,11 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       k: Int = 3): DataFrame = {
-    val ids = pairs.select(explode(array(col("id_a"), col("id_b"))).as("pid")).distinct()
     // localCheckpoint: both attach joins reference this table — without
     // materialization the md5 scan runs twice. Size is bounded by the
     // semi-join prune (docs that appear in a pair), which at scale is
     // ≪ corpus by the candidate-generation contract.
-    val sh = docs.join(ids, col(idCol) === col("pid"), "left_semi")
+    val sh = docs.join(pairIds(pairs), col(idCol) === col("pid"), "left_semi")
       .select(col(idCol).as("id"),
         graft.functions.GramHashFunctions.graftGramMd5(
           TextAnalysis.wsTokens(col(textCol)), k, distinct = true).as("sh"))
@@ -221,40 +267,69 @@ object Dedup {
     * for callers that already materialized the sets (the prefix-filter
     * join), so the md5 scan isn't paid again per verify side.
     */
-  def ngramJaccardOnSets(shSets: DataFrame, pairs: DataFrame): DataFrame = {
-    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-    pairs
+  def ngramJaccardOnSets(shSets: DataFrame, pairs: DataFrame): DataFrame =
+    withJaccard(pairs
       .join(shSets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(shSets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("inter", inter)
+      .join(shSets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b"),
+      "sh_a", "sh_b")
+      .select("id_a", "id_b", "jaccard")
+
+  /** Adds `inter` = |shA ∩ shB| and `jaccard` = inter / |shA ∪ shB|
+    * rounded to 4 decimals — the contract every set-Jaccard oracle checks.
+    */
+  private def withJaccard(pairs: DataFrame, shA: String, shB: String): DataFrame =
+    pairs
+      .withColumn("inter", size(array_intersect(col(shA), col(shB))))
       .withColumn("jaccard",
         round(col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"), 4))
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Signature-estimated Jaccard for candidate pairs: fraction of equal
-    * MinHash components — a per-pair zip (no shingle explode), used to
-    * discard far-below-threshold candidates before the expensive exact
-    * verification join. Estimator std ≈ sqrt(j(1-j)/H).
-    */
-  def estimateJaccard(
-      pairsWithSigs: DataFrame,
-      idCol: String = "doc_id"): DataFrame =
-    pairsWithSigs
-      .withColumn("est_jaccard", sigEstimate(col("sig_a"), col("sig_b")))
-      .select("id_a", "id_b", "est_jaccard")
+          (size(col(shA)) + size(col(shB)) - col("inter")).cast("double"), 4))
 
   /** The MinHash Jaccard estimator as a column: fraction of equal
-    * signature components — one spelling shared by [[estimateJaccard]]
-    * and the fused verify stages so the pre-filter semantics cannot
-    * drift between paths.
+    * signature components — a per-pair zip, no shingle explode.
+    * Estimator std ≈ sqrt(j(1-j)/H). One spelling shared by the fused
+    * verify stages here and NearDupStream's estimate gate, so the
+    * pre-filter semantics cannot drift between paths.
     */
   private[graft] def sigEstimate(sigA: Column, sigB: Column): Column =
     aggregate(zip_with(sigA, sigB,
         (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") /
       size(sigA).cast("double")
+
+  /** Distinct ids on either side of a pair set, as `pid`. */
+  private def pairIds(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(col("id_a"), col("id_b"))).as("pid")).distinct()
+
+  /** ONE participant-only pass computing BOTH per-doc features — the
+    * MinHash signature `sig$sfx` (estimate pre-filter) and the hashed
+    * shingle set `sh$sfx` (exact verify) — semi-join-pruned to `pids`.
+    */
+  private def sigShFeatures(
+      docs: DataFrame, pids: DataFrame, idCol: String, textCol: String,
+      k: Int, numHashes: Int, id: String, sfx: String): DataFrame =
+    docs.join(pids, col(idCol) === col("pid"), "left_semi")
+      .select(col(idCol).as(id),
+        graft.functions.MinHashFunctions.graftMinHash(
+          TextAnalysis.wsTokens(col(textCol)), k, numHashes).as(s"sig$sfx"),
+        graft.functions.GramHashFunctions.graftGramMd5(
+          TextAnalysis.wsTokens(col(textCol)), k, distinct = true).as(s"sh$sfx"))
+
+  /** Fused estimate + verify over pairs carrying `sig_<a>`, `sh_<a>`,
+    * `sig_<b>`, `sh_<b>`: only pairs passing the estimate pre-filter (5σ
+    * below `threshold`) pay the shingle intersect. Output: (id_a, id_b,
+    * jaccard ≥ threshold).
+    */
+  private def estimateThenVerify(
+      attached: DataFrame, a: String, b: String,
+      threshold: Double, numHashes: Int): DataFrame = {
+    val margin = 5.0 * math.sqrt(threshold * (1 - threshold) / numHashes)
+    withJaccard(
+      attached.filter(
+        sigEstimate(col(s"sig_$a"), col(s"sig_$b")) >= threshold - margin),
+      s"sh_$a", s"sh_$b")
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+  }
 
   /** MinHash near-dup pipeline: LSH candidates → signature-estimate
     * pre-filter (5σ margin below threshold) → exact n-gram Jaccard.
@@ -292,39 +367,15 @@ object Dedup {
     // the whole sig→band→bucket pipeline would execute twice. The
     // checkpointed set is small by construction.
     val pairs = lshCandidatePairs(sigs, idCol, bands).localCheckpoint()
-    val ids = pairs
-      .select(explode(array(col("id_a"), col("id_b"))).as("pid")).distinct()
-    // ONE participant-only pass computes BOTH per-doc features — the
-    // MinHash signature (estimate pre-filter) and the hashed shingle set
-    // (exact verify). Docs that appear in a candidate pair are ≪ corpus
-    // by the candidate-generation contract, so the expensive per-doc
-    // feature computation is semi-join-pruned AND paid once (pre-round-8
-    // the estimate and verify stages each ran their own feature pass).
-    val feats = docs.join(ids, col(idCol) === col("pid"), "left_semi")
-      .select(col(idCol).as("id"),
-        graft.functions.MinHashFunctions.graftMinHash(
-          TextAnalysis.wsTokens(col(textCol)), k, numHashes).as("sig"),
-        graft.functions.GramHashFunctions.graftGramMd5(
-          TextAnalysis.wsTokens(col(textCol)), k, distinct = true).as("sh"))
-      .localCheckpoint()
-    val margin = 5.0 * math.sqrt(threshold * (1 - threshold) / numHashes)
-    // Fused estimate + verify: the signature pre-filter runs as a cheap
-    // zip over the attached sigs; only surviving rows pay the shingle
-    // intersect. Same output set as the former two-stage pipeline
-    // (est ≥ t−margin AND jaccard ≥ t), one attach join instead of two.
-    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-    pairs
+    // localCheckpoint: both attach joins read the participant features
+    val feats = sigShFeatures(docs, pairIds(pairs), idCol, textCol, k,
+      numHashes, "id", "").localCheckpoint()
+    estimateThenVerify(pairs
       .join(feats.select(col("id").as("id_a"),
         col("sig").as("sig_a"), col("sh").as("sh_a")), "id_a")
       .join(feats.select(col("id").as("id_b"),
-        col("sig").as("sig_b"), col("sh").as("sh_b")), "id_b")
-      .filter(sigEstimate(col("sig_a"), col("sig_b")) >= threshold - margin)
-      .withColumn("inter", inter)
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+        col("sig").as("sig_b"), col("sh").as("sh_b")), "id_b"),
+      "a", "b", threshold, numHashes)
   }
 
   /** Cross-corpus near-dup join: every (left, right) pair with n-gram
@@ -336,15 +387,9 @@ object Dedup {
     *
     * Same machinery as [[nearDupPairs]] — MinHash signatures, banded
     * buckets, estimate pre-filter, exact hashed-shingle verify — but the
-    * two sides bucket independently and only CROSS pairs are emitted
-    * (no in-corpus pairs from either side). One shuffle per side into
-    * the (band, bucket) join; per-bucket expansion is |L_b|×|R_b|,
-    * bounded by maxBucket² via the same skew guard as the self-join
-    * (both sides' over-full buckets drop — recall-for-boundedness, the
-    * guarded trade every production LSH join makes). The id spaces of
-    * the two corpora are independent (outputs are (id_a from left,
-    * id_b from right) — equal ids on both sides never collide because
-    * the sides are never unioned).
+    * two sides bucket independently and [[crossBucketPairs]] emits only
+    * CROSS pairs (id_a from left, id_b from right), with both sides'
+    * over-full buckets dropped by the same skew cap as the self-join.
     *
     * Recall budget: identical to [[nearDupPairs]] — the band-collision
     * probability depends only on (numHashes, bands, j), not on which
@@ -359,55 +404,28 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 96,
       bands: Int = 32,
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // keys-only per-side bucket gathering (same §2.3 trade as
     // lshCandidatePairs): the (band, bucket) join exchanges one id-list
     // row per non-empty bucket, never the signatures
-    def bucketed(side: DataFrame, out: String): DataFrame =
+    def banded(side: DataFrame): DataFrame =
       bandBuckets(minHashSignatures(side, idCol, textCol, k, numHashes),
         idCol, bands)
         .select(col(idCol), col("band"), col("bucket"))
-        .groupBy("band", "bucket")
-        .agg(collect_list(col(idCol)).as(out))
-        .filter(size(col(out)).between(1, maxBucket))
     // localCheckpoint: the cross-pair set is referenced three times
     // below (two per-side participant prunes + the attach join)
-    val pairs = bucketed(left, "ml").join(bucketed(right, "mr"),
-        Seq("band", "bucket"))
-      .select(explode(flatten(transform(col("ml"), x =>
-        transform(col("mr"), y =>
-          struct(x.as("id_a"), y.as("id_b")))))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
+    val pairs = crossBucketPairs(banded(left), banded(right), idCol, maxBucket)
       .localCheckpoint()
-    val margin = 5.0 * math.sqrt(threshold * (1 - threshold) / numHashes)
-    // per-side participant features — signature AND hashed-shingle set
-    // in ONE pruned pass per side (ngramJaccard's single-table attach
-    // can't serve here: the two id spaces may overlap without naming
-    // the same document)
+    // per-side participant features, one pruned pass per side (one
+    // shared table can't serve here: the two id spaces may overlap
+    // without naming the same document)
     def feats(side: DataFrame, pairCol: String): DataFrame =
-      side.join(pairs.select(col(pairCol).as("pid")).distinct(),
-          col(idCol) === col("pid"), "left_semi")
-        .select(col(idCol).as(pairCol),
-          graft.functions.MinHashFunctions.graftMinHash(
-            TextAnalysis.wsTokens(col(textCol)), k, numHashes)
-            .as(s"sig_$pairCol"),
-          graft.functions.GramHashFunctions.graftGramMd5(
-            TextAnalysis.wsTokens(col(textCol)), k, distinct = true)
-            .as(s"sh_$pairCol"))
-    val inter = size(array_intersect(col("sh_id_a"), col("sh_id_b")))
-    pairs
+      sigShFeatures(side, pairs.select(col(pairCol).as("pid")).distinct(),
+        idCol, textCol, k, numHashes, pairCol, s"_$pairCol")
+    estimateThenVerify(pairs
       .join(feats(left, "id_a"), "id_a")
-      .join(feats(right, "id_b"), "id_b")
-      .filter(sigEstimate(col("sig_id_a"), col("sig_id_b")) >=
-        threshold - margin)
-      .withColumn("inter", inter)
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (size(col("sh_id_a")) + size(col("sh_id_b")) - col("inter"))
-            .cast("double"), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      .join(feats(right, "id_b"), "id_b"),
+      "id_a", "id_b", threshold, numHashes)
   }
 
   // ---------- exact similarity self-join (prefix filtering) ----------
@@ -488,25 +506,17 @@ object Dedup {
       .agg(collect_list(struct(col("id"), col("n"), col("p"))).as("members"))
       .filter(size(col("members")) >= 2)
     val alphaNeed = te / (1 + te)
-    val pairsCol = flatten(transform(col("members"), (x, i) =>
-      filter(
-        transform(slice(col("members"), i + 2, size(col("members"))),
-          y => struct(
-            least(x.getField("id"), y.getField("id")).as("id_a"),
-            greatest(x.getField("id"), y.getField("id")).as("id_b"),
-            least(x.getField("n"), y.getField("n")).as("nmin"),
-            greatest(x.getField("n"), y.getField("n")).as("nmax"),
-            (lit(1) + least(x.getField("n") - x.getField("p"),
-              y.getField("n") - y.getField("p"))).as("ubound"))),
-        p => p.getField("nmin").cast("double") >= p.getField("nmax") * te
-          && p.getField("ubound").cast("double") >=
-            (p.getField("nmin") + p.getField("nmax")) * alphaNeed)))
     // localCheckpoint: the verify stage references the pair set twice
     // (both attach joins) — same cut as nearDupPairs
-    val cands = buckets
-      .select(explode(pairsCol).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
+    val cands = bucketPairs(buckets, id = _.getField("id"),
+      carry = Seq(
+        "nmin" -> ((x, y) => least(x.getField("n"), y.getField("n"))),
+        "nmax" -> ((x, y) => greatest(x.getField("n"), y.getField("n"))),
+        "ubound" -> ((x, y) => lit(1) + least(x.getField("n") - x.getField("p"),
+          y.getField("n") - y.getField("p")))),
+      keep = Some(p => p.getField("nmin").cast("double") >= p.getField("nmax") * te
+        && p.getField("ubound").cast("double") >=
+          (p.getField("nmin") + p.getField("nmax")) * alphaNeed))
       .localCheckpoint()
     ngramJaccardOnSets(sh, cands)
       .filter(col("jaccard") >= threshold)
@@ -567,22 +577,14 @@ object Dedup {
     val buckets = prefixes.groupBy("t")
       .agg(collect_list(struct(col("id"), col("wt"), col("tail"))).as("ms"))
       .filter(size(col("ms")) >= 2)
-    val pairsCol = flatten(transform(col("ms"), (x, i) =>
-      filter(
-        transform(slice(col("ms"), i + 2, size(col("ms"))),
-          y => struct(
-            least(x.getField("id"), y.getField("id")).as("id_a"),
-            greatest(x.getField("id"), y.getField("id")).as("id_b"),
-            least(x.getField("wt"), y.getField("wt")).as("wmin"),
-            greatest(x.getField("wt"), y.getField("wt")).as("wmax"),
-            least(x.getField("tail"), y.getField("tail")).as("ub"))),
-        p => p.getField("wmin") * 10000L >= p.getField("wmax") * tauBp
-          && p.getField("ub") * (10000L + tauBp) >=
-            (p.getField("wmin") + p.getField("wmax")) * tauBp)))
-    val cands = buckets
-      .select(explode(pairsCol).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
+    val cands = bucketPairs(buckets, "ms", _.getField("id"),
+      carry = Seq(
+        "wmin" -> ((x, y) => least(x.getField("wt"), y.getField("wt"))),
+        "wmax" -> ((x, y) => greatest(x.getField("wt"), y.getField("wt"))),
+        "ub" -> ((x, y) => least(x.getField("tail"), y.getField("tail")))),
+      keep = Some(p => p.getField("wmin") * 10000L >= p.getField("wmax") * tauBp
+        && p.getField("ub") * (10000L + tauBp) >=
+          (p.getField("wmin") + p.getField("wmax")) * tauBp))
       .localCheckpoint() // both verify attach joins read this
     // exact verify: Σ min over the token-count maps (q97's scorer)
     val maps = tokc.groupBy("id")
@@ -850,10 +852,21 @@ object Dedup {
   /** Hamming distance between two packed 64-bit sketches. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
+  /** `cols` plus one (band, bucket) row per 15-bit SimHash band — the
+    * postings both [[simHashNearDups]] and [[simHashBucketStats]] read.
+    */
+  private def simHashBanded(sketches: DataFrame, cols: Column*): DataFrame = {
+    val bandMask = (1L << SimHashBandWidth) - 1
+    sketches.select(cols :+
+      posexplode(array((0 until SimHashBands).map(i =>
+        shiftright(col("simhash"), i * SimHashBandWidth).bitwiseAND(bandMask)): _*))
+        .as(Seq("band", "bucket")): _*)
+  }
+
   /** SimHash near-dup pairs: docs whose sketches agree on one of four
     * 15-bit bands are candidates (≤ maxDist differing bits verified
-    * exactly). Same collect-members shape as [[lshCandidatesWithSigs]]:
-    * ONE shuffle gathers each (band, bucket)'s members, and buckets above
+    * exactly). The capped gather of [[gatherBuckets]]: ONE shuffle
+    * gathers each (band, bucket)'s members, and buckets above
     * `maxBucket` are dropped — the skew guard that keeps a degenerate
     * corpus (e.g. near-empty docs all sketching to the same band values)
     * from expanding O(n²) pairs in a hot bucket, at the documented cost
@@ -865,6 +878,22 @@ object Dedup {
     * (by design) not a candidate — with maxDist < 4 the pigeonhole
     * guarantees no misses.
     */
+  def simHashNearDups(
+      sketches: DataFrame,
+      idCol: String = "doc_id",
+      maxDist: Int = 3,
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    val buckets = gatherBuckets(simHashBanded(sketches, col(idCol), col("simhash")),
+      struct(col(idCol).as("id"), col("simhash").as("sh")), maxBucket = maxBucket)
+    // carry xor(sh_a, sh_b) per pair — order-symmetric, so the pair dedup
+    // runs on one long before bit_count scores the survivors
+    bucketPairs(buckets, id = _.getField("id"),
+      carry = Seq("xr" -> ((x, y) => x.getField("sh").bitwiseXOR(y.getField("sh")))),
+      out = Seq("xr"))
+      .select(col("id_a"), col("id_b"), bit_count(col("xr")).as("dist"))
+      .filter(col("dist") <= maxDist)
+  }
+
   /** Per-band LSH bucket-occupancy diagnostics: how full the (band,
     * bucket) cells are, and what the `maxBucket` skew guard would drop —
     * the observability counterpart of the guard itself. Every capped
@@ -879,17 +908,11 @@ object Dedup {
   def simHashBucketStats(
       sketches: DataFrame,
       idCol: String = "doc_id",
-      maxBucket: Int = 1000): DataFrame = {
-    val bandMask = (1L << SimHashBandWidth) - 1
-    val banded = sketches.select(col(idCol),
-      posexplode(array((0 until SimHashBands).map(i =>
-        shiftright(col("simhash"), i * SimHashBandWidth).bitwiseAND(bandMask)): _*))
-        .as(Seq("band", "bucket")))
-    bucketOccupancyStats(banded, maxBucket)
-  }
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    bucketOccupancyStats(simHashBanded(sketches, col(idCol)), maxBucket)
 
   /** [[simHashBucketStats]] for the MinHash-LSH path: occupancy of the
-    * [[bandBuckets]] cells feeding [[lshCandidates]]. Rows-only checked
+    * [[bandBuckets]] cells feeding [[lshCandidatePairs]]. Rows-only checked
     * (the xxhash64 bucket keys have no DuckDB spelling), but the stats
     * core is the same oracle-verified aggregation as q101/q102.
     */
@@ -897,7 +920,7 @@ object Dedup {
       signatures: DataFrame,
       idCol: String = "doc_id",
       bands: Int = 16,
-      maxBucket: Int = 1000): DataFrame =
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
     bucketOccupancyStats(
       bandBuckets(signatures, idCol, bands).select("band", "bucket"), maxBucket)
 
@@ -919,35 +942,6 @@ object Dedup {
         sum(when(col("n") <= maxBucket, expr("n * (n - 1) div 2"))
           .otherwise(0L)).as("pairs_within_cap"))
       .orderBy("band")
-
-  def simHashNearDups(
-      sketches: DataFrame,
-      idCol: String = "doc_id",
-      maxDist: Int = 3,
-      maxBucket: Int = 1000): DataFrame = {
-    val bandMask = (1L << SimHashBandWidth) - 1
-    val banded = sketches.select(col(idCol), col("simhash"),
-      posexplode(array((0 until SimHashBands).map(i =>
-        shiftright(col("simhash"), i * SimHashBandWidth).bitwiseAND(bandMask)): _*))
-        .as(Seq("band", "bucket")))
-    val buckets = banded.groupBy("band", "bucket")
-      .agg(collect_list(struct(col(idCol).as("id"), col("simhash").as("sh"))).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-    // carry xor(sh_a, sh_b) per pair — order-symmetric, so the pair dedup
-    // runs on one long before bit_count scores the survivors
-    val pairsCol = flatten(transform(col("members"), (x, i) =>
-      transform(slice(col("members"), i + 2, size(col("members"))),
-        y => struct(
-          least(x.getField("id"), y.getField("id")).as("id_a"),
-          greatest(x.getField("id"), y.getField("id")).as("id_b"),
-          x.getField("sh").bitwiseXOR(y.getField("sh")).as("xr")))))
-    buckets
-      .select(explode(pairsCol).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"), col("p.xr").as("xr"))
-      .distinct()
-      .select(col("id_a"), col("id_b"), bit_count(col("xr")).as("dist"))
-      .filter(col("dist") <= maxDist)
-  }
 
   /** Exact duplicated-substring spans, the token-level dedup primitive
     * of Lee et al., "Deduplicating Training Data Makes Language Models

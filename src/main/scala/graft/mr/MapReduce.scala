@@ -45,17 +45,8 @@ object MapReduce {
       spark: SparkSession,
       glob: String,
       mapf: MapF,
-      reducef: ReduceF,
-      nReduce: Int = 10): Dataset[KV] = {
-    import spark.implicits._
-    val files = spark.sparkContext
-      .wholeTextFiles(glob, minPartitions = spark.sparkContext.defaultParallelism)
-      .map { case (path, contents) => (path.substring(path.lastIndexOf('/') + 1), contents) }
-    files.toDS()
-      .flatMap { case (name, contents) => mapf(name, contents) }
-      .groupByKey(_.key)
-      .mapGroups((k, it) => KV(k, reducef(k, it.map(_.value).toSeq)))
-  }
+      reducef: ReduceF): Dataset[KV] =
+    runStreaming(spark, glob, mapf, (k, it) => reducef(k, it.toSeq))
 
   /** [[run]] with a STREAMING reduce: `reducef` consumes the group's
     * values as an Iterator instead of a materialized Seq, so a reduce
@@ -72,16 +63,12 @@ object MapReduce {
       spark: SparkSession,
       glob: String,
       mapf: MapF,
-      reducef: (String, Iterator[String]) => String,
-      nReduce: Int = 10): Dataset[KV] = {
+      reducef: (String, Iterator[String]) => String): Dataset[KV] = {
     import spark.implicits._
     val files = spark.sparkContext
       .wholeTextFiles(glob, minPartitions = spark.sparkContext.defaultParallelism)
       .map { case (path, contents) => (path.substring(path.lastIndexOf('/') + 1), contents) }
-    files.toDS()
-      .flatMap { case (name, contents) => mapf(name, contents) }
-      .groupByKey(_.key)
-      .mapGroups((k, it) => KV(k, reducef(k, it.map(_.value))))
+    mapReduce[(String, String)](files.toDS(), identity, mapf, reducef)
   }
 
   /** Sequential oracle mirroring mrsequential.go
@@ -110,14 +97,25 @@ object MapReduce {
       ds: Dataset[T],
       extract: T => (String, String),
       mapf: MapF,
-      reducef: ReduceF): Dataset[KV] = {
+      reducef: ReduceF): Dataset[KV] =
+    mapReduce(ds, extract, mapf, (k, it: Iterator[String]) => reducef(k, it.toSeq))
+
+  /** The one map → shuffle → reduce body behind [[runStreaming]], [[run]]
+    * and [[runRows]]: `mapf` over each row's (name, payload), group by
+    * key, then `reducef` over each group's value iterator.
+    */
+  private def mapReduce[T](
+      ds: Dataset[T],
+      extract: T => (String, String),
+      mapf: MapF,
+      reducef: (String, Iterator[String]) => String): Dataset[KV] = {
     import ds.sparkSession.implicits._
     ds.flatMap { row =>
       val (name, payload) = extract(row)
       mapf(name, payload)
     }
       .groupByKey(_.key)
-      .mapGroups((k, it) => KV(k, reducef(k, it.map(_.value).toSeq)))
+      .mapGroups((k, it) => KV(k, reducef(k, it.map(_.value))))
   }
 
   /** Golden text lines "key value" (worker.go:180). Compare as a set (the
@@ -142,6 +140,29 @@ object MapReduce {
       .select(org.apache.spark.sql.functions
         .concat_ws(" ", col("key"), col("value")).as("line"))
       .write.mode("overwrite").text(path)
+  }
+}
+
+/** The reference lab's committed MapReduce fixture — the eight Gutenberg
+  * texts and the golden word-count output `mymrout` (FIXTURES.md §1) —
+  * under one root. Every check that reads it resolves its path through
+  * [[require]], so when the root is absent the check fails with one
+  * explicit message naming the missing path instead of an I/O error
+  * (and is never skipped).
+  */
+object ReferenceCorpus {
+  val Root = "/root/reference"
+  val MainDir = s"$Root/src/main"
+  val PgGlob = s"$MainDir/pg-*.txt"
+  val GoldenWc = s"$MainDir/mymrout"
+
+  /** `path`, once the fixture root is known to exist. */
+  def require(path: String): String = {
+    if (!Files.isDirectory(Paths.get(Root)))
+      throw new IllegalStateException(
+        s"reference fixture root $Root is missing: this check reads $path " +
+          "(the reference lab's MapReduce corpus and golden output)")
+    path
   }
 }
 

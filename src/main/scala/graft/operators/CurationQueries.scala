@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.catalog.QueryDef
+import graft.dedup.Dedup
 import graft.operators.OracleSql.cosineSql
 import graft.similarity.Similarity
 import graft.tables.Tables
@@ -3211,9 +3212,9 @@ object CurationQueries {
              |           FROM bx$sfx GROUP BY band, bucket),
              |cand$sfx AS (SELECT CAST(coalesce(sum(m * (m - 1) // 2), 0)
              |               AS BIGINT) AS cands
-             |             FROM bc$sfx WHERE m BETWEEN 2 AND ${Similarity.DefaultMaxBucket}),
+             |             FROM bc$sfx WHERE m BETWEEN 2 AND ${Dedup.DefaultMaxBucket}),
              |live$sfx AS (SELECT band, bucket FROM bc$sfx
-             |             WHERE m BETWEEN 2 AND ${Similarity.DefaultMaxBucket}),
+             |             WHERE m BETWEEN 2 AND ${Dedup.DefaultMaxBucket}),
              |bl$sfx AS (SELECT bx$sfx.* FROM bx$sfx
              |           JOIN live$sfx USING (band, bucket)),
              |cp$sfx AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -3263,11 +3264,8 @@ object CurationQueries {
         // overlaps. Occupancy m = size(members) under the identical
         // BETWEEN(2, DefaultMaxBucket) guard — the same multiset the former
         // count(*) aggregate produced.
-        val buckets = Similarity.hyperplaneBuckets(uni, np, 8)
-          .select(col("vec_id").as("id"), col("band"), col("bucket"))
-          .groupBy("band", "bucket")
-          .agg(collect_list(col("id")).as("members"))
-          .filter(size(col("members")).between(2, Similarity.DefaultMaxBucket))
+        val buckets = Dedup.gatherBuckets(Similarity.hyperplaneBuckets(uni, np, 8)
+          .select(col("vec_id").as("id"), col("band"), col("bucket")), col("id"))
         val cand = buckets
           .select(size(col("members")).cast("long").as("m"))
           .agg(coalesce(

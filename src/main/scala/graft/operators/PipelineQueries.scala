@@ -378,7 +378,6 @@ object PipelineQueries {
     //      rather than hide behind a cap-free escape hatch. ----
     QueryDef(
       "q30_embedding_neardup", {
-        val maxBucket = 1000
         val bandCond = (0 until 4).map(k =>
           s"""(a.b$k = b.b$k AND EXISTS (
              |     SELECT 1 FROM live WHERE band = $k AND bucket = a.b$k))""".stripMargin)
@@ -398,7 +397,7 @@ object PipelineQueries {
            |    UNION ALL SELECT 2, b2 FROM bk
            |    UNION ALL SELECT 3, b3 FROM bk)
            |  GROUP BY band, bucket),
-           |live AS (SELECT band, bucket FROM bc WHERE c BETWEEN 2 AND $maxBucket),
+           |live AS (SELECT band, bucket FROM bc WHERE c BETWEEN 2 AND ${Dedup.DefaultMaxBucket}),
            |pairs AS (
            |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            |         ${cosineSql("a.embedding", "b.embedding")} AS sim
@@ -1035,7 +1034,6 @@ object PipelineQueries {
     //      bucketing incl. BOTH sides' caps, like q30. ----
     QueryDef(
       "q106_embedding_decontaminate", {
-        val maxBucket = 1000
         val bandCond = (0 until 4).map(k =>
           s"""(a.b$k = b.b$k
              |     AND EXISTS (SELECT 1 FROM livea WHERE band = $k AND bucket = a.b$k)
@@ -1058,8 +1056,8 @@ object PipelineQueries {
            |${hyperplaneSigCtes("ev", "sgb", "bkb")},
            |bca AS (${bandCounts("bka")}),
            |bcb AS (${bandCounts("bkb")}),
-           |livea AS (SELECT band, bucket FROM bca WHERE c BETWEEN 1 AND $maxBucket),
-           |liveb AS (SELECT band, bucket FROM bcb WHERE c BETWEEN 1 AND $maxBucket),
+           |livea AS (SELECT band, bucket FROM bca WHERE c BETWEEN 1 AND ${Dedup.DefaultMaxBucket}),
+           |liveb AS (SELECT band, bucket FROM bcb WHERE c BETWEEN 1 AND ${Dedup.DefaultMaxBucket}),
            |pairs AS (
            |  SELECT a.vec_id, b.vec_id AS eval_id,
            |         ${cosineSql("a.embedding", "b.embedding")} AS sim

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.catalog.QueryDef
-import graft.mr.{MapReduce, MrApps}
+import graft.mr.{MapReduce, MrApps, ReferenceCorpus}
 import graft.tables.Tables
 import org.apache.spark.sql.functions._
 
@@ -70,11 +70,11 @@ object TextMrQueries {
       s"""SELECT word AS key, CAST(count(*) AS VARCHAR) AS value
          |FROM (SELECT unnest(list_filter(
          |        regexp_split_to_array(content, '[^\\p{L}]+'), w -> w <> '')) AS word
-         |      FROM read_text('/root/reference/src/main/pg-*.txt'))
+         |      FROM read_text('${ReferenceCorpus.PgGlob}'))
          |GROUP BY word
          |ORDER BY key""".stripMargin) { (s, _) =>
       import s.implicits._
-      MapReduce.run(s, "/root/reference/src/main/pg-*.txt",
+      MapReduce.run(s, ReferenceCorpus.require(ReferenceCorpus.PgGlob),
           MrApps.wcMap, MrApps.wcReduce)
         .toDF("key", "value")
         .orderBy("key")
@@ -89,14 +89,14 @@ object TextMrQueries {
     //      spec-checked. ----
     QueryDef(
       "q163_kvtext_source",
-      """SELECT key, cnt FROM (
+      s"""SELECT key, cnt FROM (
         |  SELECT column0 AS key, CAST(column1 AS BIGINT) AS cnt
-        |  FROM read_csv('/root/reference/src/main/mymrout', delim = ' ',
+        |  FROM read_csv('${ReferenceCorpus.GoldenWc}', delim = ' ',
         |    header = false, quote = '',
         |    columns = {'column0': 'VARCHAR', 'column1': 'VARCHAR'})) t
         |ORDER BY cnt DESC, key
         |LIMIT 20""".stripMargin) { (s, _) =>
-      s.read.format("kvtext").load("/root/reference/src/main/mymrout")
+      s.read.format("kvtext").load(ReferenceCorpus.require(ReferenceCorpus.GoldenWc))
         .select(col("key"), col("value").cast("long").as("cnt"))
         .orderBy(col("cnt").desc, col("key"))
         .limit(20)

@@ -1,5 +1,7 @@
 package graft.similarity
 
+import graft.dedup.Dedup
+import graft.dedup.Dedup.DefaultMaxBucket
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,13 +25,6 @@ import org.apache.spark.sql.functions._
   *    parquet partitions at the scan.
   */
 object Similarity {
-
-  /** Hyperplane-LSH skew valve: buckets holding more members than this
-    * are dropped before pair expansion (per-bucket work ≤ cap²). One
-    * value for every LSH entry point and for q286's oracle, so the
-    * Spark side and its DuckDB mirror cannot drift apart.
-    */
-  val DefaultMaxBucket = 1000
 
   /** Sequential-fold dot product of two float-array columns, in double. */
   def dot(a: Column, b: Column): Column =
@@ -459,7 +454,7 @@ object Similarity {
     * full cross join: vectors agreeing on any `bands` of the sign-bit
     * signature meet in a bucket.
     *
-    * Scale guards (same shape as Dedup.lshCandidatesWithSigs): bucket
+    * Scale guards (the shared `Dedup.gatherBuckets` core): bucket
     * members are gathered in ONE shuffle and buckets above `maxBucket`
     * are dropped — a degenerate corpus (e.g. all-zero embeddings hashing
     * to one signature) stays bounded instead of going quadratic in a hot
@@ -501,10 +496,8 @@ object Similarity {
     // re-attached to the (small) distinct pair set below.
     val banded = hyperplaneBuckets(corpus, nPlanes, bands, idCol, embCol)
       .select(col(idCol).as("id"), col("band"), col("bucket"))
-    val buckets = banded.groupBy("band", "bucket")
-      .agg(collect_list(col("id")).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-    nearDupsFromBuckets(buckets, corpus, threshold, idCol, embCol)
+    nearDupsFromBuckets(Dedup.gatherBuckets(banded, col("id"), maxBucket = maxBucket),
+      corpus, threshold, idCol, embCol)
   }
 
   /** Verified near-dup pairs from pre-gathered live-bucket member lists
@@ -521,16 +514,10 @@ object Similarity {
       threshold: Double,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val pairsCol = flatten(transform(col("members"), (x, i) =>
-      transform(slice(col("members"), i + 2, size(col("members"))),
-        y => struct(least(x, y).as("id_a"), greatest(x, y).as("id_b")))))
     // pairs are distinct, so each pair pays the cosine exactly once
     // (unchanged contract); referenced once by the linear attach chain
     // below, so no materialization barrier is needed
-    val pairs = buckets
-      .select(explode(pairsCol).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
+    val pairs = Dedup.bucketPairs(buckets)
     // attach by joining the corpus projection directly: the pair set is
     // small (broadcast side), so the corpus streams through both joins
     // without shuffling — no checkpoint, no extra pass
@@ -567,19 +554,10 @@ object Similarity {
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // keys-only per-side bucket gathering + embedding re-attach, the
     // same §2.3 restructure as [[embeddingNearDups]]
-    def bucketed(side: DataFrame, out: String): DataFrame =
+    def banded(side: DataFrame): DataFrame =
       hyperplaneBuckets(side, nPlanes, bands, idCol, embCol)
         .select(col(idCol).as("id"), col("band"), col("bucket"))
-        .groupBy("band", "bucket")
-        .agg(collect_list(col("id")).as(out))
-        .filter(size(col(out)).between(1, maxBucket))
-    val pairs = bucketed(left, "ml")
-      .join(bucketed(right, "mr"), Seq("band", "bucket"))
-      .select(explode(flatten(transform(col("ml"), x =>
-        transform(col("mr"), y =>
-          struct(x.as("id_a"), y.as("id_b")))))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
+    val pairs = Dedup.crossBucketPairs(banded(left), banded(right), "id", maxBucket)
     def vecs(side: DataFrame, pairCol: String): DataFrame =
       side.select(col(idCol).as(pairCol), col(embCol).as(s"emb_$pairCol"))
     pairs
@@ -741,7 +719,7 @@ object Similarity {
       idCol: String = "vec_id",
       embCol: String = "embedding",
       maxBucket: Int = DefaultMaxBucket): DataFrame =
-    graft.dedup.Dedup.bucketOccupancyStats(
+    Dedup.bucketOccupancyStats(
       hyperplaneBuckets(corpus, nPlanes, bands, idCol, embCol), maxBucket)
 
   /** Per-group semantic centroid drift: cosine between each group's mean
@@ -1244,7 +1222,7 @@ object Similarity {
       .join(core.withColumnRenamed("id", "s"), Seq("s"), "left_semi")
       .join(core.withColumnRenamed("id", "d"), Seq("d"), "left_semi")
       .select(col("s").as("id_a"), col("d").as("id_b"))
-    val cc = graft.dedup.Dedup.connectedComponents(coreEdges)
+    val cc = Dedup.connectedComponents(coreEdges)
     val coreCl = core.join(cc, Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
       .localCheckpoint() // read twice below (core join + border lookup)

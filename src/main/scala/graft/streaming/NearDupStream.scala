@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.dedup.Dedup
+import graft.dedup.Dedup.DefaultMaxBucket
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -51,9 +52,10 @@ import org.apache.spark.sql.functions._
   * (both sides keyed (band, bucket)); store size is O(kept docs ×
   * bands) rows of three longs plus one sig array per doc — the texts
   * themselves never enter the store. Both sides of the history join are
-  * skew-guarded: the batch side via `lshCandidatesWithSigs`'s
-  * `maxBucket`, and the STORE side by dropping (band, bucket) groups
-  * whose accumulated member count exceeds `maxBucket` at read time — a
+  * skew-guarded by the one cap `maxBucket` (default
+  * `Dedup.DefaultMaxBucket`): the batch side via
+  * `Dedup.lshCandidatesWithSigs`, and the STORE side by dropping (band,
+  * bucket) groups whose accumulated member count exceeds it at read time — a
   * hot bucket grown over stream lifetime would otherwise make the
   * collision fan-out quadratic in its membership. Same recall-for-
   * boundedness trade as the batch guards (a doc truly near-duplicated
@@ -63,10 +65,6 @@ object NearDupStream {
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Library-default per-(band,bucket) membership cap — matches the
-    * batch pipeline's `Dedup.lshCandidates` default. */
-  val DefaultMaxBucket = 1000
 
   private val ShingleK = 3
 
@@ -129,12 +127,12 @@ object NearDupStream {
       .join(sigs.withColumnRenamed("sig", "sig_new"), idCol)
       .join(histSigs.withColumnRenamed(idCol, "old_id")
         .withColumnRenamed("sig", "sig_old"), "old_id")
-      .filter(estimate(col("sig_new"), col("sig_old")) >= threshold)
+      .filter(Dedup.sigEstimate(col("sig_new"), col("sig_old")) >= threshold)
       .select(col(idCol)).distinct()
 
     // within-batch: estimated near-dup pairs → keep-min (drop id_b side)
     val dropLocal = Dedup.lshCandidatesWithSigs(sigs, idCol, bands, maxBucket)
-      .filter(estimate(col("sig_a"), col("sig_b")) >= threshold)
+      .filter(Dedup.sigEstimate(col("sig_a"), col("sig_b")) >= threshold)
       .select(col("id_b").as(idCol)).distinct()
 
     (batch.join(dropHist.union(dropLocal).distinct(), Seq(idCol), "left_anti"),
@@ -316,11 +314,6 @@ object NearDupStream {
     if (mergedMax >= 0) writeSmallFile(spark, storeDir, "_COMPACT_WM",
       (mergedMax + 1).toString)
   }
-
-  /** Fraction of equal MinHash components — the jaccard estimator. */
-  private def estimate(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x).cast("double") / size(a).cast("double")
 
   // ---------- store metadata + watermark (small atomic files) ----------
 

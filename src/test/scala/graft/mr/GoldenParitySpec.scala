@@ -13,18 +13,18 @@ import graft.SparkSpec
   * with the independent sequential oracle on every app.
   */
 class GoldenParitySpec extends SparkSpec {
-  private val mainDir = "/root/reference/src/main"
-  private val glob = s"$mainDir/pg-*.txt"
-  private lazy val pgFiles: Seq[String] =
-    Files.list(Paths.get(mainDir)).iterator().asScala
+  private def glob = ReferenceCorpus.require(ReferenceCorpus.PgGlob)
+  private def golden: Set[String] = Files.readAllLines(
+    Paths.get(ReferenceCorpus.require(ReferenceCorpus.GoldenWc)),
+    StandardCharsets.UTF_8).asScala.toSet
+  private def pgFiles: Seq[String] =
+    Files.list(Paths.get(ReferenceCorpus.require(ReferenceCorpus.MainDir))).iterator().asScala
       .map(_.toString).filter(p => p.matches(".*/pg-.*\\.txt")).toSeq.sorted
 
   test("wc distributed output is byte-identical to the committed golden mymrout") {
     val got = MapReduce.goldenLines(
       MapReduce.run(spark, glob, MrApps.wcMap, MrApps.wcReduce))
       .collect().toSet
-    val golden = Files.readAllLines(Paths.get(s"$mainDir/mymrout"),
-      StandardCharsets.UTF_8).asScala.toSet
     assert(golden.size == 22107, "golden snapshot sanity")
     val missing = golden -- got
     val extra = got -- golden
@@ -40,8 +40,6 @@ class GoldenParitySpec extends SparkSpec {
       MapReduce.runStreaming(spark, glob, MrApps.wcMap,
         (_, values) => values.foldLeft(0L)((n, _) => n + 1).toString))
       .collect().toSet
-    val golden = Files.readAllLines(Paths.get(s"$mainDir/mymrout"),
-      StandardCharsets.UTF_8).asScala.toSet
     assert((golden -- got).isEmpty && (got -- golden).isEmpty,
       s"streaming-reduce wc diverged from golden " +
         s"(missing ${(golden -- got).size}, extra ${(got -- golden).size})")
@@ -91,8 +89,6 @@ class GoldenParitySpec extends SparkSpec {
   test("sequential oracle matches golden too (oracle validity)") {
     val seq = MapReduce.sequential(pgFiles, MrApps.wcMap, MrApps.wcReduce)
       .map(kv => s"${kv.key} ${kv.value}").toSet
-    val golden = Files.readAllLines(Paths.get(s"$mainDir/mymrout"),
-      StandardCharsets.UTF_8).asScala.toSet
     assert(seq == golden)
   }
 }

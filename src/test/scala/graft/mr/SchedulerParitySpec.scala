@@ -32,6 +32,14 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     if (isRetryable(test)) withRetry { super.withFixture(test) }
     else super.withFixture(test)
 
+  /** The reference corpus as (path, contents) rows in 8 partitions. */
+  private def pgTexts() = spark.sparkContext
+    .wholeTextFiles(ReferenceCorpus.require(ReferenceCorpus.PgGlob), minPartitions = 8)
+
+  /** The reference's golden word-count lines. */
+  private def goldenLines(): Seq[String] = Files.readAllLines(
+    Paths.get(ReferenceCorpus.require(ReferenceCorpus.GoldenWc))).asScala.toSeq
+
   /** Poll until the listener bus has delivered what we expect (bounded). */
   private def awaitListener(done: => Boolean, timeoutMs: Long = 10000): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
@@ -83,8 +91,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     spark.sparkContext.addSparkListener(probe)
     spark.sparkContext.setJobGroup("graft-jobcount", "scheduler parity probe")
     try {
-      val rdd = spark.sparkContext
-        .wholeTextFiles("/root/reference/src/main/pg-*.txt", minPartitions = 8)
+      val rdd = pgTexts()
         .flatMap { case (f, c) => MrApps.wcMap(f, c) }
       val mapTasks = rdd.getNumPartitions
       val rddShufflePartitions = 5
@@ -108,8 +115,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     spark.sparkContext.addSparkListener(probe)
     spark.sparkContext.setJobGroup("graft-mtiming", "scheduler parity probe")
     try {
-      spark.sparkContext
-        .wholeTextFiles("/root/reference/src/main/pg-*.txt", minPartitions = 8)
+      pgTexts()
         .map { case (f, c) => (f, GoText.letterWords(c).length) }
         .collect()
       awaitListener(probe.maxConcurrent.get() >= 2)
@@ -129,8 +135,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     spark.sparkContext.addSparkListener(probe)
     spark.sparkContext.setJobGroup("graft-rtiming", "scheduler parity probe")
     try {
-      spark.sparkContext
-        .wholeTextFiles("/root/reference/src/main/pg-*.txt", minPartitions = 8)
+      pgTexts()
         .flatMap { case (f, c) => MrApps.wcMap(f, c) }
         .map(kv => (kv.key, 1))
         .reduceByKey(_ + _, 8)
@@ -159,7 +164,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
       MrApps.wcMap(f, c)
     }
     val out = Files.createTempDirectory("graft-crash").toString + "/wc-out"
-    val result = MapReduce.run(spark, "/root/reference/src/main/pg-*.txt",
+    val result = MapReduce.run(spark, ReferenceCorpus.require(ReferenceCorpus.PgGlob),
       crashingMap, MrApps.wcReduce)
     MapReduce.writeText(result, out, nReduce = 10)
     val files = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
@@ -167,8 +172,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     assert(!files.exists(_.contains("_temporary")), s"uncommitted output: $files")
     val lines = files.filter(_.startsWith("part-"))
       .flatMap(f => Files.readAllLines(Paths.get(out, f)).asScala)
-    val golden = Files.readAllLines(
-      Paths.get("/root/reference/src/main/mymrout")).asScala
+    val golden = goldenLines()
     assert(lines.sorted == golden.sorted,
       "retried run diverged from golden output")
   }
@@ -246,8 +250,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
       assert(!files.exists(_.contains("_temporary")), s"uncommitted output: $files")
       val lines = files.filter(_.startsWith("part-"))
         .flatMap(f => Files.readAllLines(Paths.get(out, f)).asScala)
-      val golden = Files.readAllLines(
-        Paths.get("/root/reference/src/main/mymrout")).asScala
+      val golden = goldenLines()
       assert(lines.sorted == golden.sorted,
         "speculated run diverged from golden output (duplicate or lost rows)")
     } finally (workers :+ master).foreach(_.destroyForcibly())
@@ -259,7 +262,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
 
   test("early-exit parity: committed output is complete and atomic") {
     val out = Files.createTempDirectory("graft-golden").toString + "/wc-out"
-    val result = MapReduce.run(spark, "/root/reference/src/main/pg-*.txt",
+    val result = MapReduce.run(spark, ReferenceCorpus.require(ReferenceCorpus.PgGlob),
       MrApps.wcMap, MrApps.wcReduce)
     MapReduce.writeText(result, out, nReduce = 10)
     val files = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
@@ -271,8 +274,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     // all lines present exactly once (idempotent commit)
     val lines = files.filter(_.startsWith("part-"))
       .flatMap(f => Files.readAllLines(Paths.get(out, f)).asScala)
-    val golden = Files.readAllLines(
-      Paths.get("/root/reference/src/main/mymrout")).asScala
+    val golden = goldenLines()
     assert(lines.sorted == golden.sorted)
   }
 }

@@ -57,7 +57,7 @@ object SpeculationDriver {
         Thread.sleep(15000)
       MrApps.wcMap(name, contents)
     }
-    val result = MapReduce.run(spark, "/root/reference/src/main/pg-*.txt",
+    val result = MapReduce.run(spark, ReferenceCorpus.require(ReferenceCorpus.PgGlob),
       slowMap, MrApps.wcReduce)
     MapReduce.writeText(result, outDir, nReduce = 10)
     Thread.sleep(300) // let the listener bus drain before reading the count

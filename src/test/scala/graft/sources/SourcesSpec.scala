@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
-  private val golden = "/root/reference/src/main/mymrout"
+  private def golden = graft.mr.ReferenceCorpus.require(graft.mr.ReferenceCorpus.GoldenWc)
 
   test("kvtext reads the reference's golden output identically to a text+split parse") {
     val viaSource = spark.read.format("kvtext").load(golden)
