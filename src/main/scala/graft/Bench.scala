@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: runs the headline query suite on
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line
@@ -8,8 +10,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bench {
 
-  /** Every successful run's seconds, plus the last run failure (if any). */
-  final case class Timing(runs: Vector[Double], error: Option[Throwable]) {
+  /** Classes one run compiled and the seconds spent compiling them. */
+  final case class Compiles(count: Long, secs: Double)
+
+  /** Every successful run's seconds and, at the same index, its
+    * compiles; plus the last run failure (if any).
+    */
+  final case class Timing(
+      runs: Vector[Double], error: Option[Throwable], compiles: Vector[Compiles]) {
     /** The reported time: the fastest run, or -1 when every run failed. */
     def best: Double = if (runs.nonEmpty) runs.min else -1.0
   }
@@ -55,6 +63,9 @@ object Bench {
     * A failed run contributes no time (a near-instant failure would
     * report a broken query as fast); its error is kept, so a query whose
     * every run failed yields no times and says why.
+    * Each run's codegen compiles are the JVM-wide counters' deltas (the
+    * codegen metric's count and `CodeGenerator.compileTime`), so a warm
+    * run that recompiles shows it.
     */
   private[graft] def timeQuery(
       spark: SparkSession,
@@ -62,6 +73,7 @@ object Bench {
       sfDir: String): Timing = {
     System.gc()
     var times = Vector.empty[Double]
+    var compiles = Vector.empty[Compiles]
     var error = Option.empty[Throwable]
     var runs = 0
     def converged: Boolean = times.size >= 4 && {
@@ -70,15 +82,19 @@ object Bench {
         times.indexOf(fastest(0)) < times.size - 2
     }
     while (runs < 12 && !converged) {
+      val (c0, cNs0) =
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
         catch { case e: Throwable => error = Some(e); false }
       val secs = (System.nanoTime() - t0) / 1e9
+      val compiled = Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+        (CodeGenerator.compileTime - cNs0) / 1e9)
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      if (ok) times :+= secs
+      if (ok) { times :+= secs; compiles :+= compiled }
       runs += 1
     }
-    Timing(times, error)
+    Timing(times, error, compiles)
   }
 
   def main(args: Array[String]): Unit = {

@@ -57,12 +57,16 @@ object Measure {
 
   /** Repeated-run timer for a handful of queries in one JVM — the A/B
     * isolation workflow. The `[q] runN:` / `[q] best:` lines are the
-    * format existing A/B scripts parse.
+    * format existing A/B scripts parse; each run line also carries the
+    * classes that run compiled and their compile seconds, so a warm run
+    * that recompiles is visible.
     */
   def time(spark: SparkSession, dir: String, names: Seq[String]): Unit =
     names.foreach { q =>
       val t = Bench.timeQuery(spark, SparkEntry.queries(q), dir)
-      t.runs.zipWithIndex.foreach { case (s, i) => println(f"[$q] run${i + 1}: $s%.3f s") }
+      t.runs.zip(t.compiles).zipWithIndex.foreach { case ((s, c), i) =>
+        println(f"[$q] run${i + 1}: $s%.3f s, ${c.count} compiles, ${c.secs}%.3f s compiling")
+      }
       if (t.runs.isEmpty) println(s"[$q] FAILED: ${failure(t)}")
       else println(f"[$q] best: ${t.best}%.3f s over ${t.runs.size} runs")
     }

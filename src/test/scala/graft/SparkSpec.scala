@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all suites — one JVM-wide SparkSession. */
@@ -25,6 +26,10 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
+      // the production codegen-cache size, so warm test runs behave as
+      // every graft entry point does (see GraftSession.CodegenCacheEntries)
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+        GraftSession.CodegenCacheEntries.toLong)
       .getOrCreate()
     graft.functions.GraftFunctions.register(s)
     s.sparkContext.setLogLevel("ERROR")

@@ -41,6 +41,15 @@ class MeasureSpec extends SparkSpec {
     assert(t.best == t.runs.min)
   }
 
+  test("Bench.timeQuery counts each run's compiles: the first run compiles, a warm rerun does not") {
+    // a literal no other test uses, so this plan's generated source is new to the JVM
+    val t = Bench.timeQuery(spark,
+      (s, _) => s.range(1000).filter(col("id") % 104729 === 7919).toDF(), "unused")
+    assert(t.compiles.size == t.runs.size, s"compiles: ${t.compiles}")
+    assert(t.compiles.head.count >= 1 && t.compiles.head.secs > 0, s"first run: ${t.compiles.head}")
+    assert(t.compiles(1).count == 0, s"warm rerun: ${t.compiles(1)}")
+  }
+
   test("Bench.timeQuery: a query whose every run fails yields no times and its error") {
     val t = Bench.timeQuery(spark, (_, _) => throw new IllegalStateException("boom"), "unused")
     assert(t.runs.isEmpty)
