@@ -37,7 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticsQueries {
 
-  private val md5LongSql = OracleSql.md5Long _
   private val toksSql = OracleSql.wsTokens()
 
   val defs: Seq[QueryDef] = Seq(
@@ -236,7 +235,7 @@ object AnalyticsQueries {
          |              unnest(range(0, CAST(ceil(len(toks) / 16.0) AS BIGINT))) AS ci
          |       FROM t WHERE len(toks) > 0),
          |c AS (SELECT doc_id, ci,
-         |             ${md5LongSql("array_to_string(list_slice(toks, ci*16 + 1, ci*16 + 16), ' ')")} AS h
+         |             ${OracleSql.md5Long("array_to_string(list_slice(toks, ci*16 + 1, ci*16 + 16), ' ')")} AS h
          |      FROM c0),
          |r AS (SELECT doc_id, ci, row_number() OVER (PARTITION BY h ORDER BY doc_id, ci) AS rn
          |      FROM c)
@@ -483,7 +482,7 @@ object AnalyticsQueries {
            |      FROM q)
            |SELECT doc_id, quality_bp
            |FROM b
-           |WHERE ${md5LongSql("CAST(doc_id AS VARCHAR)")} % 10000 < quality_bp
+           |WHERE ${OracleSql.md5Long("CAST(doc_id AS VARCHAR)")} % 10000 < quality_bp
            |ORDER BY doc_id""".stripMargin
       }) { (s, dir) =>
       Tables.documents(s, dir)
@@ -616,11 +615,11 @@ object AnalyticsQueries {
       "q74_countmin",
       s"""WITH toks AS (SELECT unnest($toksSql) AS w FROM documents),
          |rs AS (SELECT unnest([0, 1, 2, 3]) AS r),
-         |cells AS (SELECT r, ${md5LongSql("r || ':' || w")} % 1024 AS b FROM toks, rs),
+         |cells AS (SELECT r, ${OracleSql.md5Long("r || ':' || w")} % 1024 AS b FROM toks, rs),
          |cms AS (SELECT r, b, count(*) AS c FROM cells GROUP BY 1, 2),
          |exact AS (SELECT w, count(*) AS exact_cnt FROM toks GROUP BY 1),
          |top AS (SELECT w, exact_cnt FROM exact ORDER BY exact_cnt DESC, w LIMIT 20),
-         |lk AS (SELECT w, exact_cnt, r, ${md5LongSql("r || ':' || w")} % 1024 AS b FROM top, rs)
+         |lk AS (SELECT w, exact_cnt, r, ${OracleSql.md5Long("r || ':' || w")} % 1024 AS b FROM top, rs)
          |SELECT w, exact_cnt, min(c) AS cms_est
          |FROM lk JOIN cms USING (r, b)
          |GROUP BY w, exact_cnt

@@ -455,8 +455,7 @@ object CurationQueries {
          |           // len(toks) AS score
          |  FROM d),
          |h AS (SELECT *,
-         |        CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-         |          || '|graftconf'), 1, 6)) AS BIGINT) % 10000 AS bucket
+         |        ${OracleSql.hashSplitBucket("doc_id", "graftconf")} AS bucket
          |      FROM s),
          |caln AS (
          |  SELECT label, doc_id,
@@ -949,7 +948,7 @@ object CurationQueries {
               element_at(col("toks"), i + 2)))).as("g"))
         .distinct().localCheckpoint() // sketch + exact audit both read it
       val sh = tg.select(col("source"),
-        conv(substring(md5(col("g")), 1, 13), 16, 10).cast("long").as("h"))
+        shiftright(TextAnalysis.md5Long(col("g")), 8).as("h"))
         .distinct()
       val topk = udaf(new TopKAggregator(64), Encoders.product[Scored])
       val sig = sh.groupBy("source")
@@ -2031,8 +2030,7 @@ object CurationQueries {
           |                  THEN 1 ELSE 0 END AS alloc
           |       FROM a0 JOIN rk ON rk.lang = a0.lang CROSS JOIN dft),
           |h AS (SELECT lang, doc_id,
-          |        CAST(('0x' || substring(md5(CAST(doc_id AS STRING)
-          |          || '|neyman'), 1, 13)) AS BIGINT) AS hv
+          |        (${OracleSql.md5Long("CAST(doc_id AS STRING) || '|neyman'")} >> 8) AS hv
           |      FROM documents),
           |r AS (SELECT lang, doc_id,
           |        row_number() OVER (PARTITION BY lang
@@ -2074,8 +2072,8 @@ object CurationQueries {
             when(col("rk") <= col("deficit"), 1L).otherwise(0L)).as("alloc"))
       val topk = udaf(new TopKAggregator(1000), Encoders.product[Scored])
       val sel = docs.select(col("lang"), col("doc_id"),
-          conv(substring(md5(concat(col("doc_id").cast("string"),
-            lit("|neyman"))), 1, 13), 16, 10).cast("long").as("hv"))
+          shiftright(TextAnalysis.md5Long(concat(col("doc_id").cast("string"),
+            lit("|neyman"))), 8).as("hv"))
         .groupBy("lang")
         // smallest hashes first: score = -hv, finish sorts (-score, id)
         .agg(topk((-col("hv")).cast("double"), col("doc_id")).as("sg"))
@@ -2503,8 +2501,7 @@ object CurationQueries {
         |  SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS w
         |  FROM documents WHERE len($toksSql) >= 1),
         |k AS (SELECT doc_id, w,
-        |        CAST(('0x' || substring(md5(CAST(doc_id AS STRING)
-        |          || '|aes'), 1, 13)) AS BIGINT) AS hv
+        |        (${OracleSql.md5Long("CAST(doc_id AS STRING) || '|aes'")} >> 8) AS hv
         |      FROM d)
         |SELECT doc_id, w, $aesKeySql AS key_pico
         |FROM k ORDER BY key_pico DESC, doc_id LIMIT 100""".stripMargin) {
@@ -2516,8 +2513,8 @@ object CurationQueries {
           size(TextAnalysis.wsTokens(col("text"))).cast("long").as("w"))
         .filter(col("w") >= 1)
         .select(col("doc_id"), col("w"),
-          conv(substring(md5(concat(col("doc_id").cast("string"),
-            lit("|aes"))), 1, 13), 16, 10).cast("long").as("hv"))
+          shiftright(TextAnalysis.md5Long(concat(col("doc_id").cast("string"),
+            lit("|aes"))), 8).as("hv"))
         .select(col("doc_id"), col("w"), expr(aesKeySql).as("key_pico"))
         .localCheckpoint() // heap pass + the weight join-back below
       val topk = udaf(new TopKAggregator(100), Encoders.product[Scored])
@@ -2872,10 +2869,8 @@ object CurationQueries {
             .as("doc_id"), col("text"))
       val d = base.unionByName(plant(1, 301L, 1))
         .unionByName(plant(2, 102L, 3)).unionByName(plant(3, 33L, 7))
-      val cl = d
-        .groupBy(md5(col("text")).as("fp"))
-        .agg(count(lit(1)).as("sz"))
-      val h = cl.groupBy("sz").agg(count(lit(1)).as("n_clusters"))
+      val h = Dedup.exactGroups(d)
+        .groupBy(col("n_copies").as("sz")).agg(count(lit(1)).as("n_clusters"))
         .localCheckpoint() // histogram output + the tail fit
       val p = h.filter(col("sz") >= 2).select(
         round(lit(1000000d) * log(col("sz").cast("double")))
@@ -3034,9 +3029,8 @@ object CurationQueries {
         |nc AS (SELECT CAST(count(*) AS BIGINT) AS nc FROM cust),
         |sup AS (SELECT DISTINCT s FROM pairs),
         |cand AS (SELECT sup.s, t.t,
-        |           CAST(('0x' || substring(md5(CAST(sup.s AS STRING)
-        |             || '|' || CAST(t.t AS STRING) || '|negsamp'), 1, 13))
-        |             AS BIGINT) % nc.nc AS rk
+        |           ${OracleSql.md5Long("CAST(sup.s AS STRING) || '|' || CAST(t.t AS STRING) || '|negsamp'")}
+        |             % nc.nc AS rk
         |         FROM sup CROSS JOIN nc
         |         CROSS JOIN (SELECT unnest(range(0, 8)) AS t) t),
         |cc AS (SELECT cand.s, cand.t, cust.c_custkey AS cand_c
@@ -3068,9 +3062,8 @@ object CurationQueries {
       val cand = sup.crossJoin(broadcast(nc))
         .crossJoin(broadcast(s.range(0, 8).select(col("id").as("t"))))
         .select(col("s"), col("t"),
-          pmod(conv(substring(md5(concat(col("s").cast("string"), lit("|"),
-            col("t").cast("string"), lit("|negsamp"))), 1, 13), 16, 10)
-            .cast("long"), col("nc")).as("rk"))
+          pmod(TextAnalysis.md5Long(concat(col("s").cast("string"), lit("|"),
+            col("t").cast("string"), lit("|negsamp"))), col("nc")).as("rk"))
       val cc = cand.join(cust, "rk")
         .select(col("s"), col("t"), col("c_custkey").as("cand_c"))
       val nonedge = cc.join(pairs,
@@ -3302,8 +3295,7 @@ object CurationQueries {
         |kc AS (SELECT k, CAST(count(*) AS BIGINT) AS kn,
         |         CAST(sum(cents) AS BIGINT) AS kcents
         |       FROM o GROUP BY k),
-        |sh AS (SELECT CAST(('0x' || substring(md5(CAST(k AS STRING)
-        |           || '|shard'), 1, 13)) AS BIGINT) % 32 AS shard,
+        |sh AS (SELECT ${OracleSql.md5Long("CAST(k AS STRING) || '|shard'")} % 32 AS shard,
         |         k, kn, kcents
         |       FROM kc),
         |g AS (SELECT shard, CAST(sum(kn) AS BIGINT) AS rows_,
@@ -3322,9 +3314,8 @@ object CurationQueries {
         .groupBy("k")
         .agg(count(lit(1)).as("kn"), sum("cents").as("kcents"))
       val sh = kc.select(
-        pmod(conv(substring(md5(concat(col("k").cast("string"),
-          lit("|shard"))), 1, 13), 16, 10).cast("long"), lit(32L))
-          .as("shard"),
+        pmod(TextAnalysis.md5Long(concat(col("k").cast("string"),
+          lit("|shard"))), lit(32L)).as("shard"),
         col("k"), col("kn"), col("kcents"))
       val g = sh.groupBy("shard")
         .agg(sum("kn").as("n_rows"), sum("kcents").as("cents"),
@@ -3607,8 +3598,7 @@ object CurationQueries {
        |           i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))
        |           AS g
        |  FROM t),
-       |sh AS (SELECT DISTINCT source,
-       |         CAST(('0x' || substring(md5(g), 1, 13)) AS BIGINT) AS h
+       |sh AS (SELECT DISTINCT source, (${OracleSql.md5Long("g")} >> 8) AS h
        |       FROM tg),
        |rk AS (SELECT source, h,
        |         row_number() OVER (PARTITION BY source ORDER BY h) AS rr

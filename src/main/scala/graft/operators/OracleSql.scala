@@ -15,6 +15,10 @@ object OracleSql {
   def md5Long(e: String): String =
     s"CAST(('0x' || substring(md5($e), 18, 15)) AS BIGINT)"
 
+  /** Mirror of Scale.hashSplit's bucket: md5Long(key|salt) mod 10000. */
+  def hashSplitBucket(keySql: String, salt: String): String =
+    s"(${md5Long(s"CAST($keySql AS VARCHAR) || '|$salt'")} % 10000)"
+
   /** Mirror of TextAnalysis.wsTokens over a column/expression. */
   def wsTokens(e: String = "text"): String =
     s"list_filter(string_split_regex($e, '\\s+'), w -> w <> '')"

@@ -1306,7 +1306,7 @@ object PipelineQueries {
          |  FROM documents),
          |b AS (
          |  SELECT doc_id, h,
-         |         CAST(('0x' || substring(h, 1, 6)) AS BIGINT) % 10000 AS bucket
+         |         ${OracleSql.hashSplitBucket("doc_id", "graftsplit")} AS bucket
          |  FROM a),
          |c AS (
          |  SELECT doc_id, h,
@@ -2907,9 +2907,7 @@ object PipelineQueries {
          |  FROM t LEFT JOIN cl ON cl.id = t.doc_id),
          |sp AS (
          |  SELECT doc_id, rep,
-         |         CAST(('0x' || substring(
-         |           md5(CAST(rep AS VARCHAR) || '|graftsplit'), 1, 6)) AS BIGINT)
-         |           % 10000 AS bucket
+         |         ${OracleSql.hashSplitBucket("rep", "graftsplit")} AS bucket
          |  FROM alld)
          |SELECT doc_id, rep,
          |       CASE WHEN bucket < 8000 THEN 'train'
@@ -2955,12 +2953,8 @@ object PipelineQueries {
          |${bruteJaccardCtes("0.7")},
          |sp AS (
          |  SELECT doc_id,
-         |         CASE WHEN CAST(('0x' || substring(
-         |                md5(CAST(doc_id AS VARCHAR) || '|graftsplit'),
-         |                1, 6)) AS BIGINT) % 10000 < 8000 THEN 'train'
-         |              WHEN CAST(('0x' || substring(
-         |                md5(CAST(doc_id AS VARCHAR) || '|graftsplit'),
-         |                1, 6)) AS BIGINT) % 10000 < 9000 THEN 'val'
+         |         CASE WHEN ${OracleSql.hashSplitBucket("doc_id", "graftsplit")} < 8000 THEN 'train'
+         |              WHEN ${OracleSql.hashSplitBucket("doc_id", "graftsplit")} < 9000 THEN 'val'
          |              ELSE 'test' END AS split
          |  FROM d)
          |SELECT least(a.split, b.split) AS split_lo,
@@ -3251,10 +3245,9 @@ object PipelineQueries {
     //      frame is 5 rows per doc, not vocab-wide. ----
     QueryDef(
       "q199_nb_langid",
-      """WITH sp AS (
+      s"""WITH sp AS (
         |  SELECT doc_id, lang, text,
-        |         CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-        |            || '|graftnb'), 1, 6)) AS BIGINT) % 10000 AS bucket
+        |         ${OracleSql.hashSplitBucket("doc_id", "graftnb")} AS bucket
         |  FROM documents),
         |tr AS (SELECT * FROM sp WHERE bucket < 8000),
         |te AS (SELECT * FROM sp WHERE bucket >= 8000),
@@ -3757,8 +3750,7 @@ object PipelineQueries {
         .select((col("doc_id") + 1000000L).as("doc_id"),
           lit("srcdup").as("source"), col("text"))
       val d = docs.union(laundered)
-      val kept = d.groupBy(md5(col("text")).as("fp"))
-        .agg(min("doc_id").as("keep_id")).select("keep_id")
+      val kept = Dedup.exactGroups(d).select("keep_id")
       val ba = d
         .select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("long").as("nt"))
@@ -4233,13 +4225,11 @@ object PipelineQueries {
     //      Scale shape: one scan into a 3-row aggregate. ----
     QueryDef(
       "q214_split_gof",
-      """WITH sp AS (
+      s"""WITH sp AS (
         |  SELECT CASE
-        |    WHEN CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-        |           || '|graftsplit'), 1, 6)) AS BIGINT) % 10000 < 8000
+        |    WHEN ${OracleSql.hashSplitBucket("doc_id", "graftsplit")} < 8000
         |      THEN 'train'
-        |    WHEN CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-        |           || '|graftsplit'), 1, 6)) AS BIGINT) % 10000 < 9000
+        |    WHEN ${OracleSql.hashSplitBucket("doc_id", "graftsplit")} < 9000
         |      THEN 'val'
         |    ELSE 'test' END AS split
         |  FROM documents),

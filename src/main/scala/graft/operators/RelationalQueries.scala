@@ -685,12 +685,11 @@ object RelationalQueries {
     //      engine, any partitioning, any cluster size) ----
     QueryDef(
       "q52_sample",
-      """SELECT l_returnflag,
+      s"""SELECT l_returnflag,
         |       count(*) AS n_sampled,
         |       round(CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sample_revenue
         |FROM lineitem
-        |WHERE CAST(('0x' || substring(md5(CAST(l_orderkey AS VARCHAR) || '|' ||
-        |                                  CAST(l_linenumber AS VARCHAR)), 18, 15)) AS BIGINT) % 100 < 10
+        |WHERE ${OracleSql.md5Long("CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)")} % 100 < 10
         |GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       import graft.textops.TextAnalysis.md5Long

@@ -243,9 +243,9 @@ object Scale {
     * corpus growth — appending new documents never moves an existing
     * one between splits (the property a random split lacks and a
     * training pipeline cannot live without). Weights are basis points
-    * summing to 10000; the row's bucket is the first 24 bits of
-    * md5(id|salt) mod 10000 (uniform to ±2⁻¹⁴ — indistinguishable from
-    * exact at any corpus size that cares).
+    * summing to 10000; the row's bucket is md5Long(id|salt) mod 10000
+    * (the engine's one hash family; 60 bits mod 10⁴ is uniform to
+    * ±2⁻⁴⁶), mirrored in oracle SQL by `OracleSql.hashSplitBucket`.
     *
     * Adds `split_hash` (the full md5 hex — a reproducible global
     * shuffle order for downstream `repartitionByRange(split_hash)`
@@ -258,15 +258,15 @@ object Scale {
       splits: Seq[(String, Int)]): DataFrame = {
     require(splits.nonEmpty && splits.map(_._2).sum == 10000,
       s"split weights must be basis points summing to 10000, got $splits")
-    val h = md5(concat(col(idCol).cast("string"), lit("|" + salt)))
-    val bucket = conv(substring(h, 1, 6), 16, 10).cast("long") % 10000
+    val key = concat(col(idCol).cast("string"), lit("|" + salt))
+    val bucket = pmod(graft.textops.TextAnalysis.md5Long(key), lit(10000L))
     val cum = splits.scanLeft(0)(_ + _._2).tail
     val assign = splits.zip(cum).init
       .foldLeft(Option.empty[Column]) { case (acc, ((name, _), hi)) =>
         Some(acc.fold(when(bucket < hi, name))(_.when(bucket < hi, name)))
       }
       .fold(lit(splits.head._1))(_.otherwise(splits.last._1))
-    df.withColumn("split_hash", h).withColumn("split", assign)
+    df.withColumn("split_hash", md5(key)).withColumn("split", assign)
   }
 
   /** Salted fact⋈dim join for hot join keys that AQE's skew splitting

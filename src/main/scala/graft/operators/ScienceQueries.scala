@@ -95,17 +95,16 @@ object ScienceQueries {
        | / 0.77351) AS BIGINT)""".stripMargin.replaceAll("\n", "")
   }
 
-  /** 52-bit md5 draw for trial t, +2^52 so the value is never zero (the
-    * added bit 52 sits above every 13-hex-digit draw, so trailing-zero
-    * counts < 52 are untouched). Spark spelling. */
-  private def sparkG(t: Int): String =
-    s"CAST(conv(substring(md5(CAST(id AS STRING) || '|anf$t'), 1, 13), 16, 10) AS BIGINT)" +
-      s" + 4503599627370496"
+  /** 52-bit md5 draw for trial t (md5Long >> 8), +2^52 so the value is
+    * never zero (the added bit 52 sits above every 52-bit draw, so
+    * trailing-zero counts < 52 are untouched). Spark spelling. */
+  private def sparkG(t: Int): org.apache.spark.sql.Column =
+    shiftright(TextAnalysis.md5Long(
+      concat(col("id").cast("string"), lit(s"|anf$t"))), 8) + lit(4503599627370496L)
 
-  /** DuckDB spelling of [[sparkG]] (hex literal cast instead of conv). */
+  /** DuckDB spelling of [[sparkG]]. */
   private def duckG(t: Int): String =
-    s"CAST(('0x' || substring(md5(CAST(id AS STRING) || '|anf$t'), 1, 13)) AS BIGINT)" +
-      s" + 4503599627370496"
+    s"(${OracleSql.md5Long(s"CAST(id AS STRING) || '|anf$t'")} >> 8) + 4503599627370496"
 
   // ---------- q290 helpers: deterministic planar coordinates ----------
 
@@ -113,11 +112,10 @@ object ScienceQueries {
     * engine's portable-hash discipline (q287), reused so the oracle can
     * derive the identical point set. */
   private def coordCol(k: org.apache.spark.sql.Column, salt: String) =
-    pmod(conv(substring(md5(concat(k.cast("string"), lit(salt))), 1, 13), 16, 10)
-      .cast("long"), lit(1000000L))
+    pmod(TextAnalysis.md5Long(concat(k.cast("string"), lit(salt))), lit(1000000L))
 
   private def coordSql(k: String, salt: String): String =
-    s"CAST(('0x' || substring(md5(CAST($k AS STRING) || '$salt'), 1, 13)) AS BIGINT) % 1000000"
+    s"${OracleSql.md5Long(s"CAST($k AS STRING) || '$salt'")} % 1000000"
 
   // ---------- q292 helpers: shared Kruskal-Wallis spellings ----------
 
@@ -399,7 +397,7 @@ object ScienceQueries {
           .agg(count(lit(1)).as("n_nodes"), sum("reach_milli").as("reach_milli_total"))
           .select(lit(h).as("hop"), col("n_nodes"), col("reach_milli_total"))
       var sk = nodes
-        .selectExpr("id" +: (0 to 3).map(t => s"${sparkG(t)} AS g$t"): _*)
+        .select(col("id") +: (0 to 3).map(t => sparkG(t).as(s"g$t")): _*)
         .selectExpr("id" +: (0 to 3).map(t => s"(g$t & (-g$t)) AS s$t"): _*)
         .localCheckpoint()
       val perHop = scala.collection.mutable.ArrayBuffer(estimate(sk, 0))
@@ -491,8 +489,7 @@ object ScienceQueries {
          |  FROM events),
          |b AS (SELECT min(tus) + ((max(tus) - min(tus)) // 2) AS bd FROM ev),
          |c AS (
-         |  SELECT CAST(('0x' || substring(md5(CAST(user_id AS STRING) || '|did'),
-         |           1, 13)) AS BIGINT) % 2 AS treat,
+         |  SELECT ${OracleSql.md5Long("CAST(user_id AS STRING) || '|did'")} % 2 AS treat,
          |         CASE WHEN tus >= bd THEN 1 ELSE 0 END AS post, cents
          |  FROM ev CROSS JOIN b),
          |p AS (
@@ -520,8 +517,8 @@ object ScienceQueries {
         .selectExpr("lo + ((hi - lo) div 2) AS bd")
       val cells = ev.crossJoin(broadcast(bounds))
         .select(
-          pmod(conv(substring(md5(concat(col("user_id").cast("string"), lit("|did"))),
-            1, 13), 16, 10).cast("long"), lit(2L)).as("treat"),
+          pmod(TextAnalysis.md5Long(concat(col("user_id").cast("string"), lit("|did"))),
+            lit(2L)).as("treat"),
           when(col("tus") >= col("bd"), 1).otherwise(0).as("post"),
           col("cents"))
       def cell(t: Int, p: Int, v: org.apache.spark.sql.Column) =
@@ -852,8 +849,7 @@ object ScienceQueries {
         s"""WITH u AS (
            |  SELECT user_id, CAST(count(*) AS BIGINT) AS score,
            |         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv,
-           |         CAST(('0x' || substring(md5(CAST(user_id AS STRING) || '|did'),
-           |           1, 13)) AS BIGINT) % 2 AS treat
+           |         ${OracleSql.md5Long("CAST(user_id AS STRING) || '|did'")} % 2 AS treat
            |  FROM events GROUP BY user_id),
            |r AS (SELECT *, row_number() OVER (ORDER BY score DESC, user_id) AS rnk,
            |        count(*) OVER () AS nu FROM u),
@@ -890,8 +886,8 @@ object ScienceQueries {
         .agg(count(lit(1)).as("score"),
           max(when(col("event_type") === "purchase", 1).otherwise(0)).as("conv"))
         .withColumn("treat",
-          pmod(conv(substring(md5(concat(col("user_id").cast("string"), lit("|did"))),
-            1, 13), 16, 10).cast("long"), lit(2L)))
+          pmod(TextAnalysis.md5Long(concat(col("user_id").cast("string"), lit("|did"))),
+            lit(2L)))
         .withColumn("negscore", -col("score"))
       val (ranked, nu) = Scale.globalRankWithTotal(u, "rnk", "negscore", "user_id")
       val g = ranked
@@ -1124,8 +1120,7 @@ object ScienceQueries {
             | / (CAST(nt AS DOUBLE) + CAST(nc AS DOUBLE) - 2)""".stripMargin.replaceAll("\n", "")
         val mde = s"2.8016 * sqrt($vp * (1 / CAST(nt AS DOUBLE) + 1 / CAST(nc AS DOUBLE)))"
         s"""WITH ev AS (
-           |  SELECT CAST(('0x' || substring(md5(CAST(user_id AS STRING) || '|did'),
-           |           1, 13)) AS BIGINT) % 2 AS treat,
+           |  SELECT ${OracleSql.md5Long("CAST(user_id AS STRING) || '|did'")} % 2 AS treat,
            |         CAST(round(value * 100) AS BIGINT) AS cents
            |  FROM events),
            |m AS (
@@ -1153,8 +1148,8 @@ object ScienceQueries {
           | / (CAST(nt AS DOUBLE) + CAST(nc AS DOUBLE) - 2)""".stripMargin.replaceAll("\n", "")
       val mde = s"2.8016 * sqrt($vp * (1 / CAST(nt AS DOUBLE) + 1 / CAST(nc AS DOUBLE)))"
       val ev = Tables.events(s, dir).select(
-        pmod(conv(substring(md5(concat(col("user_id").cast("string"), lit("|did"))),
-          1, 13), 16, 10).cast("long"), lit(2L)).as("treat"),
+        pmod(TextAnalysis.md5Long(concat(col("user_id").cast("string"), lit("|did"))),
+          lit(2L)).as("treat"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       ev.agg(
         sum(when(col("treat") === 1, 1L).otherwise(0L)).as("nt"),
@@ -1802,8 +1797,7 @@ object ScienceQueries {
         val diff = s"(${arm("t")("R")} - ${arm("c")("R")})"
         val se = s"sqrt(${varR("t")} + ${varR("c")})"
         s"""WITH u AS (
-           |  SELECT CAST(('0x' || substring(md5(CAST(user_id AS STRING) || '|did'),
-           |           1, 13)) AS BIGINT) % 2 AS treat,
+           |  SELECT ${OracleSql.md5Long("CAST(user_id AS STRING) || '|did'")} % 2 AS treat,
            |         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
            |           AS BIGINT) AS x,
            |         CAST(count(*) AS BIGINT) AS y
@@ -1849,8 +1843,8 @@ object ScienceQueries {
         .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("x"),
           count(lit(1)).as("y"))
         .withColumn("treat",
-          pmod(conv(substring(md5(concat(col("user_id").cast("string"), lit("|did"))),
-            1, 13), 16, 10).cast("long"), lit(2L)))
+          pmod(TextAnalysis.md5Long(concat(col("user_id").cast("string"), lit("|did"))),
+            lit(2L)))
       def cell(t: Int, e: String) =
         sum(when(col("treat") === t, expr(e)).otherwise(0L))
       u.agg(
@@ -1887,8 +1881,7 @@ object ScienceQueries {
             .stripMargin.replaceAll("\n", "")
         s"""WITH ev AS (
            |  SELECT CAST(ts AS DATE) AS day,
-           |         CAST(('0x' || substring(md5(CAST(user_id AS STRING) || '|did'),
-           |           1, 13)) AS BIGINT) % 2 AS treat,
+           |         ${OracleSql.md5Long("CAST(user_id AS STRING) || '|did'")} % 2 AS treat,
            |         CAST(round(value * 100) AS BIGINT) AS cents
            |  FROM events),
            |d0 AS (SELECT min(day) AS mind FROM ev),
@@ -1920,8 +1913,8 @@ object ScienceQueries {
           | / CAST(n * sii - si * si AS DOUBLE))) AS BIGINT)"""
           .stripMargin.replaceAll("\n", "")
       val ev = Tables.eventsTs(s, dir).select(to_date(col("ts")).as("day"),
-        pmod(conv(substring(md5(concat(col("user_id").cast("string"), lit("|did"))),
-          1, 13), 16, 10).cast("long"), lit(2L)).as("treat"),
+        pmod(TextAnalysis.md5Long(concat(col("user_id").cast("string"), lit("|did"))),
+          lit(2L)).as("treat"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       val d0 = ev.agg(min("day").as("mind"))
       val g = ev.groupBy("day").agg(

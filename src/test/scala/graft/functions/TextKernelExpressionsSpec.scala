@@ -47,6 +47,23 @@ class TextKernelExpressionsSpec extends SparkSpec {
     assert(r.isNullAt(0))
   }
 
+  test("shiftright(graft_md5long, 8) is a 52-bit draw, exact as a double, equal to the replay") {
+    // the width q247/q267 rank on as Double, q274 divides by 2^52 + 1
+    // and q291 guards with + 2^52
+    val strs = adversarial ++ (0 until 2000).map(i => s"$i|draw")
+    val rows = strs.toDF("s")
+      .select($"s", shiftright(TextKernelFunctions.graftMd5Long($"s"), 8).as("d"))
+      .select($"s", $"d", $"d".cast("double").cast("long").as("rt"))
+      .collect()
+    rows.foreach { r =>
+      val (s, d) = (r.getString(0), r.getLong(1))
+      assert(d >= 0L && d < (1L << 52), s"'$s': $d outside [0, 2^52)")
+      assert(r.getLong(2) == d, s"'$s': $d does not round-trip through double")
+      assert(d == graft.HashReplay.md5Long(s) >> 8, s"'$s': replay differs")
+    }
+    assert(rows.map(_.getLong(1)).max >= (1L << 51), "draw narrower than 52 bits")
+  }
+
   test("graft_ws_tokens == filter(split(s, \\\\s+), <> '') on real docs") {
     val df = spark.read.parquet(s"$sf001/documents.parquet")
     val bad = df.select(

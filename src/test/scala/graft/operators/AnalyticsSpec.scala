@@ -434,13 +434,8 @@ class AnalyticsSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id", "lang", "text").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    def bucket(id: Long): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(s"$id|graftnb".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.take(6), 16) % 10000
-    }
-    val (train, test) = docs.partition(d => bucket(d._1) < 8000)
+    val (train, test) =
+      docs.partition(d => graft.HashReplay.md5Long(s"${d._1}|graftnb") % 10000 < 8000)
     assert(test.nonEmpty && train.nonEmpty)
     val ct = scala.collection.mutable.Map.empty[(String, String), Long]
     train.foreach { case (_, l, t) =>
@@ -559,11 +554,6 @@ class AnalyticsSpec extends SparkSpec {
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
 
-    def md5Long60(s: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.substring(17, 32), 16)
-    }
     val stops = Set("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id", "source", "text").collect()
@@ -577,7 +567,7 @@ class AnalyticsSpec extends SparkSpec {
       val n = scores.length
       val means = (0 until 200).map { b =>
         val s = (0 until n).map { j =>
-          scores((md5Long60(s"bs:$src:$b:$j") % n).toInt)
+          scores((graft.HashReplay.md5Long(s"bs:$src:$b:$j") % n).toInt)
         }.sum
         (s / n, b)
       }.sorted

@@ -985,8 +985,8 @@ class CurationSpec extends SparkSpec {
       val hashed = graft.tables.Tables.documents(spark, sf0001)
         .filter(col("lang") === lang)
         .select(col("doc_id"),
-          conv(substring(md5(concat(col("doc_id").cast("string"),
-            lit("|neyman"))), 1, 13), 16, 10).cast("long").as("hv"))
+          shiftright(graft.textops.TextAnalysis.md5Long(concat(
+            col("doc_id").cast("string"), lit("|neyman"))), 8).as("hv"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
         .sortBy { case (id, hv) => (hv, id) }
         .take(alloc.toInt).map(_._1)
@@ -1251,8 +1251,8 @@ class CurationSpec extends SparkSpec {
           .cast("long").as("w"))
       .filter(col("w") >= 1)
       .select(col("doc_id"), col("w"),
-        conv(substring(md5(concat(col("doc_id").cast("string"),
-          lit("|aes"))), 1, 13), 16, 10).cast("long").as("hv"))
+        shiftright(graft.textops.TextAnalysis.md5Long(concat(
+          col("doc_id").cast("string"), lit("|aes"))), 8).as("hv"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val keyed = all.map { case (id, w, hv) =>
       val key = BigDecimal(1e12 *
@@ -1608,15 +1608,14 @@ class CurationSpec extends SparkSpec {
     val custs = graft.tables.Tables.customer(spark, sf0001)
       .select("c_custkey").collect().map(_.getLong(0)).sorted
     val nc = custs.length.toLong
-    // replay the md5 trial stream through Spark's own conv (same expr)
+    // replay the md5 trial stream through the engine's md5Long (same expr)
     val sups = pairs.map(_._1).toSeq.distinct.sorted
     import spark.implicits._
     val hashed = sups.flatMap(s => (0L until 8L).map(t => (s, t)))
       .toDF("s", "t")
       .select(col("s"), col("t"),
-        pmod(conv(substring(md5(concat(col("s").cast("string"), lit("|"),
-          col("t").cast("string"), lit("|negsamp"))), 1, 13), 16, 10)
-          .cast("long"), lit(nc)).as("rk"))
+        pmod(graft.textops.TextAnalysis.md5Long(concat(col("s").cast("string"),
+          lit("|"), col("t").cast("string"), lit("|negsamp"))), lit(nc)).as("rk"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val expect = hashed
       .map { case (s, t, rk) => (s, t, custs(rk.toInt)) }
@@ -1740,9 +1739,8 @@ class CurationSpec extends SparkSpec {
     val orders = graft.tables.Tables.orders(spark, sf0001)
       .select(col("o_custkey"),
         round(lit(100d) * col("o_totalprice")).cast("long").as("cents"),
-        pmod(conv(substring(md5(concat(col("o_custkey").cast("string"),
-          lit("|shard"))), 1, 13), 16, 10).cast("long"), lit(32L))
-          .as("shard"))
+        pmod(graft.textops.TextAnalysis.md5Long(concat(
+          col("o_custkey").cast("string"), lit("|shard"))), lit(32L)).as("shard"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.map(_._2).sum == orders.length.toLong)
     assert(rows.map(_._3).sum == orders.map(_._2).sum)

@@ -114,6 +114,13 @@ class ScaleSpec extends SparkSpec {
         spark.range(1000).select($"id"), "id", "s1", splits)
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(subset.forall { case (id, s) => full(id) == s })
+    // the bucket is md5Long(id|salt) mod 10000 — the driver replay gives
+    // every row's split from the weights
+    val off = full.filterNot { case (id, s) =>
+      val b = graft.HashReplay.md5Long(s"$id|s1") % 10000
+      s == (if (b < 8000) "train" else if (b < 9000) "val" else "test")
+    }
+    assert(off.size == 0, s"rows off the md5Long bucket, e.g. ${off.take(3)}")
     // a different salt reshuffles (some rows must move)
     val other = Scale.hashSplit(df, "id", "s2", splits)
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap

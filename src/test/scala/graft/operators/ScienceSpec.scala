@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.HashReplay.md5Long
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -14,14 +15,6 @@ class ScienceSpec extends SparkSpec {
 
   private def planOf(name: String): String =
     run(name).queryExecution.executedPlan.toString
-
-  /** The engine's portable md5 coordinate, replayed on the driver. */
-  private def md5Coord(k: Long, salt: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest((k.toString + salt).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 13), 16) % 1000000L
-  }
 
   // ---- q288 multiple OLS ----
 
@@ -100,9 +93,9 @@ class ScienceSpec extends SparkSpec {
       .select("c_custkey").collect().map(_.getLong(0))
     val sups = spark.read.parquet(s"$sf0001/supplier.parquet")
       .select("s_suppkey").collect().map(_.getLong(0))
-    val spts = sups.map(k => (k, md5Coord(k, "|gx"), md5Coord(k, "|gy")))
+    val spts = sups.map(k => (k, md5Long(s"$k|gx") % 1000000L, md5Long(s"$k|gy") % 1000000L))
     val want = custs.flatMap { ck =>
-      val (cu, cv) = (md5Coord(ck, "|gx"), md5Coord(ck, "|gy"))
+      val (cu, cv) = (md5Long(s"$ck|gx") % 1000000L, md5Long(s"$ck|gy") % 1000000L)
       val within = spts.map { case (sk, su, sv) =>
         ((cu - su) * (cu - su) + (cv - sv) * (cv - sv), sk)
       }.filter(_._1 <= 10000000000L)
@@ -182,13 +175,7 @@ class ScienceSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val lo = raw.map(_._2).min; val hi = raw.map(_._2).max
     val bd = lo + (hi - lo) / 2
-    def treatOf(u: Long): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest((u.toString + "|did").getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.substring(0, 13), 16) % 2L
-    }
-    val cells = raw.groupBy { case (u, t, _) => (treatOf(u), if (t >= bd) 1 else 0) }
+    val cells = raw.groupBy { case (u, t, _) => (md5Long(s"$u|did") % 2L, if (t >= bd) 1 else 0) }
       .map { case (k, xs) => k -> (xs.length.toLong, xs.map(_._3).sum) }
     val Seq(cPre, cPost, tPre, tPost) =
       Seq((0L, 0), (0L, 1), (1L, 0), (1L, 1)).map(cells)
@@ -208,13 +195,6 @@ class ScienceSpec extends SparkSpec {
 
   // ---- q294 winnowing ----
 
-  /** 60-bit md5 gram hash — the engine's md5Long (hex chars 18..32). */
-  private def md5Long60(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(17, 32), 16)
-  }
-
   test("q294: pairs replay a driver winnowing (k=3, w=4, df<=50, shared>=2)") {
     val got = run("q294_winnowing").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -226,7 +206,7 @@ class ScienceSpec extends SparkSpec {
       val grams =
         if (toks.length < 3) Array(toks.mkString(" "))
         else toks.sliding(3).map(_.mkString(" ")).toArray
-      val hs = grams.map(md5Long60)
+      val hs = grams.map(md5Long)
       val f =
         if (hs.length < 4) Set(hs.min)
         else hs.sliding(4).map(_.min).toSet
@@ -375,12 +355,7 @@ class ScienceSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1)))
     val users = ev.groupBy(_._1).map { case (u, xs) =>
       (u, xs.length.toLong, if (xs.exists(_._2 == "purchase")) 1L else 0L,
-        {
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val hex = md.digest((u.toString + "|did").getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
-          java.lang.Long.parseLong(hex.substring(0, 13), 16) % 2L
-        })
+        md5Long(s"$u|did") % 2L)
     }.toSeq
     val nu = users.size.toLong
     val ranked = users.sortBy(x => (-x._2, x._1)).zipWithIndex
@@ -540,14 +515,8 @@ class ScienceSpec extends SparkSpec {
     val ev = graft.tables.Tables.events(spark, sf0001)
       .selectExpr("user_id", "CAST(round(value * 100) AS BIGINT) AS cents")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    def treatOf(u: Long): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest((u.toString + "|did").getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.substring(0, 13), 16) % 2L
-    }
-    val t = ev.filter(e => treatOf(e._1) == 1L).map(_._2)
-    val c = ev.filter(e => treatOf(e._1) == 0L).map(_._2)
+    val t = ev.filter(e => md5Long(s"${e._1}|did") % 2L == 1L).map(_._2)
+    val c = ev.filter(e => md5Long(s"${e._1}|did") % 2L == 0L).map(_._2)
     assert(got.getLong(0) === t.length.toLong)
     assert(got.getLong(1) === c.length.toLong)
     def sq(xs: Array[Long]) = xs.map(x => x.toDouble * x).sum
@@ -921,13 +890,6 @@ class ScienceSpec extends SparkSpec {
     }
   }
 
-  private def md5Arm(u: Long): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest((u.toString + "|did").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 13), 16) % 2L
-  }
-
   // ---- q317 ratio-metric CI ----
 
   test("q317: ratio, delta-method SE, and z replay a driver user-level computation") {
@@ -936,7 +898,7 @@ class ScienceSpec extends SparkSpec {
       .select("user_id", "event_type").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val users = ev.groupBy(_._1).map { case (u, xs) =>
-      (md5Arm(u), xs.count(_._2 == "purchase").toLong, xs.length.toLong)
+      (md5Long(s"$u|did") % 2L, xs.count(_._2 == "purchase").toLong, xs.length.toLong)
     }.toSeq
     def armStats(t: Long): (Long, Double, Double) = {
       val xs = users.filter(_._1 == t)
@@ -969,8 +931,8 @@ class ScienceSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val mind = ev.map(_._1).min
     val pts = ev.groupBy(_._1).toSeq.flatMap { case (d, xs) =>
-      val t = xs.filter(e => md5Arm(e._2) == 1L)
-      val c = xs.filter(e => md5Arm(e._2) == 0L)
+      val t = xs.filter(e => md5Long(s"${e._2}|did") % 2L == 1L)
+      val c = xs.filter(e => md5Long(s"${e._2}|did") % 2L == 0L)
       if (t.isEmpty || c.isEmpty) None
       else {
         val i = java.time.temporal.ChronoUnit.DAYS.between(
