@@ -120,30 +120,33 @@ object Dedup {
       .filter(size(col(out)).between(minMembers, maxBucket))
 
   /** In-bucket pair expansion over the `members` array column: every
-    * position pair i < j becomes a struct of (id_a, id_b) = (least,
-    * greatest) of the two members' `id`s plus one field per `carry`
-    * entry built from (x, y). `keep` filters those structs inside the
-    * array, BEFORE the explode materializes them (the prefix filters'
-    * length and positional bounds). Output: distinct (id_a, id_b, `out`
-    * fields) — a pair colliding in several buckets appears once.
+    * position pair i < j becomes a row of (id_a, id_b) = (least,
+    * greatest) of the two members' `id`s plus one column per `carry`
+    * entry built from (x, y). `keep`, a predicate over those columns
+    * (the prefix filters' length and positional bounds), drops pairs
+    * before the distinct. Generators, not lambdas: `posexplode` streams
+    * each member x with its position i, `explode(slice(ms, i + 2, size))`
+    * streams every later member y, and the projections and `keep` are
+    * ordinary codegen'd expressions — a bucket's pairs stream through
+    * the stage instead of forming one n²-element array. Output:
+    * distinct (id_a, id_b, `out` columns) — a pair colliding in several
+    * buckets appears once.
     */
   private[graft] def bucketPairs(
       buckets: DataFrame,
       members: String = "members",
       id: Column => Column = x => x,
       carry: Seq[(String, (Column, Column) => Column)] = Nil,
-      keep: Option[Column => Column] = None,
+      keep: Option[Column] = None,
       out: Seq[String] = Nil): DataFrame = {
-    val ms = col(members)
-    val pairsCol = flatten(transform(ms, (x, i) => {
-      val later = transform(slice(ms, i + 2, size(ms)), y => struct(
-        least(id(x), id(y)).as("id_a") +: greatest(id(x), id(y)).as("id_b") +:
-          carry.map { case (name, f) => f(x, y).as(name) }: _*))
-      keep.fold(later)(filter(later, _))
-    }))
-    buckets
-      .select(explode(pairsCol).as("p"))
-      .select(("id_a" +: "id_b" +: out).map(f => col(s"p.$f").as(f)): _*)
+    val (ms, x, y) = (col(members), col("x"), col("y"))
+    val pairs = buckets
+      .select(ms, posexplode(ms).as(Seq("i", "x")))
+      .select(x, explode(slice(ms, col("i") + 2, size(ms))).as("y"))
+      .select(least(id(x), id(y)).as("id_a") +: greatest(id(x), id(y)).as("id_b") +:
+        carry.map { case (name, f) => f(x, y).as(name) }: _*)
+    keep.fold(pairs)(pairs.filter)
+      .select(("id_a" +: "id_b" +: out).map(col): _*)
       .distinct()
   }
 
@@ -496,7 +499,7 @@ object Dedup {
       .select(col("id"), col("n"), col("g"), (col("p0") + 1).as("p"))
     // ONE shuffle gathers each prefix-shingle's postings; pairs expand
     // in-bucket with the LENGTH filter (J ≤ min/max) and the PPJoin
-    // POSITIONAL filter applied BEFORE materialization: a pair colliding
+    // POSITIONAL filter applied before the distinct: a pair colliding
     // at positions (px, py) can overlap at most 1 + min(nx−px, ny−py)
     // shingles, and J ≥ t needs overlap ≥ t/(1+t)·(nx+ny) — collisions
     // that can't reach the bound never become candidates. A true pair is
@@ -514,9 +517,8 @@ object Dedup {
         "nmax" -> ((x, y) => greatest(x.getField("n"), y.getField("n"))),
         "ubound" -> ((x, y) => lit(1) + least(x.getField("n") - x.getField("p"),
           y.getField("n") - y.getField("p")))),
-      keep = Some(p => p.getField("nmin").cast("double") >= p.getField("nmax") * te
-        && p.getField("ubound").cast("double") >=
-          (p.getField("nmin") + p.getField("nmax")) * alphaNeed))
+      keep = Some(col("nmin").cast("double") >= col("nmax") * te
+        && col("ubound").cast("double") >= (col("nmin") + col("nmax")) * alphaNeed))
       .localCheckpoint()
     ngramJaccardOnSets(sh, cands)
       .filter(col("jaccard") >= threshold)
@@ -540,39 +542,39 @@ object Dedup {
     *    remaining tail weight, and (10⁴+tauBp)·bound ≥ tauBp·(Wa+Wb)
     *    must still be reachable, or the collision never becomes a
     *    candidate.
-    * Verify is the q97 map_zip_with Σ min in exact longs. One shuffle
-    * gathers prefix postings; pair fan-out is Σ (prefix-df)², never
-    * docs². Output: (id_a, id_b, inter_w, wa, wb, jw_bp).
+    * Verify is the `graft_weighted_overlap` merge walk (Σ min in exact
+    * longs, q97's scorer) over each doc's sorted (token, count) list.
+    * One shuffle gathers prefix postings; pair fan-out is Σ (prefix-df)²,
+    * never docs². Output: (id_a, id_b, inter_w, wa, wb, jw_bp).
     */
   def weightedJaccardJoin(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       tauBp: Int = 6000): DataFrame = {
-    // hashed-token counts: (id, t, c) with one row per DISTINCT token,
-    // plus each doc's total weight W = Σ c (token multiplicity mass)
+    import org.apache.spark.sql.expressions.Window
+    // hashed-token counts: (id, t, c) with one row per DISTINCT token
     val tokc = docs
       .select(col(idCol).as("id"),
         explode(TextAnalysis.wsTokens(col(textCol))).as("tok"))
       .groupBy(col("id"), TextAnalysis.md5Long(col("tok")).as("t"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint() // df count, prefix build, and both verify sides
-    val w = tokc.groupBy("id").agg(sum("c").as("wt"))
     val freq = tokc.groupBy("t").agg(count(lit(1)).as("df"))
-    // per doc: canonical (df, t) order with a LINEAR running weight —
-    // one distributed global prefix sum over (id, df, t) order plus a
-    // per-doc offset (the q162/q175 grouped-rank trick; a per-position
-    // slice-fold would be O(tokens²) per doc). Index only the head
-    // positions whose tail weight (incl. the token) still reaches the
-    // τ·W floor a qualifying pair needs.
-    val ordered = tokc.join(freq, "t")
-    val cum = graft.operators.Scale.prefixSumLongBy(
-      ordered, Seq("id", "df", "t"), "c", "cum")
-    val offs = cum.groupBy("id").agg(min(col("cum") - col("c")).as("off"))
-    val prefixes = cum.join(offs, "id").join(w, "id")
-      // tail(p) = wt − cumBefore(p), cumBefore = cum − c − off
-      .select(col("id"), col("wt"), col("t"),
-        (col("wt") - (col("cum") - col("c") - col("off"))).as("tail"))
+    // per doc: canonical (df, t) order with a running weight — one
+    // window partitioned by doc, so a window holds one doc's distinct
+    // tokens. The same window gives the doc weight W = Σ c. Index only
+    // the head positions whose tail weight (incl. the token) still
+    // reaches the τ·W floor a qualifying pair needs.
+    val byDoc = Window.partitionBy("id").orderBy("df", "t")
+    val prefixes = tokc.join(freq, "t")
+      .select(col("id"), col("t"), col("c"),
+        sum("c").over(byDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+          .as("cum"),
+        sum("c").over(byDoc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+          .as("wt"))
+      // tail(p) = wt − cumBefore(p), cumBefore = cum − c
+      .select(col("id"), col("wt"), col("t"), (col("wt") - col("cum") + col("c")).as("tail"))
       .filter(col("tail") * 10000L >= col("wt") * tauBp)
     val buckets = prefixes.groupBy("t")
       .agg(collect_list(struct(col("id"), col("wt"), col("tail"))).as("ms"))
@@ -582,28 +584,21 @@ object Dedup {
         "wmin" -> ((x, y) => least(x.getField("wt"), y.getField("wt"))),
         "wmax" -> ((x, y) => greatest(x.getField("wt"), y.getField("wt"))),
         "ub" -> ((x, y) => least(x.getField("tail"), y.getField("tail")))),
-      keep = Some(p => p.getField("wmin") * 10000L >= p.getField("wmax") * tauBp
-        && p.getField("ub") * (10000L + tauBp) >=
-          (p.getField("wmin") + p.getField("wmax")) * tauBp))
+      keep = Some(col("wmin") * 10000L >= col("wmax") * tauBp
+        && col("ub") * (10000L + tauBp) >= (col("wmin") + col("wmax")) * tauBp))
       .localCheckpoint() // both verify attach joins read this
-    // exact verify: Σ min over the token-count maps (q97's scorer)
-    val maps = tokc.groupBy("id")
-      .agg(map_from_entries(sort_array(collect_list(
-        struct(col("t"), col("c"))))).as("m"))
-      .join(w, "id")
-    val attach = cands
-      .join(maps.select(col("id").as("id_a"), col("m").as("ma"),
-        col("wt").as("wa")), "id_a")
-      .join(maps.select(col("id").as("id_b"), col("m").as("mb"),
-        col("wt").as("wb")), "id_b")
-    attach
-      .withColumn("inter_w", expr(
-        """aggregate(map_values(map_zip_with(ma, mb,
-          |  (k, a, b) -> least(coalesce(a, 0L), coalesce(b, 0L)))),
-          |  0L, (acc, x) -> acc + x)""".stripMargin))
-      .select(col("id_a"), col("id_b"), col("inter_w"),
-        col("wa"), col("wb"),
-        expr("inter_w * 10000 div (wa + wb - inter_w)").as("jw_bp"))
+    // exact verify: Σ min over each doc's (t, c) list in ascending t
+    val lists = tokc.groupBy("id")
+      .agg(sort_array(collect_list(struct(col("t"), col("c")))).as("l"),
+        sum("c").as("wt"))
+    cands
+      .join(lists.select(col("id").as("id_a"), col("l").as("la"), col("wt").as("wa")), "id_a")
+      .join(lists.select(col("id").as("id_b"), col("l").as("lb"), col("wt").as("wb")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        graft.functions.WeightedOverlapFunctions.graftWeightedOverlap(col("la"), col("lb"))
+          .as("inter_w"),
+        col("wa"), col("wb"))
+      .withColumn("jw_bp", expr("inter_w * 10000 div (wa + wb - inter_w)"))
       .filter(col("jw_bp") >= tauBp)
   }
 

@@ -13,6 +13,7 @@ object GraftFunctions {
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_cosine" -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
     "graft_l2sq" -> (exprs => L2SquaredDistance(exprs(0), exprs(1))),
+    "graft_weighted_overlap" -> (exprs => WeightedOverlap(exprs(0), exprs(1))),
     "graft_minhash" -> (exprs => MinHashSignature(exprs(0),
       exprs(1).eval().asInstanceOf[Number].intValue(),
       exprs(2).eval().asInstanceOf[Number].intValue())),

@@ -452,8 +452,9 @@ object PipelineQueries {
     //      the bag-semantics similarity the set-based paths above ignore
     //      (a doc repeating one token 100× is very unlike one mentioning
     //      it once; set jaccard can't see that). Spark side scores pairs
-    //      with map_zip_with over token-count maps; all arithmetic is
-    //      integer (den = Σa + Σb − num), so basis points hash-match.
+    //      with the graft_weighted_overlap merge walk over sorted
+    //      (md5Long token, count) lists; all arithmetic is integer
+    //      (den = Σa + Σb − num), so basis points hash-match.
     //      Pairs = the planted twins, scored directly (candidate
     //      generation is q31/q91's job; this is the scorer). ----
     QueryDef(
@@ -493,21 +494,22 @@ object PipelineQueries {
       val withTwin = base.select(col("doc_id"), col("toks"),
         concat(slice(col("toks"), lit(4), size(col("toks")) - 3),
           slice(col("toks"), 4, 5)).as("toks_b"))
-      // token-count maps built linearly: explode → count → map_from_entries
+      // token-count lists built linearly: explode → count per hashed
+      // token → sort_array(collect_list), ascending by token key
       def counts(tokCol: String, out: String) =
-        withTwin.select(col("doc_id"), explode(col(tokCol)).as("t"))
-          .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
+        withTwin.select(col("doc_id"), explode(col(tokCol)).as("tok"))
+          .groupBy(col("doc_id"), TextAnalysis.md5Long(col("tok")).as("t"))
+          .agg(count(lit(1)).as("c"))
           .groupBy("doc_id")
-          .agg(map_from_entries(collect_list(struct(col("t"), col("c")))).as(out))
+          .agg(sort_array(collect_list(struct(col("t"), col("c")))).as(out))
       val pairs = withTwin
         .select(col("doc_id"), size(col("toks")).cast("long").as("n_a"),
           size(col("toks_b")).cast("long").as("n_b"))
         .join(counts("toks", "ma"), "doc_id")
         .join(counts("toks_b", "mb"), "doc_id")
       pairs.select(col("doc_id"), col("n_a"), col("n_b"),
-        aggregate(map_values(map_zip_with(col("ma"), col("mb"),
-            (_, x, y) => least(coalesce(x, lit(0L)), coalesce(y, lit(0L))))),
-          lit(0L), (acc, x) => acc + x).as("inter_w"))
+        graft.functions.WeightedOverlapFunctions
+          .graftWeightedOverlap(col("ma"), col("mb")).as("inter_w"))
         .withColumn("wj_bp",
           expr("CAST(10000 * inter_w div (n_a + n_b - inter_w) AS BIGINT)"))
         .orderBy("doc_id")
@@ -542,10 +544,11 @@ object PipelineQueries {
     //      weighted-AllPairs family): q97 SCORES known pairs under bag
     //      semantics; this one FINDS every pair with multiset jaccard
     //      ≥ 0.6 — weighted length/prefix/positional filters generate
-    //      candidates (Σ prefix-df², never docs²), map_zip_with Σ min
-    //      verifies exactly. Twins repeat their own head tokens, so
-    //      their SET jaccard stays ≈ 1 while the MULTISET jaccard
-    //      drops — the separation this operator exists to see. Subset
+    //      candidates (Σ prefix-df², never docs²), the
+    //      graft_weighted_overlap Σ min verifies exactly. Twins repeat
+    //      their own head tokens, so their SET jaccard stays ≈ 1 while
+    //      the MULTISET jaccard drops — the separation this operator
+    //      exists to see. Subset
     //      (doc_id < 300) keeps the oracle's token-join at catalog
     //      scale; the operator is corpus-general. ----
     QueryDef(

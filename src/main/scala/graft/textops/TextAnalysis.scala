@@ -137,15 +137,19 @@ object TextAnalysis {
     argmaxLang(scores)
   }
 
-  private def argmaxLang(scores: Seq[(String, Column)]): Column = {
-    val best = scores.tail.foldLeft(
-      struct(scores.head._2.as("score"), lit(scores.head._1).as("lang"))) {
-      case (acc, (lang, score)) =>
-        when(score > acc.getField("score"),
-          struct(score.as("score"), lit(lang).as("lang"))).otherwise(acc)
-    }
-    when(best.getField("score") <= 0, "und").otherwise(best.getField("lang"))
-  }
+  /** Argmax over the per-language scores, spelled linearly: one
+    * `greatest` over (score, −profile index, lang) structs, so a tie
+    * goes to the earlier profile, and each struct already carries "und"
+    * when its own score is ≤ 0 — the winner's lang is the answer, read
+    * once. A fold of `when(score > acc.score)` doubles the expression
+    * tree per language and pushed q208's two-argmax projection past the
+    * 64 KB method limit.
+    */
+  private def argmaxLang(scores: Seq[(String, Column)]): Column =
+    greatest(scores.zipWithIndex.map { case ((lang, score), i) =>
+      struct(score.as("score"), lit(-i).as("rank"),
+        when(score <= 0, "und").otherwise(lang).as("lang"))
+    }: _*).getField("lang")
 
   // ---------- fingerprinting ----------
 

@@ -712,6 +712,43 @@ private[tools] final class ScaleProbes(
         f"native vs composed at 1x: ${c1.secs / n1.secs}%.1fx faster")
     }),
 
+    // weighted-jaccard exact verify (the q176/q97 Σmin): the native
+    // graft_weighted_overlap merge walk against the composed
+    // map_zip_with fold it replaced, over each doc's sorted (token,
+    // count) list paired with its successor's. The pair lists are built
+    // and pinned untimed, so only the scoring is timed; both spellings
+    // must return the same Σ.
+    Bespoke("woverlap", () => {
+      def overlap(label: String, n: Int, native: Boolean): Run = {
+        val lists = docs(n)
+          .select(col("doc_id"), explode(TextAnalysis.wsTokens(col("text"))).as("tok"))
+          .groupBy(col("doc_id"), TextAnalysis.md5Long(col("tok")).as("t"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy("doc_id")
+          .agg(sort_array(collect_list(struct(col("t"), col("c")))).as("l"))
+        val pairs = lists.select(col("doc_id"), col("l").as("la"))
+          .join(lists.select((col("doc_id") - 1).as("doc_id"), col("l").as("lb")), "doc_id")
+          .localCheckpoint()
+        val (a, b) = (col("la"), col("lb"))
+        val w =
+          if (native) graft.functions.WeightedOverlapFunctions.graftWeightedOverlap(a, b)
+          else aggregate(map_values(map_zip_with(map_from_entries(a), map_from_entries(b),
+              (_, x, y) => least(coalesce(x, lit(0L)), coalesce(y, lit(0L))))),
+            lit(0L), (acc, x) => acc + x)
+        timed(s"woverlap-$label", v => s"sum=$v")(pairs.select(sum(w)).head().getLong(0))
+      }
+      // warm both spellings before the timed runs, as winnow does
+      overlap("warmup-1x-native", 1, native = true)
+      overlap("warmup-1x-composed", 1, native = false)
+      val n1 = overlap("1x-native", 1, native = true)
+      val nn = overlap(s"${copies}x-native", copies, native = true)
+      val c1 = overlap("1x-composed", 1, native = false)
+      val cn = overlap(s"${copies}x-composed", copies, native = false)
+      println(f"[scaleprobe] woverlap time ratio=${nn.secs / n1.secs}%.2f for ${copies}x docs; " +
+        f"native vs composed: ${c1.secs / n1.secs}%.1fx faster at 1x, " +
+        f"${cn.secs / nn.secs}%.1fx at ${copies}x; sums agree=${n1.n == c1.n && nn.n == cn.n}")
+    }),
+
     // ---- round-7 sections: after the legacy sweep (see above) ----
 
     // Bootstrap CI (q207 shape): B=200 content-addressed resamples —

@@ -14,15 +14,21 @@ class CatalogSpec extends SparkSpec {
 
   test("every catalog query runs on sf0.001 and returns rows") {
     // run the whole catalog and fail ONCE with every broken query: an
-    // abort at the first failure would leave every later query unchecked
-    val failures = SparkEntry.catalog.flatMap { q =>
-      Try(q.fn(spark, sf0001).count()) match {
+    // abort at the first failure would leave every later query unchecked.
+    // Codegen fallback is off for the run: a stage whose generated code
+    // does not compile (say, a method past the 64 KB limit) fails its
+    // query here instead of silently running interpreted. Each result is
+    // collected in full, because a count() plan prunes the projections
+    // that such a stage would compute.
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val failures = try SparkEntry.catalog.flatMap { q =>
+      Try(q.fn(spark, sf0001).collect().length) match {
         case Success(n) if n > 0 => None
         case Success(_) => Some(s"${q.name}: returned 0 rows")
         case Failure(e) => Some(s"${q.name}: ${e.getClass.getName}: " +
           String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(""))
       }
-    }
+    } finally spark.conf.set("spark.sql.codegen.fallback", "true")
     assert(failures.isEmpty, s"${failures.size} of ${SparkEntry.catalog.size} " +
       s"catalog queries failed:\n${failures.mkString("\n")}")
   }

@@ -35,6 +35,7 @@ class CodegenCacheSpec extends SparkSpec {
   test("a warm round of the curation headlines compiles only the measured residue") {
     val cold = round()
     val warm = round()
+    info(s"warm round compiles per query: $warm (cold: $cold)")
     assert(warm.map(_._2).sum <= WarmResidue, s"warm round recompiled: $warm (cold: $cold)")
   }
 }

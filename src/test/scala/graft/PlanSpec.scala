@@ -506,6 +506,13 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"candidates must come from the weighted-prefix posting join:\n$plan")
+    // the verify is the native Σmin kernel, and nothing in the query
+    // runs an interpreted lambda (map_zip_with, aggregate, the old
+    // transform/filter pair expansion)
+    assert(plan.contains("graft_weighted_overlap("),
+      s"the exact verify must be the native kernel:\n$plan")
+    assert(!plan.contains("map_zip_with") && !plan.contains("lambdafunction"),
+      s"no interpreted higher-order function may remain:\n$plan")
   }
 
   test("q178 join-size pre-flight: histogram-sized work — aggregates before the key join") {

@@ -45,6 +45,25 @@ class BucketCapSpec extends SparkSpec {
     }
   }
 
+  test("bucketPairs: carried columns and the keep predicate match a driver-side i<j enumeration") {
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(5)
+    // repeated ids within and across buckets, empty and one-member buckets
+    val buckets = Seq.fill(12)(Seq.fill(rnd.nextInt(9))(
+      (rnd.nextInt(20).toLong, rnd.nextInt(7).toLong)))
+    val rows = Dedup.bucketPairs(buckets.map(Tuple1(_)).toDF("members"),
+        id = _.getField("_1"),
+        carry = Seq("s" -> ((x, y) => x.getField("_2") + y.getField("_2"))),
+        keep = Some(col("s") % 3 =!= 0), out = Seq("s"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val want = (for {
+      ms <- buckets; i <- ms.indices; j <- i + 1 until ms.size
+      s = ms(i)._2 + ms(j)._2 if s % 3 != 0
+    } yield (math.min(ms(i)._1, ms(j)._1), math.max(ms(i)._1, ms(j)._1), s)).toSet
+    assert(rows.length == rows.toSet.size, "output must be distinct")
+    assert(want.nonEmpty && rows.toSet == want)
+  }
+
   crossPaths.foreach { case (name, pairs) =>
     test(s"$name: n×m pairs at the cap, none past it on either side, a one-member side still pairs") {
       assert(pairs(cap, cap) == cap * cap)

@@ -571,6 +571,31 @@ class DedupSpec extends SparkSpec {
     assert(at60.contains((1L, 3L)))
   }
 
+  /** Sequential multiset reference: every pair with ⌊10⁴·Σmin/Σmax⌋ ≥
+    * tauBp, as (id_a, id_b) → (inter_w, wa, wb, jw_bp). A doc with no
+    * tokens has no weight and pairs with nothing.
+    */
+  private def bruteWeighted(docs: Seq[(Long, String)], tauBp: Long)
+      : Map[(Long, Long), (Long, Long, Long, Long)] = {
+    def counts(s: String) = s.split(" ").filter(_.nonEmpty)
+      .groupBy(identity).map { case (k, v) => k -> v.length.toLong }
+    (for {
+      (ia, ta) <- docs; (ib, tb) <- docs if ia < ib
+      ca = counts(ta); cb = counts(tb)
+      inter = (ca.keySet ++ cb.keySet).toSeq
+        .map(k => math.min(ca.getOrElse(k, 0L), cb.getOrElse(k, 0L))).sum
+      wa = ca.values.sum; wb = cb.values.sum
+      if wa > 0 && wb > 0 && inter * 10000L / (wa + wb - inter) >= tauBp
+    } yield (ia, ib) -> (inter, wa, wb, inter * 10000L / (wa + wb - inter))).toMap
+  }
+
+  private def weightedJoin(docs: Seq[(Long, String)], tauBp: Int) = {
+    import spark.implicits._
+    Dedup.weightedJaccardJoin(docs.toDF("doc_id", "text"), tauBp = tauBp)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
+  }
+
   test("weightedJaccardJoin == brute-force multiset reference on a random corpus") {
     val rnd = new scala.util.Random(7)
     val docs = (1L to 120L).map { i =>
@@ -578,21 +603,33 @@ class DedupSpec extends SparkSpec {
       val n = 10 + rnd.nextInt(30)
       i -> (1 to n).map(_ => s"t${rnd.nextInt(25)}").mkString(" ")
     }
-    val df = docs.toDF("doc_id", "text")
-    val got = Dedup.weightedJaccardJoin(df, tauBp = 6000)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    // sequential reference
-    def counts(s: String) = s.split(" ").groupBy(identity).map { case (k, v) => k -> v.length.toLong }
-    val want = (for {
-      (ia, ta) <- docs; (ib, tb) <- docs if ia < ib
-      ca = counts(ta); cb = counts(tb)
-      inter = (ca.keySet ++ cb.keySet).toSeq
-        .map(k => math.min(ca.getOrElse(k, 0L), cb.getOrElse(k, 0L))).sum
-      wa = ca.values.sum; wb = cb.values.sum
-      if inter * 10000L / (wa + wb - inter) >= 6000L
-    } yield (ia, ib) -> inter).toMap
+    val got = weightedJoin(docs, 6000)
+    val want = bruteWeighted(docs, 6000)
     assert(got == want,
       s"mismatch: extra=${got.keySet -- want.keySet} missing=${want.keySet -- got.keySet}")
+  }
+
+  test("weightedJaccardJoin == brute force on adversarial weights: 100x repeats, df ties, tiny docs") {
+    val hundred = Seq.fill(100)("a").mkString(" ")
+    val docs = Seq(
+      1L -> s"$hundred b c d",      // one token carries almost all weight
+      2L -> s"$hundred b c",        // ...and its near twin
+      3L -> "a b c d",              // set-identical to 1, multiset far
+      4L -> s"${Seq.fill(99)("a").mkString(" ")} e",
+      5L -> "solo",                 // one-token docs, identical
+      6L -> "solo",
+      7L -> "",                     // empty doc: no tokens, no weight
+      8L -> "x y z w",              // df ties: x, y, z each in 3 docs
+      9L -> "w z y x",
+      10L -> "x y z q")
+    for (tau <- Seq(3000, 6000, 9000)) {
+      val got = weightedJoin(docs, tau)
+      val want = bruteWeighted(docs, tau)
+      assert(got == want, s"tauBp=$tau: got $got want $want")
+    }
+    // the corpus exercises both sides of the bound
+    val at60 = bruteWeighted(docs, 6000).keySet
+    assert(at60.contains((1L, 2L)) && at60.contains((5L, 6L)) && !at60.contains((1L, 3L)))
   }
 
   test("cdcChunks: a prefix edit reflows ONLY the head chunk; fixed chunking loses everything") {
