@@ -149,6 +149,14 @@ object MapReduce {
   * [[require]], so when the root is absent the check fails with one
   * explicit message naming the missing path instead of an I/O error
   * (and is never skipped).
+  *
+  * The checks that read only this tree are the ones about its own
+  * files: GoldenParitySpec's two byte-golden wc checks and its oracle
+  * validity check, SourcesSpec's golden `kvtext` read, and the catalog
+  * queries q23_generic_mapreduce and q163_kvtext_source. The oracle,
+  * scheduler and `kvtext` split checks run on a seeded stand-in corpus
+  * (the test fixture `graft.mr.TextCorpus`), and on this tree as well
+  * wherever it exists.
   */
 object ReferenceCorpus {
   val Root = "/root/reference"

@@ -20,6 +20,11 @@ import org.scalatest.tagobjects.Retryable
   *  - output is atomically committed — no partial files, _SUCCESS marker
   *    (early_exit contract).
   *
+  * Every probe runs on each available corpus (the seeded stand-in of
+  * [[TextCorpus]], and the reference's texts wherever they exist), and
+  * "golden output" is that corpus's word-count lines: the sequential
+  * oracle's for the stand-in, the committed `mymrout` for the reference.
+  *
   * The probes assert on real scheduler timing (concurrency peaks,
   * speculative launches against live subprocess workers), which a loaded
   * host can perturb — those tests are tagged Retryable and re-run once
@@ -32,13 +37,9 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     if (isRetryable(test)) withRetry { super.withFixture(test) }
     else super.withFixture(test)
 
-  /** The reference corpus as (path, contents) rows in 8 partitions. */
-  private def pgTexts() = spark.sparkContext
-    .wholeTextFiles(ReferenceCorpus.require(ReferenceCorpus.PgGlob), minPartitions = 8)
-
-  /** The reference's golden word-count lines. */
-  private def goldenLines(): Seq[String] = Files.readAllLines(
-    Paths.get(ReferenceCorpus.require(ReferenceCorpus.GoldenWc))).asScala.toSeq
+  /** `c`'s eight texts as (path, contents) rows in 8 partitions. */
+  private def pgTexts(c: MrCorpus) = spark.sparkContext
+    .wholeTextFiles(c.glob, minPartitions = 8)
 
   /** Poll until the listener bus has delivered what we expect (bounded). */
   private def awaitListener(done: => Boolean, timeoutMs: Long = 10000): Unit = {
@@ -87,43 +88,47 @@ class SchedulerParitySpec extends SparkSpec with Retries {
   }
 
   test("jobcount parity: 8 input files -> exactly 8 map tasks, no re-execution", Retryable) {
-    val probe = new TaskProbe("graft-jobcount")
-    spark.sparkContext.addSparkListener(probe)
-    spark.sparkContext.setJobGroup("graft-jobcount", "scheduler parity probe")
-    try {
-      val rdd = pgTexts()
-        .flatMap { case (f, c) => MrApps.wcMap(f, c) }
-      val mapTasks = rdd.getNumPartitions
-      val rddShufflePartitions = 5
-      rdd.map(kv => (kv.key, 1)).reduceByKey(_ + _, rddShufflePartitions).count()
-      // jobcount contract: every planned task executes EXACTLY once (no
-      // spurious re-execution). wholeTextFiles packs small files, so the
-      // planned map-task count may be < nFiles; exactness is the point.
-      val expected = mapTasks + rddShufflePartitions
-      awaitListener(probe.ended.get() >= expected)
-      assert(mapTasks >= 2, s"want real parallelism, got $mapTasks partitions")
-      assert(probe.ended.get() == expected,
-        s"expected $expected task executions (no retry/speculation), got ${probe.ended.get()}")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(probe)
+    TextCorpus.each { c =>
+      val probe = new TaskProbe("graft-jobcount")
+      spark.sparkContext.addSparkListener(probe)
+      spark.sparkContext.setJobGroup("graft-jobcount", "scheduler parity probe")
+      try {
+        val rdd = pgTexts(c)
+          .flatMap { case (f, text) => MrApps.wcMap(f, text) }
+        val mapTasks = rdd.getNumPartitions
+        val rddShufflePartitions = 5
+        rdd.map(kv => (kv.key, 1)).reduceByKey(_ + _, rddShufflePartitions).count()
+        // jobcount contract: every planned task executes EXACTLY once (no
+        // spurious re-execution). wholeTextFiles packs small files, so the
+        // planned map-task count may be < nFiles; exactness is the point.
+        val expected = mapTasks + rddShufflePartitions
+        awaitListener(probe.ended.get() >= expected)
+        assert(mapTasks >= 2, s"want real parallelism, got $mapTasks partitions")
+        assert(probe.ended.get() == expected,
+          s"expected $expected task executions (no retry/speculation), got ${probe.ended.get()}")
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(probe)
+      }
     }
   }
 
   test("mtiming parity: map tasks run with >=2-way concurrency", Retryable) {
-    val probe = new TaskProbe("graft-mtiming")
-    spark.sparkContext.addSparkListener(probe)
-    spark.sparkContext.setJobGroup("graft-mtiming", "scheduler parity probe")
-    try {
-      pgTexts()
-        .map { case (f, c) => (f, GoText.letterWords(c).length) }
-        .collect()
-      awaitListener(probe.maxConcurrent.get() >= 2)
-      assert(probe.maxConcurrent.get() >= 2,
-        s"max concurrency ${probe.maxConcurrent.get()}")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(probe)
+    TextCorpus.each { c =>
+      val probe = new TaskProbe("graft-mtiming")
+      spark.sparkContext.addSparkListener(probe)
+      spark.sparkContext.setJobGroup("graft-mtiming", "scheduler parity probe")
+      try {
+        pgTexts(c)
+          .map { case (f, text) => (f, GoText.letterWords(text).length) }
+          .collect()
+        awaitListener(probe.maxConcurrent.get() >= 2)
+        assert(probe.maxConcurrent.get() >= 2,
+          s"max concurrency ${probe.maxConcurrent.get()}")
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(probe)
+      }
     }
   }
 
@@ -131,22 +136,24 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     // reference src/mrapps/rtiming.go:62-84 holds reduce workers open and
     // asserts they overlap; here the post-shuffle stage sleeps per task
     // and the probe reads that stage's peak concurrency.
-    val probe = new TaskProbe("graft-rtiming")
-    spark.sparkContext.addSparkListener(probe)
-    spark.sparkContext.setJobGroup("graft-rtiming", "scheduler parity probe")
-    try {
-      pgTexts()
-        .flatMap { case (f, c) => MrApps.wcMap(f, c) }
-        .map(kv => (kv.key, 1))
-        .reduceByKey(_ + _, 8)
-        .mapPartitions { it => Thread.sleep(250); it }
-        .count()
-      awaitListener(probe.lastStageMax >= 2)
-      assert(probe.lastStageMax >= 2,
-        s"reduce-stage max concurrency ${probe.lastStageMax}")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(probe)
+    TextCorpus.each { c =>
+      val probe = new TaskProbe("graft-rtiming")
+      spark.sparkContext.addSparkListener(probe)
+      spark.sparkContext.setJobGroup("graft-rtiming", "scheduler parity probe")
+      try {
+        pgTexts(c)
+          .flatMap { case (f, text) => MrApps.wcMap(f, text) }
+          .map(kv => (kv.key, 1))
+          .reduceByKey(_ + _, 8)
+          .mapPartitions { it => Thread.sleep(250); it }
+          .count()
+        awaitListener(probe.lastStageMax >= 2)
+        assert(probe.lastStageMax >= 2,
+          s"reduce-stage max concurrency ${probe.lastStageMax}")
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(probe)
+      }
     }
   }
 
@@ -156,25 +163,26 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     // output exactly. Spark analog: every even map partition throws on
     // its first attempt (maxFailures=2 via local[8, 2] in SparkSpec), the
     // retry succeeds, and the committed output is byte-equal to the
-    // reference's mymrout — exactly-once despite failures.
+    // corpus's golden lines — exactly-once despite failures.
     val crashingMap: MapReduce.MapF = { (f, c) =>
       val tc = org.apache.spark.TaskContext.get()
       if (tc != null && tc.attemptNumber() == 0 && tc.partitionId() % 2 == 0)
         throw new RuntimeException("induced worker crash (crash parity)")
       MrApps.wcMap(f, c)
     }
-    val out = Files.createTempDirectory("graft-crash").toString + "/wc-out"
-    val result = MapReduce.run(spark, ReferenceCorpus.require(ReferenceCorpus.PgGlob),
-      crashingMap, MrApps.wcReduce)
-    MapReduce.writeText(result, out, nReduce = 10)
-    val files = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
-    assert(files.contains("_SUCCESS"))
-    assert(!files.exists(_.contains("_temporary")), s"uncommitted output: $files")
-    val lines = files.filter(_.startsWith("part-"))
-      .flatMap(f => Files.readAllLines(Paths.get(out, f)).asScala)
-    val golden = goldenLines()
-    assert(lines.sorted == golden.sorted,
-      "retried run diverged from golden output")
+    TextCorpus.each { c =>
+      val out = Files.createTempDirectory("graft-crash").toString + "/wc-out"
+      val result = MapReduce.run(spark, c.glob, crashingMap, MrApps.wcReduce)
+      MapReduce.writeText(result, out, nReduce = 10)
+      val files = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
+      assert(files.contains("_SUCCESS"))
+      assert(!files.exists(_.contains("_temporary")), s"uncommitted output: $files")
+      val lines = files.filter(_.startsWith("part-"))
+        .flatMap(f => Files.readAllLines(Paths.get(out, f)).asScala)
+      val golden = c.goldenLines
+      assert(lines.sorted == golden.sorted,
+        "retried run diverged from golden output")
+    }
   }
 
   test("speculation parity: a straggler's backup attempt yields golden output, no duplicates", Retryable) {
@@ -187,8 +195,9 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     // distinct loopback addresses (127.0.0.1 / 127.0.0.2) and drives a
     // separate-JVM driver (SpeculationDriver) against it with one 15 s
     // straggler attempt. Asserts: >=1 speculative attempt actually
-    // launched, and the committed output is byte-equal to the golden
-    // mymrout — exactly-once despite the duplicate in-flight attempt.
+    // launched, and the committed output is byte-equal to the corpus's
+    // golden lines — exactly-once despite the duplicate in-flight attempt.
+    // One driver runs per corpus against the same mini-cluster.
     def freePort(): Int = {
       val s = new java.net.ServerSocket(0)
       try s.getLocalPort finally s.close()
@@ -201,7 +210,6 @@ class SchedulerParitySpec extends SparkSpec with Retries {
       .getInputArguments.asScala.toSeq
       .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports"))
     val scratch = Files.createTempDirectory("graft-speculation")
-    val out = s"$scratch/wc-out"
     def spawn(main: String, heap: String, args: Seq[String]): Process = {
       val log = new java.io.File(s"$scratch/${main.split('.').last}-${args.hashCode.abs}.log")
       val pb = new ProcessBuilder(
@@ -223,11 +231,12 @@ class SchedulerParitySpec extends SparkSpec with Retries {
           "--cores", "4", "--memory", "2g",
           "--work-dir", s"$scratch/work-$h", masterUrl))
     }
-    try {
-      val driverLog = new java.io.File(s"$scratch/driver.log")
+    try TextCorpus.each { c =>
+      val out = s"$scratch/wc-out-${c.label}"
+      val driverLog = new java.io.File(s"$scratch/driver-${c.label}.log")
       val pb = new ProcessBuilder(
         (Seq(javaBin) ++ addOpens ++ Seq("-Xmx2g", "-cp", cp,
-          "graft.mr.SpeculationDriver", masterUrl, out)): _*)
+          "graft.mr.SpeculationDriver", masterUrl, out, c.glob)): _*)
       pb.environment().put("SPARK_HOME", "/opt/spark")
       pb.environment().put("SPARK_SCALA_VERSION", "2.13")
       pb.redirectErrorStream(true)
@@ -250,7 +259,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
       assert(!files.exists(_.contains("_temporary")), s"uncommitted output: $files")
       val lines = files.filter(_.startsWith("part-"))
         .flatMap(f => Files.readAllLines(Paths.get(out, f)).asScala)
-      val golden = goldenLines()
+      val golden = c.goldenLines
       assert(lines.sorted == golden.sorted,
         "speculated run diverged from golden output (duplicate or lost rows)")
     } finally (workers :+ master).foreach(_.destroyForcibly())
@@ -261,20 +270,21 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     else Files.readAllLines(f.toPath).asScala.takeRight(n).mkString("\n")
 
   test("early-exit parity: committed output is complete and atomic") {
-    val out = Files.createTempDirectory("graft-golden").toString + "/wc-out"
-    val result = MapReduce.run(spark, ReferenceCorpus.require(ReferenceCorpus.PgGlob),
-      MrApps.wcMap, MrApps.wcReduce)
-    MapReduce.writeText(result, out, nReduce = 10)
-    val files = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
-    // committer contract: _SUCCESS marker, no in-progress _temporary dir
-    // (.crc files are Hadoop checksum artifacts, expected)
-    assert(files.contains("_SUCCESS"))
-    assert(!files.exists(_.contains("_temporary")), s"uncommitted output: $files")
-    assert(files.count(_.startsWith("part-")) == 10, s"expected 10 reduce outputs: $files")
-    // all lines present exactly once (idempotent commit)
-    val lines = files.filter(_.startsWith("part-"))
-      .flatMap(f => Files.readAllLines(Paths.get(out, f)).asScala)
-    val golden = goldenLines()
-    assert(lines.sorted == golden.sorted)
+    TextCorpus.each { c =>
+      val out = Files.createTempDirectory("graft-golden").toString + "/wc-out"
+      val result = MapReduce.run(spark, c.glob, MrApps.wcMap, MrApps.wcReduce)
+      MapReduce.writeText(result, out, nReduce = 10)
+      val files = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
+      // committer contract: _SUCCESS marker, no in-progress _temporary dir
+      // (.crc files are Hadoop checksum artifacts, expected)
+      assert(files.contains("_SUCCESS"))
+      assert(!files.exists(_.contains("_temporary")), s"uncommitted output: $files")
+      assert(files.count(_.startsWith("part-")) == 10, s"expected 10 reduce outputs: $files")
+      // all lines present exactly once (idempotent commit)
+      val lines = files.filter(_.startsWith("part-"))
+        .flatMap(f => Files.readAllLines(Paths.get(out, f)).asScala)
+      val golden = c.goldenLines
+      assert(lines.sorted == golden.sorted)
+    }
   }
 }

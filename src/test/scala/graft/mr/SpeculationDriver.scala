@@ -8,6 +8,8 @@ import org.apache.spark.sql.SparkSession
   * (SchedulerParitySpec): connects to a two-host standalone
   * mini-cluster, runs the wc pipeline with one deliberately slow map
   * attempt, and reports how many SPECULATIVE task attempts launched.
+  * Arguments: master URL, output directory, and the input glob (eight
+  * `pg-*.txt` texts, one of them `pg-grimm.txt`).
   *
   * This runs in its own JVM because the shared test session is
   * local-mode, and Spark only ever schedules a speculative copy on a
@@ -18,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SpeculationDriver {
   def main(args: Array[String]): Unit = {
-    val (masterUrl, outDir) = (args(0), args(1))
+    val (masterUrl, outDir, glob) = (args(0), args(1), args(2))
     val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.toArray.map(_.toString)
       .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports"))
@@ -50,15 +52,14 @@ object SpeculationDriver {
     // finishes first, /root/reference/src/mr/coordinator.go:158-186).
     // The backup attempt (attemptNumber > 0) computes immediately, and
     // both attempts produce identical rows, so whichever wins must
-    // yield the golden output.
+    // yield the corpus's golden output.
     val slowMap: MapReduce.MapF = { (name, contents) =>
       val tc = TaskContext.get()
       if (name == "pg-grimm.txt" && tc != null && tc.attemptNumber() == 0)
         Thread.sleep(15000)
       MrApps.wcMap(name, contents)
     }
-    val result = MapReduce.run(spark, ReferenceCorpus.require(ReferenceCorpus.PgGlob),
-      slowMap, MrApps.wcReduce)
+    val result = MapReduce.run(spark, glob, slowMap, MrApps.wcReduce)
     MapReduce.writeText(result, outDir, nReduce = 10)
     Thread.sleep(300) // let the listener bus drain before reading the count
     println(s"SPECRESULT speculative=${speculative.get()}")

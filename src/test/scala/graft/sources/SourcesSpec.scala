@@ -3,12 +3,14 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.mr.TextCorpus
 import org.apache.spark.sql.functions._
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def golden = graft.mr.ReferenceCorpus.require(graft.mr.ReferenceCorpus.GoldenWc)
+  /** The reference's committed golden word-count output. */
+  private def golden = TextCorpus.reference.golden
 
   test("kvtext reads the reference's golden output identically to a text+split parse") {
     val viaSource = spark.read.format("kvtext").load(golden)
@@ -27,13 +29,17 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("kvtext honors column pruning down to the scan") {
-    val df = spark.read.format("kvtext").load(golden).select("value")
-    val scan = df.queryExecution.executedPlan.collectLeaves().head
-    assert(scan.output.map(_.name) == Seq("value"),
-      s"scan must read only the requested column, got ${scan.output}")
-    // pruned read still parses correctly (counts are numeric)
-    val vals = df.limit(100).collect().map(_.getString(0))
-    assert(vals.nonEmpty && vals.forall(_.forall(_.isDigit)))
+    // each corpus's `mymrout`-format word count: the sequential oracle's
+    // over the generated stand-in, the reference's committed golden
+    TextCorpus.each { c =>
+      val df = spark.read.format("kvtext").load(c.golden).select("value")
+      val scan = df.queryExecution.executedPlan.collectLeaves().head
+      assert(scan.output.map(_.name) == Seq("value"),
+        s"scan must read only the requested column, got ${scan.output}")
+      // pruned read still parses correctly (counts are numeric)
+      val vals = df.limit(100).collect().map(_.getString(0))
+      assert(vals.nonEmpty && vals.forall(_.forall(_.isDigit)))
+    }
   }
 
   test("kvtext resolves globs, directories, and value-less lines") {
@@ -55,17 +61,19 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("kvtext byte-range splits: exact row parity at any split size") {
-    val whole = spark.read.format("kvtext").load(golden)
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    // tiny ranges force many splits whose boundaries land mid-line
-    for (splitBytes <- Seq(1000, 7777, 65536)) {
-      val df = spark.read.format("kvtext")
-        .option("maxSplitBytes", splitBytes.toString).load(golden)
-      assert(df.rdd.getNumPartitions > 1, s"splitBytes=$splitBytes did not split")
-      val rows = df.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-      assert(rows == whole,
-        s"splitBytes=$splitBytes dropped or duplicated lines " +
-          s"(${rows.length} vs ${whole.length})")
+    TextCorpus.each { c =>
+      val whole = spark.read.format("kvtext").load(c.golden)
+        .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+      // tiny ranges force many splits whose boundaries land mid-line
+      for (splitBytes <- Seq(1000, 7777, 65536)) {
+        val df = spark.read.format("kvtext")
+          .option("maxSplitBytes", splitBytes.toString).load(c.golden)
+        assert(df.rdd.getNumPartitions > 1, s"splitBytes=$splitBytes did not split")
+        val rows = df.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+        assert(rows == whole,
+          s"splitBytes=$splitBytes dropped or duplicated lines " +
+            s"(${rows.length} vs ${whole.length})")
+      }
     }
   }
 
