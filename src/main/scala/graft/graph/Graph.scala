@@ -15,6 +15,15 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** Rounds between the `localCheckpoint`s of an iteration's state.
+    * Each round's plan references the previous state once, so lineage
+    * grows LINEARLY — truncating it every round paid an eager job per
+    * iteration for nothing. Checkpointing on the Spark ML cadence keeps
+    * short catalog runs one fully-lazy job while long runs still bound
+    * plan depth and recompute-on-failure cost.
+    */
+  private val CheckpointInterval = 5
+
   /** PageRank with damping 0.85 over integer micro-units — ranks are
     * BIGINT millionths, all arithmetic is integer (floor division,
     * integer sums), so results are bit-identical on any engine and any
@@ -25,25 +34,51 @@ object Graph {
     * contrib(e) = floor(rank(src) / outdeg(src));
     * rank'(v) = 150_000 + floor(85 · Σ contrib / 100).
     *
+    * That is [[personalizedPageRankMicro]] with every node a seed, and it
+    * runs the same rounds.
+    *
     * Nodes appear in the output iff they occur in an edge. Dangling
     * nodes (no out-edges) simply leak their mass — callers wanting the
     * standard redistribute semantics should add reverse edges or a sink
     * edge per dangling node up front (the q92 catalog query feeds a
     * bidirectional graph, so every node has out-degree ≥ 1).
-    *
-    * Per iteration: one join of ranks onto edges (shuffle on src) and
-    * one aggregate onto dst — no driver-side state, no collect.
     */
-  def pageRankMicro(
+  def pageRankMicro(edges: DataFrame, iterations: Int = 3): DataFrame =
+    rankRounds(edges, iterations)(_.withColumn("is_seed", lit(true)))
+
+  /** Personalized PageRank ([[pageRankMicro]] with the teleport mass
+    * restricted to a SEED set) — "expand these known-good nodes through
+    * the link structure": the seed-set expansion primitive behind
+    * curated-domain growth and related-entity retrieval. The per-round
+    * teleport term (150 000 micro) lands only on seeds, and the start
+    * vector is 1e6 on seeds / 0 elsewhere — so mass can ONLY originate
+    * at seeds and flow outward. Seeds not present in the graph are
+    * ignored (left join from the node set).
+    */
+  def personalizedPageRankMicro(
       edges: DataFrame,
-      iterations: Int = 3,
-      checkpointInterval: Int = 5): DataFrame = {
+      seeds: DataFrame,
+      iterations: Int = 3): DataFrame =
+    rankRounds(edges, iterations)(nodes => nodes
+      .join(seeds.select(col("id")).distinct()
+        .withColumn("is_seed", lit(true)), Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed")))
+
+  /** The integer rank iteration behind both PageRanks: `flag` turns the
+    * graph's node set into the per-node (id, is_seed) base, pinned once
+    * and read by every round. Per iteration: one join of ranks onto
+    * edges (shuffle on src) and one aggregate onto dst — no driver-side
+    * state, no collect.
+    */
+  private def rankRounds(edges: DataFrame, iterations: Int)(
+      flag: DataFrame => DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
+    val base = flag(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
       .localCheckpoint()
-    var ranks = nodes.withColumn("rank_micro", lit(1000000L))
+    var ranks = base.select(col("id"),
+      when(col("is_seed"), lit(1000000L)).otherwise(lit(0L)).as("rank_micro"))
     (1 to iterations).foreach { i =>
       val contribs = e
         .join(outdeg, "src")
@@ -53,65 +88,13 @@ object Graph {
         .select(col("dst").as("id"),
           expr("rank_micro div outdeg").as("contrib"))
         .groupBy("id").agg(sum("contrib").as("inbox"))
-      ranks = nodes
-        .join(contribs, Seq("id"), "left_outer")
-        .select(col("id"),
-          (lit(150000L) + expr("coalesce(inbox, 0L) * 85 div 100"))
-            .cast("long").as("rank_micro"))
-      // the per-round plan references ranks once, so lineage grows
-      // LINEARLY — truncating it every round paid an eager job per
-      // iteration for nothing. Checkpoint on the Spark ML cadence
-      // (every `checkpointInterval` rounds): short catalog runs stay
-      // one fully-lazy job; long runs still bound plan depth and
-      // recompute-on-failure cost.
-      if (i % checkpointInterval == 0) ranks = ranks.localCheckpoint()
-    }
-    ranks
-  }
-
-  /** Personalized PageRank ([[pageRankMicro]] with the teleport mass
-    * restricted to a SEED set) — "expand these known-good nodes through
-    * the link structure": the seed-set expansion primitive behind
-    * curated-domain growth and related-entity retrieval. Identical
-    * integer iteration to pageRankMicro, except the per-round teleport
-    * term (150 000 micro) lands only on seeds, and the start vector is
-    * 1e6 on seeds / 0 elsewhere — so mass can ONLY originate at seeds
-    * and flow outward. Seeds not present in the graph are ignored
-    * (left-semi against the node set). Same per-iteration cost: one
-    * shuffle join onto edges, one aggregate onto dst.
-    */
-  def personalizedPageRankMicro(
-      edges: DataFrame,
-      seeds: DataFrame,
-      iterations: Int = 3,
-      checkpointInterval: Int = 5): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint()
-    val flagged = nodes
-      .join(seeds.select(col("id")).distinct()
-        .withColumn("is_seed", lit(true)), Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .localCheckpoint()
-    var ranks = flagged.select(col("id"),
-      when(col("is_seed"), lit(1000000L)).otherwise(lit(0L))
-        .as("rank_micro"))
-    (1 to iterations).foreach { i =>
-      val contribs = e
-        .join(outdeg, "src")
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"),
-          expr("rank_micro div outdeg").as("contrib"))
-        .groupBy("id").agg(sum("contrib").as("inbox"))
-      ranks = flagged
+      ranks = base
         .join(contribs, Seq("id"), "left_outer")
         .select(col("id"),
           (when(col("is_seed"), lit(150000L)).otherwise(lit(0L)) +
             expr("coalesce(inbox, 0L) * 85 div 100"))
             .cast("long").as("rank_micro"))
-      if (i % checkpointInterval == 0) ranks = ranks.localCheckpoint()
+      if (i % CheckpointInterval == 0) ranks = ranks.localCheckpoint()
     }
     ranks
   }
@@ -139,10 +122,7 @@ object Graph {
     * count is the standard large-graph practice (labels stabilize
     * locally long before global convergence).
     */
-  def labelPropagation(
-      edges: DataFrame,
-      iterations: Int = 3,
-      checkpointInterval: Int = 5): DataFrame = {
+  def labelPropagation(edges: DataFrame, iterations: Int = 3): DataFrame = {
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
@@ -163,11 +143,35 @@ object Graph {
         .join(best, Seq("id"), "left_outer")
         .select(col("id"),
           coalesce(col("new_label"), col("label")).as("label"))
-      // linear lineage (labels referenced once per round) — checkpoint
-      // on the interval cadence, not every round (see pageRankMicro)
-      if (i % checkpointInterval == 0) labels = labels.localCheckpoint()
+      // linear lineage (labels referenced once per round)
+      if (i % CheckpointInterval == 0) labels = labels.localCheckpoint()
     }
     labels
+  }
+
+  /** The degree orientation [[triangleCount]] and [[localClustering]]
+    * share: `und` holds each undirected edge once as (a < b by id),
+    * self-loops and duplicates dropped; `deg` is (n, d); `o` orients each
+    * edge (src, dst) from its lower-(degree, id) endpoint to the higher.
+    * `und` feeds the degrees, the orientation and the callers'
+    * closing-edge probe as the SAME subtree, so ReuseExchange computes its
+    * shuffle once — no localCheckpoint, no O(E) pinned executor storage
+    * (PlanSpec pins the reuse).
+    */
+  private def degreeOriented(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val und = edges
+      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+    val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("d"))
+    val lower = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
+    val o = und
+      .join(deg.withColumnRenamed("n", "a").withColumnRenamed("d", "da"), "a")
+      .join(deg.withColumnRenamed("n", "b").withColumnRenamed("d", "db"), "b")
+      .select(when(lower, col("a")).otherwise(col("b")).as("src"),
+        when(lower, col("b")).otherwise(col("a")).as("dst"))
+    (und, deg, o)
   }
 
   /** Exact triangle count by degree ordering (the MapReduce-era cure for
@@ -186,26 +190,7 @@ object Graph {
     * count, wedge self-join on the oriented source, closing-edge join.
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    // und feeds degrees + orientation + the closing-edge probe as the
-    // SAME subtree, so ReuseExchange computes its shuffle once — no
-    // localCheckpoint, no O(E) pinned executor storage (PlanSpec pins
-    // the reuse)
-    val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    val o = und
-      .join(deg.withColumnRenamed("n", "a").withColumnRenamed("d", "da"), "a")
-      .join(deg.withColumnRenamed("n", "b").withColumnRenamed("d", "db"), "b")
-      .select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("src"),
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("dst"))
+    val (und, deg, o) = degreeOriented(edges)
     // wedge endpoints ordered by ID (not by the degree order), because
     // the closing edge is looked up in `und`, which stores every
     // undirected edge exactly once as (a < b by id) — so the lookup is
@@ -233,23 +218,7 @@ object Graph {
     * pair of neighbors exists). Returns (n, d, n_tri, lcc_bp).
     */
   def localClustering(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    val o = und
-      .join(deg.withColumnRenamed("n", "a").withColumnRenamed("d", "da"), "a")
-      .join(deg.withColumnRenamed("n", "b").withColumnRenamed("d", "db"), "b")
-      .select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("src"),
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("dst"))
+    val (und, deg, o) = degreeOriented(edges)
     val wedges = o.as("e1").join(o.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
       .select(col("e1.src").as("s"), col("e1.dst").as("w1"),

@@ -788,44 +788,15 @@ object AnalyticsQueries {
     //      bit-identical on any engine and partitioning — a
     //      double-summed PageRank can't be oracle-gated because float
     //      addition is order-dependent. The oracle unrolls the three
-    //      iterations as CTEs, mirroring Graph.pageRankMicro. ----
+    //      iterations as CTEs (OracleSql.rankCtes with every node a
+    //      seed), mirroring Graph.pageRankMicro. ----
     QueryDef(
-      "q92_pagerank", {
-        def iter(prev: String, out: String): String =
-          s"""i$out AS (
-             |  SELECT e.dst AS id, sum(r.rank_micro // o.outdeg) AS inbox
-             |  FROM edges e JOIN outdeg o ON e.src = o.src
-             |  JOIN $prev r ON r.id = e.src
-             |  GROUP BY e.dst),
-             |$out AS (
-             |  SELECT n.id,
-             |         CAST(150000 + coalesce(i.inbox, 0) * 85 // 100 AS BIGINT)
-             |           AS rank_micro
-             |  FROM nodes n LEFT JOIN i$out i ON n.id = i.id)""".stripMargin
-        s"""WITH pairs AS (
-           |  SELECT DISTINCT l_suppkey + 1000000000000 AS s, o_custkey AS c
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-           |edges AS (SELECT s AS src, c AS dst FROM pairs
-           |          UNION ALL SELECT c, s FROM pairs),
-           |outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-           |nodes AS (SELECT DISTINCT src AS id FROM edges),
-           |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank_micro FROM nodes),
-           |${iter("r0", "r1")},
-           |${iter("r1", "r2")},
-           |${iter("r2", "r3")}
-           |SELECT id, rank_micro FROM r3 ORDER BY id""".stripMargin
-      }) { (s, dir) =>
-      val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-      val ord = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-      // offset far above any key domain (o_custkey reaches 150000·sf, so
-      // a 1e7 offset collides at sf ≈ 67 and silently merges graph
-      // nodes) — same 1e12 margin q98 justifies
-      val pairs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select((col("l_suppkey") + 1000000000000L).as("s"), col("o_custkey").as("c"))
-        .distinct()
-      val edges = pairs.select(col("s").as("src"), col("c").as("dst"))
-        .union(pairs.select(col("c").as("src"), col("s").as("dst")))
-      graft.graph.Graph.pageRankMicro(edges, iterations = 3)
+      "q92_pagerank",
+      s"""WITH ${OracleSql.coPurchaseCtes},
+         |${OracleSql.rankCtes("SELECT id FROM nodes")}
+         |SELECT id, rank_micro FROM r3 ORDER BY id""".stripMargin) { (s, dir) =>
+      graft.graph.Graph.pageRankMicro(
+          Tables.bothWays(Tables.coPurchasePairs(s, dir)), iterations = 3)
         .orderBy("id")
     },
 
@@ -1220,7 +1191,8 @@ object AnalyticsQueries {
       s"""WITH $lpaGraphCtes
          |SELECT id, label AS community FROM l3 ORDER BY id""".stripMargin) {
       (s, dir) =>
-      graft.graph.Graph.labelPropagation(coPurchaseEdges(s, dir), iterations = 3)
+      graft.graph.Graph.labelPropagation(
+          Tables.bothWays(Tables.coPurchasePairs(s, dir)), iterations = 3)
         .select(col("id"), col("label").as("community"))
         .orderBy("id")
     },
@@ -1264,7 +1236,7 @@ object AnalyticsQueries {
       // aggregates — pin it once (labelPropagation checkpoints its own
       // copy; without this the join+distinct would still rerun for the
       // degree and intra-edge passes)
-      val edges = coPurchaseEdges(s, dir).localCheckpoint()
+      val edges = Tables.bothWays(Tables.coPurchasePairs(s, dir)).localCheckpoint()
       graft.graph.Graph.modularity(
         edges, graft.graph.Graph.labelPropagation(edges, iterations = 3))
     },
@@ -1916,13 +1888,9 @@ object AnalyticsQueries {
     //      break. ----
     QueryDef(
       "q168_bfs_hops",
-      """WITH pairs AS (
-        |  SELECT DISTINCT l_suppkey + 1000000000000 AS s, o_custkey AS c
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |edges AS (SELECT s AS src, c AS dst FROM pairs
-        |          UNION ALL SELECT c, s FROM pairs),
+      s"""WITH ${OracleSql.coPurchaseCtes},
         |f0 AS (SELECT DISTINCT s AS id FROM pairs
-        |       WHERE (s - 1000000000000) % 97 = 0),
+        |       WHERE (s - ${Tables.SupplierNodeOffset}) % 97 = 0),
         |n1 AS (SELECT DISTINCT e.dst AS id FROM edges e
         |       JOIN f0 ON e.src = f0.id
         |       WHERE e.dst NOT IN (SELECT id FROM f0)),
@@ -1940,23 +1908,15 @@ object AnalyticsQueries {
         |UNION ALL SELECT id, 2 FROM n2
         |UNION ALL SELECT id, 3 FROM n3
         |ORDER BY hops, id""".stripMargin) { (s, dir) =>
-      val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-      val ord = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-      // same 1e12 node-id offset as q92/q145
-      val pairs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select((col("l_suppkey") + 1000000000000L).as("s"),
-          col("o_custkey").as("c"))
-        .distinct()
+      val pairs = Tables.coPurchasePairs(s, dir)
         // pinned: both edge directions and the source derivation read
         // the fact⋈fact join (boundedHops pins the edge list internally
         // but cannot see the sources' lineage) — q255's pattern
         .localCheckpoint()
-      val edges = pairs.select(col("s").as("src"), col("c").as("dst"))
-        .union(pairs.select(col("c").as("src"), col("s").as("dst")))
       val sources = pairs
-        .filter((col("s") - 1000000000000L) % 97 === 0)
+        .filter((col("s") - Tables.SupplierNodeOffset) % 97 === 0)
         .select(col("s").as("id"))
-      graft.graph.Graph.boundedHops(edges, sources, maxHops = 3)
+      graft.graph.Graph.boundedHops(Tables.bothWays(pairs), sources, maxHops = 3)
         .orderBy("hops", "id")
     }.copy(headline = true),
 
@@ -2988,27 +2948,9 @@ object AnalyticsQueries {
     }
   )
 
-  /** The q92/q145/q168/q223 supplier⇄customer co-purchase graph:
-    * directed-both-ways edge list over distinct (supplier, customer)
-    * pairs, suppliers offset by 1e12 (see q92's justification). ONE
-    * spelling shared by every consumer so the graph cannot drift
-    * between queries. (def, not val: `defs` above initializes first.)
-    */
-  private[operators] def coPurchaseEdges(
-      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-    val ord = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-    val pairs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-      .select((col("l_suppkey") + 1000000000000L).as("s"),
-        col("o_custkey").as("c"))
-      .distinct()
-    pairs.select(col("s").as("src"), col("c").as("dst"))
-      .union(pairs.select(col("c").as("src"), col("s").as("dst")))
-  }
-
-  /** CTEs pairs/edges/nodes/l0/l1/l2/l3: the co-purchase graph plus the
-    * FULL 3-round deterministic-LPA unroll (synchronous rounds, ties to
-    * the smallest label) — mirrors [[coPurchaseEdges]] +
+  /** CTEs pairs/edges/nodes/l0/l1/l2/l3: the co-purchase graph
+    * (OracleSql.coPurchaseCtes) plus the FULL 3-round deterministic-LPA
+    * unroll (synchronous rounds, ties to the smallest label) — mirrors
     * Graph.labelPropagation(3) and is shared by the q145 and q223
     * oracles so the labeling cannot drift between them. (def, not val:
     * `defs` above initializes first.)
@@ -3027,11 +2969,7 @@ object AnalyticsQueries {
          |l$n AS (
          |  SELECT p.id, coalesce(b$n.nl, p.label) AS label
          |  FROM $prev p LEFT JOIN b$n ON p.id = b$n.id)""".stripMargin
-    s"""pairs AS (
-       |  SELECT DISTINCT l_suppkey + 1000000000000 AS s, o_custkey AS c
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |edges AS (SELECT s AS src, c AS dst FROM pairs
-       |          UNION ALL SELECT c, s FROM pairs),
+    s"""${OracleSql.coPurchaseCtes},
        |nodes AS (SELECT DISTINCT src AS id FROM edges),
        |l0 AS (SELECT id, id AS label FROM nodes),
        |${iter("l0", 1)},

@@ -705,40 +705,23 @@ object CurationQueries {
     //      (integer micro arithmetic, q92's oracle-exact iteration).
     //      Top-20 cut is a bounded TakeOrdered. ----
     QueryDef(
-      "q246_textrank", {
-        def iter(prev: String, out: String): String =
-          s"""i$out AS (
-             |  SELECT e.dst AS id, sum(r.rank_micro // o.outdeg) AS inbox
-             |  FROM edges e JOIN outdeg o ON e.src = o.src
-             |  JOIN $prev r ON r.id = e.src
-             |  GROUP BY e.dst),
-             |$out AS (
-             |  SELECT n.id,
-             |         CAST(150000 + coalesce(i.inbox, 0) * 85 // 100 AS BIGINT)
-             |           AS rank_micro
-             |  FROM nodes n LEFT JOIN i$out i ON n.id = i.id)""".stripMargin
-        s"""WITH t AS (
-           |  SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE len($toksSql) >= 2),
-           |pr0 AS (
-           |  SELECT unnest(list_transform(range(1, len(toks)),
-           |           i -> CASE WHEN toks[i] < toks[i + 1]
-           |                THEN [toks[i], toks[i + 1]]
-           |                ELSE [toks[i + 1], toks[i]] END)) AS p
-           |  FROM t),
-           |pp AS (SELECT p[1] AS a, p[2] AS b FROM pr0 WHERE p[1] <> p[2]),
-           |co AS (SELECT a, b FROM pp GROUP BY a, b HAVING count(*) >= 2),
-           |edges AS (SELECT a AS src, b AS dst FROM co
-           |          UNION ALL SELECT b, a FROM co),
-           |outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-           |nodes AS (SELECT DISTINCT src AS id FROM edges),
-           |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank_micro FROM nodes),
-           |${iter("r0", "r1")},
-           |${iter("r1", "r2")},
-           |${iter("r2", "r3")}
-           |SELECT id AS token, rank_micro
-           |FROM r3 ORDER BY rank_micro DESC, token LIMIT 20""".stripMargin
-      }) { (s, dir) =>
+      "q246_textrank",
+      s"""WITH t AS (
+         |  SELECT doc_id, $toksSql AS toks FROM documents
+         |  WHERE len($toksSql) >= 2),
+         |pr0 AS (
+         |  SELECT unnest(list_transform(range(1, len(toks)),
+         |           i -> CASE WHEN toks[i] < toks[i + 1]
+         |                THEN [toks[i], toks[i + 1]]
+         |                ELSE [toks[i + 1], toks[i]] END)) AS p
+         |  FROM t),
+         |pp AS (SELECT p[1] AS a, p[2] AS b FROM pr0 WHERE p[1] <> p[2]),
+         |co AS (SELECT a, b FROM pp GROUP BY a, b HAVING count(*) >= 2),
+         |edges AS (SELECT a AS src, b AS dst FROM co
+         |          UNION ALL SELECT b, a FROM co),
+         |${OracleSql.rankCtes("SELECT id FROM nodes")}
+         |SELECT id AS token, rank_micro
+         |FROM r3 ORDER BY rank_micro DESC, token LIMIT 20""".stripMargin) { (s, dir) =>
       val t = Tables.documents(s, dir)
         .select(TextAnalysis.wsTokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 2)
@@ -1216,54 +1199,23 @@ object CurationQueries {
     //      Composes [[Graph.personalizedPageRankMicro]]. ----
     QueryDef(
       "q255_personalized_ppr", {
-        def iter(prev: String, out: String): String =
-          s"""i$out AS (
-             |  SELECT e.dst AS id, sum(r.rank_micro // o.outdeg) AS inbox
-             |  FROM edges e JOIN outdeg o ON e.src = o.src
-             |  JOIN $prev r ON r.id = e.src
-             |  GROUP BY e.dst),
-             |$out AS (
-             |  SELECT n.id,
-             |         CAST(CASE WHEN sd.id IS NOT NULL THEN 150000 ELSE 0 END
-             |              + coalesce(i.inbox, 0) * 85 // 100 AS BIGINT)
-             |           AS rank_micro
-             |  FROM nodes n
-             |  LEFT JOIN seeds sd ON sd.id = n.id
-             |  LEFT JOIN i$out i ON n.id = i.id)""".stripMargin
-        s"""WITH pairs AS (
-           |  SELECT DISTINCT l_suppkey + 1000000000000 AS s, o_custkey AS c
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-           |edges AS (SELECT s AS src, c AS dst FROM pairs
-           |          UNION ALL SELECT c, s FROM pairs),
-           |outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-           |nodes AS (SELECT DISTINCT src AS id FROM edges),
-           |seeds AS (SELECT id FROM nodes
-           |          WHERE id >= 1000000000000 AND id < 1000000000005),
-           |r0 AS (SELECT n.id,
-           |         CAST(CASE WHEN sd.id IS NOT NULL THEN 1000000 ELSE 0 END
-           |           AS BIGINT) AS rank_micro
-           |       FROM nodes n LEFT JOIN seeds sd ON sd.id = n.id),
-           |${iter("r0", "r1")},
-           |${iter("r1", "r2")},
-           |${iter("r2", "r3")}
+        val seeds = s"SELECT id FROM nodes WHERE id >= ${Tables.SupplierNodeOffset}" +
+          s" AND id < ${Tables.SupplierNodeOffset + 5}"
+        s"""WITH ${OracleSql.coPurchaseCtes},
+           |${OracleSql.rankCtes(seeds)}
            |SELECT id, rank_micro FROM r3
            |ORDER BY rank_micro DESC, id LIMIT 30""".stripMargin
       }) { (s, dir) =>
-      val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-      val ord = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-      val pairs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select((col("l_suppkey") + 1000000000000L).as("s"),
-          col("o_custkey").as("c"))
-        .distinct()
+      val pairs = Tables.coPurchasePairs(s, dir)
         // pinned: the fact⋈fact join + distinct feeds both edge
         // directions AND the seed derivation — unpinned, the seeds'
         // lineage re-ran the whole join a second time (PPR pins the
         // edge list internally but cannot see the seeds' lineage)
         .localCheckpoint()
-      val edges = pairs.select(col("s").as("src"), col("c").as("dst"))
-        .union(pairs.select(col("c").as("src"), col("s").as("dst")))
+      val edges = Tables.bothWays(pairs)
       val seeds = edges.select(col("src").as("id"))
-        .filter(col("id") >= 1000000000000L && col("id") < 1000000000005L)
+        .filter(col("id") >= Tables.SupplierNodeOffset &&
+          col("id") < Tables.SupplierNodeOffset + 5)
         .distinct()
       graft.graph.Graph.personalizedPageRankMicro(edges, seeds, 3)
         .orderBy(col("rank_micro").desc, col("id")).limit(30)
@@ -2908,11 +2860,7 @@ object CurationQueries {
     //      the only shuffles. ----
     QueryDef(
       "q281_assortativity",
-      s"""WITH pairs AS (
-        |  SELECT DISTINCT l_suppkey + 1000000000000 AS s, o_custkey AS c
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |edges AS (SELECT s AS src, c AS dst FROM pairs
-        |          UNION ALL SELECT c, s FROM pairs),
+      s"""WITH ${OracleSql.coPurchaseCtes},
         |deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS d
         |        FROM edges GROUP BY src),
         |jk AS (SELECT ds.d AS j, dd.d AS k
@@ -2927,14 +2875,7 @@ object CurationQueries {
         |      FROM jk)
         |SELECT CAST(m AS BIGINT) AS n_edges, $assortSql AS r_milli
         |FROM g""".stripMargin) { (s, dir) =>
-      val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-      val ord = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-      val pairs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select((col("l_suppkey") + 1000000000000L).as("s"),
-          col("o_custkey").as("c"))
-        .distinct()
-      val edges = pairs.select(col("s").as("src"), col("c").as("dst"))
-        .union(pairs.select(col("c").as("src"), col("s").as("dst")))
+      val edges = Tables.bothWays(Tables.coPurchasePairs(s, dir))
         .localCheckpoint() // degree pass + the two endpoint joins
       val deg = edges.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("d"))

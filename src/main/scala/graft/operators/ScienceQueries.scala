@@ -363,11 +363,7 @@ object ScienceQueries {
         val ests = (0 to 3).map(h =>
           s"SELECT $h AS hop, $reachMilliSql AS reach_milli FROM k$h")
           .mkString(" UNION ALL ")
-        s"""WITH pairs AS (
-           |  SELECT DISTINCT l_suppkey + 1000000000000 AS sk, o_custkey AS ck
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-           |edges AS (SELECT sk AS src, ck AS dst FROM pairs
-           |          UNION ALL SELECT ck, sk FROM pairs),
+        s"""WITH ${OracleSql.coPurchaseCtes},
            |nodes AS (SELECT DISTINCT src AS id FROM edges),
            |k0 AS (SELECT id, $s0 FROM (SELECT id, $g FROM nodes)),
            |${iter("k0", 1)},
@@ -378,18 +374,10 @@ object ScienceQueries {
            |       CAST(sum(reach_milli) AS BIGINT) AS reach_milli_total
            |FROM est GROUP BY hop ORDER BY hop""".stripMargin
       }) { (s, dir) =>
-      val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-      val ord = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-      // same 1e12 node-id offset q92/q98 justify (collision-free to sf≈67)
-      val pairs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select((col("l_suppkey") + 1000000000000L).as("sk"), col("o_custkey").as("ck"))
-        .distinct()
-        // pinned: both union branches of the edge list re-derive the
-        // fact⋈fact join otherwise (q255's pattern)
-        .localCheckpoint()
-      val edges = pairs.select(col("sk").as("src"), col("ck").as("dst"))
-        .union(pairs.select(col("ck").as("src"), col("sk").as("dst")))
-        .localCheckpoint()
+      // pinned: both union branches of the edge list re-derive the
+      // fact⋈fact join otherwise (q255's pattern)
+      val pairs = Tables.coPurchasePairs(s, dir).localCheckpoint()
+      val edges = Tables.bothWays(pairs).localCheckpoint()
       val nodes = edges.select(col("src").as("id"))
         .union(edges.select(col("dst").as("id"))).distinct()
       def estimate(sk: org.apache.spark.sql.DataFrame, h: Int) =

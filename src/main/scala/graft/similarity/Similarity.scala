@@ -299,6 +299,20 @@ object Similarity {
   def l2sq(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.graftL2sq(a, b)
 
+  /** Key of the entry of the packed `cents` column — a key-ascending
+    * array of (key, centroid) structs — nearest to `v` in squared L2.
+    * The fold keeps the first strictly-smaller d2, so ties go to the
+    * lowest key and d2 is the same sequential IEEE fold the SQL oracles
+    * unroll. `none` (typed like the key) is the key of an empty array.
+    */
+  private def nearestKey(v: Column, key: String, none: Column): Column =
+    aggregate(
+      transform(col("cents"), c =>
+        struct(l2sq(v, c.getField("centroid")).as("d2"), c.getField(key).as(key))),
+      struct(lit(Double.PositiveInfinity).as("d2"), none.as(key)),
+      (acc, s) => when(s.getField("d2") < acc.getField("d2"), s).otherwise(acc))
+      .getField(key)
+
   /** Deterministic Lloyd's k-means over an embedding column: md5-bucket
     * means as init (the same reproducible seeding as IVF), then `iters`
     * assign→update rounds. Everything is order-independent: centroid
@@ -333,13 +347,8 @@ object Similarity {
         sort_array(collect_list(struct(col("cluster"), col("centroid"))))
           .as("cents"))
       corpus.join(broadcast(packed), lit(true))
-        .withColumn("scored", transform(col("cents"), c =>
-          struct(l2sq(col(embCol), c.getField("centroid")).as("d2"),
-            c.getField("cluster").as("cluster"))))
-        .withColumn("best", aggregate(col("scored"),
-          struct(lit(Double.PositiveInfinity).as("d2"), lit(-1L).as("cluster")),
-          (acc, s) => when(s.getField("d2") < acc.getField("d2"), s).otherwise(acc)))
-        .select(col(idCol), col(embCol), col("best.cluster").as("cluster"))
+        .select(col(idCol), col(embCol),
+          nearestKey(col(embCol), "cluster", lit(-1L)).as("cluster"))
     }
     var centroids = quantizedMeans(
         corpus.withColumn("cluster", ivfBucket(col(idCol), k)),
@@ -377,13 +386,8 @@ object Similarity {
         .agg(sort_array(collect_list(struct(col("cluster"), col("centroid"))))
           .as("cents"))
       big.join(broadcast(packed), col("cluster") === col("parent"))
-        .withColumn("scored", transform(col("cents"), c =>
-          struct(l2sq(col(embCol), c.getField("centroid")).as("d2"),
-            c.getField("cluster").as("cluster"))))
-        .withColumn("best", aggregate(col("scored"),
-          struct(lit(Double.PositiveInfinity).as("d2"), lit(-1L).as("cluster")),
-          (acc, s) => when(s.getField("d2") < acc.getField("d2"), s).otherwise(acc)))
-        .select(col(idCol), col("best.cluster").as("cluster"), col(embCol))
+        .select(col(idCol),
+          nearestKey(col(embCol), "cluster", lit(-1L)).as("cluster"), col(embCol))
     }
     var centroids = quantizedMeans(
       big.select(((col("cluster") + 1) * k + ivfBucket(col(idCol), k))
@@ -954,14 +958,8 @@ object Similarity {
         sort_array(collect_list(struct(col("code"), col("centroid"))))
           .as("cents"))
       points.join(broadcast(packed), "sub")
-        .withColumn("scored", transform(col("cents"), c =>
-          struct(l2sq(col("subemb"), c.getField("centroid")).as("d2"),
-            c.getField("code").as("code"))))
-        .withColumn("best", aggregate(col("scored"),
-          struct(lit(Double.PositiveInfinity).as("d2"), lit(-1).as("code")),
-          (acc, s) => when(s.getField("d2") < acc.getField("d2"), s).otherwise(acc)))
         .select(col(idCol), col("sub"), col("subemb"),
-          col("best.code").cast("int").as("code"))
+          nearestKey(col("subemb"), "code", lit(-1)).cast("int").as("code"))
     }
     var codebook = means(points.withColumn("code",
       pmod(md5Long(concat_ws("|", col(idCol).cast("string"),

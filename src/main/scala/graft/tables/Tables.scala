@@ -1,6 +1,7 @@
 package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Loaders for the driver-generated testdata star schema (TESTDATA.md).
   *
@@ -65,6 +66,30 @@ object Tables {
   }
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
+
+  /** Node-id offset that keeps supplier nodes apart from customer nodes
+    * in the co-purchase graph. o_custkey reaches 150 000·sf, so the two
+    * id ranges stay disjoint up to sf ≈ 6.7·10⁶ (a 1e7 offset merged them
+    * from sf ≈ 67). */
+  val SupplierNodeOffset = 1000000000000L
+
+  /** The supplier⇄customer co-purchase graph as distinct (s, c) pairs:
+    * s = l_suppkey + [[SupplierNodeOffset]], c = o_custkey, one row per
+    * supplier that sold to a customer. The one spelling every graph
+    * query builds on; `OracleSql.coPurchaseCtes` mirrors it. */
+  def coPurchasePairs(spark: SparkSession, dir: String): DataFrame = {
+    val li = lineitem(spark, dir).select("l_orderkey", "l_suppkey")
+    val ord = orders(spark, dir).select("o_orderkey", "o_custkey")
+    li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+      .select((col("l_suppkey") + SupplierNodeOffset).as("s"),
+        col("o_custkey").as("c"))
+      .distinct()
+  }
+
+  /** (s, c) pairs as a directed-both-ways (src, dst) edge list. */
+  def bothWays(pairs: DataFrame): DataFrame =
+    pairs.select(col("s").as("src"), col("c").as("dst"))
+      .union(pairs.select(col("c").as("src"), col("s").as("dst")))
 
   /** Register every table as a temp view so spark.sql(...) surfaces work. */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -315,19 +315,11 @@ private[tools] final class ScaleProbes(
   // bipartite supplier↔customer edges, both directions, for the graph
   // family (disjoint copies via key offsets preserve per-copy degree
   // structure, so per-iteration work must grow linearly)
-  private lazy val supplierCustomer = {
-    val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey")
-    val or = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
-    li.join(or, li("l_orderkey") === or("o_orderkey"))
-      .select((col("l_suppkey") + 10000000L).as("s"), col("o_custkey").as("c"))
-      .distinct()
-  }
-  private def edges(n: Int): DataFrame = {
-    def way(from: String, to: String) = stack(n)(k => supplierCustomer.select(
-      (col(from) + lit(k.toLong * 100000000L)).as("src"),
-      (col(to) + lit(k.toLong * 100000000L)).as("dst")))
-    way("s", "c").unionAll(way("c", "s"))
-  }
+  private lazy val supplierCustomer = Tables.coPurchasePairs(spark, dir)
+  private def edges(n: Int): DataFrame =
+    Tables.bothWays(stack(n)(k => supplierCustomer.select(
+      (col("s") + lit(k.toLong * 100000000L)).as("s"),
+      (col("c") + lit(k.toLong * 100000000L)).as("c"))))
   // part co-occurrence edges (u < v within an order): disjoint copies
   // keep per-copy degrees, so wedge volume grows exactly linearly
   private def partEdges(n: Int): DataFrame = {

@@ -26,7 +26,7 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("csv/json/orc/avro-free sinks and sources round-trip (format coverage)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-fmt").toString
+    val dir = tempDir("graft-fmt")
     val df = Tables.nation(spark, sf0001)
     df.write.mode("overwrite").option("header", "true").csv(s"$dir/n.csv")
     df.write.mode("overwrite").json(s"$dir/n.json")

@@ -179,31 +179,45 @@ class GraphAdversarialSpec extends SparkSpec {
 
   // ---------- personalized PageRank (q255 path) ----------
 
+  // seed 99 is NOT in the graph (must be ignored, not crash or inject
+  // mass); seed 1 is DANGLING (no out-edges: its mass leaks, never
+  // redistributes); seed 2 carries a self-loop; node 4 merges inflow
+  // from two seed-fed parents; 10→11 is unreachable from any seed.
+  private val pprEdges = Seq(
+    (2L, 2L),           // self-loop on a seed
+    (2L, 4L), (3L, 4L), // two-parent merge (3 fed by 2)
+    (2L, 3L),
+    (5L, 1L),           // dangling seed 1 still RECEIVES
+    (10L, 11L)          // island, no seed mass ever
+  )
+  private val pprSeeds = Set(1L, 2L, 99L)
+
   test("personalizedPageRankMicro: absent seeds, dangling seeds, self-loops, two-seed merge") {
-    // seed 99 is NOT in the graph (must be ignored, not crash or inject
-    // mass); seed 1 is DANGLING (no out-edges: its mass leaks, never
-    // redistributes); seed 2 carries a self-loop; node 4 merges inflow
-    // from two seed-fed parents; 10→11 is unreachable from any seed.
-    val edges = Seq(
-      (2L, 2L),           // self-loop on a seed
-      (2L, 4L), (3L, 4L), // two-parent merge (3 fed by 2)
-      (2L, 3L),
-      (5L, 1L),           // dangling seed 1 still RECEIVES
-      (10L, 11L)          // island, no seed mass ever
-    )
-    val seeds = Set(1L, 2L, 99L)
-    (1 to 4).foreach { iters =>
-      val got = collectMap(Graph.personalizedPageRankMicro(
-        edges.toDF("src", "dst"), seeds.toSeq.toDF("id"), iters))
-      assert(got == seqPpr(edges, seeds, iters),
-        s"iters=$iters: engine $got != reference ${seqPpr(edges, seeds, iters)}")
-    }
+    // rounds 1–7 against seqPpr: the round-5 pin test below
     val r = collectMap(Graph.personalizedPageRankMicro(
-      edges.toDF("src", "dst"), seeds.toSeq.toDF("id"), 3))
+      pprEdges.toDF("src", "dst"), pprSeeds.toSeq.toDF("id"), 3))
     assert(!r.contains(99L), "a seed absent from the graph must not appear")
     assert(r(10L) == 0L && r(11L) == 0L, "mass can only originate at seeds")
     assert(r(1L) == 150000L, "a dangling seed with no seed-fed in-edges holds teleport mass only")
     assert(r(4L) > 0L, "two-parent merge node accumulates from both paths")
+  }
+
+  test("pageRankMicro == PPR seeded with every node, through the round-5 pin") {
+    // plain PageRank is the personalized core with every node a seed;
+    // 7 rounds cross the checkpoint after round 5, so the pinned state
+    // must carry the same ranks onward. A star (hub 0, both ways) gives
+    // the hub every leaf's mass; the adversarial set adds self-loops, a
+    // dangling node and an island.
+    val star = (1L to 6L).flatMap(l => Seq((0L, l), (l, 0L)))
+    val cases = Seq(("adversarial", pprEdges, pprSeeds), ("star", star, Set(0L, 3L)))
+    for ((name, edges, seeds) <- cases; n <- 1 to 7) {
+      val e = edges.toDF("src", "dst")
+      val every = (edges.map(_._1) ++ edges.map(_._2)).toSet
+      assert(collectMap(Graph.pageRankMicro(e, n)) == seqPpr(edges, every, n),
+        s"$name pageRank n=$n")
+      assert(collectMap(Graph.personalizedPageRankMicro(e, seeds.toSeq.toDF("id"), n)) ==
+        seqPpr(edges, seeds, n), s"$name PPR n=$n")
+    }
   }
 
   // ---------- bounded-hop BFS (q168 path) ----------

@@ -171,7 +171,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
       MrApps.wcMap(f, c)
     }
     TextCorpus.each { c =>
-      val out = Files.createTempDirectory("graft-crash").toString + "/wc-out"
+      val out = tempDir("graft-crash") + "/wc-out"
       val result = MapReduce.run(spark, c.glob, crashingMap, MrApps.wcReduce)
       MapReduce.writeText(result, out, nReduce = 10)
       val files = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
@@ -209,7 +209,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
     val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
       .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports"))
-    val scratch = Files.createTempDirectory("graft-speculation")
+    val scratch = tempDir("graft-speculation")
     def spawn(main: String, heap: String, args: Seq[String]): Process = {
       val log = new java.io.File(s"$scratch/${main.split('.').last}-${args.hashCode.abs}.log")
       val pb = new ProcessBuilder(
@@ -271,7 +271,7 @@ class SchedulerParitySpec extends SparkSpec with Retries {
 
   test("early-exit parity: committed output is complete and atomic") {
     TextCorpus.each { c =>
-      val out = Files.createTempDirectory("graft-golden").toString + "/wc-out"
+      val out = tempDir("graft-golden") + "/wc-out"
       val result = MapReduce.run(spark, c.glob, MrApps.wcMap, MrApps.wcReduce)
       MapReduce.writeText(result, out, nReduce = 10)
       val files = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq

@@ -103,7 +103,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("mapreduce: empty input glob yields empty output, not a crash") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val dir = tempDir("graft-empty")
     new java.io.File(s"$dir/empty.txt").createNewFile()
     val out = graft.mr.MapReduce.run(spark, s"$dir/*.txt",
       graft.mr.MrApps.wcMap, graft.mr.MrApps.wcReduce)

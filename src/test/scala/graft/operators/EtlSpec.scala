@@ -9,7 +9,7 @@ class EtlSpec extends SparkSpec {
   import spark.implicits._
 
   test("partitioned write -> filter prunes partitions at the scan") {
-    val dir = Files.createTempDirectory("graft-etl").toString + "/events_p"
+    val dir = tempDir("graft-etl") + "/events_p"
     val events = spark.read.parquet(s"$sf0001/events.parquet")
     Etl.writePartitioned(events, dir, "event_type")
     // hive-style layout on disk
@@ -24,7 +24,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("sorted write enables row-group stats; data round-trips completely") {
-    val dir = Files.createTempDirectory("graft-etl").toString + "/orders_s"
+    val dir = tempDir("graft-etl") + "/orders_s"
     val orders = spark.read.parquet(s"$sf0001/orders.parquet")
     Etl.writeSortedParquet(orders, dir, "o_orderkey", files = 2)
     val back = spark.read.parquet(dir)
@@ -37,7 +37,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("compact reduces file count without losing rows") {
-    val base = Files.createTempDirectory("graft-etl").toString
+    val base = tempDir("graft-etl")
     val many = s"$base/many"
     val one = s"$base/one"
     spark.read.parquet(s"$sf0001/lineitem.parquet").repartition(16)
@@ -50,7 +50,7 @@ class EtlSpec extends SparkSpec {
 
   test("all bundled formats round-trip losslessly (parquet/orc/csv/json)") {
     import org.apache.spark.sql.functions._
-    val base = Files.createTempDirectory("graft-fmt").toString
+    val base = tempDir("graft-fmt")
     val src = spark.read.parquet(s"$sf0001/nation.parquet")
       .select("n_nationkey", "n_name", "n_regionkey")
     val want = src.orderBy("n_nationkey").collect().toSeq
@@ -71,7 +71,7 @@ class EtlSpec extends SparkSpec {
   test("schema evolution: mergeSchema unifies batches written with added columns") {
     // the 100 TB operational reality: a pipeline adds a column mid-corpus
     // and historical files must keep reading (nulls), not fail or drop
-    val dir = Files.createTempDirectory("graft-evolve").toString + "/t"
+    val dir = tempDir("graft-evolve") + "/t"
     Seq((1L, "a")).toDF("id", "v1").write.parquet(dir + "/batch=0")
     Seq((2L, "b", 10L)).toDF("id", "v1", "v2").write.parquet(dir + "/batch=1")
     val df = spark.read.option("mergeSchema", "true").parquet(dir)
@@ -82,7 +82,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("malformed JSON rows are quarantined in _corrupt_record, not silently dropped") {
-    val dir = Files.createTempDirectory("graft-corrupt").toString
+    val dir = tempDir("graft-corrupt")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "data.json"),
       """{"id": 1, "v": "ok"}
@@ -106,7 +106,7 @@ class EtlSpec extends SparkSpec {
     val zs = Seq((1L, 2L), (3L, 3L)).toDF("a", "b")
       .select(Etl.zValue(col("a"), col("b"))).collect().map(_.getLong(0))
     assert(zs.toSeq == Seq(9L, 15L))
-    val dir = java.nio.file.Files.createTempDirectory("graft-z").toString
+    val dir = tempDir("graft-z")
     val df = spark.read.parquet(s"$sf0001/orders.parquet")
       .select("o_orderkey", "o_custkey", "o_totalprice")
     Etl.writeZOrdered(df, s"$dir/z", "o_custkey", "o_orderkey", files = 4)
@@ -140,7 +140,7 @@ class EtlSpec extends SparkSpec {
 
   test("writeShuffled: sequential file-order read == the global md5 permutation") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-shuf").toString
+    val dir = tempDir("graft-shuf")
     val docs = spark.read.parquet(s"$sf0001/documents.parquet").select("doc_id")
     Etl.writeShuffled(docs, s"$dir/s", "doc_id", "seed7", files = 4)
     def h(id: Long): String =

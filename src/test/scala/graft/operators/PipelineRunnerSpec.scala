@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -13,7 +11,7 @@ class PipelineRunnerSpec extends SparkSpec {
   import spark.implicits._
 
   test("run -> rerun: committed stages skip; outputs identical") {
-    val dir = Files.createTempDirectory("graft-pipe").toString
+    val dir = tempDir("graft-pipe")
     var aRuns = 0
     var bRuns = 0
     val stages = Seq(
@@ -41,7 +39,7 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("crash mid-pipeline: resume skips committed prefix, overwrites partial output") {
-    val dir = Files.createTempDirectory("graft-pipe2").toString
+    val dir = tempDir("graft-pipe2")
     var firstRuns = 0
     val first = "first" -> { (_: Map[String, org.apache.spark.sql.DataFrame]) =>
       firstRuns += 1
@@ -72,7 +70,7 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("stale committed output is detected by the stage fingerprint and recomputed") {
-    val dir = Files.createTempDirectory("graft-pipe4").toString
+    val dir = tempDir("graft-pipe4")
     var extractRuns = 0
     var scoreRuns = 0
     def stages(version: String, factor: Long) = Seq(
@@ -113,7 +111,7 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("duplicate stage names are rejected loudly") {
-    val dir = Files.createTempDirectory("graft-pipe3").toString
+    val dir = tempDir("graft-pipe3")
     val s = "x" -> { (_: Map[String, org.apache.spark.sql.DataFrame]) =>
       Seq(1L).toDF("id") }
     intercept[IllegalArgumentException] {

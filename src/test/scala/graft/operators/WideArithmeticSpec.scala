@@ -14,7 +14,7 @@ class WideArithmeticSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-wide").toString
+    tempDir("graft-wide")
 
   test("q315: covariance sign and corr stay exact when y·y passes Long.Max") {
     val dir = mkDir()

@@ -55,7 +55,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sf001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf")
     Similarity.writeIvfIndex(emb, dir, nBuckets = 8)
     val direct = Similarity.ivfTopK(emb, queries, k = 5, nBuckets = 8, nprobe = 3)
       .collect().map(r => (r.getLong(0), r.getInt(3), r.getLong(1), r.getDouble(2))).toSet

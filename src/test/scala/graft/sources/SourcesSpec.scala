@@ -43,7 +43,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("kvtext resolves globs, directories, and value-less lines") {
-    val dir = Files.createTempDirectory("kvtext").toFile
+    val dir = new java.io.File(tempDir("kvtext"))
     Files.writeString(new java.io.File(dir, "mr-out-0").toPath,
       "alpha 1\nbeta 2\n")
     Files.writeString(new java.io.File(dir, "mr-out-1").toPath,
@@ -78,7 +78,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("kvtext V2 write: mr-out-N shards, atomic rename commit, clean temp dir") {
-    val dir = Files.createTempDirectory("kvtext-w").toString + "/out"
+    val dir = tempDir("kvtext-w") + "/out"
     val df = Seq(("b", "2"), ("a", "1"), ("c", "3"), ("d", "4"))
       .toDF("key", "value").repartition(2)
     df.write.format("kvtext").mode("append").save(dir)
@@ -111,7 +111,7 @@ class SourcesSpec extends SparkSpec {
   test("kvtext write survives induced task retry with exactly-once shards") {
     // the session runs with maxFailures=2: crash attempt 0 of partition 0
     // post-row-write; the retry must produce the same single visible shard
-    val dir = Files.createTempDirectory("kvtext-r").toString + "/out"
+    val dir = tempDir("kvtext-r") + "/out"
     val src = Seq(("a", "1"), ("b", "2")).toDF("key", "value").coalesce(1)
       .as[(String, String)]
       .mapPartitions { it =>
@@ -130,7 +130,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("kvtext micro-batch tail: each new shard arrives exactly once, in one batch") {
-    val dir = Files.createTempDirectory("kvtext-s").toString + "/out"
+    val dir = tempDir("kvtext-s") + "/out"
     new java.io.File(dir).mkdirs()
     val q = spark.readStream.format("kvtext").load(dir)
       .writeStream.format("memory").queryName("kvtail")
@@ -174,7 +174,7 @@ class SourcesSpec extends SparkSpec {
     // CRLF terminators consume 2 bytes per line; the reader's split
     // accounting must count raw bytes or a split runs past its end into
     // lines the next split also owns (duplicates)
-    val dir = Files.createTempDirectory("kvtext-crlf").toFile
+    val dir = new java.io.File(tempDir("kvtext-crlf"))
     val lines = (0 until 500).map(i => s"key$i ${i * 3}")
     Files.writeString(new java.io.File(dir, "mr-out-0").toPath,
       lines.mkString("\r\n") + "\r\n")
@@ -203,7 +203,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("kvtext round-trips the engine's own MapReduce text sink") {
-    val out = Files.createTempDirectory("kvtext-rt").toString + "/wc"
+    val out = tempDir("kvtext-rt") + "/wc"
     Seq(("b", "2"), ("a", "1"), ("c", "3")).toDF("k", "v")
       .select(concat_ws(" ", col("k"), col("v")).as("value"))
       .coalesce(1).write.text(out)

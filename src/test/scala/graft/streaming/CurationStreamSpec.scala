@@ -32,9 +32,9 @@ class CurationStreamSpec extends SparkSpec {
     rows.toDF("doc_id", "ts", "text")
 
   test("dedup→trending→upsert composed: exactly-once through restart, no history loss through compaction") {
-    val store = java.nio.file.Files.createTempDirectory("cur-store").toString
-    val out = java.nio.file.Files.createTempDirectory("cur-out").toString
-    val table = java.nio.file.Files.createTempDirectory("cur-table").toString
+    val store = tempDir("cur-store")
+    val out = tempDir("cur-out")
+    val table = tempDir("cur-table")
 
     def dedupLeg(batch: DataFrame, batchId: Long): Unit =
       NearDupStream.dedupBatch(store, out, compactEvery = 2)(

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -17,7 +15,7 @@ class FileStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("parquet file stream -> windowed agg -> parquet sink, with restart") {
-    val base = Files.createTempDirectory("graft-stream").toString
+    val base = tempDir("graft-stream")
     val (inDir, outDir, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
     new java.io.File(inDir).mkdirs()
 

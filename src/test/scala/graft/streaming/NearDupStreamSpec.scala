@@ -19,8 +19,8 @@ class NearDupStreamSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDirs(): (String, String) = (
-    java.nio.file.Files.createTempDirectory("neardup-store").toString,
-    java.nio.file.Files.createTempDirectory("neardup-out").toString)
+    tempDir("neardup-store"),
+    tempDir("neardup-out"))
 
   private def doc(id: Long, seed: Long, tag: String = ""): Doc = {
     val toks = Array.tabulate(40)(i => s"w${seed}_$i")
@@ -210,7 +210,7 @@ class NearDupStreamSpec extends SparkSpec {
   }
 
   test("decontaminateBatch drops near-dups of the fixed eval set; replay idempotent") {
-    val out = java.nio.file.Files.createTempDirectory("decon-out").toString
+    val out = tempDir("decon-out")
     // eval item = seed-100 doc with its first token tagged (j ≈ 0.949
     // to the untagged seed-100 doc — above the 0.7 threshold)
     val evalSet = Seq(doc(9000, 100, "EVAL")).toDF()
@@ -225,7 +225,7 @@ class NearDupStreamSpec extends SparkSpec {
   }
 
   test("decontaminateEmbeddingBatch drops semantic twins of eval vectors; replay idempotent") {
-    val out = java.nio.file.Files.createTempDirectory("edecon-out").toString
+    val out = tempDir("edecon-out")
     // deterministic 8-dim unit-ish vectors: basis(i) one-hot; twin(i) a
     // scaled+nudged copy (cosine ≈ 0.999); cross-basis cosine = 0
     def basis(id: Long, axis: Int): (Long, Array[Float]) =

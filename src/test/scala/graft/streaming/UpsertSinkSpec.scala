@@ -26,7 +26,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("streamed change feed through the sink == batch replay; replays are no-ops") {
     val ops = mkOps(90)
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    val dir = tempDir("graft-upsert")
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[KvOp]
@@ -60,7 +60,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("bucketed sink == plain sink state; untouched buckets are not rewritten") {
     val ops = mkOps(60)
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsertb").toString
+    val dir = tempDir("graft-upsertb")
     // replay the op stream through changeFeed in 2 chunks, second chunk
     // touching only one key → at most a couple of buckets
     val changes = {
@@ -94,7 +94,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("a fresh batch advances the version and readers see the new snapshot") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert2").toString
+    val dir = tempDir("graft-upsert2")
     UpsertSink.upsertBatch(dir)(
       Seq(KvStreaming.KvChange(1L, "a", "x")).toDF(), 0L)
     UpsertSink.upsertBatch(dir)(
@@ -106,7 +106,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("a new lineage (fresh checkpoint) is never mistaken for a replay") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert3").toString
+    val dir = tempDir("graft-upsert3")
     UpsertSink.upsertBatch(dir, appId = "run-1")(
       Seq(KvStreaming.KvChange(1L, "a", "x")).toDF(), 5L)
     // same low batchId from a DIFFERENT app: must apply, not be dropped
@@ -123,7 +123,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("empty batches advance the replay marker without junk versions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert4").toString
+    val dir = tempDir("graft-upsert4")
     UpsertSink.upsertBatch(dir)(
       Seq.empty[KvStreaming.KvChange].toDF(), 0L)
     assert(UpsertSink.load(spark, dir).isEmpty, "no data yet -> no snapshot")
@@ -131,7 +131,7 @@ class UpsertSinkSpec extends SparkSpec {
       Seq(KvStreaming.KvChange(1L, "a", "x")).toDF(), 1L)
     assert(UpsertSink.load(spark, dir).get.count() == 1)
     // bucketed form likewise
-    val dirB = java.nio.file.Files.createTempDirectory("graft-upsert5").toString
+    val dirB = tempDir("graft-upsert5")
     UpsertSink.upsertBatchBucketed(dirB, nBuckets = 4)(
       Seq.empty[KvStreaming.KvChange].toDF(), 0L)
     assert(UpsertSink.loadBucketed(spark, dirB).isEmpty)
@@ -141,7 +141,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("bucket-count mismatch on an existing table fails fast") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert6").toString
+    val dir = tempDir("graft-upsert6")
     UpsertSink.upsertBatchBucketed(dir, nBuckets = 8)(
       Seq(KvStreaming.KvChange(1L, "a", "x")).toDF(), 0L)
     val e = intercept[IllegalArgumentException] {
@@ -152,7 +152,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("compaction folds a fanned-out manifest into one version; vacuum then reclaims all") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert9").toString
+    val dir = tempDir("graft-upsert9")
     // six batches, each touching one key → the manifest ends up
     // referencing several version dirs (each bucket pinned where it was
     // last rewritten), none of which vacuum alone can reclaim
@@ -189,7 +189,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("a compaction that dies mid-write never tears the snapshot; restart recovers") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsertA").toString
+    val dir = tempDir("graft-upsertA")
     (0 until 4).foreach { i =>
       UpsertSink.upsertBatchBucketed(dir, nBuckets = 8)(
         Seq(KvStreaming.KvChange(i.toLong, s"k$i", s"v$i")).toDF(), i.toLong)
@@ -214,7 +214,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("vacuum reclaims superseded versions; the snapshot is unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert7").toString
+    val dir = tempDir("graft-upsert7")
     (0 to 3).foreach { i =>
       UpsertSink.upsertBatch(dir)(
         Seq(KvStreaming.KvChange(i.toLong, "k", s"v$i")).toDF(), i.toLong)
@@ -224,7 +224,7 @@ class UpsertSinkSpec extends SparkSpec {
     assert(removed == Seq(0L, 1L, 2L), s"expected old versions gone, removed $removed")
     assert(UpsertSink.load(spark, dir).get.collect().toSeq == before)
     // bucketed: only unreferenced versions die (v0 may still hold buckets)
-    val dirB = java.nio.file.Files.createTempDirectory("graft-upsert8").toString
+    val dirB = tempDir("graft-upsert8")
     UpsertSink.upsertBatchBucketed(dirB, nBuckets = 8)(
       (0 until 12).map(i => KvStreaming.KvChange(i.toLong, s"k$i", "x")).toDF(), 0L)
     UpsertSink.upsertBatchBucketed(dirB, nBuckets = 8)(
@@ -238,7 +238,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("retention grace window: a reader pinned to an old version resolves until the window closes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert9").toString
+    val dir = tempDir("graft-upsert9")
     (0 to 4).foreach { i =>
       UpsertSink.upsertBatch(dir)(
         Seq(KvStreaming.KvChange(i.toLong, "k", s"v$i")).toDF(), i.toLong)
@@ -266,7 +266,7 @@ class UpsertSinkSpec extends SparkSpec {
     // bucketed: the retained window pins versions its manifests
     // reference TRANSITIVELY — a pinned bucketed snapshot keeps its
     // carried-forward buckets
-    val dirB = java.nio.file.Files.createTempDirectory("graft-upsertA").toString
+    val dirB = tempDir("graft-upsertA")
     UpsertSink.upsertBatchBucketed(dirB, nBuckets = 8)(
       (0 until 12).map(i => KvStreaming.KvChange(i.toLong, s"k$i", "x")).toDF(), 0L)
     (1 to 3).foreach { i =>
@@ -300,7 +300,7 @@ class UpsertSinkSpec extends SparkSpec {
     // new version BEFORE vacuum's deletes run. Simulated deterministically
     // by restoring the stale pointer for the vacuum call: the dangerous
     // window is exactly "vacuum acts on a pointer one commit behind".
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsertR1").toString
+    val dir = tempDir("graft-upsertR1")
     UpsertSink.upsertBatchBucketed(dir, nBuckets = 8)(
       (0 until 12).map(i => KvStreaming.KvChange(i.toLong, s"k$i", "x")).toDF(), 0L)
     (1 to 2).foreach { i =>
@@ -344,7 +344,7 @@ class UpsertSinkSpec extends SparkSpec {
   test("loadVersion mid-vacuum: covered readers resolve; a half-reclaimed version is a clean None") {
     // covered mid-read: the reader resolved its plan BEFORE vacuum ran;
     // the grace window is what keeps the already-resolved plan readable
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsertR2").toString
+    val dir = tempDir("graft-upsertR2")
     (0 to 4).foreach { i =>
       UpsertSink.upsertBatch(dir)(
         Seq(KvStreaming.KvChange(i.toLong, "k", s"v$i")).toDF(), i.toLong)
@@ -363,7 +363,7 @@ class UpsertSinkSpec extends SparkSpec {
       .select(pmod(xxhash64(lit(k)), lit(8L)).cast("int")).head().getInt(0)
     val kA = "k1"
     val kB = (2 to 20).map(i => s"k$i").find(k => bucketOf(k) != bucketOf(kA)).get
-    val dirB = java.nio.file.Files.createTempDirectory("graft-upsertR3").toString
+    val dirB = tempDir("graft-upsertR3")
     UpsertSink.upsertBatchBucketed(dirB, nBuckets = 8)(
       (0 until 12).map(i => KvStreaming.KvChange(i.toLong, s"k$i", "x")).toDF(), 0L)
     UpsertSink.upsertBatchBucketed(dirB, nBuckets = 8)(

@@ -41,7 +41,11 @@ class TextAnalysisSpec extends SparkSpec {
   test("langId (one automaton pass) == composed replace form, corpus-wide") {
     // the automaton path must reproduce the builtin-only expression tree
     // the q33/q208 oracles mirror — including on half-doc slices, where
-    // marker counts are small and ties matter
+    // marker counts are small and ties matter. The two forms run in
+    // separate stages joined on the id — one projection holding both
+    // passes a generated method past 64 KB — and with codegen fallback
+    // off, so a stage that does not compile fails here instead of
+    // running interpreted.
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
       .select($"doc_id", $"text")
     val half = expr("(size(split(text, ' ')) + 1) div 2")
@@ -49,12 +53,14 @@ class TextAnalysisSpec extends SparkSpec {
     val slices = docs.select($"doc_id", $"text")
       .union(docs.select($"doc_id" + 1000000L,
         array_join(slice(toks, lit(1), half), " ")))
-    val mismatch = slices
-      .select($"doc_id",
-        TextAnalysis.langId($"text").as("fast"),
-        TextAnalysis.langIdComposed($"text").as("ref"))
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val mismatch = try slices
+      .select($"doc_id", TextAnalysis.langId($"text").as("fast"))
+      .join(slices.select($"doc_id",
+        TextAnalysis.langIdComposed($"text").as("ref")), "doc_id")
       .filter($"fast" =!= $"ref")
       .count()
+    finally spark.conf.set("spark.sql.codegen.fallback", "true")
     assert(mismatch == 0L)
   }
 
