@@ -21,7 +21,7 @@ object Eval {
     * Scale shape: one partial-agg shuffle builds the score histogram
     * (one row per DISTINCT score — for integer ppm scores that is ≤1e6
     * rows regardless of corpus size), the cumulative negative count is a
-    * [[graft.operators.Scale.prefixSumLongBy]] over that bounded
+    * [[graft.operators.Scale.scan]] over that bounded
     * histogram (range partition + broadcast offsets, no one-partition
     * window), and the finale is a scalar aggregate. The corpus itself
     * is scanned once and never re-shuffled.
@@ -34,8 +34,8 @@ object Eval {
     val hist = scored.groupBy(scoreCol).agg(
       sum(when(col(posCol), 1L).otherwise(0L)).as("npos"),
       sum(when(col(posCol), 0L).otherwise(1L)).as("nneg"))
-    val cum = graft.operators.Scale.prefixSumLongBy(
-      hist, Seq(scoreCol), "nneg", "cumneg")
+    val cum = graft.operators.Scale.scan(
+      hist, Seq(scoreCol), graft.operators.Scale.Sum("nneg", "cumneg"))._1
     // 2U ≤ 2·nPos·nNeg ~ n²/2 overflows Long past ~3e9 rows per class —
     // accumulate the per-score products in DECIMAL(38,0) (the q111
     // moment-sum precedent; DuckDB's BIGINT sums promote to HUGEINT the

@@ -1640,7 +1640,7 @@ object AnalyticsQueries {
           .as("ok"))
       val tot = merged.agg(sum("cnt").as("n"),
         ((sum("cnt") + 1) / 2).cast("long").as("k"))
-      val cum = Scale.prefixSumLong(merged, "bucket", "cnt", "c")
+      val cum = Scale.scan(merged, Seq("bucket"), Scale.Sum("cnt", "c"))._1
       val med = cum.crossJoin(broadcast(tot)).filter(col("c") >= col("k"))
         .agg(min("bucket").as("mb"))
       // exact median WITHOUT ranking the corpus (guide §2.4): the
@@ -1715,7 +1715,7 @@ object AnalyticsQueries {
     //      budget is spent — the deterministic "N tokens per domain"
     //      selection a mixture plan executes. The per-source running
     //      sum is NOT a per-source window (a hot domain would sort on
-    //      one reducer): ONE global `Scale.prefixSumLongBy` over the
+    //      one reducer): ONE global `Scale.scan` running sum over the
     //      (source, order) total order, then each source's offset (its
     //      first row's prefix) subtracts off via a small broadcast join
     //      — the distributed grouped-running-sum pattern. ----
@@ -1746,7 +1746,7 @@ object AnalyticsQueries {
         col("source"), col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("tok"),
         TextAnalysis.md5Long(col("doc_id").cast("string")).as("ord"))
-      val cum = Scale.prefixSumLongBy(d, Seq("source", "ord", "doc_id"), "tok", "cum")
+      val cum = Scale.scan(d, Seq("source", "ord", "doc_id"), Scale.Sum("tok", "cum"))._1
       // per-source offset = the prefix BEFORE the source's first row
       val off = cum.groupBy("source").agg(min(col("cum") - col("tok")).as("off"))
       cum.join(broadcast(off), "source")
@@ -1816,7 +1816,7 @@ object AnalyticsQueries {
       val d = Tables.documents(s, dir).select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("tok"),
         TextAnalysis.md5Long(col("doc_id").cast("string")).as("ord"))
-      val cum = Scale.prefixSumLongBy(d, Seq("ord", "doc_id"), "tok", "cum")
+      val cum = Scale.scan(d, Seq("ord", "doc_id"), Scale.Sum("tok", "cum"))._1
       cum.select(expr(s"(cum - tok) div $target").as("shard"), col("tok"))
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"), sum("tok").as("tokens"))
@@ -2245,7 +2245,7 @@ object AnalyticsQueries {
         .select(col("o_orderkey"), Exact.cents(col("o_totalprice")).as("cents"))
       def lowerMedian(df: org.apache.spark.sql.DataFrame,
           vCol: String, idCol: String): org.apache.spark.sql.DataFrame = {
-        val (ranked, total) = Scale.globalRankWithTotal(df, "_r", vCol, idCol)
+        val (ranked, Seq(total)) = Scale.scan(df, Seq(vCol, idCol), Scale.RowNumber("_r"))
         ranked.filter(col("_r") === (total + 1) / 2).select(col(vCol))
       }
       val med = lowerMedian(c, "cents", "o_orderkey")
@@ -2297,10 +2297,8 @@ object AnalyticsQueries {
         col("doc_id"), col("source"),
         floor(size(filter(toks, w => w.isin(PipelineQueries.stopwords: _*)))
             .cast("long") * 1000000L / size(toks).cast("long"))
-          .cast("long").as("score"),
-        lit(1L).as("_one"))
-      val ranked = Scale.prefixSumLongBy(
-        d, Seq("source", "score", "doc_id"), "_one", "grk")
+          .cast("long").as("score"))
+      val ranked = Scale.globalRank(d, "grk", "source", "score", "doc_id")
       val off = ranked.groupBy("source")
         .agg((min("grk") - 1L).as("off"), count(lit(1)).as("n"))
       ranked.join(broadcast(off), "source")
@@ -2801,10 +2799,10 @@ object AnalyticsQueries {
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, dir)
       // the total rides back with the rank offsets — no separate count
-      val (ranked, n) = Scale.globalRankWithTotal(
+      val (ranked, Seq(n)) = Scale.scan(
         docs.select(col("doc_id"), col("text"),
           TextAnalysis.md5Long(col("doc_id").cast("string")).as("ord")),
-        "rk", "ord", "doc_id")
+        Seq("ord", "doc_id"), Scale.RowNumber("rk"))
       val tok = ranked
         .select((expr(s"(rk - 1) * 10 div ${n}L") + 1).as("decile"),
           explode(TextAnalysis.shingles(col("text"), 3)).as("t"))

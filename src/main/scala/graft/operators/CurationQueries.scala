@@ -301,7 +301,10 @@ object CurationQueries {
         .groupBy("g").agg(sum("k").as("c"))
       val cc = bc.groupBy(expr("g div 27").as("c1"))
         .agg(sum("c").as("ctx"))
-      val lm = bc.join(cc, expr("g div 27") === cc("c1"))
+      // cc (one row per context) broadcast by hint: left to AQE, the join
+      // strategy followed which of its input stages finished first, and
+      // a warm rerun compiled the other plan's classes
+      val lm = bc.join(broadcast(cc), expr("g div 27") === cc("c1"))
         .select(col("g"),
           round(lit(1000000d) *
             log((col("c").cast("double") + 1) / (col("ctx").cast("double") + 27)))
@@ -420,8 +423,8 @@ object CurationQueries {
       val g = p.groupBy("x", "y")
         .agg(count(lit(1)).as("n_docs"), min("doc_id").as("rep_doc"))
         .withColumn("nx", -col("x")).withColumn("ny", -col("y"))
-      val ranked = Scale.globalRank(g, "r", "nx", "ny")
-      val pm = Scale.prefixMaxLongBy(ranked, Seq("nx", "ny"), "y", "inclmax")
+      val (pm, _) = Scale.scan(g, Seq("nx", "ny"),
+        Scale.RowNumber("r"), Scale.Max("y", "inclmax"))
       val prev = pm.select((col("r") + 1).as("r"),
         col("inclmax").as("exclmax"))
       pm.join(prev, Seq("r"), "left")
@@ -840,7 +843,7 @@ object CurationQueries {
           col("n_chars").as("v"))
       val cv = v.groupBy("v").agg(count(lit(1)).as("cnt"),
         sum(when(col("grp") === 1, 1L).otherwise(0L)).as("c1"))
-      val cum = Scale.prefixSumLong(cv, "v", "cnt", "cumin")
+      val cum = Scale.scan(cv, Seq("v"), Scale.Sum("cnt", "cumin"))._1
         .withColumn("cb", col("cumin") - col("cnt"))
       val r1 = cum.agg(sum(col("c1") *
         (lit(2L) * col("cb") + col("cnt") + 1)).as("r1x2"))
@@ -887,9 +890,8 @@ object CurationQueries {
       val d = Tables.events(s, dir)
         .select(expr("ts div 86400000000000").as("day"))
         .groupBy("day").agg(count(lit(1)).as("c"))
-      val (withCum, tot) =
-        Scale.prefixSumLongByWithTotal(d, Seq("day"), "c", "cum")
-      val (ranked, n) = Scale.globalRankWithTotal(withCum, "rr", "day")
+      val (ranked, Seq(tot, n)) = Scale.scan(d, Seq("day"),
+        Scale.Sum("c", "cum"), Scale.RowNumber("rr"))
       ranked.filter(col("rr") < n)
         .select(col("day"),
           expr("(1000 * cum) div rr").as("lm"),
@@ -1129,8 +1131,8 @@ object CurationQueries {
             "div size(toks)").as("sc"))
       val g = d.groupBy("sc").agg(sum("y").as("c_en"),
         (count(lit(1)) - sum("y")).as("c_ot"))
-      val (p1, tEn) = Scale.prefixSumLongByWithTotal(g, Seq("sc"), "c_en", "cum_en")
-      val (p2, tOt) = Scale.prefixSumLongByWithTotal(p1, Seq("sc"), "c_ot", "cum_ot")
+      val (p2, Seq(tEn, tOt)) = Scale.scan(g, Seq("sc"),
+        Scale.Sum("c_en", "cum_en"), Scale.Sum("c_ot", "cum_ot"))
       p2.select(col("sc").as("threshold"),
           (lit(tEn) - (col("cum_en") - col("c_en"))).as("tp"),
           (lit(tOt) - (col("cum_ot") - col("c_ot"))).as("fp"),
@@ -1629,9 +1631,9 @@ object CurationQueries {
       val grain = perDoc.join(newT, Seq("doc_id"), "left_outer")
         .select(col("doc_id"), col("ntok"),
           coalesce(col("ntypes"), lit(0L)).as("ntypes"))
-        .localCheckpoint() // both prefix passes and the totals read it
-      val c1 = Scale.prefixSumLong(grain, "doc_id", "ntok", "cum_n")
-      val c2 = Scale.prefixSumLong(c1, "doc_id", "ntypes", "cum_v")
+      // the corpus totals come back with the scan's offsets
+      val (c2, Seq(nTokens, vocab)) = Scale.scan(grain, Seq("doc_id"),
+        Scale.Sum("ntok", "cum_n"), Scale.Sum("ntypes", "cum_v"))
       val p = c2.filter(col("cum_n") >= 1 && col("cum_v") >= 1)
         .select(
           round(lit(1000000d) * log(col("cum_n").cast("double")))
@@ -1644,16 +1646,13 @@ object CurationQueries {
         sum(col("y").cast("decimal(38,0)")).as("sy"),
         sum((col("x") * col("y")).cast("decimal(38,0)")).as("sxy"),
         sum((col("x") * col("x")).cast("decimal(38,0)")).as("sxx"))
-      val tot = grain.agg(sum("ntok").as("n_tokens"),
-        sum("ntypes").as("vocab"))
       g.select(col("n"), col("sx"), col("sy"),
           expr("CAST(((n * sxy - sx * sy) * 1000) div (n * sxx - sx * sx) AS BIGINT)")
             .as("beta_milli"))
-        .crossJoin(broadcast(tot))
         .select(col("n").cast("long").as("n_points"), col("beta_milli"),
           expr("CAST((sy * 1000 - beta_milli * sx) div (n * 1000) AS BIGINT)")
             .as("lnk_micro"),
-          col("n_tokens"), col("vocab"))
+          lit(nTokens).as("n_tokens"), lit(vocab).as("vocab"))
     },
 
     // ---- Gini concentration of doc lengths per language (q262): how
@@ -1802,9 +1801,9 @@ object CurationQueries {
             "div size(toks)").as("sc"))
       val g = d.groupBy("sc")
         .agg(count(lit(1)).as("n"), sum("y").as("pos"))
-      val c1 = Scale.prefixSumLong(g, "sc", "n", "cn")
-      val cum = Scale.prefixSumLong(c1, "sc", "pos", "cp")
-        .localCheckpoint() // both sides of the grain² pair join
+      // pinned by the scan: both sides of the grain² pair join read it
+      val (cum, _) = Scale.scan(g, Seq("sc"),
+        Scale.Sum("n", "cn"), Scale.Sum("pos", "cp"))
       val a = cum.select(col("sc").as("si"), col("cn").as("cna"),
         col("cp").as("cpa"), col("n").as("na"), col("pos").as("posa"))
       val b = cum.select(col("sc").as("sj"), col("cn").as("cnb"),
@@ -1814,7 +1813,7 @@ object CurationQueries {
           expr("(1000000 * (cpb - cpa + posa)) div (cnb - cna + na)")
             .as("avgm"))
       val mj = pairs.groupBy("si").agg(min("avgm").as("m"))
-      val iso = Scale.prefixMaxLongBy(mj, Seq("si"), "m", "iso_micro")
+      val iso = Scale.scan(mj, Seq("si"), Scale.Max("m", "iso_micro"))._1
       cum.select(col("sc").as("score"), col("n"), col("pos"))
         .join(broadcast(iso.select(col("si").as("score"), col("iso_micro"))),
           "score")
@@ -2600,8 +2599,8 @@ object CurationQueries {
         .agg(sum(expr(chisqCellSql)).as("chi_micro"))
       val pv = chi.select(col("source"), col("chi_micro"),
         expr(chi4PvalSql).as("p_micro"))
+      // pinned by the rank scan; threshold scan + output read it
       val rk = Scale.globalRank(pv, "rk", "p_micro", "source")
-        .localCheckpoint() // source-bounded; threshold scan + output
       val m = rk.agg(count(lit(1)).as("m"))
       val pass = rk.crossJoin(broadcast(m))
         .agg(max(when(col("m") * col("p_micro") <= col("rk") * 50000L,
@@ -3109,7 +3108,7 @@ object CurationQueries {
         .select(col("doc_id"),
           size(TextAnalysis.wsTokens(col("text"))).cast("long").as("w"))
         .filter(col("w") >= 1)
-      val c = Scale.prefixSumLong(d, "doc_id", "w", "cum")
+      val c = Scale.scan(d, Seq("doc_id"), Scale.Sum("w", "cum"))._1
       val g = c.select(col("w"), (col("cum") - col("w")).as("lo"),
           (col("cum") - 1).as("hi"))
         .agg(count(lit(1)).as("n_docs"), sum("w").as("n_tokens"),

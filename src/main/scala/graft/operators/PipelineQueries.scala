@@ -987,14 +987,14 @@ object PipelineQueries {
         |FROM c
         |GROUP BY 1
         |ORDER BY pack_id""".stripMargin) { (s, dir) =>
-      // the running token total uses Scale.prefixSumLong — range
+      // the running token total uses Scale.scan — range
       // partitioning + broadcast offsets — NOT a global window, which
       // would drag every row into one partition (the former shape, kept
       // only as the spec's equality reference)
       val toks = Tables.documents(s, dir)
         .select(col("doc_id"),
           size(TextAnalysis.wsTokens(col("text"))).cast("long").as("n_tok"))
-      Scale.prefixSumLong(toks, "doc_id", "n_tok")
+      Scale.scan(toks, Seq("doc_id"), Scale.Sum("n_tok", "cum"))._1
         .select(floor((col("cum") - col("n_tok")) / 2000).as("pack_id"),
           col("n_tok"))
         .groupBy("pack_id")
@@ -4500,7 +4500,7 @@ object PipelineQueries {
     //      event-time high-water mark would DROP — the tuning table
     //      behind every `withWatermark` delay choice (StreamOps defaults
     //      to 30 min; this is where that number comes from). The running
-    //      max runs on Scale.prefixMaxLongBy — range partition +
+    //      max runs on one Scale.scan — range partition +
     //      broadcast prefix maxes, NO single-partition window, so the
     //      replay survives a 100× stream history. ----
     QueryDef(
@@ -4531,7 +4531,7 @@ object PipelineQueries {
         .withColumn("arr_us", col("tus") +
           pmod(TextAnalysis.md5Long(concat(lit("jit:"),
             col("event_id").cast("string"))), lit(600L)) * 1000000L)
-      Scale.prefixMaxLongBy(ev, Seq("arr_us", "event_id"), "tus", "wm")
+      Scale.scan(ev, Seq("arr_us", "event_id"), Scale.Max("tus", "wm"))._1
         .select((col("wm") - col("tus")).as("late_us"))
         .select(explode(typedLit(Seq(60L, 300L, 600L, 900L)))
           .as("delay_s"), col("late_us"))

@@ -29,95 +29,93 @@ object Scale {
       .groupBy(col(keyCol))
       .agg(sum("_psum").as(s"sum_$valueCol"), sum("_pcnt").as("n"))
 
-  /** Repartition both sides of a fact-fact join on the join key with the
-    * same partition count, so the join itself is a zero-exchange zip of
-    * co-partitioned inputs (Spark reuses the partitioning; with bucketed
-    * tables on disk even the repartition disappears).
+  /** A running column of [[scan]]: each row gets the aggregate over
+    * every row at-or-before it in the scan's order.
     */
-  def coPartitionedJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      partitions: Int): DataFrame = {
-    val l = left.repartition(partitions, col(key))
-    val r = right.repartition(partitions, col(key))
-    l.join(r, key)
-  }
+  sealed trait Running { def out: String }
+  /** Running sum of a LongType column. */
+  final case class Sum(value: String, out: String) extends Running
+  /** Running max of a LongType column. */
+  final case class Max(value: String, out: String) extends Running
+  /** 1-based row number: a running sum of ones. */
+  final case class RowNumber(out: String) extends Running
 
-  /** Distributed running (prefix) sum over a global order — the scale
-    * form of `sum(v) OVER (ORDER BY k ROWS UNBOUNDED PRECEDING..CURRENT)`,
-    * which Spark otherwise executes in ONE partition (the WindowExec
-    * "moving all data to a single partition" warning).
+  /** Distributed running aggregates over a global order — the scale
+    * form of `sum(v) / max(v) / row_number() OVER (ORDER BY k ROWS
+    * UNBOUNDED PRECEDING..CURRENT)`, which Spark otherwise executes in
+    * ONE partition (the WindowExec "moving all data to a single
+    * partition" warning).
     *
     * Shape: range-partition on the order key (global order across
-    * partitions, local order within), one tiny job sums each partition,
-    * the per-partition totals prefix-sum on the driver (O(partitions)
-    * values — the same driver-side step Spark's own RangePartitioner
-    * takes), offsets broadcast back, and every partition accumulates
-    * locally — a narrow pass. Identical results to the window form for a
-    * unique (total-order) key; `valueCol` must be LongType.
+    * partitions, local order within), one job folds every running column
+    * per partition, the per-partition totals fold on the driver into
+    * exclusive prefixes (O(partitions) values — the same driver-side step
+    * Spark's own RangePartitioner takes), the offsets are broadcast
+    * back, and every partition accumulates locally — a narrow pass. Any
+    * number of running columns share that one pass; they are appended in
+    * the order given, as non-null longs. Identical results to the window
+    * form for a unique (total-order) key; values must be LongType.
+    *
+    * Also returns each column's grand total (sum, max or row count)
+    * in the same order — free, because the offsets already sit on the
+    * driver: callers that would otherwise run an `agg` over the result (a
+    * second full pass of the ranked lineage) should take it from here.
+    * On empty input a sum or row count is 0 and a max is Long.MinValue.
     */
-  def prefixSumLong(
-      df: DataFrame,
-      orderCol: String,
-      valueCol: String,
-      cumCol: String = "cum",
-      partitions: Int = 0): DataFrame =
-    prefixSumLongBy(df, Seq(orderCol), valueCol, cumCol, partitions)
-
-  /** [[prefixSumLong]] over a composite (multi-column) total order. */
-  def prefixSumLongBy(
-      df: DataFrame,
-      orderCols: Seq[String],
-      valueCol: String,
-      cumCol: String = "cum",
-      partitions: Int = 0): DataFrame =
-    prefixSumLongByWithTotal(df, orderCols, valueCol, cumCol, partitions)._1
-
-  /** [[prefixSumLongBy]], also returning the GRAND TOTAL of `valueCol`.
-    * The per-partition totals already sit on the driver (they build the
-    * broadcast offsets), so the total is free — callers that would
-    * otherwise run an `agg(max(cum))` over the result (a second full
-    * pass of the ranked lineage) should take it from here instead.
-    */
-  def prefixSumLongByWithTotal(
-      df: DataFrame,
-      orderCols: Seq[String],
-      valueCol: String,
-      cumCol: String = "cum",
-      partitions: Int = 0): (DataFrame, Long) = {
+  def scan(df: DataFrame, orderCols: Seq[String], cols: Running*): (DataFrame, Seq[Long]) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
+    require(cols.nonEmpty, "scan needs at least one running column")
     val spark = df.sparkSession
-    // With no explicit partition count the range exchange is left for
-    // AQE to size (repartitionByRange WITHOUT numPartitions may be
-    // coalesced): partition count tracks the DATA, not a constant —
-    // a customer-grain rank coalesces to a handful of partitions while
-    // a corpus-grain rank keeps shuffle.partitions' parallelism. A
-    // fixed count spent (3 jobs × parts) task launches on every rank
-    // pass regardless of input size — the measured reason the
-    // rank-fusion queries (q312/q147) ran SLOWER at 32 cores than 8.
-    // Coalescing merges ADJACENT range partitions, so the global order
-    // and the per-partition prefix offsets below are unaffected.
-    val ranged = (if (partitions > 0)
-        df.repartitionByRange(partitions, orderCols.map(col): _*)
-      else df.repartitionByRange(orderCols.map(col): _*))
+    // The range exchange is left for AQE to size (repartitionByRange
+    // WITHOUT numPartitions may be coalesced): partition count tracks
+    // the DATA, not a constant — a customer-grain rank coalesces to a
+    // handful of partitions while a corpus-grain rank keeps
+    // shuffle.partitions' parallelism. A fixed count spent (3 jobs ×
+    // parts) task launches on every rank pass regardless of input size
+    // — the measured reason the rank-fusion queries (q312/q147) ran
+    // SLOWER at 32 cores than 8. Coalescing merges ADJACENT range
+    // partitions, so the global order and the per-partition prefix
+    // offsets below are unaffected.
+    val ranged = df.repartitionByRange(orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.map(col): _*)
     val schema = ranged.schema
-    val vIdx = schema.fieldIndex(valueCol)
+    // per running column: the value's field index (-1: a row's 1) and
+    // whether it folds by max (else by +)
+    val vIdx = cols.map {
+      case Sum(v, _) => schema.fieldIndex(v)
+      case Max(v, _) => schema.fieldIndex(v)
+      case RowNumber(_) => -1
+    }.toArray
+    val isMax = cols.map(_.isInstanceOf[Max]).toArray
+    val zero = isMax.map(m => if (m) Long.MinValue else 0L)
+    def fold(acc: Array[Long], j: Int, v: Long): Unit =
+      acc(j) = if (isMax(j)) math.max(acc(j), v) else acc(j) + v
+    def step(acc: Array[Long], r: Row): Unit = {
+      var j = 0
+      while (j < acc.length) {
+        fold(acc, j, if (vIdx(j) < 0) 1L else r.getLong(vIdx(j)))
+        j += 1
+      }
+    }
     // pin the partitioning: RangePartitioner samples boundaries, so the
     // totals job and the output job must see the SAME layout
     val rdd = ranged.rdd.cache()
     val totals = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s = 0L
-      it.foreach(r => s += r.getLong(vIdx))
-      Iterator((pid, s))
+      val acc = zero.clone()
+      it.foreach(step(acc, _))
+      Iterator((pid, acc))
     }.collect().sortBy(_._1).map(_._2)
-    val offsets = totals.scanLeft(0L)(_ + _) // exclusive prefix per pid
+    // exclusive prefix per pid: offsets(pid) folds every EARLIER partition
+    val offsets = totals.scanLeft(zero) { (a, b) =>
+      val acc = a.clone()
+      b.indices.foreach(j => fold(acc, j, b(j)))
+      acc
+    }
     val bc = spark.sparkContext.broadcast(offsets)
     val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = bc.value(pid)
-      it.map { r => acc += r.getLong(vIdx); Row.fromSeq(r.toSeq :+ acc) }
+      val acc = bc.value(pid).clone()
+      it.map { r => step(acc, r); Row.fromSeq(r.toSeq ++ acc) }
     }
     // localCheckpoint pins the RESULT (eagerly), so the input cache can
     // be released immediately — a lazy return would recompute `out`
@@ -129,90 +127,29 @@ object Scale {
     // the spike spills rather than OOMs; the steady-state footprint is
     // unchanged (one pinned copy either way)
     val result = spark
-      .createDataFrame(out, schema.add(cumCol, LongType, nullable = false))
+      .createDataFrame(out,
+        cols.foldLeft(schema)((s, c) => s.add(c.out, LongType, nullable = false)))
       .localCheckpoint()
     rdd.unpersist(blocking = false)
-    (result, offsets.last)
-  }
-
-  /** Running MAX of `valueCol` over a composite total order — the
-    * prefix-max sibling of [[prefixSumLongByWithTotal]] (same range
-    * partition + per-partition aggregate + broadcast exclusive prefix,
-    * NO single-partition window): per partition pid the carried-in seed
-    * is max of all earlier partitions' maxes, so each row's `cumCol` is
-    * the max over every row at-or-before it in the order. The primitive
-    * behind watermark replay (running max event-time) and
-    * high-water-mark audits.
-    */
-  def prefixMaxLongBy(
-      df: DataFrame,
-      orderCols: Seq[String],
-      valueCol: String,
-      cumCol: String = "cummax",
-      partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
-    val spark = df.sparkSession
-    // AQE-sized range exchange when no explicit count — see
-    // prefixSumLongByWithTotal
-    val ranged = (if (partitions > 0)
-        df.repartitionByRange(partitions, orderCols.map(col): _*)
-      else df.repartitionByRange(orderCols.map(col): _*))
-      .sortWithinPartitions(orderCols.map(col): _*)
-    val schema = ranged.schema
-    val vIdx = schema.fieldIndex(valueCol)
-    val rdd = ranged.rdd.cache()
-    val maxes = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var m = Long.MinValue
-      it.foreach(r => m = math.max(m, r.getLong(vIdx)))
-      Iterator((pid, m))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = maxes.scanLeft(Long.MinValue)(math.max) // exclusive
-    val bc = spark.sparkContext.broadcast(offsets)
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = bc.value(pid)
-      it.map { r =>
-        acc = math.max(acc, r.getLong(vIdx))
-        Row.fromSeq(r.toSeq :+ acc)
-      }
-    }
-    val result = spark
-      .createDataFrame(out, schema.add(cumCol, LongType, nullable = false))
-      .localCheckpoint() // pin before releasing the range-pinned input
-    rdd.unpersist(blocking = false)
-    result
+    (result, offsets.last.toSeq)
   }
 
   /** Distributed global row numbering under a composite total order —
     * `row_number() OVER (ORDER BY ...)` without the one-partition window:
-    * a prefix sum of ones. Order columns must form a total order (no
-    * ties) for the numbering to be well-defined.
+    * a [[scan]] with one [[RowNumber]]. Order columns must form a total
+    * order (no ties) for the numbering to be well-defined.
     */
   def globalRank(
       df: DataFrame,
       rankCol: String,
       orderCols: String*): DataFrame =
-    globalRankWithTotal(df, rankCol, orderCols: _*)._1
-
-  /** [[globalRank]], also returning the total row count (= the max rank)
-    * — already collected on the driver by the prefix-sum offsets, so
-    * consumers that need n (equi-depth binning, winsorization bounds)
-    * skip a full re-aggregation pass over the ranked table.
-    */
-  def globalRankWithTotal(
-      df: DataFrame,
-      rankCol: String,
-      orderCols: String*): (DataFrame, Long) = {
-    val (ranked, total) = prefixSumLongByWithTotal(
-      df.withColumn("_one", lit(1L)), orderCols, "_one", rankCol)
-    (ranked.drop("_one"), total)
-  }
+    scan(df, orderCols, RowNumber(rankCol))._1
 
   /** Exact equi-depth (ntile) bin assignment over a composite total
     * order — the scale form of `ntile(bins) OVER (ORDER BY ...)`, whose
     * window form shuffles every row into ONE partition for the global
-    * sort. Here [[globalRank]] range-partitions and prefix-sums row
-    * counts, then the closed-form ntile rule — the first n mod bins
+    * sort. Here one [[scan]] range-partitions and numbers the rows,
+    * then the closed-form ntile rule — the first n mod bins
     * bins get ⌈n/bins⌉ rows, the rest ⌊n/bins⌋ — maps each rank to its
     * bin narrowly against the broadcast total. Identical assignment to
     * the window form for a total order (no ties); adds a 1-based `bin`
@@ -220,10 +157,10 @@ object Scale {
     */
   def equiDepthBins(df: DataFrame, bins: Int, orderCols: String*): DataFrame = {
     require(bins > 0, s"bins must be positive, got $bins")
-    // the total is free from the prefix-sum offsets — inlining it as a
+    // the total is free from the scan offsets — inlining it as a
     // literal drops the broadcast-join-with-agg(max) second pass the
     // previous version ran over the ranked lineage
-    val (ranked, total) = globalRankWithTotal(df, "_r", orderCols: _*)
+    val (ranked, Seq(total)) = scan(df, orderCols, RowNumber("_r"))
     ranked
       .withColumn("bin", expr(
         s"""CAST(CASE
@@ -313,7 +250,7 @@ object Scale {
     * the boundary is tie-order independent even though the rank needs a
     * tie-break (`tieCols`) to be a total order.
     *
-    * Scale shape: one [[globalRank]] pass (range partition + O(parts)
+    * Scale shape: one [[scan]] rank pass (range partition + O(parts)
     * driver offsets — NO single-partition window), a 1-row boundary
     * aggregate broadcast back, and a narrow clamp projection. Appends
     * `<valueCol>_w`.
@@ -329,7 +266,7 @@ object Scale {
     // n comes back with the rank pass (driver-side prefix offsets), so
     // the boundary ranks are plain literals — no agg(max) re-pass, no
     // broadcast-join of the total back onto the ranked table
-    val (ranked, n) = globalRankWithTotal(df, "_wr", (valueCol +: tieCols): _*)
+    val (ranked, Seq(n)) = scan(df, valueCol +: tieCols, RowNumber("_wr"))
     val kLo = math.max(1L, (loPermille * n + 999L) / 1000L)
     val kHi = math.min(n, (hiPermille * n + 999L) / 1000L)
     val bounds = ranked

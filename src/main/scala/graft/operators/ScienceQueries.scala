@@ -408,7 +408,7 @@ object ScienceQueries {
     //      across sources beyond chance — the nonparametric ANOVA every
     //      mixture audit wants when lengths are anything but normal.
     //      Midranks come from per-DISTINCT-VALUE counts + ONE
-    //      Scale.prefixSumLong pass (2·cum − c + 1 in half-units — all
+    //      Scale.scan pass (2·cum − c + 1 in half-units — all
     //      integer, no per-row rank, NO single-partition window); group
     //      rank sums are exact BIGINT joins on the value key. The only
     //      float work is the k-term Σ R²/n fold, done index-ordered
@@ -441,7 +441,7 @@ object ScienceQueries {
          |FROM f CROSS JOIN tot""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select(col("source"), col("n_chars").as("v"))
       val vc = docs.groupBy("v").agg(count(lit(1)).as("c")).localCheckpoint()
-      val mr = Scale.prefixSumLong(vc, "v", "c", "cum")
+      val mr = Scale.scan(vc, Seq("v"), Scale.Sum("c", "cum"))._1
         .selectExpr("v", "2 * cum - c + 1 AS mr2")
       val groups = docs.groupBy("source", "v").agg(count(lit(1)).as("ngv"))
         .join(mr, "v")
@@ -681,7 +681,7 @@ object ScienceQueries {
     //      α=β=0.05. Per-event log-likelihood increments are FIXED
     //      integer milli constants (511 = ⌊1000·ln(25/15)⌉, −125 =
     //      ⌊1000·ln(75/85)⌉ — hardcoded, so no libm enters the data
-    //      path), the running sum is ONE Scale.prefixSumLong pass over
+    //      path), the running sum is ONE Scale.scan pass over
     //      (time, event_id) — no single-partition window — and the
     //      verdict is the first boundary crossing (±2944 = ±⌊1000·
     //      ln 19⌉) picked by min(struct). The shape every online
@@ -708,7 +708,7 @@ object ScienceQueries {
         |FROM t CROSS JOIN x""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir).selectExpr("event_id", "ts div 1000 AS tus",
         "CASE WHEN event_type = 'click' THEN 511L ELSE -125L END AS llr")
-      val cum = Scale.prefixSumLongBy(ev, Seq("tus", "event_id"), "llr", "cum")
+      val cum = Scale.scan(ev, Seq("tus", "event_id"), Scale.Sum("llr", "cum"))._1
       val crossing = cum
         .filter(col("cum") >= 2944L || col("cum") <= -2944L)
         .agg(min(struct(col("tus").as("tus"), col("event_id").as("eid"),
@@ -877,7 +877,8 @@ object ScienceQueries {
           pmod(TextAnalysis.md5Long(concat(col("user_id").cast("string"), lit("|did"))),
             lit(2L)))
         .withColumn("negscore", -col("score"))
-      val (ranked, nu) = Scale.globalRankWithTotal(u, "rnk", "negscore", "user_id")
+      val (ranked, Seq(nu)) =
+        Scale.scan(u, Seq("negscore", "user_id"), Scale.RowNumber("rnk"))
       val g = ranked
         .selectExpr(s"((rnk - 1) * 10) div $nu AS decile", "treat", "conv")
         .groupBy("decile")
@@ -1513,8 +1514,8 @@ object ScienceQueries {
       // separately-pinned c three times and joined the three rank
       // frames back on ck (3 joins + 1 extra checkpoint, all removed;
       // same rank values, every pass ranks the same row set).
-      val (rRank, n) = Scale.globalRankWithTotal(
-        c.withColumn("neg_r", -col("r_days")), "rr", "neg_r", "ck")
+      val (rRank, Seq(n)) = Scale.scan(c.withColumn("neg_r", -col("r_days")),
+        Seq("neg_r", "ck"), Scale.RowNumber("rr"))
       val fRank = Scale.globalRank(rRank, "fr", "f_orders", "ck")
       val mRank = Scale.globalRank(fRank, "mr", "m_cents", "ck")
       mRank
@@ -1531,7 +1532,7 @@ object ScienceQueries {
     // ---- revenue concentration (q313): the 80/20 report — how few
     //      customers cover 50/80/90% of revenue. Customers ranked by
     //      exact cent mass (desc, custkey ties) through ONE
-    //      prefixSumLong pass; a customer is needed for threshold p iff
+    //      Scale.scan pass; a customer is needed for threshold p iff
     //      the mass BEFORE it is short of p — an exclusive-prefix
     //      filter, counted exactly per threshold with integer
     //      cross-products (no percent rounding before the compare).
@@ -1559,10 +1560,10 @@ object ScienceQueries {
           round(col("o_totalprice") * 100).cast("long").as("cents"))
         .groupBy("ck").agg(sum("cents").as("cents"))
         .withColumn("neg", -col("cents"))
-      val (ranked0, total) = Scale.prefixSumLongByWithTotal(
-        c, Seq("neg", "ck"), "cents", "cum")
+      // pinned by the scan; three threshold counts read it
+      val (ranked0, Seq(total)) =
+        Scale.scan(c, Seq("neg", "ck"), Scale.Sum("cents", "cum"))
       val ranked = ranked0.withColumn("cum_excl", col("cum") - col("cents"))
-        .localCheckpoint() // three threshold counts read it
       val nCust = ranked.count()
       Seq(50, 80, 90).map { pct =>
         ranked.filter(col("cum_excl") * 100 < lit(pct.toLong) * total)

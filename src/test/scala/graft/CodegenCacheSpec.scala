@@ -24,11 +24,13 @@ class CodegenCacheSpec extends SparkSpec {
   }
 
   /** The warm round's compiles at sf0.001, measured with the cache at
-    * GraftSession's size: q224_survivorship 14 and q291_anf_reach 2, the
-    * other three 0. Those are classes their second run compiles for the
-    * first time; a third round compiles none. At Spark's default of 100
-    * entries the cold round's ~310 classes evict each other and the warm
-    * round recompiles 309 of them.
+    * GraftSession's size and its stage-id-free class names: totals 0–8
+    * over 10 isolated runs (q224_survivorship 0–8, q291_anf_reach 0–2,
+    * the other three 0). Those are classes their second run compiles for
+    * the first time. With the stage id in the class name the residue
+    * reached 16, as AQE renumbered the same pipelines run to run. At
+    * Spark's default of 100 entries the cold round's ~310 classes evict
+    * each other and the warm round recompiles 309 of them.
     */
   private val WarmResidue = 16
 

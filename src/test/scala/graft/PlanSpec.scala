@@ -620,7 +620,7 @@ class PlanSpec extends SparkSpec {
   test("q219 watermark replay: the running max never plans a single-partition window") {
     val plan = planOf("q219_watermark_audit")
     assert(!plan.contains("Window"),
-      s"prefixMaxLongBy must not fall back to a window:\n$plan")
+      s"the Scale.scan running max must not fall back to a window:\n$plan")
   }
 
   test("q212 whitening: the 64-row mean table broadcasts back; aggs partial+final") {

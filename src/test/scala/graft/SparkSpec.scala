@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,10 +63,11 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", tempDir("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
-      // the production codegen-cache size, so warm test runs behave as
-      // every graft entry point does (see GraftSession.CodegenCacheEntries)
+      // the production codegen-cache size and class naming, so warm test
+      // runs behave as every graft entry point does (see GraftSession)
       .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
         GraftSession.CodegenCacheEntries.toLong)
+      .config(SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key, "false")
       .getOrCreate()
     graft.functions.GraftFunctions.register(s)
     s.sparkContext.setLogLevel("ERROR")

@@ -859,7 +859,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q264: no window anywhere; the grain pair join stays off the row-level path") {
-    // the tail plan is checkpoint-truncated (Scale.prefixMaxLongBy pins
+    // the tail plan is checkpoint-truncated (Scale.scan pins
     // its output), so assert the visible tail plus the head stage the
     // same way the query builds it: the i<=j join must broadcast.
     val plan = planOf("q264_isotonic_calibration")

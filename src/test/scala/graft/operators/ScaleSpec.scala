@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class ScaleSpec extends SparkSpec {
@@ -39,23 +40,64 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("prefixSumLong equals the single-partition running-sum window") {
-    import org.apache.spark.sql.expressions.Window
+  /** Runs `body` with the scan's range exchange at exactly `parts`
+    * partitions (AQE coalescing off), restoring the session conf after.
+    */
+  private def withRangePartitions[T](parts: Int)(body: => T): T = {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), parts.toLong)
+    spark.conf.set(keys(1), "false")
+    try body
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private val running = Window.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  test("scan Sum equals the single-partition running-sum window") {
     val df = new scala.util.Random(7).shuffle((1 to 3000).toList)
       .map(i => (i.toLong, (i % 97).toLong)).toDF("k", "v")
       .repartition(11)
-    val w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val want = df.withColumn("cum", sum("v").over(w))
+    val want = df.withColumn("cum", sum("v").over(running.orderBy("k")))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val got = Scale.prefixSumLong(df, "k", "v", partitions = 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(got == want)
-    // and the distributed form really is distributed: >1 partition
-    assert(Scale.prefixSumLong(df, "k", "v", partitions = 8).rdd.getNumPartitions > 1)
+    withRangePartitions(8) {
+      val (out, Seq(total)) = Scale.scan(df, Seq("k"), Scale.Sum("v", "cum"))
+      assert(out.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap == want)
+      assert(total == (1 to 3000).map(_ % 97).sum)
+      // and the distributed form really is distributed: >1 partition
+      assert(out.rdd.getNumPartitions > 1)
+    }
+  }
+
+  test("one fused scan (Sum, Max, RowNumber) equals three windows, across partitions") {
+    // composite tie-free order (g, id); values straddle zero and the
+    // first rows in order are all negative, so a Max seeded at 0 (or an
+    // offset that includes its own partition) shows
+    val rnd = new scala.util.Random(41)
+    val rows = rnd.shuffle((1L to 2400L).toList).map { id =>
+      (id % 5, id, if (id % 5 == 0 && id < 400) -1000L - id
+        else rnd.nextInt(2001).toLong - 1000L)
+    }
+    val df = rows.toDF("g", "id", "v").repartition(13)
+    val w = running.orderBy("g", "id")
+    val want = df.select(col("g"), col("id"), sum("v").over(w).as("s"),
+        max("v").over(w).as("m"), row_number().over(w).cast("long").as("r"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+    withRangePartitions(8) {
+      val (out, totals) = Scale.scan(df, Seq("g", "id"),
+        Scale.Sum("v", "s"), Scale.Max("v", "m"), Scale.RowNumber("r"))
+      assert(out.columns.toSeq == Seq("g", "id", "v", "s", "m", "r"))
+      assert(out.rdd.getNumPartitions > 1)
+      val got = out.collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        ((r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
+      assert(got == want)
+      assert(totals == Seq(rows.map(_._3).sum, rows.map(_._3).max, rows.size.toLong))
+    }
   }
 
   test("globalRank equals the global row_number window (composite order)") {
-    import org.apache.spark.sql.expressions.Window
     val df = new scala.util.Random(3).shuffle((1 to 2000).toList)
       .map(i => (i.toLong, (i % 13).toLong)).toDF("id", "grp")
       .repartition(9)
@@ -132,15 +174,6 @@ class ScaleSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Scale.hashSplit(df, "id", "s", Seq("a" -> 5000, "b" -> 4000))
     }
-  }
-
-  test("coPartitionedJoin produces correct results") {
-    val o = spark.read.parquet(s"$sf0001/orders.parquet")
-      .select(col("o_custkey").as("custkey"), col("o_totalprice"))
-    val c = spark.read.parquet(s"$sf0001/customer.parquet")
-      .select(col("c_custkey").as("custkey"), col("c_name"))
-    val n = Scale.coPartitionedJoin(o, c, "custkey", 8).count()
-    assert(n == o.join(c, "custkey").count())
   }
 
   test("winsorize: exact ceil-rank boundaries, ties and degenerate permilles") {
@@ -221,22 +254,18 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("prefixMaxLongBy == window cummax, under any partition count") {
-    import org.apache.spark.sql.expressions.Window
+  test("scan Max == window cummax, under any partition count") {
     val rnd = new scala.util.Random(29)
     val rows = (1L to 3000L).map(i => (i, rnd.nextInt(100000).toLong))
     val df = rows.toDF("id", "v").repartition(17)
-    val got = Scale.prefixMaxLongBy(df, Seq("id"), "v", "cm")
+    def cummax() = Scale.scan(df, Seq("id"), Scale.Max("v", "cm"))._1
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     // single-partition window reference (fine at spec scale)
     val want = rows.toDF("id", "v")
-      .withColumn("cm", max("v").over(Window.orderBy("id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("cm", max("v").over(running.orderBy("id")))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(got == want)
+    assert(cummax() == want)
     // and with a forced tiny partition count (seed-carry across parts)
-    val got3 = Scale.prefixMaxLongBy(df, Seq("id"), "v", "cm", partitions = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(got3 == want)
+    assert(withRangePartitions(3)(cummax()) == want)
   }
 }
