@@ -2550,8 +2550,8 @@ object CurationQueries {
     //      Per-source χ² (df=4) against corpus-share expectations, the
     //      EXACT even-df tail P(X>x) = e^(−x/2)(1+x/2) as one shared
     //      expression (no incomplete-gamma approximation), BH step-up
-    //      over the 20-row grain via globalRank + running max of the
-    //      passing rank. ----
+    //      over the 20-row grain via one rank scan (which also counts
+    //      the tests) + max of the passing rank. ----
     QueryDef(
       "q276_bh_drift_screen",
       s"""WITH obs AS (
@@ -2599,12 +2599,11 @@ object CurationQueries {
         .agg(sum(expr(chisqCellSql)).as("chi_micro"))
       val pv = chi.select(col("source"), col("chi_micro"),
         expr(chi4PvalSql).as("p_micro"))
-      // pinned by the rank scan; threshold scan + output read it
-      val rk = Scale.globalRank(pv, "rk", "p_micro", "source")
-      val m = rk.agg(count(lit(1)).as("m"))
-      val pass = rk.crossJoin(broadcast(m))
-        .agg(max(when(col("m") * col("p_micro") <= col("rk") * 50000L,
-          col("rk")).otherwise(0L)).as("kstar"))
+      // pinned by the rank scan; threshold scan + output read it. The
+      // scan's row count is the number of tests m.
+      val (rk, Seq(m)) = Scale.scan(pv, Seq("p_micro", "source"), Scale.RowNumber("rk"))
+      val pass = rk.agg(max(when(lit(m) * col("p_micro") <= col("rk") * 50000L,
+        col("rk")).otherwise(0L)).as("kstar"))
       rk.crossJoin(broadcast(pass))
         .select(col("source"), col("chi_micro"), col("p_micro"), col("rk"),
           (col("rk") <= col("kstar")).as("significant"))

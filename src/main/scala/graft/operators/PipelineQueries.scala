@@ -64,6 +64,15 @@ object PipelineQueries {
       |        AND alpha_words * 5 >= n_tokens * 4
       |        AND stop_hits >= 2)""".stripMargin
 
+  /** The planted-twin corpus of [[twinDocsCtes]]: `docs` plus its first
+    * 10 docs again under id + 1000000 with " `tailToken`" appended to the
+    * text (any other columns ride along).
+    */
+  private def twinDocs(docs: DataFrame, tailToken: String): DataFrame =
+    docs.union(docs.filter(col("doc_id") < 10)
+      .withColumn("doc_id", col("doc_id") + 1000000L)
+      .withColumn("text", concat(col("text"), lit(s" $tailToken"))))
+
   /** CTE: the q31/q60/q65 planted-twin corpus with whitespace tokens. */
   private def twinDocsCtes(tailToken: String): String =
     s"""d AS (
@@ -172,30 +181,55 @@ object PipelineQueries {
       |  UNION
       |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src)""".stripMargin
 
-  /** DuckDB CTE fragments for one k-means round: quantized-exact centroid
-    * means from an assignment relation (vec_id, embedding, cluster), then
-    * argmin-L2 re-assignment — mirrors Similarity.kmeansLite bit-for-bit.
+  /** CTE `out` (keys…, centroid): the quantized-exact mean of the list
+    * column `vec` per `keys` over relation `from` — the DuckDB mirror of
+    * Similarity.quantizedMeans, the one spelling shared by the k-means,
+    * PQ and IVF oracles.
     */
-  private def centroidCte(from: String, out: String): String =
+  private def quantizedMeanCte(
+      from: String, out: String, keys: Seq[String], vec: String): String = {
+    val ks = keys.mkString(", ")
     s"""${out}_ex AS (
-       |  SELECT cluster,
-       |         unnest(range(1, len(embedding) + 1)) AS i,
-       |         unnest(embedding) AS val
+       |  SELECT $ks, unnest(range(1, len($vec) + 1)) AS i, unnest($vec) AS val
        |  FROM $from),
        |${out}_ce AS (
-       |  SELECT cluster, i,
+       |  SELECT $ks, i,
        |         CAST(CAST(sum(CAST(round(CAST(val AS DOUBLE) * 1000000) AS BIGINT)) AS DOUBLE)
        |              / 1000000 / count(*) AS FLOAT) AS v
-       |  FROM ${out}_ex GROUP BY cluster, i),
-       |$out AS (SELECT cluster, list(v ORDER BY i) AS centroid FROM ${out}_ce GROUP BY cluster)""".stripMargin
-  private def assignCte(centRel: String, out: String): String =
+       |  FROM ${out}_ex GROUP BY $ks, i),
+       |$out AS (SELECT $ks, list(v ORDER BY i) AS centroid FROM ${out}_ce GROUP BY $ks)""".stripMargin
+  }
+
+  /** CTE `out` (vec_id, groups…, vec, key): each point of `points` labelled
+    * with the `key` of its nearest centroid in `cents` among those of its
+    * own `groups` — squared L2 as the sequential double fold, ties to the
+    * lowest key. The DuckDB mirror of Similarity's argmin fold.
+    */
+  private def argminCte(
+      points: String, cents: String, out: String,
+      groups: Seq[String], key: String, vec: String): String = {
+    val keys = "vec_id" +: groups
+    val on = if (groups.isEmpty) "true" else groups.map(g => s"p.$g = c.$g").mkString(" AND ")
     s"""$out AS (
-       |  SELECT vec_id, embedding, cluster FROM (
-       |    SELECT e.vec_id, e.embedding, c.cluster,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY ${l2Sql("e.embedding", "c.centroid")} ASC, c.cluster) AS rn
-       |    FROM ev e CROSS JOIN $centRel c) t
+       |  SELECT ${(keys :+ vec).mkString(", ")}, $key FROM (
+       |    SELECT ${(keys :+ vec).map("p." + _).mkString(", ")}, c.$key,
+       |           row_number() OVER (PARTITION BY ${keys.map("p." + _).mkString(", ")}
+       |             ORDER BY ${l2Sql(s"p.$vec", "c.centroid")} ASC, c.$key) AS rn
+       |    FROM $points p JOIN $cents c ON $on) t
        |  WHERE rn = 1)""".stripMargin
+  }
+
+  /** CTEs `cent0`, `a1`, `cent1`, `a2` — the two Lloyd rounds the
+    * k-means and PQ oracles unroll (Similarity.lloyd at iters = 2): the
+    * quantized means of the labelled relation `init` (resp. `a1`), then
+    * every point of `points` re-assigned within its `groups`.
+    */
+  private def lloydCtes(
+      points: String, init: String, groups: Seq[String], key: String, vec: String): String =
+    Seq(quantizedMeanCte(init, "cent0", groups :+ key, vec),
+      argminCte(points, "cent0", "a1", groups, key, vec),
+      quantizedMeanCte("a1", "cent1", groups :+ key, vec),
+      argminCte(points, "cent1", "a2", groups, key, vec)).mkString(",\n")
 
   private[operators] val stopwordsSql = "['the','a','an','and','or','of','to','in','is','it']"
   private[operators] val stopwords = Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
@@ -440,11 +474,8 @@ object PipelineQueries {
          |WHERE round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.7
          |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      // plant near-duplicates: first 10 docs re-appear with one word changed
-      val twins = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftplantedtail")).as("text"))
-      Dedup.nearDupPairs(docs.union(twins), threshold = 0.7)
+      // plant near-duplicates: first 10 docs re-appear with one word added
+      Dedup.nearDupPairs(twinDocs(docs, "graftplantedtail"), threshold = 0.7)
         .orderBy("id_a", "id_b")
     }.copy(headline = true),
 
@@ -533,10 +564,7 @@ object PipelineQueries {
          |WHERE round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.7
          |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftplantedtail")).as("text"))
-      Dedup.prefixFilterNearDups(docs.union(twins), threshold = 0.7)
+      Dedup.prefixFilterNearDups(twinDocs(docs, "graftplantedtail"), threshold = 0.7)
         .orderBy("id_a", "id_b")
     }.copy(headline = true), // sweep slow-tail promotion (round 7)
 
@@ -609,10 +637,7 @@ object PipelineQueries {
          |GROUP BY id
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftplantedtail")).as("text"))
-      val pairs = Dedup.nearDupPairs(docs.union(twins), threshold = 0.7)
+      val pairs = Dedup.nearDupPairs(twinDocs(docs, "graftplantedtail"), threshold = 0.7)
         .select("id_a", "id_b")
       Dedup.connectedComponents(pairs)
         .select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
@@ -639,10 +664,7 @@ object PipelineQueries {
          |GROUP BY cluster_size
          |ORDER BY cluster_size""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftplantedtail")).as("text"))
-      val pairs = Dedup.nearDupPairs(docs.union(twins), threshold = 0.7)
+      val pairs = Dedup.nearDupPairs(twinDocs(docs, "graftplantedtail"), threshold = 0.7)
         .select("id_a", "id_b")
       Dedup.connectedComponents(pairs)
         .groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
@@ -686,13 +708,10 @@ object PipelineQueries {
          |          SELECT 1 FROM live WHERE band = 3 AND bucket = (sa >> 45) & 32767)))
          |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" planted")).as("text"))
       // library-default maxBucket: the oracle counts members per
       // (band, bucket) and admits pairs only through buckets within the
       // cap — the verified configuration is the skew-guarded one
-      Dedup.simHashNearDups(Dedup.simHash(docs.union(twins)), maxDist = 6)
+      Dedup.simHashNearDups(Dedup.simHash(twinDocs(docs, "planted")), maxDist = 6)
         .orderBy("id_a", "id_b")
     },
 
@@ -1169,10 +1188,7 @@ object PipelineQueries {
          |  SELECT vec_id, embedding,
          |         ${OracleSql.md5Long("CAST(vec_id AS VARCHAR)")} % 16 AS cluster
          |  FROM embeddings),
-         |${centroidCte("ev", "cent0")},
-         |${assignCte("cent0", "a1")},
-         |${centroidCte("a1", "cent1")},
-         |${assignCte("cent1", "a2")}
+         |${lloydCtes("ev", "ev", Nil, "cluster", "embedding")}
          |SELECT vec_id, cluster FROM a2
          |ORDER BY vec_id""".stripMargin) { (s, dir) =>
       Similarity.kmeansLite(Tables.embeddings(s, dir), k = 16, iters = 2)
@@ -1751,10 +1767,7 @@ object PipelineQueries {
          |GROUP BY doc_id, island
          |ORDER BY doc_id, span_start""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftdupspan")).as("text"))
-      Dedup.duplicatedSpans(docs.union(twins), l = 16)
+      Dedup.duplicatedSpans(twinDocs(docs, "graftdupspan"), l = 16)
         .orderBy("doc_id", "span_start")
     }.copy(headline = true), // sweep slow-tail promotion (round 7, tier 2)
 
@@ -1776,10 +1789,7 @@ object PipelineQueries {
          |  SELECT vec_id, embedding,
          |         ${OracleSql.md5Long("CAST(vec_id AS VARCHAR)")} % 16 AS cluster
          |  FROM corp),
-         |${centroidCte("ev", "cent0")},
-         |${assignCte("cent0", "a1")},
-         |${centroidCte("a1", "cent1")},
-         |${assignCte("cent1", "a2")},
+         |${lloydCtes("ev", "ev", Nil, "cluster", "embedding")},
          |sz AS (SELECT cluster, count(*) AS csz FROM a2 GROUP BY cluster),
          |live AS (SELECT a2.* FROM a2 JOIN sz USING (cluster) WHERE csz <= 10000),
          |dup AS (
@@ -1920,10 +1930,7 @@ object PipelineQueries {
          |WHERE rn = 1
          |ORDER BY cluster_id""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftplantedtail")).as("text"))
-      val corpus = docs.union(twins)
+      val corpus = twinDocs(docs, "graftplantedtail")
       val pairs = Dedup.nearDupPairs(corpus, threshold = 0.7).select("id_a", "id_b")
       Dedup.clusterRepresentatives(
           Dedup.connectedComponents(pairs), corpus, length(col("text")))
@@ -2164,10 +2171,7 @@ object PipelineQueries {
          |FROM t LEFT JOIN pd USING (doc_id)
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftmemrisk")).as("text"))
-      Dedup.memorizationRisk(docs.union(twins), l = 16, minCount = 2)
+      Dedup.memorizationRisk(twinDocs(docs, "graftmemrisk"), l = 16, minCount = 2)
         .orderBy("doc_id")
     }.copy(headline = true),
 
@@ -2918,10 +2922,7 @@ object PipelineQueries {
          |            ELSE 'test' END AS split
          |FROM sp ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftplantedtail")).as("text"))
-      val uni = docs.union(twins)
+      val uni = twinDocs(docs, "graftplantedtail")
       val pairs = Dedup.nearDupPairs(uni, threshold = 0.7)
         .select("id_a", "id_b")
       val cl = Dedup.connectedComponents(pairs)
@@ -2971,10 +2972,7 @@ object PipelineQueries {
          |GROUP BY 1, 2 ORDER BY split_lo, split_hi""".stripMargin) { (s, dir) =>
       val base = Tables.documents(s, dir)
         .filter(col("doc_id") < 1000).select("doc_id", "text")
-      val twins = base.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftplantedtail")).as("text"))
-      val corpus = base.union(twins)
+      val corpus = twinDocs(base, "graftplantedtail")
       val pairs = Dedup.nearDupPairs(corpus, threshold = 0.7)
         .select("id_a", "id_b")
       val sp = Scale.hashSplit(corpus.select("doc_id"), "doc_id",
@@ -3008,10 +3006,7 @@ object PipelineQueries {
          |  SELECT vec_id, embedding,
          |         ${OracleSql.md5Long("CAST(vec_id AS VARCHAR)")} % 16 AS cluster
          |  FROM embeddings),
-         |${centroidCte("ev", "cent0")},
-         |${assignCte("cent0", "a1")},
-         |${centroidCte("a1", "cent1")},
-         |${assignCte("cent1", "a2")},
+         |${lloydCtes("ev", "ev", Nil, "cluster", "embedding")},
          |lab AS (SELECT e.vec_id, a2.cluster, e.label
          |        FROM embeddings e JOIN a2 ON a2.vec_id = e.vec_id),
          |ct AS (SELECT cluster, label, count(*) AS nij
@@ -4816,11 +4811,7 @@ object PipelineQueries {
          |FROM per p JOIN sv USING (cluster_id) JOIN gt USING (cluster_id)
          |ORDER BY cluster_id""".stripMargin) { (s, dir) =>
       val base = Tables.documents(s, dir).select("doc_id", "text", "source")
-      val twins = base.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftplantedtail")).as("text"),
-          col("source"))
-      val corpus = base.union(twins)
+      val corpus = twinDocs(base, "graftplantedtail")
       val pairs = Dedup.nearDupPairs(
           corpus.select("doc_id", "text"), threshold = 0.7)
         .select("id_a", "id_b")
@@ -4926,10 +4917,7 @@ object PipelineQueries {
          |         ${OracleSql.md5Long("CAST(vec_id AS VARCHAR)")} % 16
          |           AS cluster
          |  FROM embeddings),
-         |${centroidCte("ev", "cent0")},
-         |${assignCte("cent0", "a1")},
-         |${centroidCte("a1", "cent1")},
-         |${assignCte("cent1", "a2")},
+         |${lloydCtes("ev", "ev", Nil, "cluster", "embedding")},
          |q AS (
          |  SELECT vec_id, cluster,
          |         list_transform(embedding,
@@ -5062,10 +5050,7 @@ object PipelineQueries {
            |  (SELECT CAST(count(*) AS BIGINT) FROM mh JOIN wp USING (id_a, id_b)) AS nb)""".stripMargin
       }) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftagreetail")).as("text"))
-      val uni = docs.union(twins).localCheckpoint() // both methods scan it
+      val uni = twinDocs(docs, "graftagreetail").localCheckpoint() // both methods scan it
       val mh = graft.dedup.Dedup.nearDupPairs(uni, threshold = 0.7)
         .select("id_a", "id_b")
       val fps = uni.select(col("doc_id"),
@@ -5236,26 +5221,6 @@ object PipelineQueries {
   /** [[pqOracleSql]] with a parameterized top-k cut — q155's refine
     * stage consumes the `shortlist`-deep (rank ≤ 100) form. */
   private def pqOracleSqlCut(cut: Int): String = {
-        def cbCte(from: String, out: String): String =
-          s"""${out}_ex AS (
-             |  SELECT sub, code, unnest(range(1, len(subemb) + 1)) AS i,
-             |         unnest(subemb) AS val
-             |  FROM $from),
-             |${out}_ce AS (
-             |  SELECT sub, code, i,
-             |         CAST(CAST(sum(CAST(round(CAST(val AS DOUBLE) * 1000000) AS BIGINT)) AS DOUBLE)
-             |              / 1000000 / count(*) AS FLOAT) AS v
-             |  FROM ${out}_ex GROUP BY sub, code, i),
-             |$out AS (SELECT sub, code, list(v ORDER BY i) AS centroid
-             |         FROM ${out}_ce GROUP BY sub, code)""".stripMargin
-        def pqAssignCte(cb: String, out: String): String =
-          s"""$out AS (
-             |  SELECT vec_id, sub, subemb, code FROM (
-             |    SELECT p.vec_id, p.sub, p.subemb, c.code,
-             |           row_number() OVER (PARTITION BY p.vec_id, p.sub
-             |             ORDER BY ${l2Sql("p.subemb", "c.centroid")} ASC, c.code) AS rn
-             |    FROM pts p JOIN $cb c ON p.sub = c.sub) t
-             |  WHERE rn = 1)""".stripMargin
         val initHash = OracleSql.md5Long(
           "CAST(vec_id AS VARCHAR) || '|' || CAST(sub AS VARCHAR)")
         s"""WITH subs AS (SELECT unnest(range(0, 4)) AS sub),
@@ -5267,17 +5232,14 @@ object PipelineQueries {
            |  SELECT vec_id, sub, subemb,
            |         CAST($initHash % 16 AS INT) AS code
            |  FROM pts),
-           |${cbCte("a0", "cb0")},
-           |${pqAssignCte("cb0", "a1")},
-           |${cbCte("a1", "cb1")},
-           |${pqAssignCte("cb1", "a2")},
+           |${lloydCtes("pts", "a0", Seq("sub"), "code", "subemb")},
            |qp AS (
            |  SELECT vec_id AS query_id, sub,
            |         list_slice(embedding, sub * 16 + 1, sub * 16 + 16) AS qsub
            |  FROM embeddings CROSS JOIN subs WHERE vec_id < 8),
            |dtab AS (
            |  SELECT q.query_id, q.sub, c.code, ${l2Sql("q.qsub", "c.centroid")} AS d
-           |  FROM qp q JOIN cb1 c ON q.sub = c.sub),
+           |  FROM qp q JOIN cent1 c ON q.sub = c.sub),
            |sc AS (
            |  SELECT d.query_id, a.vec_id AS neighbor_id,
            |         max(CASE WHEN d.sub = 0 THEN d.d END) AS t0,
@@ -5380,17 +5342,7 @@ object PipelineQueries {
        |  SELECT vec_id, embedding,
        |         ${OracleSql.md5Long("CAST(vec_id AS VARCHAR)")} % 16 AS bucket
        |  FROM embeddings),
-       |ex AS (
-       |  SELECT bucket,
-       |         unnest(range(1, len(embedding) + 1)) AS i,
-       |         unnest(embedding) AS val
-       |  FROM e),
-       |ce AS (
-       |  SELECT bucket, i,
-       |         CAST(CAST(sum(CAST(round(CAST(val AS DOUBLE) * 1000000) AS BIGINT)) AS DOUBLE)
-       |              / 1000000 / count(*) AS FLOAT) AS v
-       |  FROM ex GROUP BY bucket, i),
-       |cent AS (SELECT bucket, list(v ORDER BY i) AS centroid FROM ce GROUP BY bucket),
+       |${quantizedMeanCte("e", "cent", Seq("bucket"), "embedding")},
        |q AS (SELECT vec_id AS query_id, embedding AS q_embedding
        |      FROM embeddings WHERE vec_id < 5),
        |probes AS (

@@ -1050,32 +1050,25 @@ object ScienceQueries {
     //      exact-percentile contract (Spark `percentile` ⟷ DuckDB
     //      sorted-list interpolation) over integer second deltas. ----
     QueryDef(
-      "q302_time_to_convert", {
-        def pctl(p: String): String =
-          s"""(CASE WHEN floor($p * (n - 1)) = ceil($p * (n - 1))
-             |      THEN CAST(ds[CAST($p * (n - 1) AS BIGINT) + 1] AS DOUBLE)
-             |      ELSE (ceil($p * (n - 1)) - $p * (n - 1)) * ds[CAST(floor($p * (n - 1)) AS BIGINT) + 1]
-             |         + ($p * (n - 1) - floor($p * (n - 1))) * ds[CAST(ceil($p * (n - 1)) AS BIGINT) + 1]
-             |      END)""".stripMargin.replaceAll("\n\\s*", " ")
-        s"""WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
-           |su AS (SELECT user_id, min(tus) AS stus FROM ev
-           |       WHERE event_type = 'signup' GROUP BY user_id),
-           |pu AS (SELECT e.user_id, min(e.tus) AS ptus
-           |       FROM ev e JOIN su ON e.user_id = su.user_id
-           |       WHERE e.event_type = 'purchase' AND e.tus >= su.stus
-           |       GROUP BY e.user_id),
-           |d AS (SELECT (ptus - stus) // 1000000 AS delta_s
-           |      FROM pu JOIN su ON pu.user_id = su.user_id),
-           |a AS (SELECT CAST(count(*) AS BIGINT) AS n_converted,
-           |        CAST(sum(delta_s) AS BIGINT) AS sum_s,
-           |        count(*) AS n, list(delta_s ORDER BY delta_s) AS ds
-           |      FROM d)
-           |SELECT n_converted,
-           |       CAST(round(1000 * CAST(sum_s AS DOUBLE) / CAST(n_converted AS DOUBLE)) AS BIGINT) AS mean_s_milli,
-           |       CAST(round(1000 * ${pctl("0.50")}) AS BIGINT) AS p50_s_milli,
-           |       CAST(round(1000 * ${pctl("0.90")}) AS BIGINT) AS p90_s_milli
-           |FROM a""".stripMargin
-      }) { (s, dir) =>
+      "q302_time_to_convert",
+      s"""WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
+         |su AS (SELECT user_id, min(tus) AS stus FROM ev
+         |       WHERE event_type = 'signup' GROUP BY user_id),
+         |pu AS (SELECT e.user_id, min(e.tus) AS ptus
+         |       FROM ev e JOIN su ON e.user_id = su.user_id
+         |       WHERE e.event_type = 'purchase' AND e.tus >= su.stus
+         |       GROUP BY e.user_id),
+         |d AS (SELECT (ptus - stus) // 1000000 AS delta_s
+         |      FROM pu JOIN su ON pu.user_id = su.user_id),
+         |a AS (SELECT CAST(count(*) AS BIGINT) AS n_converted,
+         |        CAST(sum(delta_s) AS BIGINT) AS sum_s,
+         |        count(*) AS n, list(delta_s ORDER BY delta_s) AS ds
+         |      FROM d)
+         |SELECT n_converted,
+         |       CAST(round(1000 * CAST(sum_s AS DOUBLE) / CAST(n_converted AS DOUBLE)) AS BIGINT) AS mean_s_milli,
+         |       CAST(round(1000 * ${OracleSql.pctlSql("ds", "0.50")}) AS BIGINT) AS p50_s_milli,
+         |       CAST(round(1000 * ${OracleSql.pctlSql("ds", "0.90")}) AS BIGINT) AS p90_s_milli
+         |FROM a""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
         .selectExpr("user_id", "event_type", "ts div 1000 AS tus")
       val su = ev.filter(col("event_type") === "signup")
@@ -1560,11 +1553,11 @@ object ScienceQueries {
           round(col("o_totalprice") * 100).cast("long").as("cents"))
         .groupBy("ck").agg(sum("cents").as("cents"))
         .withColumn("neg", -col("cents"))
-      // pinned by the scan; three threshold counts read it
-      val (ranked0, Seq(total)) =
-        Scale.scan(c, Seq("neg", "ck"), Scale.Sum("cents", "cum"))
+      // pinned by the scan; three threshold counts read it. The scan
+      // returns the cent total and the customer count.
+      val (ranked0, Seq(total, nCust)) = Scale.scan(c, Seq("neg", "ck"),
+        Scale.Sum("cents", "cum"), Scale.RowNumber("rn"))
       val ranked = ranked0.withColumn("cum_excl", col("cum") - col("cents"))
-      val nCust = ranked.count()
       Seq(50, 80, 90).map { pct =>
         ranked.filter(col("cum_excl") * 100 < lit(pct.toLong) * total)
           .agg(count(lit(1)).as("n_customers"))
@@ -1579,30 +1572,23 @@ object ScienceQueries {
     //      operational freshness report every SLA dashboard starts
     //      with; one join + one grouped aggregate. ----
     QueryDef(
-      "q314_ship_lag", {
-        def pctl(p: String): String =
-          s"""(CASE WHEN floor($p * (n - 1)) = ceil($p * (n - 1))
-             |      THEN CAST(ds[CAST($p * (n - 1) AS BIGINT) + 1] AS DOUBLE)
-             |      ELSE (ceil($p * (n - 1)) - $p * (n - 1)) * ds[CAST(floor($p * (n - 1)) AS BIGINT) + 1]
-             |         + ($p * (n - 1) - floor($p * (n - 1))) * ds[CAST(ceil($p * (n - 1)) AS BIGINT) + 1]
-             |      END)""".stripMargin.replaceAll("\n\\s*", " ")
-        s"""WITH j AS (
-           |  SELECT o_orderpriority AS pri,
-           |         CAST(date_diff('day', CAST(o_orderdate AS DATE),
-           |           CAST(l_shipdate AS DATE)) AS BIGINT) AS lag_d
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-           |a AS (SELECT pri, CAST(count(*) AS BIGINT) AS n_lines,
-           |        CAST(sum(lag_d) AS BIGINT) AS sum_d,
-           |        CAST(max(lag_d) AS BIGINT) AS max_d,
-           |        count(*) AS n, list(lag_d ORDER BY lag_d) AS ds
-           |      FROM j GROUP BY pri)
-           |SELECT pri, n_lines,
-           |       CAST(round(1000 * CAST(sum_d AS DOUBLE) / CAST(n_lines AS DOUBLE)) AS BIGINT) AS mean_d_milli,
-           |       CAST(round(1000 * ${pctl("0.50")}) AS BIGINT) AS p50_d_milli,
-           |       CAST(round(1000 * ${pctl("0.90")}) AS BIGINT) AS p90_d_milli,
-           |       max_d
-           |FROM a ORDER BY pri""".stripMargin
-      }) { (s, dir) =>
+      "q314_ship_lag",
+      s"""WITH j AS (
+         |  SELECT o_orderpriority AS pri,
+         |         CAST(date_diff('day', CAST(o_orderdate AS DATE),
+         |           CAST(l_shipdate AS DATE)) AS BIGINT) AS lag_d
+         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+         |a AS (SELECT pri, CAST(count(*) AS BIGINT) AS n_lines,
+         |        CAST(sum(lag_d) AS BIGINT) AS sum_d,
+         |        CAST(max(lag_d) AS BIGINT) AS max_d,
+         |        count(*) AS n, list(lag_d ORDER BY lag_d) AS ds
+         |      FROM j GROUP BY pri)
+         |SELECT pri, n_lines,
+         |       CAST(round(1000 * CAST(sum_d AS DOUBLE) / CAST(n_lines AS DOUBLE)) AS BIGINT) AS mean_d_milli,
+         |       CAST(round(1000 * ${OracleSql.pctlSql("ds", "0.50")}) AS BIGINT) AS p50_d_milli,
+         |       CAST(round(1000 * ${OracleSql.pctlSql("ds", "0.90")}) AS BIGINT) AS p90_d_milli,
+         |       max_d
+         |FROM a ORDER BY pri""".stripMargin) { (s, dir) =>
       Tables.lineitem(s, dir).select("l_orderkey", "l_shipdate")
         .join(Tables.orders(s, dir).select("o_orderkey", "o_orderdate", "o_orderpriority"),
           col("l_orderkey") === col("o_orderkey"))

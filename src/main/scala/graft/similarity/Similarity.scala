@@ -133,18 +133,10 @@ object Similarity {
   def ivfBucket(id: Column, nBuckets: Int): Column =
     pmod(graft.textops.TextAnalysis.md5Long(id.cast("string")), lit(nBuckets))
 
-  /** Deterministic coarse centroids: mean embedding of each id-hash
-    * bucket. A stand-in for k-means that needs no iteration and is
-    * reproducible; the IVF mechanics (assign → prune → search) are
-    * identical with trained centroids. Element sums are quantized to
-    * exact integers (1e-6) before aggregation so the centroid is
-    * independent of partition/merge order — nondeterministic centroids
-    * would make probe selection, and thus the whole result, flap.
-    */
   /** Order-independent mean embeddings per group: element sums quantized
     * to exact integers (1e-6) before aggregation, means recovered with a
     * fixed division order — the single definition of the quantized-mean
-    * contract that the q46/q61 oracles mirror.
+    * contract that the IVF and k-means oracles mirror.
     */
   private def quantizedMeans(
       grouped: DataFrame, groupCol: String, dim: Int, embCol: String): DataFrame = {
@@ -160,6 +152,14 @@ object Similarity {
           .as("centroid"))
   }
 
+  /** Deterministic coarse centroids: mean embedding of each id-hash
+    * bucket. A stand-in for k-means that needs no iteration and is
+    * reproducible; the IVF mechanics (assign → prune → search) are
+    * identical with trained centroids. Element sums are quantized to
+    * exact integers (1e-6) before aggregation so the centroid is
+    * independent of partition/merge order — nondeterministic centroids
+    * would make probe selection, and thus the whole result, flap.
+    */
   def coarseCentroids(
       corpus: DataFrame,
       nBuckets: Int,
@@ -167,8 +167,7 @@ object Similarity {
       embCol: String = "embedding"): DataFrame = {
     // dim probe tolerates an empty corpus (routine post-filter at scale):
     // dim=1 analyzes fine and zero rows flow through to an empty result
-    val dim = corpus.select(size(col(embCol))).head(1)
-      .headOption.map(_.getInt(0)).getOrElse(1)
+    val dim = embDim(corpus, embCol).getOrElse(1)
     quantizedMeans(
       corpus.withColumn("bucket", ivfBucket(col(idCol), nBuckets)),
       "bucket", dim, embCol)
@@ -313,93 +312,83 @@ object Similarity {
       (acc, s) => when(s.getField("d2") < acc.getField("d2"), s).otherwise(acc))
       .getField(key)
 
+  /** Embedding width from the first row; None for an empty input (at
+    * scale an empty post-filter source is routine and must not throw).
+    * The one eager width probe of this object.
+    */
+  private def embDim(df: DataFrame, embCol: String): Option[Int] =
+    df.select(size(col(embCol))).head(1).headOption.map(_.getInt(0))
+
+  /** The one deterministic Lloyd iteration, grouped: every point carries
+    * a fixed group `g` (`group`) and a label `cluster = g·k + code`,
+    * seeded from `init` (a code in [0, k)); each round takes the
+    * quantized means per label ([[quantizedMeans]]) and re-assigns every
+    * point to the nearest of ITS OWN group's k centroids. `max(iters, 1)`
+    * assignments. Everything is order-independent: centroid updates
+    * quantize element sums to exact integers, distances are sequential
+    * double folds, and within a group sorting by g·k + code is sorting
+    * by code, so ties break to the lowest code — the final assignment is
+    * a pure function of the data, replayable on any engine (the q61,
+    * q119 and q149 oracles unroll both rounds in SQL). [[kmeansLite]]
+    * runs one group, [[semDedup]]'s refinement one group per oversized
+    * parent, [[pqTrain]] one group per subspace.
+    *
+    * Scale shape: assignment is NARROW — each group's centroids pack
+    * into one label-ascending array row, the (#groups)-row table
+    * broadcasts, and each point computes its argmin with a higher-order
+    * fold in the scan projection. No per-row k-way expansion and no
+    * corpus-wide shuffle per round (a cross join of k centroid rows
+    * ranked by a window PARTITIONed on the vector id would exchange the
+    * whole corpus every iteration). The only exchange per round is the
+    * (#groups·k)-sized centroid-update aggregate (map-side partial).
+    *
+    * Returns (points as (idCol, embCol, g, cluster), the centroids
+    * (g, cluster, centroid) of the last assignment).
+    */
+  private def lloyd(
+      points: DataFrame,
+      group: Column,
+      init: Column,
+      k: Int,
+      iters: Int,
+      dim: Int,
+      idCol: String,
+      embCol: String): (DataFrame, DataFrame) = {
+    val pts = points.select(col(idCol), col(embCol),
+      group.cast("long").as("g"), init.cast("long").as("init"))
+    def means(labelled: DataFrame): DataFrame =
+      quantizedMeans(labelled, "cluster", dim, embCol)
+        .select(expr(s"cluster div $k").as("g"), col("cluster"), col("centroid"))
+    def assign(centroids: DataFrame): DataFrame = {
+      val packed = centroids.groupBy("g")
+        .agg(sort_array(collect_list(struct(col("cluster"), col("centroid"))))
+          .as("cents"))
+      pts.join(broadcast(packed), "g")
+        .select(col(idCol), col(embCol), col("g"),
+          nearestKey(col(embCol), "cluster", lit(-1L)).as("cluster"))
+    }
+    val seeded = means(
+      pts.select(col(embCol), (col("g") * k + col("init")).as("cluster")))
+    (1 until math.max(iters, 1)).foldLeft((assign(seeded), seeded)) {
+      case ((assigned, _), _) =>
+        val centroids = means(assigned)
+        (assign(centroids), centroids)
+    }
+  }
+
   /** Deterministic Lloyd's k-means over an embedding column: md5-bucket
     * means as init (the same reproducible seeding as IVF), then `iters`
-    * assign→update rounds. Everything is order-independent: centroid
-    * updates quantize element sums to exact integers, assignment breaks
-    * distance ties by cluster id, distances are sequential double folds —
-    * so the final assignment is a pure function of the data, replayable
-    * on any engine (the q61 oracle unrolls both rounds in SQL).
-    *
-    * Scale shape: assignment is NARROW — the centroid table packs into a
-    * single cluster-ascending array row, broadcasts, and each corpus row
-    * computes its argmin with a higher-order fold in the scan projection.
-    * No per-row k-way expansion and no corpus-wide shuffle per round
-    * (the old shape cross-joined k centroid rows and ranked them with a
-    * row_number window PARTITIONed on the vector id — a full-corpus
-    * exchange every iteration, iters× the dominant cost at 100 TB). The
-    * only exchange per round is the k-sized centroid-update aggregate
-    * (map-side partial). The fold keeps the first strictly-smaller d2
-    * over the cluster-sorted array, so ties still break to the lowest
-    * cluster id and d2 stays the same sequential IEEE fold — bit-exact
-    * with the window form and the unrolled SQL oracles (q61/q119).
+    * assign→update rounds of the one [[lloyd]] body, as a single group.
     */
   def kmeansLite(
       corpus: DataFrame,
       k: Int = 16,
       iters: Int = 2,
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val dim = corpus.select(size(col(embCol))).head(1)
-      .headOption.map(_.getInt(0)).getOrElse(1) // empty corpus → empty result
-    def assign(centroids: DataFrame): DataFrame = {
-      val packed = centroids.agg(
-        sort_array(collect_list(struct(col("cluster"), col("centroid"))))
-          .as("cents"))
-      corpus.join(broadcast(packed), lit(true))
-        .select(col(idCol), col(embCol),
-          nearestKey(col(embCol), "cluster", lit(-1L)).as("cluster"))
-    }
-    var centroids = quantizedMeans(
-        corpus.withColumn("cluster", ivfBucket(col(idCol), k)),
-        "cluster", dim, embCol)
-    var assigned = assign(centroids)
-    (2 to iters).foreach { _ =>
-      centroids = quantizedMeans(assigned, "cluster", dim, embCol)
-      assigned = assign(centroids)
-    }
-    assigned.select(col(idCol), col("cluster"))
-  }
-
-  /** One level of GROUPED k-means refinement for [[semDedup]]'s
-    * oversized clusters: every parent cluster P in `big` is k-way
-    * re-clustered IN ONE PASS — child centroids are keyed by the
-    * combined label (P+1)·k + sub (injective across recursion depths),
-    * and each row's argmin runs over only its own parent's k children
-    * (centroid lists packed per parent and broadcast — the centroid
-    * table is #parents·k rows, never corpus-sized). Same deterministic
-    * machinery as [[kmeansLite]]: id-hash seeding, quantized centroid
-    * sums, tie-break on child label via the sorted fold.
-    */
-  private def kmeansRefine(
-      big: DataFrame,
-      k: Int,
-      iters: Int,
-      idCol: String,
-      embCol: String): DataFrame = {
-    val dim = big.select(size(col(embCol))).head(1)
-      .headOption.map(_.getInt(0)).getOrElse(1)
-    def assign(centroids: DataFrame): DataFrame = {
-      val packed = centroids
-        .withColumn("parent", expr(s"cluster div $k - 1"))
-        .groupBy("parent")
-        .agg(sort_array(collect_list(struct(col("cluster"), col("centroid"))))
-          .as("cents"))
-      big.join(broadcast(packed), col("cluster") === col("parent"))
-        .select(col(idCol),
-          nearestKey(col(embCol), "cluster", lit(-1L)).as("cluster"), col(embCol))
-    }
-    var centroids = quantizedMeans(
-      big.select(((col("cluster") + 1) * k + ivfBucket(col(idCol), k))
-        .as("cluster"), col(embCol)),
-      "cluster", dim, embCol)
-    var out = assign(centroids)
-    (2 to iters).foreach { _ =>
-      centroids = quantizedMeans(out, "cluster", dim, embCol)
-      out = assign(centroids)
-    }
-    out
-  }
+      embCol: String = "embedding"): DataFrame =
+    lloyd(corpus, lit(0), ivfBucket(col(idCol), k), k, iters,
+      embDim(corpus, embCol).getOrElse(1), idCol, embCol) // empty → empty
+      ._1.select(col(idCol), col("cluster"))
 
   /** Deterministic pseudo-random hyperplane weight for plane `p`,
     * dimension `i` — in [-1, 1]. Public so oracle builders can replay
@@ -426,11 +415,11 @@ object Similarity {
       bands: Int = 4,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val firstRow = corpus.select(size(col(embCol))).head(1)
-    if (firstRow.isEmpty)
-      return corpus.select(col(idCol), col(embCol),
+    val dim = embDim(corpus, embCol) match {
+      case Some(d) => d
+      case None => return corpus.select(col(idCol), col(embCol),
         lit(0).as("band"), lit(0L).as("bucket")).limit(0)
-    val dim = firstRow.head.getInt(0)
+    }
     // one sign-bit Long bucket PER BAND: bucket bit j of band bi is the
     // sign of plane bi·rowsPerBand + j — the bucket-space ceiling is 63
     // bits PER BAND (2^63 values), which is what the documented "grow
@@ -634,17 +623,18 @@ object Similarity {
     require(BigInt(k + 1).pow(maxDepth + 1) * 2 < BigInt(Long.MaxValue),
       s"cluster-label space overflows Long: k=$k with maxDepth=$maxDepth " +
         "(lower maxDepth — at large k one refinement level suffices)")
-    // k-means re-derives its iterations on every downstream action, and
-    // the assignment feeds three consumers (both join sides + output) —
-    // cut the lineage once.
-    var assigned = kmeansLite(corpus, k, iters, idCol, embCol)
-      .join(corpus.select(col(idCol), col(embCol)), idCol)
-      .withColumn("cluster", col("cluster").cast("long"))
-      .localCheckpoint()
-    // Recursive refinement: at each level, re-cluster ALL oversized
-    // clusters in one grouped k-means pass (centroids keyed by the
-    // combined child label (P+1)·k + sub, assignment confined to the
-    // parent's k children).
+    // One width probe for every level. The top level is kmeansLite's
+    // single group; a refinement level re-clusters ALL oversized parents
+    // P in one grouped pass with g = P + 1, so child labels are
+    // (P+1)·k + sub and each assignment stays within its parent's k
+    // children. k-means re-derives its iterations on every downstream
+    // action, and the assignment feeds three consumers (both join sides
+    // + output) — cut the lineage once per level.
+    val dim = embDim(corpus, embCol).getOrElse(1)
+    def kmeans(points: DataFrame, group: Column): DataFrame =
+      lloyd(points, group, ivfBucket(col(idCol), k), k, iters, dim, idCol, embCol)
+        ._1.select(col(idCol), col(embCol), col("cluster"))
+    var assigned = kmeans(corpus, lit(0)).localCheckpoint()
     def oversizedIds(df: DataFrame): Array[Long] = df.groupBy("cluster")
       .agg(count(lit(1)).as("csz")).filter(col("csz") > maxCluster)
       .select("cluster").collect().map(_.getLong(0)).sorted
@@ -654,10 +644,7 @@ object Similarity {
       val big = assigned.filter(col("cluster").isin(oversized.toIndexedSeq: _*))
       val ok = assigned.filter(!col("cluster").isin(oversized.toIndexedSeq: _*))
       val prev = assigned
-      assigned = ok.unionByName(
-          kmeansRefine(big, k, iters, idCol, embCol)
-            .select(prev.columns.map(col).toIndexedSeq: _*))
-        .localCheckpoint()
+      assigned = ok.unionByName(kmeans(big, col("cluster") + 1)).localCheckpoint()
       prev.unpersist(blocking = false)
       depth += 1
       oversized = oversizedIds(assigned)
@@ -904,8 +891,8 @@ object Similarity {
 
   /** Product-quantization codebooks + codes (Jégou et al., TPAMI 2011):
     * each vector splits into `m` contiguous subvectors; each subspace
-    * trains its own deterministic Lloyd quantizer (the [[kmeansLite]]
-    * iteration: md5(id|sub) bucket-mean init, quantized centroid
+    * trains its own deterministic Lloyd quantizer (one group of the
+    * [[lloyd]] body: md5(id|sub) bucket-mean init, quantized centroid
     * updates, tie-to-lowest-code argmin) and every vector is encoded as
     * its m nearest-centroid codes. Returns (codes, codebook):
     * codes = (idCol, codes array<int> indexed by subspace),
@@ -932,48 +919,43 @@ object Similarity {
       iters: Int = 2,
       idCol: String = "vec_id",
       embCol: String = "embedding"): (DataFrame, DataFrame) = {
-    val dim = corpus.select(size(col(embCol))).head(1)
-      .headOption.map(_.getInt(0)).getOrElse(m)
+    val (codes, centroids) =
+      pqTrainAt(corpus, embDim(corpus, embCol).getOrElse(m), m, k, iters, idCol, embCol)
+    (codes, centroids.select(col("g").cast("int").as("sub"),
+      (col("cluster") - col("g") * k).cast("int").as("code"), col("centroid")))
+  }
+
+  /** [[pqTrain]] at a known embedding width `dim`, with the codebook as
+    * the Lloyd body's (g = sub, cluster = sub·k + code, centroid) rows.
+    */
+  private def pqTrainAt(
+      corpus: DataFrame,
+      dim: Int,
+      m: Int,
+      k: Int,
+      iters: Int,
+      idCol: String,
+      embCol: String): (DataFrame, DataFrame) = {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val ds = dim / m
-    val md5Long = graft.textops.TextAnalysis.md5Long(_)
     // (id, sub, subemb): the per-subspace point set. Narrow — each row
     // carries ds floats, m rows per vector.
     val points = corpus.select(
       col(idCol),
       posexplode(array((0 until m).map(s =>
         slice(col(embCol), s * ds + 1, ds)): _*)).as(Seq("sub", "subemb")))
-    // One Lloyd family per subspace, trained in the SAME jobs: the
-    // centroid key folds (sub, code) into sub*k + code so the shared
-    // quantizedMeans aggregate trains all m codebooks in one exchange.
-    def means(assigned: DataFrame): DataFrame =
-      quantizedMeans(assigned
-          .withColumn("cluster", col("sub") * k + col("code")),
-        "cluster", ds, "subemb")
-        .select((col("cluster") / k).cast("int").as("sub"),
-          pmod(col("cluster"), lit(k)).cast("int").as("code"),
-          col("centroid"))
-    def assign(codebook: DataFrame): DataFrame = {
-      val packed = codebook.groupBy("sub").agg(
-        sort_array(collect_list(struct(col("code"), col("centroid"))))
-          .as("cents"))
-      points.join(broadcast(packed), "sub")
-        .select(col(idCol), col("sub"), col("subemb"),
-          nearestKey(col("subemb"), "code", lit(-1)).cast("int").as("code"))
-    }
-    var codebook = means(points.withColumn("code",
-      pmod(md5Long(concat_ws("|", col(idCol).cast("string"),
-        col("sub").cast("string"))), lit(k)).cast("int")))
-    var assigned = assign(codebook)
-    (2 to iters).foreach { _ =>
-      codebook = means(assigned)
-      assigned = assign(codebook)
-    }
+    // One Lloyd group per subspace (g = sub), so all m codebooks train
+    // in the same jobs and one exchange per round.
+    val (assigned, centroids) = lloyd(points, col("sub"),
+      pmod(graft.textops.TextAnalysis.md5Long(concat_ws("|",
+        col(idCol).cast("string"), col("sub").cast("string"))), lit(k)),
+      k, iters, ds, idCol, "subemb")
     val codes = assigned.groupBy(col(idCol))
       .agg(transform(
-        sort_array(collect_list(struct(col("sub"), col("code")))),
+        sort_array(collect_list(struct(col("g"), (col("cluster") - col("g") * k)
+          .cast("int").as("code")))),
         s => s.getField("code")).as("codes"))
-    (codes, codebook)
+    (codes, centroids)
   }
 
   /** [[bruteForceTopK]] under squared-L2 instead of cosine — the exact
@@ -1020,23 +1002,25 @@ object Similarity {
       iters: Int = 2,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val (codes, codebook) = pqTrain(corpus, m, k, iters, idCol, embCol)
-    val dim = corpus.select(size(col(embCol))).head(1)
-      .headOption.map(_.getInt(0)).getOrElse(m)
+    val dim = embDim(corpus, embCol).getOrElse(m)
+    val (codes, codebook) = pqTrainAt(corpus, dim, m, k, iters, idCol, embCol)
     val ds = dim / m
-    // Exact per-subspace distance table: (query, sub, code) → d2.
+    // Exact per-subspace distance table: (query, sub, code) → d2, the
+    // code as its label sub·k + code. Joined on the codebook's own g
+    // column, so the codebook subtree is the one the last assignment
+    // packed and the plan reuses its exchanges.
     val dtab = queries.select(
         col("query_id"),
         posexplode(array((0 until m).map(s =>
           slice(col("q_embedding"), s * ds + 1, ds)): _*)).as(Seq("sub", "qsub")))
-      .join(broadcast(codebook), "sub")
-      .select(col("query_id"), col("sub"), col("code"),
+      .join(broadcast(codebook), col("sub") === col("g"))
+      .select(col("query_id"), col("sub"), col("cluster"),
         l2sq(col("qsub"), col("centroid")).as("d2"))
     // Pack ALL query tables into one broadcast row: per (query, sub) an
     // array of d2 indexed by code, per query an array of those indexed
     // by sub, then one collect_list over the (small) query set.
     val dmat = dtab.groupBy("query_id", "sub")
-      .agg(transform(sort_array(collect_list(struct(col("code"), col("d2")))),
+      .agg(transform(sort_array(collect_list(struct(col("cluster"), col("d2")))),
         s => s.getField("d2")).as("darr"))
       .groupBy("query_id")
       .agg(transform(sort_array(collect_list(struct(col("sub"), col("darr")))),

@@ -226,6 +226,19 @@ class SimilaritySpec extends SparkSpec {
     assert(empty.columns.toSeq == Seq("vec_id", "cluster", "kept"))
   }
 
+  /** 200 points in 8 tight blobs, each with a private axis, plus 5
+    * exact-duplicate twins (ids 1000..1004). */
+  private def blobs = {
+    val dim = 208
+    val base = spark.range(200).select($"id".as("vec_id"),
+      transform(sequence(lit(0), lit(dim - 1)), d =>
+        when(d === ($"id" % 8).cast("int"), lit(1f))
+          .when(d === ($"id" + 8).cast("int"), lit(0.5f))
+          .otherwise(lit(0f))).as("embedding"))
+    base.union(base.filter($"vec_id" < 5)
+      .select(($"vec_id" + 1000L).as("vec_id"), $"embedding"))
+  }
+
   test("semDedup: oversized DISTINCT clusters are recursively split, twins still drop") {
     // 200 points in 8 tight blobs (blob axis 1.0) with a PRIVATE axis
     // (0.5) per point, so intra-blob cosine is exactly 0.8 — well under
@@ -235,15 +248,7 @@ class SimilaritySpec extends SparkSpec {
     // a twin is byte-equal to its base (same private axis) it ties to
     // the same sub-cluster at every depth — recursion never costs
     // recall on exact duplicates
-    val dim = 208
-    val base = spark.range(200).select($"id".as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), d =>
-        when(d === ($"id" % 8).cast("int"), lit(1f))
-          .when(d === ($"id" + 8).cast("int"), lit(0.5f))
-          .otherwise(lit(0f))).as("embedding"))
-    val twins = base.filter($"vec_id" < 5)
-      .select(($"vec_id" + 1000L).as("vec_id"), $"embedding")
-    val res = Similarity.semDedup(base.union(twins), k = 4, iters = 2,
+    val res = Similarity.semDedup(blobs, k = 4, iters = 2,
         threshold = 0.99, maxCluster = 40)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(res.length == 205)
@@ -255,6 +260,109 @@ class SimilaritySpec extends SparkSpec {
       assert(!res.find(_._1 == i + 1000L).get._3, s"twin of $i not dropped")
       assert(res.find(_._1 == i).get._3, s"original $i wrongly dropped")
     }
+  }
+
+  /** Sequential driver Lloyd: points (id, group g, vector) with initial
+    * codes in [0, k); labels are g·k + code. Quantized means (Long
+    * micro-unit sums, /1e6/cnt to float), sequential double L2 fold,
+    * strict-less argmin over the group's key-ascending centroids.
+    * Returns (labels in point order, centroids of the last assignment).
+    */
+  private def refLloyd(pts: Seq[(Long, Long, Array[Float])], init: Seq[Long],
+      k: Int, iters: Int): (Seq[Long], Map[Long, Array[Float]]) = {
+    def qMicro(x: Double): Long =
+      BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    def means(labels: Seq[Long]): Map[Long, Array[Float]] =
+      pts.map(_._3).zip(labels).groupBy(_._2).map { case (c, ms) =>
+        c -> Array.tabulate(ms.head._1.length) { i =>
+          val s = ms.map(m => qMicro(m._1(i).toDouble * 1000000)).sum
+          (s.toDouble / 1000000 / ms.size).toFloat
+        }
+      }
+    def l2(a: Array[Float], b: Array[Float]): Double =
+      a.indices.foldLeft(0.0) { (acc, i) =>
+        val d = a(i).toDouble - b(i).toDouble
+        acc + d * d
+      }
+    def assign(cents: Map[Long, Array[Float]]): Seq[Long] = {
+      val byGroup = cents.toSeq.sortBy(_._1).groupBy(_._1 / k)
+      pts.map { case (_, g, v) =>
+        byGroup(g).foldLeft((-1L, Double.PositiveInfinity)) { case (best, (c, cv)) =>
+          val d = l2(v, cv)
+          if (d < best._2) (c, d) else best
+        }._1
+      }
+    }
+    var cents = means(pts.zip(init).map { case ((_, g, _), c) => g * k + c })
+    var labels = assign(cents)
+    for (_ <- 2 to iters) { cents = means(labels); labels = assign(cents) }
+    (labels, cents)
+  }
+
+  private def vectors(df: org.apache.spark.sql.DataFrame): Seq[(Long, Array[Float])] =
+    df.select("vec_id", "embedding").collect().toSeq
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).sortBy(_._1)
+
+  private def bucket(id: Long, k: Int): Long = graft.HashReplay.md5Long(id.toString) % k
+
+  test("one Lloyd body: kmeansLite, semDedup refinement and pqTrain match a sequential reference") {
+    // kmeansLite: one group, md5 bucket init — on the sf0.001 vectors and
+    // on a corpus of identical vectors, where every centroid ties and
+    // every point must take the lowest label
+    val tied = spark.range(24).select($"id".as("vec_id"),
+      array(lit(1f), lit(2f), lit(3f)).as("embedding"))
+    Seq(emb -> 8, tied -> 4).foreach { case (df, k) =>
+      val vs = vectors(df)
+      val (want, _) = refLloyd(vs.map { case (id, v) => (id, 0L, v) },
+        vs.map(p => bucket(p._1, k)), k, iters = 2)
+      val got = Similarity.kmeansLite(df, k = k, iters = 2).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(vs.map(p => got(p._1)) == want, s"kmeansLite labels differ at k=$k")
+    }
+    assert(Similarity.kmeansLite(tied, k = 4).collect().forall(_.getLong(1) == 0L))
+
+    // semDedup on the oversized blob fixture: top level g = 0, then every
+    // cluster over maxCluster = 40 re-clustered with g = P + 1, ≤ 3 levels
+    val bv = vectors(blobs)
+    val vec = bv.toMap
+    var labels = {
+      val (l, _) = refLloyd(bv.map { case (id, v) => (id, 0L, v) },
+        bv.map(p => bucket(p._1, 4)), 4, 2)
+      bv.map(_._1).zip(l).toMap
+    }
+    var depth = 0
+    def oversized = labels.groupBy(_._2).filter(_._2.size > 40).keySet
+    while (depth < 3 && oversized.nonEmpty) {
+      val big = oversized
+      val ids = bv.map(_._1).filter(id => big(labels(id)))
+      val (l, _) = refLloyd(ids.map(id => (id, labels(id) + 1, vec(id))),
+        ids.map(bucket(_, 4)), 4, 2)
+      labels = labels ++ ids.zip(l)
+      depth += 1
+    }
+    assert(depth > 0, "fixture no longer exercises the refinement")
+    val sem = Similarity.semDedup(blobs, k = 4, iters = 2, threshold = 0.99,
+      maxCluster = 40).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(sem == labels, "semDedup refined labels differ")
+
+    // pqTrain: one group per subspace, md5(id|sub) init
+    val (m, k) = (4, 16)
+    val pts = vectors(emb).flatMap { case (id, v) =>
+      (0 until m).map(sub => (id, sub.toLong, v.slice(sub * 16, sub * 16 + 16)))
+    }
+    val (codeLabels, cents) = refLloyd(pts,
+      pts.map { case (id, sub, _) => graft.HashReplay.md5Long(s"$id|$sub") % k }, k, 2)
+    val wantCodes = pts.zip(codeLabels).groupBy(_._1._1).map { case (id, ps) =>
+      id -> ps.sortBy(_._1._2).map { case ((_, sub, _), c) => (c - sub * k).toInt }
+    }
+    val (codes, codebook) = Similarity.pqTrain(emb, m = m, k = k, iters = 2)
+    assert(codes.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap == wantCodes,
+      "pqTrain codes differ")
+    val wantBook = cents.toSeq.map { case (c, v) => ((c / k).toInt, (c % k).toInt, v.toSeq) }
+      .sortBy(t => (t._1, t._2))
+    val gotBook = codebook.collect().toSeq
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2))).sortBy(t => (t._1, t._2))
+    assert(gotBook == wantBook, "pqTrain codebook differs")
   }
 
   test("int8QuantReport: error bounded by half a step, degenerate dims exact, partition-invariant") {
