@@ -2,9 +2,10 @@ package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One catalog entry: a DataFrame-API query plus (optionally) the
-  * equivalent ANSI SQL the driver runs in DuckDB as the correctness
-  * oracle.
+/** One catalog entry: a DataFrame-API query plus the equivalent ANSI
+  * SQL that DuckDB runs as the correctness oracle. Every entry
+  * has one; `oracle` stays an `Option` because the perfbench harness
+  * reads it with `.map`.
   *
   * Contract (see builder prompt): output column names must match between
   * `fn` and `oracle` exactly — the driver sorts columns by name and hashes
@@ -21,7 +22,4 @@ final case class QueryDef(
 object QueryDef {
   def apply(name: String, sql: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(sql))
-
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

@@ -28,6 +28,7 @@ object GraftFunctions {
     "graft_winnow" -> (exprs => WinnowMinima(exprs(0),
       exprs(1).eval().asInstanceOf[Number].intValue())),
     "graft_md5long" -> (exprs => Md5Long60Expr(exprs(0))),
+    "graft_round_half_up" -> (exprs => RoundHalfUp(exprs(0))),
     "graft_ws_tokens" -> (exprs => WsTokensExpr(exprs(0))),
     "graft_char_bigrams" -> (exprs => CharBigramCodesExpr(exprs(0))),
     "graft_nfc" -> (exprs => NfcNormalize(exprs(0))),

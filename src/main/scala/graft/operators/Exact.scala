@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.functions.RoundHalfUpFunctions.graftRoundHalfUp
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Deterministic aggregation helpers: make float aggregates independent of
   * partition/summation order so results are bit-identical across runs,
@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   *
   * The testdata money columns (prices, discounts, taxes, event values) are
   * 2-decimal quantities stored as double, so `round(x*100)` recovers the
-  * exact integer cents. Irrational per-row values (sqrt/ln/ratios) are
+  * exact integer cents. The Spark side spells that round as the native
+  * `graft_round_half_up`, bit-equal to Spark's `round(x, 0)` without its
+  * per-row BigDecimal. Irrational per-row values (sqrt/ln/ratios) are
   * quantized at a fixed scale; the two engines agree per row (IEEE sqrt is
   * correctly rounded; libm ln differs ≤1 ulp, far below the quantum).
   *
@@ -37,19 +39,14 @@ import org.apache.spark.sql.functions._
 object Exact {
 
   /** 2-decimal money double → exact integer cents. */
-  def cents(c: Column): Column = round(c * 100).cast("long")
+  def cents(c: Column): Column = graftRoundHalfUp(c * 100).cast("long")
 
   /** 2-decimal rate (discount/tax) → exact integer percent points. */
-  def pct(c: Column): Column = round(c * 100).cast("long")
+  def pct(c: Column): Column = graftRoundHalfUp(c * 100).cast("long")
 
   /** Quantize an arbitrary double at 10^scale (per-row, pre-aggregation). */
   def fix(c: Column, scale: Int): Column =
-    round(c * math.pow(10, scale).toLong).cast("long")
-
-  /** Exact long sum of a quantized column, back to double units.
-    * unit = the quantization factor (100.0 for cents, 1e6 for fix(_,6)). */
-  def sumQuantized(c: Column, unit: Double): Column =
-    sum(c).cast("double") / unit
+    graftRoundHalfUp(c * math.pow(10, scale).toLong).cast("long")
 
   /** DuckDB-side spelling of [[cents]]/[[pct]]/[[fix]] for oracle SQL.
     * (DuckDB CAST(double AS BIGINT) rounds-to-nearest while Spark

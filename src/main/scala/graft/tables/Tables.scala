@@ -1,7 +1,12 @@
 package graft.tables
 
+import java.util.concurrent.ConcurrentHashMap
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata star schema (TESTDATA.md).
   *
@@ -17,8 +22,53 @@ object Tables {
   /** Dimension tables small enough to broadcast at any scale factor. */
   val broadcastable: Set[String] = Set("region", "nation")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** One table version as the schema memo sees it: the qualified path,
+    * each file's (path, length, modification time), and the session's
+    * parquet type-mapping confs (`spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.*`; `nanosAsLong`, for one, decides how a
+    * footer maps to Spark types). */
+  private final case class Version(
+      path: String, files: Seq[(String, Long, Long)], confs: Seq[(String, String)])
+
+  /** Inferred schema per table version, JVM-wide: it holds one
+    * `StructType` per table version ever loaded. */
+  private val schemas = new ConcurrentHashMap[Version, StructType]()
+
+  /** Reads `dir/name.parquet` with its memoized schema. Spark's own
+    * inference launches one footer-reading job per read, even for a
+    * single file; here only the first load of a table version pays it,
+    * and every load pays one driver-side listing instead. Loads run
+    * concurrently (`graft.Verify`), so the inference runs outside the
+    * map and the first schema stored wins.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = version(spark, path)
+    val known = schemas.get(key)
+    val schema =
+      if (known != null) known
+      else {
+        val inferred = spark.read.parquet(path).schema
+        val prior = schemas.putIfAbsent(key, inferred)
+        if (prior != null) prior else inferred
+      }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private def version(spark: SparkSession, path: String): Version = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = ArrayBuffer.empty[(String, Long, Long)]
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    Version(fs.makeQualified(p).toString, files.sorted.toSeq, confs.sorted)
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

@@ -60,14 +60,6 @@ object TextAnalysis {
         (length(text) - length(regexp_replace(text, "[^a-zA-Z ]", "")))
           .cast("double") / length(text).cast("double"))
 
-  def meanWordLen(text: Column): Column = {
-    val toks = wsTokens(text)
-    when(size(toks) === 0, 0.0)
-      .otherwise(
-        aggregate(toks, lit(0L), (acc, w) => acc + length(w)).cast("double") /
-          size(toks).cast("double"))
-  }
-
   /** Composite quality score in [0,1], unrounded: long-enough docs with
     * low punctuation noise and a natural stopword share score high — the
     * standard cheap pre-filter before expensive pipeline stages.

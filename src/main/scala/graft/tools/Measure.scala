@@ -620,6 +620,41 @@ private[tools] final class ScaleProbes(
         "(one AC pass replaces 25 replace passes)")
     }),
 
+    // Exact money rounding: graft_round_half_up against Spark's round
+    // (a BigDecimal per row) on q1's four quantized products, same sums
+    // required; the kernel's gain is per row, so it must hold at N×.
+    Bespoke("round0", () => {
+      val li = Tables.lineitem(spark, dir)
+      val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+      val products = Seq(col("l_extendedprice") * 100, col("l_discount") * 100,
+        rev * 10000L, rev * (lit(1.0) + col("l_tax")) * 1000000L)
+      def sums(label: String, n: Int, r: Column => Column): (Seq[Long], Double) = {
+        var totals = Seq.empty[Long]
+        val secs = timed(s"round0-$label", _ => "") {
+          totals = stack(n)(_ => li).select(products.map(p => sum(r(p).cast("long"))): _*)
+            .head().toSeq.map(_.asInstanceOf[Long])
+          totals.size.toLong
+        }.secs
+        (totals, secs)
+      }
+      val kernel: Column => Column = graft.functions.RoundHalfUpFunctions.graftRoundHalfUp
+      val bigDecimal: Column => Column = round(_, 0)
+      sums("warmup-kernel", 1, kernel)
+      sums("warmup-round", 1, bigDecimal)
+      Seq("1x" -> 1, s"${copies}x" -> copies).foreach { case (tag, n) =>
+        val (k, tk) = sums(s"kernel-$tag", n, kernel)
+        val (b, tb) = sums(s"round-$tag", n, bigDecimal)
+        require(k == b, s"round0 $tag: kernel sums $k differ from round sums $b")
+        println(f"[scaleprobe] round0-$tag round/kernel=${tb / tk}%.2fx")
+      }
+      val (fallbacks, calls) = li.select(products: _*).rdd.map { r =>
+        val xs = (0 until r.length).filterNot(r.isNullAt).map(r.getDouble)
+        (xs.count(graft.functions.RoundHalfUp.takesFallback).toLong, xs.size.toLong)
+      }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+      println(f"[scaleprobe] round0 fallback share=${fallbacks.toDouble / calls}%.6f " +
+        s"($fallbacks of $calls calls take the BigDecimal path)")
+    }),
+
     // C4 line filter: pure higher-order array exprs, one narrow scan —
     // wall must be linear in corpus size.
     Probe("c4", n => docs(n).select(col("doc_id"), transform(

@@ -53,6 +53,22 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("*("), s"no codegen spans:\n$plan")
   }
 
+  test("q1: the money quantizers evaluate graft_round_half_up, no round( over l_extendedprice") {
+    val df = SparkEntry.queries("q1_agg")(spark, sf0001)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("graft_round_half_up("), s"no native round:\n$plan")
+    // the balanced-parenthesis argument of every plain round(
+    val args = "\\bround\\(".r.findAllMatchIn(plan).map { m =>
+      val end = Iterator.iterate((m.end, 1)) { case (i, depth) =>
+        (i + 1, depth + (plan(i) match { case '(' => 1; case ')' => -1; case _ => 0 }))
+      }.find(_._2 == 0).get._1
+      plan.substring(m.end, end - 1)
+    }.toSeq
+    assert(!args.exists(_.contains("l_extendedprice")),
+      s"Spark's BigDecimal round still runs over l_extendedprice:\n$plan")
+  }
+
   test("q29 ANN: corpus side is not shuffled (broadcast of query set only)") {
     val plan = planOf("q29_ann_topk")
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
