@@ -31,9 +31,6 @@ object ContainerCodec {
   /** Sample rates (Hz) for MPEG-1, header index 0..2. */
   private val Mp3SampleRates = Array(44100, 48000, 32000, -1)
 
-  /** Samples per MPEG-1 Layer III frame. */
-  val Mp3SamplesPerFrame = 1152
-
   final case class Mp3Info(
       sampleRate: Int,
       bitrate: Int,

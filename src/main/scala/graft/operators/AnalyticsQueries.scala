@@ -465,7 +465,6 @@ object AnalyticsQueries {
     // truth is TextAnalysis.qualityScore).
     QueryDef(
       "q81_weighted_sample", {
-        val allStops = TextAnalysis.stopwords.map(w => s"'$w'").mkString("[", ",", "]")
         s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
            |q AS (SELECT doc_id,
            |             least(len(toks) / 100.0, 1.0) AS len_score,
@@ -473,7 +472,7 @@ object AnalyticsQueries {
            |                  ELSE (length(text) - length(regexp_replace(text, '[^a-zA-Z ]', '', 'g')))
            |                       * 1.0 / length(text) END AS punct_ratio,
            |             CASE WHEN len(toks) = 0 THEN 0.0
-           |                  ELSE CAST(len(list_filter(toks, w -> list_contains($allStops, w))) AS DOUBLE)
+           |                  ELSE CAST(len(list_filter(toks, w -> list_contains(${PipelineQueries.textStopwordsSql}, w))) AS DOUBLE)
            |                       / len(toks) END AS stop_ratio
            |      FROM t),
            |b AS (SELECT doc_id,
@@ -1253,9 +1252,7 @@ object AnalyticsQueries {
       "q151_auc",
       s"""WITH m AS (
          |  SELECT lang = 'en' AS pos,
-         |         len(list_filter(string_split(text, ' '),
-         |             w -> list_contains(${PipelineQueries.stopwordsSql}, w))) * 1000000
-         |           // len(string_split(text, ' ')) AS score
+         |         ${PipelineQueries.stopPpmSql} AS score
          |  FROM documents),
          |h AS (
          |  SELECT score,
@@ -1270,12 +1267,9 @@ object AnalyticsQueries {
          |            ELSE (10000 * sum(npos * (2 * cumneg - nneg)))
          |                 // (2 * sum(npos) * sum(nneg)) END AS BIGINT) AS auc_bp
          |FROM c""".stripMargin) { (s, dir) =>
-      val toks = split(col("text"), " ")
       val m = Tables.documents(s, dir).select(
         (col("lang") === "en").as("pos"),
-        floor(size(filter(toks, w => w.isin(PipelineQueries.stopwords: _*)))
-            .cast("long") * 1000000L / size(toks).cast("long"))
-          .cast("long").as("score"))
+        PipelineQueries.stopPpm.as("score"))
       graft.ml.Eval.aucExact(m, "score", "pos")
     },
 
@@ -1363,37 +1357,17 @@ object AnalyticsQueries {
     //      at catalog scale; the plan shape is scale-free. ----
     QueryDef(
       "q154_triangles",
-      """WITH li AS (
-        |  SELECT l_orderkey, l_partkey FROM lineitem
-        |  WHERE l_orderkey % 3 = 0 AND l_partkey % 2 = 0),
-        |e0 AS (
-        |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM li x JOIN li y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-        |deg AS (SELECT n, count(*) AS d FROM (
-        |  SELECT a AS n FROM e0 UNION ALL SELECT b FROM e0) t GROUP BY 1),
-        |o AS (
-        |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-        |              THEN e0.a ELSE e0.b END AS src,
-        |         CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-        |              THEN e0.b ELSE e0.a END AS dst
-        |  FROM e0 JOIN deg da ON da.n = e0.a JOIN deg db ON db.n = e0.b),
-        |w AS (SELECT e1.dst AS w1, e2.dst AS w2
-        |      FROM o e1 JOIN o e2 ON e1.src = e2.src AND e1.dst < e2.dst),
-        |t AS (SELECT count(*) AS n_triangles
-        |      FROM w JOIN e0 ON e0.a = w.w1 AND e0.b = w.w2)
-        |SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
-        |       (SELECT CAST(count(*) AS BIGINT) FROM e0) AS n_edges,
-        |       CAST(n_triangles AS BIGINT) AS n_triangles
-        |FROM t""".stripMargin) { (s, dir) =>
-      val li = Tables.lineitem(s, dir)
-        .filter(col("l_orderkey") % 3 === 0 && col("l_partkey") % 2 === 0)
-        .select("l_orderkey", "l_partkey")
-      val e = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("u"), col("y.l_partkey").as("v"))
-      graft.graph.Graph.triangleCount(e)
+      s"""WITH ${OracleSql.partPairsCtes},
+         |${OracleSql.degreeOrientedCtes},
+         |w AS (SELECT e1.dst AS w1, e2.dst AS w2
+         |      FROM o e1 JOIN o e2 ON e1.src = e2.src AND e1.dst < e2.dst),
+         |t AS (SELECT count(*) AS n_triangles
+         |      FROM w JOIN e0 ON e0.u = w.w1 AND e0.v = w.w2)
+         |SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
+         |       (SELECT CAST(count(*) AS BIGINT) FROM e0) AS n_edges,
+         |       CAST(n_triangles AS BIGINT) AS n_triangles
+         |FROM t""".stripMargin) { (s, dir) =>
+      graft.graph.Graph.triangleCount(Tables.partPairs(s, dir))
     }.copy(headline = true),
 
     // ---- exact mutual information between two columns (q156): how
@@ -1975,9 +1949,7 @@ object AnalyticsQueries {
       "q170_lift_table",
       s"""WITH m AS (
          |  SELECT doc_id, lang = 'en' AS pos,
-         |         len(list_filter(string_split(text, ' '),
-         |             w -> list_contains(${PipelineQueries.stopwordsSql}, w))) * 1000000
-         |           // len(string_split(text, ' ')) AS score
+         |         ${PipelineQueries.stopPpmSql} AS score
          |  FROM documents),
          |b AS (SELECT pos,
          |             ntile(10) OVER (ORDER BY -score, doc_id) AS bin
@@ -1997,13 +1969,10 @@ object AnalyticsQueries {
          |            ELSE (cum_pos * t_n * 10000) // (cum_n * t_pos)
          |            END AS BIGINT) AS cum_lift_bp
          |FROM c ORDER BY bin""".stripMargin) { (s, dir) =>
-      val toks = split(col("text"), " ")
       val m = Tables.documents(s, dir).select(
         col("doc_id"),
         (col("lang") === "en").as("pos"),
-        floor(size(filter(toks, w => w.isin(PipelineQueries.stopwords: _*)))
-            .cast("long") * 1000000L / size(toks).cast("long"))
-          .cast("long").as("score"))
+        PipelineQueries.stopPpm.as("score"))
       graft.ml.Eval.liftTable(m, "score", "pos", "doc_id", bins = 10)
         .orderBy("bin")
     },
@@ -2278,9 +2247,7 @@ object AnalyticsQueries {
       "q175_quantile_normalize",
       s"""WITH d AS (
          |  SELECT doc_id, source,
-         |         len(list_filter(string_split(text, ' '),
-         |             w -> list_contains(${PipelineQueries.stopwordsSql}, w))) * 1000000
-         |           // len(string_split(text, ' ')) AS score
+         |         ${PipelineQueries.stopPpmSql} AS score
          |  FROM documents),
          |r AS (
          |  SELECT doc_id, source, score,
@@ -2292,12 +2259,9 @@ object AnalyticsQueries {
          |       CAST(CASE WHEN n <= 1 THEN 0
          |            ELSE (rk - 1) * 10000 // (n - 1) END AS BIGINT) AS pct_bp
          |FROM r ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val toks = split(col("text"), " ")
       val d = Tables.documents(s, dir).select(
         col("doc_id"), col("source"),
-        floor(size(filter(toks, w => w.isin(PipelineQueries.stopwords: _*)))
-            .cast("long") * 1000000L / size(toks).cast("long"))
-          .cast("long").as("score"))
+        PipelineQueries.stopPpm.as("score"))
       val ranked = Scale.globalRank(d, "grk", "source", "score", "doc_id")
       val off = ranked.groupBy("source")
         .agg((min("grk") - 1L).as("off"), count(lit(1)).as("n"))
@@ -2321,9 +2285,7 @@ object AnalyticsQueries {
       "q198_score_length_spearman",
       s"""WITH m AS (
          |  SELECT doc_id,
-         |         len(list_filter(string_split(text, ' '),
-         |             w -> list_contains(${PipelineQueries.stopwordsSql}, w))) * 1000000
-         |           // len(string_split(text, ' ')) AS score,
+         |         ${PipelineQueries.stopPpmSql} AS score,
          |         CAST(len(string_split(text, ' ')) AS BIGINT) AS l
          |  FROM documents),
          |r AS (
@@ -2352,9 +2314,7 @@ object AnalyticsQueries {
       val toks = split(col("text"), " ")
       val m = Tables.documents(s, dir).select(
         col("doc_id"),
-        floor(size(filter(toks, w => w.isin(PipelineQueries.stopwords: _*)))
-            .cast("long") * 1000000L / size(toks).cast("long"))
-          .cast("long").as("score"),
+        PipelineQueries.stopPpm.as("score"),
         size(toks).cast("long").as("l"))
       val rs = Scale.globalRank(m, "rs", "score", "doc_id")
         .select("doc_id", "rs")

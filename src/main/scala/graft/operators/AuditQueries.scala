@@ -156,42 +156,29 @@ object AuditQueries {
     //      of the verified semantics, not a hidden recall escape. ----
     QueryDef(
       "q229_link_predict",
-      """WITH li AS (
-        |  SELECT l_orderkey, l_partkey FROM lineitem
-        |  WHERE l_orderkey % 3 = 0 AND l_partkey % 2 = 0),
-        |e0 AS (
-        |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM li x JOIN li y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-        |adj AS (
-        |  SELECT a AS z, b AS n FROM e0
-        |  UNION ALL SELECT b, a FROM e0),
-        |deg AS (SELECT z, count(*) AS d FROM adj GROUP BY 1),
-        |piv AS (
-        |  SELECT adj.z, adj.n, deg.d FROM adj JOIN deg USING (z)
-        |  WHERE deg.d <= 64),
-        |cand AS (
-        |  SELECT x.n AS u, y.n AS v,
-        |         CAST(count(*) AS BIGINT) AS cn,
-        |         CAST(sum(1000000 // x.d) AS BIGINT) AS ra_micro
-        |  FROM piv x JOIN piv y ON x.z = y.z AND x.n < y.n
-        |  GROUP BY 1, 2),
-        |nov AS (
-        |  SELECT c.* FROM cand c
-        |  WHERE NOT EXISTS (SELECT 1 FROM e0
-        |                    WHERE e0.a = c.u AND e0.b = c.v))
-        |SELECT u, v, cn, ra_micro, rank FROM (
-        |  SELECT *, row_number() OVER (ORDER BY ra_micro DESC, u, v) AS rank
-        |  FROM nov) t
-        |WHERE rank <= 20 ORDER BY rank""".stripMargin) { (s, dir) =>
-      val li = Tables.lineitem(s, dir)
-        .filter(col("l_orderkey") % 3 === 0 && col("l_partkey") % 2 === 0)
-        .select("l_orderkey", "l_partkey")
-      val e0 = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
-        .distinct()
+      s"""WITH ${OracleSql.partPairsCtes},
+         |adj AS (
+         |  SELECT u AS z, v AS n FROM e0
+         |  UNION ALL SELECT v, u FROM e0),
+         |deg AS (SELECT z, count(*) AS d FROM adj GROUP BY 1),
+         |piv AS (
+         |  SELECT adj.z, adj.n, deg.d FROM adj JOIN deg USING (z)
+         |  WHERE deg.d <= 64),
+         |cand AS (
+         |  SELECT x.n AS u, y.n AS v,
+         |         CAST(count(*) AS BIGINT) AS cn,
+         |         CAST(sum(1000000 // x.d) AS BIGINT) AS ra_micro
+         |  FROM piv x JOIN piv y ON x.z = y.z AND x.n < y.n
+         |  GROUP BY 1, 2),
+         |nov AS (
+         |  SELECT c.* FROM cand c
+         |  WHERE NOT EXISTS (SELECT 1 FROM e0
+         |                    WHERE e0.u = c.u AND e0.v = c.v))
+         |SELECT u, v, cn, ra_micro, rank FROM (
+         |  SELECT *, row_number() OVER (ORDER BY ra_micro DESC, u, v) AS rank
+         |  FROM nov) t
+         |WHERE rank <= 20 ORDER BY rank""".stripMargin) { (s, dir) =>
+      val e0 = Tables.partPairs(s, dir).distinct().toDF("a", "b")
       // adj is pinned (NOT e0, NOT piv): the degree pass and the pivot
       // join both read adj, so pinning it executes the lineitem
       // self-join once for that whole subtree, while e0 stays LAZY for

@@ -73,12 +73,7 @@ object CurationQueries {
          |        CAST(round(1000000 * ln(CAST(rank AS DOUBLE))) AS BIGINT) AS x,
          |        CAST(round(1000000 * ln(CAST(cnt AS DOUBLE))) AS BIGINT) AS y
          |      FROM r WHERE rank <= 200),
-         |g AS (SELECT CAST(count(*) AS DECIMAL(38,0)) AS n,
-         |        sum(CAST(x AS DECIMAL(38,0))) AS sx,
-         |        sum(CAST(y AS DECIMAL(38,0))) AS sy,
-         |        sum(CAST(x * y AS DECIMAL(38,0))) AS sxy,
-         |        sum(CAST(x * x AS DECIMAL(38,0))) AS sxx
-         |      FROM p),
+         |${OracleSql.regressionSumsCte},
          |a AS (SELECT n, sy, sx,
          |        CAST(CAST((sx * sy - n * sxy) * 1000 AS HUGEINT)
          |             // CAST(n * sxx - sx * sx AS HUGEINT) AS BIGINT)
@@ -102,12 +97,7 @@ object CurationQueries {
           .cast("long").as("x"),
         round(lit(1000000d) * log(col("cnt").cast("double")))
           .cast("long").as("y"))
-      val g = p.agg(
-        count(lit(1)).cast("decimal(38,0)").as("n"),
-        sum(col("x").cast("decimal(38,0)")).as("sx"),
-        sum(col("y").cast("decimal(38,0)")).as("sy"),
-        sum((col("x") * col("y")).cast("decimal(38,0)")).as("sxy"),
-        sum((col("x") * col("x")).cast("decimal(38,0)")).as("sxx"))
+      val g = regressionSums(p)
       val a = g.select(col("n"), col("sy"), col("sx"),
         expr("CAST(((sx * sy - n * sxy) * 1000) div (n * sxx - sx * sx) AS BIGINT)")
           .as("alpha_milli"))
@@ -453,9 +443,7 @@ object CurationQueries {
          |s AS (
          |  SELECT doc_id,
          |         CASE WHEN lang = 'en' THEN 'en' ELSE 'other' END AS label,
-         |         (1000 * len(list_filter(toks,
-         |            t -> list_contains(${PipelineQueries.stopwordsSql}, t))))
-         |           // len(toks) AS score
+         |         ${PipelineQueries.stopMilliSql("toks")} AS score
          |  FROM d),
          |h AS (SELECT *,
          |        ${OracleSql.hashSplitBucket("doc_id", "graftconf")} AS bucket
@@ -502,9 +490,7 @@ object CurationQueries {
         .filter(size(col("toks")) >= 1)
       val sc = d.select(col("doc_id"),
         when(col("lang") === "en", "en").otherwise("other").as("label"),
-        expr(s"(1000 * cast(size(filter(toks, " +
-          s"t -> array_contains($sparkStopArray, t))) as bigint)) " +
-          "div size(toks)").as("score"))
+        PipelineQueries.stopMilli.as("score"))
       val split = Scale.hashSplit(sc, "doc_id", "graftconf",
         Seq("cal" -> 5000, "tst" -> 5000))
       val caln = split.filter(col("split") === "cal")
@@ -757,10 +743,7 @@ object CurationQueries {
     //      globalRank. ----
     QueryDef(
       "q248_theil_sen",
-      """WITH d AS (
-        |  SELECT epoch_us(ts) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1),
+      s"""WITH ${OracleSql.dailyEventCountsCte},
         |p AS (SELECT a.day AS d1, b.day AS d2, a.c AS c1, b.c AS c2
         |      FROM d a JOIN d b ON b.day > a.day),
         |sl AS (SELECT d1, d2,
@@ -777,9 +760,7 @@ object CurationQueries {
         |SELECT dd.n_days, n.m AS n_pairs,
         |       CAST(med.s_milli AS BIGINT) AS theil_sen_slope_milli
         |FROM dd CROSS JOIN n CROSS JOIN med""".stripMargin) { (s, dir) =>
-      val d = Tables.events(s, dir)
-        .select(expr("ts div 86400000000000").as("day"))
-        .groupBy("day").agg(count(lit(1)).as("c"))
+      val d = dailyEventCounts(s, dir)
         .localCheckpoint() // tiny day-grain table, read 3× below
       val a = d.select(col("day").as("d1"), col("c").as("c1"))
       val b = d.select(col("day").as("d2"), col("c").as("c2"))
@@ -868,10 +849,7 @@ object CurationQueries {
     //      (delta DESC, day) is a bounded TakeOrdered. ----
     QueryDef(
       "q250_changepoint",
-      """WITH d AS (
-        |  SELECT epoch_us(ts) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1),
+      s"""WITH ${OracleSql.dailyEventCountsCte},
         |r AS (SELECT day, c,
         |        row_number() OVER (ORDER BY day) AS rr,
         |        sum(c) OVER (ORDER BY day) AS cum
@@ -887,9 +865,7 @@ object CurationQueries {
         |       CAST(abs(lm - rm) AS BIGINT) AS delta_milli
         |FROM s ORDER BY abs(lm - rm) DESC, day LIMIT 1""".stripMargin) {
       (s, dir) =>
-      val d = Tables.events(s, dir)
-        .select(expr("ts div 86400000000000").as("day"))
-        .groupBy("day").agg(count(lit(1)).as("c"))
+      val d = dailyEventCounts(s, dir)
       val (ranked, Seq(tot, n)) = Scale.scan(d, Seq("day"),
         Scale.Sum("c", "cum"), Scale.RowNumber("rr"))
       ranked.filter(col("rr") < n)
@@ -1037,11 +1013,7 @@ object CurationQueries {
     QueryDef(
       "q252_pca_power", pcaOracleSql) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val xq = e.select(col("vec_id"),
-          posexplode(col("embedding")).as(Seq("p", "xval")))
-        .select(col("vec_id"), (col("p") + 1).as("i"),
-          round(lit(1000000d) * col("xval").cast("double"))
-            .cast("long").as("x"))
+      val xq = quantizedCells(e)
       val nDf = e.agg(count(lit(1)).as("nn"))
       val mu = xq.groupBy("i").agg(sum("x").as("sx"))
         .crossJoin(broadcast(nDf))
@@ -1092,12 +1064,7 @@ object CurationQueries {
     //      argmax. All-integer F1/precision/recall in milli. ----
     QueryDef(
       "q253_f1_threshold",
-      s"""WITH d AS (
-         |  SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-         |         (1000 * len(list_filter($toksSql,
-         |            t -> list_contains(${PipelineQueries.stopwordsSql}, t))))
-         |           // len($toksSql) AS sc
-         |  FROM documents WHERE len($toksSql) >= 1),
+      s"""WITH ${PipelineQueries.labelledStopMilliCte},
          |g AS (SELECT sc, CAST(sum(y) AS BIGINT) AS c_en,
          |        CAST(count(*) - sum(y) AS BIGINT) AS c_ot
          |      FROM d GROUP BY sc),
@@ -1122,13 +1089,7 @@ object CurationQueries {
          |ORDER BY CAST((2000 * tp) // (2 * tp + fp + fn) AS BIGINT) DESC,
          |         threshold
          |LIMIT 1""".stripMargin) { (s, dir) =>
-      val d = Tables.documents(s, dir)
-        .select(col("lang"), TextAnalysis.wsTokens(col("text")).as("toks"))
-        .filter(size(col("toks")) >= 1)
-        .select(when(col("lang") === "en", 1L).otherwise(0L).as("y"),
-          expr(s"(1000 * cast(size(filter(toks, " +
-            s"t -> array_contains($sparkStopArray, t))) as bigint)) " +
-            "div size(toks)").as("sc"))
+      val d = PipelineQueries.labelledStopMilli(s, dir)
       val g = d.groupBy("sc").agg(sum("y").as("c_en"),
         (count(lit(1)) - sum("y")).as("c_ot"))
       val (p2, Seq(tEn, tOt)) = Scale.scan(g, Seq("sc"),
@@ -1399,12 +1360,7 @@ object CurationQueries {
     //      aggregates; top-10 dims via bounded TakeOrdered. ----
     QueryDef(
       "q258_fisher_ratio",
-      """WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
-        |xq AS (SELECT vec_id, label,
-        |         unnest(range(1, len(embedding) + 1)) AS i,
-        |         CAST(round(1000000 * CAST(unnest(embedding) AS DOUBLE))
-        |           AS BIGINT) AS x
-        |       FROM e),
+      s"""WITH ${OracleSql.quantizedCellsCtes("label")},
         |cs AS (SELECT label, i, CAST(count(*) AS BIGINT) AS n_c,
         |         CAST(sum(x) AS BIGINT) AS sx
         |       FROM xq GROUP BY label, i),
@@ -1433,12 +1389,7 @@ object CurationQueries {
         |FROM wi JOIN bt ON bt.i = wi.i
         |WHERE wi.w > 0
         |ORDER BY fisher_micro DESC, dim LIMIT 10""".stripMargin) { (s, dir) =>
-      val e = Tables.embeddings(s, dir).select("vec_id", "label", "embedding")
-      val xq = e.select(col("vec_id"), col("label"),
-          posexplode(col("embedding")).as(Seq("p", "xval")))
-        .select(col("vec_id"), col("label"), (col("p") + 1).as("i"),
-          round(lit(1000000d) * col("xval").cast("double"))
-            .cast("long").as("x"))
+      val xq = quantizedCells(Tables.embeddings(s, dir), "label")
         .localCheckpoint() // read for class stats and within-variance
       val cs = xq.groupBy("label", "i")
         .agg(count(lit(1)).as("n_c"), sum("x").as("sx"))
@@ -1597,12 +1548,7 @@ object CurationQueries {
         |        CAST(round(1000000 * ln(CAST(cum_v AS DOUBLE))) AS BIGINT)
         |          AS y
         |      FROM cums WHERE cum_n >= 1 AND cum_v >= 1),
-        |g AS (SELECT CAST(count(*) AS DECIMAL(38,0)) AS n,
-        |        sum(CAST(x AS DECIMAL(38,0))) AS sx,
-        |        sum(CAST(y AS DECIMAL(38,0))) AS sy,
-        |        sum(CAST(x * y AS DECIMAL(38,0))) AS sxy,
-        |        sum(CAST(x * x AS DECIMAL(38,0))) AS sxx
-        |      FROM p),
+        |${OracleSql.regressionSumsCte},
         |tot AS (SELECT CAST(sum(ntok) AS BIGINT) AS n_tokens,
         |          CAST(sum(ntypes) AS BIGINT) AS vocab FROM grain),
         |b AS (SELECT n, sx, sy,
@@ -1640,12 +1586,7 @@ object CurationQueries {
             .cast("long").as("x"),
           round(lit(1000000d) * log(col("cum_v").cast("double")))
             .cast("long").as("y"))
-      val g = p.agg(
-        count(lit(1)).cast("decimal(38,0)").as("n"),
-        sum(col("x").cast("decimal(38,0)")).as("sx"),
-        sum(col("y").cast("decimal(38,0)")).as("sy"),
-        sum((col("x") * col("y")).cast("decimal(38,0)")).as("sxy"),
-        sum((col("x") * col("x")).cast("decimal(38,0)")).as("sxx"))
+      val g = regressionSums(p)
       g.select(col("n"), col("sx"), col("sy"),
           expr("CAST(((n * sxy - sx * sy) * 1000) div (n * sxx - sx * sx) AS BIGINT)")
             .as("beta_milli"))
@@ -1719,36 +1660,15 @@ object CurationQueries {
     //      from bounded aggregates. ----
     QueryDef(
       "q263_chisq_independence",
-      s"""WITH obs AS (
-        |  SELECT source, lang, CAST(count(*) AS BIGINT) AS o
-        |  FROM documents GROUP BY source, lang),
-        |rt AS (SELECT source, CAST(sum(o) AS BIGINT) AS r
-        |       FROM obs GROUP BY source),
-        |ct AS (SELECT lang, CAST(sum(o) AS BIGINT) AS c
-        |       FROM obs GROUP BY lang),
-        |nt AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM obs),
-        |frame AS (SELECT rt.source, ct.lang, rt.r, ct.c
-        |          FROM rt CROSS JOIN ct),
-        |j AS (SELECT f.source, f.lang, coalesce(obs.o, 0) AS observed,
-        |        f.r, f.c
-        |      FROM frame f LEFT JOIN obs
-        |        ON obs.source = f.source AND obs.lang = f.lang)
+      s"""WITH ${OracleSql.contingencyCellsCtes}
         |SELECT source, lang, observed,
         |       CAST(CAST(1000 * CAST(r AS DECIMAL(38,0)) * c AS HUGEINT)
         |            // CAST(n AS HUGEINT) AS BIGINT) AS expected_milli,
         |       $chisqCellSql AS chi_micro
         |FROM j CROSS JOIN nt
         |ORDER BY source, lang""".stripMargin) { (s, dir) =>
-      val obs = Tables.documents(s, dir)
-        .groupBy("source", "lang").agg(count(lit(1)).as("o"))
-        .localCheckpoint() // feeds marginals and the frame join
-      val rt = obs.groupBy("source").agg(sum("o").as("r"))
-      val ct = obs.groupBy("lang").agg(sum("o").as("c"))
-      val nt = obs.agg(sum("o").as("n"))
-      val frame = rt.crossJoin(broadcast(ct))
-      frame.join(obs, Seq("source", "lang"), "left_outer")
-        .select(col("source"), col("lang"),
-          coalesce(col("o"), lit(0L)).as("observed"), col("r"), col("c"))
+      val (obs, rt, ct, nt) = contingency(s, dir)
+      contingencyCells(obs, rt, ct)
         .crossJoin(broadcast(nt))
         .select(col("source"), col("lang"), col("observed"),
           expr("CAST((1000 * CAST(r AS DECIMAL(38,0)) * c) div n AS BIGINT)")
@@ -1769,12 +1689,7 @@ object CurationQueries {
     //      map is exact and engine-identical. ----
     QueryDef(
       "q264_isotonic_calibration",
-      s"""WITH d AS (
-        |  SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-        |         (1000 * len(list_filter($toksSql,
-        |            t -> list_contains(${PipelineQueries.stopwordsSql}, t))))
-        |           // len($toksSql) AS sc
-        |  FROM documents WHERE len($toksSql) >= 1),
+      s"""WITH ${PipelineQueries.labelledStopMilliCte},
         |g AS (SELECT sc, CAST(count(*) AS BIGINT) AS n,
         |        CAST(sum(y) AS BIGINT) AS pos
         |      FROM d GROUP BY sc),
@@ -1792,13 +1707,7 @@ object CurationQueries {
         |SELECT g.sc AS score, g.n, g.pos, iso.iso_micro
         |FROM g JOIN iso ON iso.sc = g.sc
         |ORDER BY score""".stripMargin) { (s, dir) =>
-      val d = Tables.documents(s, dir)
-        .select(col("lang"), TextAnalysis.wsTokens(col("text")).as("toks"))
-        .filter(size(col("toks")) >= 1)
-        .select(when(col("lang") === "en", 1L).otherwise(0L).as("y"),
-          expr(s"(1000 * cast(size(filter(toks, " +
-            s"t -> array_contains($sparkStopArray, t))) as bigint)) " +
-            "div size(toks)").as("sc"))
+      val d = PipelineQueries.labelledStopMilli(s, dir)
       val g = d.groupBy("sc")
         .agg(count(lit(1)).as("n"), sum("y").as("pos"))
       // pinned by the scan: both sides of the grain² pair join read it
@@ -1895,12 +1804,7 @@ object CurationQueries {
     //      one scan → ≤10-key aggregate, totals broadcast. ----
     QueryDef(
       "q266_reliability_ece",
-      s"""WITH d AS (
-        |  SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-        |         (1000 * len(list_filter($toksSql,
-        |            t -> list_contains(${PipelineQueries.stopwordsSql}, t))))
-        |           // len($toksSql) AS sc
-        |  FROM documents WHERE len($toksSql) >= 1),
+      s"""WITH ${PipelineQueries.labelledStopMilliCte},
         |g AS (SELECT least(sc // 100, 9) AS bin,
         |        CAST(count(*) AS BIGINT) AS n_b,
         |        CAST(sum(y) AS BIGINT) AS pos_b,
@@ -1918,13 +1822,7 @@ object CurationQueries {
         |       abs(acc_milli - conf_milli) AS gap_milli,
         |       (1000 * sg) // n AS ece_micro
         |FROM r CROSS JOIN e ORDER BY bin""".stripMargin) { (s, dir) =>
-      val d = Tables.documents(s, dir)
-        .select(col("lang"), TextAnalysis.wsTokens(col("text")).as("toks"))
-        .filter(size(col("toks")) >= 1)
-        .select(when(col("lang") === "en", 1L).otherwise(0L).as("y"),
-          expr(s"(1000 * cast(size(filter(toks, " +
-            s"t -> array_contains($sparkStopArray, t))) as bigint)) " +
-            "div size(toks)").as("sc"))
+      val d = PipelineQueries.labelledStopMilli(s, dir)
       val g = d.groupBy(least(expr("sc div 100"), lit(9)).as("bin"))
         .agg(count(lit(1)).as("n_b"), sum("y").as("pos_b"),
           sum("sc").as("ssc"))
@@ -2202,12 +2100,7 @@ object CurationQueries {
     //      min(struct). ----
     QueryDef(
       "q271_centroid_health",
-      s"""WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
-        |xq AS (SELECT vec_id, label,
-        |         unnest(range(1, len(embedding) + 1)) AS i,
-        |         CAST(round(1000000 * CAST(unnest(embedding) AS DOUBLE))
-        |           AS BIGINT) AS x
-        |       FROM e),
+      s"""WITH ${OracleSql.quantizedCellsCtes("label")},
         |cs AS (SELECT label, i, CAST(count(*) AS BIGINT) AS n_c,
         |         CAST(sum(x) AS BIGINT) AS sx
         |       FROM xq GROUP BY label, i),
@@ -2237,12 +2130,7 @@ object CurationQueries {
         |               AND cosv.cos_micro = ag.min_cos_micro
         |GROUP BY ag.label, n_vecs, mean_cos_micro, min_cos_micro
         |ORDER BY ag.label""".stripMargin) { (s, dir) =>
-      val xq = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("label"),
-          posexplode(col("embedding")).as(Seq("p", "xval")))
-        .select(col("vec_id"), col("label"), (col("p") + 1).as("i"),
-          round(lit(1000000d) * col("xval").cast("double"))
-            .cast("long").as("x"))
+      val xq = quantizedCells(Tables.embeddings(s, dir), "label")
         .localCheckpoint() // centroid pass + per-vector pass
       val cs = xq.groupBy("label", "i")
         .agg(count(lit(1)).as("n_c"), sum("x").as("sx"))
@@ -2554,20 +2442,7 @@ object CurationQueries {
     //      the tests) + max of the passing rank. ----
     QueryDef(
       "q276_bh_drift_screen",
-      s"""WITH obs AS (
-        |  SELECT source, lang, CAST(count(*) AS BIGINT) AS o
-        |  FROM documents GROUP BY source, lang),
-        |rt AS (SELECT source, CAST(sum(o) AS BIGINT) AS r
-        |       FROM obs GROUP BY source),
-        |ct AS (SELECT lang, CAST(sum(o) AS BIGINT) AS c
-        |       FROM obs GROUP BY lang),
-        |nt AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM obs),
-        |frame AS (SELECT rt.source, ct.lang, rt.r, ct.c
-        |          FROM rt CROSS JOIN ct),
-        |j AS (SELECT f.source, f.lang, coalesce(obs.o, 0) AS observed,
-        |        f.r, f.c
-        |      FROM frame f LEFT JOIN obs
-        |        ON obs.source = f.source AND obs.lang = f.lang),
+      s"""WITH ${OracleSql.contingencyCellsCtes},
         |chi AS (SELECT source,
         |          CAST(sum($chisqCellSql) AS BIGINT) AS chi_micro
         |        FROM j CROSS JOIN nt GROUP BY source),
@@ -2584,16 +2459,8 @@ object CurationQueries {
         |SELECT source, chi_micro, p_micro, rk,
         |       (rk <= kstar) AS significant
         |FROM rk CROSS JOIN pass ORDER BY rk""".stripMargin) { (s, dir) =>
-      val obs = Tables.documents(s, dir)
-        .groupBy("source", "lang").agg(count(lit(1)).as("o"))
-        .localCheckpoint()
-      val rt = obs.groupBy("source").agg(sum("o").as("r"))
-      val ct = obs.groupBy("lang").agg(sum("o").as("c"))
-      val nt = obs.agg(sum("o").as("n"))
-      val chi = rt.crossJoin(broadcast(ct))
-        .join(obs, Seq("source", "lang"), "left_outer")
-        .select(col("source"), col("lang"),
-          coalesce(col("o"), lit(0L)).as("observed"), col("r"), col("c"))
+      val (obs, rt, ct, nt) = contingency(s, dir)
+      val chi = contingencyCells(obs, rt, ct)
         .crossJoin(broadcast(nt))
         .groupBy("source")
         .agg(sum(expr(chisqCellSql)).as("chi_micro"))
@@ -2619,14 +2486,7 @@ object CurationQueries {
     //      engines over the bounded contingency grain. ----
     QueryDef(
       "q277_source_lang_mi",
-      s"""WITH obs AS (
-        |  SELECT source, lang, CAST(count(*) AS BIGINT) AS o
-        |  FROM documents GROUP BY source, lang),
-        |rt AS (SELECT source, CAST(sum(o) AS BIGINT) AS r
-        |       FROM obs GROUP BY source),
-        |ct AS (SELECT lang, CAST(sum(o) AS BIGINT) AS c
-        |       FROM obs GROUP BY lang),
-        |nt AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM obs),
+      s"""WITH ${OracleSql.contingencyCtes},
         |cells AS (SELECT obs.o, rt.r, ct.c
         |          FROM obs JOIN rt ON rt.source = obs.source
         |          JOIN ct ON ct.lang = obs.lang),
@@ -2638,12 +2498,7 @@ object CurationQueries {
         |       CASE WHEN h_joint_pico = 0 THEN 0
         |            ELSE (1000 * mi_pico) // h_joint_pico END AS iqr_milli
         |FROM g""".stripMargin) { (s, dir) =>
-      val obs = Tables.documents(s, dir)
-        .groupBy("source", "lang").agg(count(lit(1)).as("o"))
-        .localCheckpoint()
-      val rt = obs.groupBy("source").agg(sum("o").as("r"))
-      val ct = obs.groupBy("lang").agg(sum("o").as("c"))
-      val nt = obs.agg(sum("o").as("n"))
+      val (obs, rt, ct, nt) = contingency(s, dir)
       val g = obs.join(broadcast(rt), "source").join(broadcast(ct), "lang")
         .crossJoin(broadcast(nt))
         .agg(sum(expr(miTermSql)).as("mi_pico"),
@@ -2664,10 +2519,7 @@ object CurationQueries {
     //      the continuity-corrected z as one shared sqrt expression. ----
     QueryDef(
       "q278_mann_kendall",
-      s"""WITH d AS (
-        |  SELECT epoch_us(ts) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1),
+      s"""WITH ${OracleSql.dailyEventCountsCte},
         |p AS (SELECT CASE WHEN b.c > a.c THEN 1
         |             WHEN b.c < a.c THEN -1 ELSE 0 END AS sg
         |      FROM d a JOIN d b ON b.day > a.day),
@@ -2681,9 +2533,7 @@ object CurationQueries {
         |SELECT s.s, m.n AS n_days, ties.tc AS tie_term,
         |       $mkZSql AS z_milli
         |FROM s CROSS JOIN m CROSS JOIN ties""".stripMargin) { (s, dir) =>
-      val d = Tables.events(s, dir)
-        .select(expr("ts div 86400000000000").as("day"))
-        .groupBy("day").agg(count(lit(1)).as("c"))
+      val d = dailyEventCounts(s, dir)
         .localCheckpoint() // pair join (both sides), n, tie grain
       val a = d.select(col("day").as("d1"), col("c").as("c1"))
       val b = d.select(col("day").as("d2"), col("c").as("c2"))
@@ -2791,12 +2641,7 @@ object CurationQueries {
         |        CAST(round(1000000 * ln(CAST(n_clusters AS DOUBLE)))
         |          AS BIGINT) AS y
         |      FROM h WHERE sz >= 2),
-        |g AS (SELECT CAST(count(*) AS DECIMAL(38,0)) AS n,
-        |        sum(CAST(x AS DECIMAL(38,0))) AS sx,
-        |        sum(CAST(y AS DECIMAL(38,0))) AS sy,
-        |        sum(CAST(x * y AS DECIMAL(38,0))) AS sxy,
-        |        sum(CAST(x * x AS DECIMAL(38,0))) AS sxx
-        |      FROM p),
+        |${OracleSql.regressionSumsCte},
         |sl AS (SELECT CASE
         |         WHEN n <= 1 OR n * sxx - sx * sx = 0 THEN 0
         |         WHEN n * sxy - sx * sy >= 0
@@ -2827,12 +2672,7 @@ object CurationQueries {
           .cast("long").as("x"),
         round(lit(1000000d) * log(col("n_clusters").cast("double")))
           .cast("long").as("y"))
-      val g = p.agg(
-        count(lit(1)).cast("decimal(38,0)").as("n"),
-        sum(col("x").cast("decimal(38,0)")).as("sx"),
-        sum(col("y").cast("decimal(38,0)")).as("sy"),
-        sum((col("x") * col("y")).cast("decimal(38,0)")).as("sxy"),
-        sum((col("x") * col("x")).cast("decimal(38,0)")).as("sxx"))
+      val g = regressionSums(p)
       val sl = g.select(
         when(col("n") <= 1 ||
           col("n") * col("sxx") - col("sx") * col("sx") === 0, 0L)
@@ -3497,12 +3337,7 @@ object CurationQueries {
          |               ELSE -(CAST(-(w * 1000000) AS HUGEINT)
          |                      // CAST(mx AS HUGEINT)) END AS BIGINT) AS v
          |        FROM w$k CROSS JOIN mx$k)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |xq AS (SELECT vec_id,
-       |         unnest(range(1, len(embedding) + 1)) AS i,
-       |         CAST(round(1000000 * CAST(unnest(embedding) AS DOUBLE))
-       |           AS BIGINT) AS x
-       |       FROM e),
+    s"""WITH ${OracleSql.quantizedCellsCtes()},
        |n AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM e),
        |mu AS (SELECT i,
        |         CASE WHEN sx >= 0 THEN sx // nn ELSE -((-sx) // nn) END
@@ -3609,9 +3444,55 @@ object CurationQueries {
        |ORDER BY step""".stripMargin
   }
 
-  /** Spark array literal of [[PipelineQueries.stopwords]] for expr() use. */
-  private def sparkStopArray: String =
-    PipelineQueries.stopwords.map(w => s"'$w'").mkString("array(", ",", ")")
+  /** (n, sx, sy, sxy, sxx): the least-squares moment sums of the integer
+    * points (x, y) as decimal(38,0). DuckDB mirror:
+    * OracleSql.regressionSumsCte. */
+  private def regressionSums(p: DataFrame): DataFrame =
+    p.agg(
+      count(lit(1)).cast("decimal(38,0)").as("n"),
+      sum(col("x").cast("decimal(38,0)")).as("sx"),
+      sum(col("y").cast("decimal(38,0)")).as("sy"),
+      sum((col("x") * col("y")).cast("decimal(38,0)")).as("sxy"),
+      sum((col("x") * col("x")).cast("decimal(38,0)")).as("sxx"))
+
+  /** (day, c): events per UTC day, day in days since the epoch. DuckDB
+    * mirror: OracleSql.dailyEventCountsCte. */
+  private def dailyEventCounts(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .select(expr("ts div 86400000000000").as("day"))
+      .groupBy("day").agg(count(lit(1)).as("c"))
+
+  /** The source×lang contingency table `obs` (source, lang, o), pinned
+    * (it feeds its margins and the caller's cell pass), with its margins
+    * `rt` (source, r) and `ct` (lang, c) and its total `nt` (n). DuckDB
+    * mirror: OracleSql.contingencyCtes. */
+  private def contingency(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val obs = Tables.documents(s, dir)
+      .groupBy("source", "lang").agg(count(lit(1)).as("o"))
+      .localCheckpoint()
+    (obs, obs.groupBy("source").agg(sum("o").as("r")),
+      obs.groupBy("lang").agg(sum("o").as("c")), obs.agg(sum("o").as("n")))
+  }
+
+  /** (source, lang, observed, r, c): every cell of the contingency
+    * table `obs` with margins `rt` and `ct`, observed = 0 where no
+    * document has the pair. DuckDB mirror: OracleSql.contingencyCellsCtes. */
+  private def contingencyCells(obs: DataFrame, rt: DataFrame, ct: DataFrame): DataFrame =
+    rt.crossJoin(broadcast(ct))
+      .join(obs, Seq("source", "lang"), "left_outer")
+      .select(col("source"), col("lang"),
+        coalesce(col("o"), lit(0L)).as("observed"), col("r"), col("c"))
+
+  /** (vec_id, keys…, i, x): every embedding cell of `e` at its 1-based
+    * dim i, quantized to micro-units x = round(1000000 · v). DuckDB
+    * mirror: OracleSql.quantizedCellsCtes. */
+  private def quantizedCells(e: DataFrame, keys: String*): DataFrame = {
+    val ks = ("vec_id" +: keys).map(col)
+    e.select(ks :+ posexplode(col("embedding")).as(Seq("p", "xval")): _*)
+      .select(ks ++ Seq((col("p") + 1).as("i"),
+        round(lit(1000000d) * col("xval").cast("double")).cast("long").as("x")): _*)
+  }
 
   /** q243 chain geometry: angles 20°..60° in 10° steps — adjacent points
     * land at cos 10° ≈ 0.985 (≥ eps) and skip-one at cos 20° ≈ 0.940

@@ -6,7 +6,7 @@ import graft.operators.OracleSql.cosineSql
 import graft.similarity.Similarity
 import graft.tables.Tables
 import graft.textops.TextAnalysis
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** LLM-training-data pipeline operators over documents/embeddings:
@@ -100,9 +100,7 @@ object PipelineQueries {
     s"""$out AS MATERIALIZED (
        |  SELECT $idCol,
        |         list_distinct(list_transform(
-       |           CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |              ELSE list_transform(range(1, len(toks) - 1),
-       |                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) END,
+       |           ${OracleSql.shingles3Sql("toks")},
        |           g -> ${OracleSql.md5Long("g")})) AS sh
        |  FROM $from)""".stripMargin
 
@@ -181,6 +179,44 @@ object PipelineQueries {
       |  UNION
       |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src)""".stripMargin
 
+  /** CTEs `d` … `pr`: the q31 planted-twin corpus ([[twinDocsCtes]]) and
+    * its 3-shingle jaccard pairs at ≥ 0.7. */
+  private val twinJaccardCtes: String =
+    Seq(twinDocsCtes("graftplantedtail"), shingle3Cte("t"), bruteJaccardCtes("0.7"))
+      .mkString(",\n")
+
+  /** [[twinJaccardCtes]] plus `edges` and `reach`, the pairs' transitive
+    * closure. Requires WITH RECURSIVE. */
+  private val twinClosureCtes: String = s"$twinJaccardCtes,\n$closureCtes"
+
+  /** Oracle of the planted-twin near-dup pairs: every pair at rounded
+    * jaccard ≥ 0.7 with that jaccard. */
+  private val twinPairsOracleSql: String =
+    s"""WITH $twinJaccardCtes
+       |SELECT id_a, id_b,
+       |       round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
+       |FROM p
+       |WHERE round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.7
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** CTEs `bi` (key, prev, cur), `c2`, `c1`, `v` and `out` (key, q) over
+    * `tk` (key, t): the add-1-smoothed bigram model of the token lists
+    * `t` and each bigram's surprisal q in integer micro-nats — the
+    * DuckDB mirror of TextAnalysis's bigram surprisals. */
+  private def bigramSurprisalCtes(key: String, out: String): String =
+    s"""bi AS (
+       |  SELECT $key, t[i] AS prev, t[i+1] AS cur
+       |  FROM (SELECT $key, t, unnest(range(1, len(t))) AS i
+       |        FROM tk WHERE len(t) >= 2)),
+       |c2 AS (SELECT prev, cur, count(*) AS c2 FROM bi GROUP BY 1, 2),
+       |c1 AS (SELECT prev, CAST(sum(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1),
+       |v AS (SELECT count(DISTINCT cur) AS v FROM c2),
+       |$out AS (
+       |  SELECT bi.$key,
+       |         CAST(round(1000000 *
+       |           ln(CAST(c1.c1 + v.v AS DOUBLE) / (c2.c2 + 1))) AS BIGINT) AS q
+       |  FROM bi JOIN c2 USING (prev, cur) JOIN c1 USING (prev) CROSS JOIN v)""".stripMargin
+
   /** CTE `out` (keys…, centroid): the quantized-exact mean of the list
     * column `vec` per `keys` over relation `from` — the DuckDB mirror of
     * Similarity.quantizedMeans, the one spelling shared by the k-means,
@@ -231,8 +267,71 @@ object PipelineQueries {
       quantizedMeanCte("a1", "cent1", groups :+ key, vec),
       argminCte(points, "cent1", "a2", groups, key, vec)).mkString(",\n")
 
-  private[operators] val stopwordsSql = "['the','a','an','and','or','of','to','in','is','it']"
   private[operators] val stopwords = Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
+
+  /** `'w1','w2',…`: the words as SQL string literals. */
+  private def sqlStrings(ws: Seq[String]): String = ws.map(w => s"'$w'").mkString(",")
+
+  /** DuckDB list literal of [[stopwords]]. */
+  private[operators] val stopwordsSql = s"[${sqlStrings(stopwords)}]"
+
+  /** DuckDB list literal of TextAnalysis.stopwords (the quality-score list). */
+  private[operators] val textStopwordsSql = s"[${sqlStrings(TextAnalysis.stopwords)}]"
+
+  /** Stopword density of `text` over its single-space split in integer
+    * ppm: stopword tokens · 1000000 div tokens. DuckDB mirror: [[stopPpmSql]]. */
+  private[operators] def stopPpm: Column = {
+    val toks = split(col("text"), " ")
+    floor(size(filter(toks, w => w.isin(stopwords: _*))).cast("long") * 1000000L /
+      size(toks).cast("long")).cast("long")
+  }
+
+  /** DuckDB mirror of [[stopPpm]]. */
+  private[operators] val stopPpmSql: String =
+    s"""len(list_filter(string_split(text, ' '),
+       |    w -> list_contains($stopwordsSql, w))) * 1000000
+       |  // len(string_split(text, ' '))""".stripMargin
+
+  /** (doc_id, source, sc): every document's [[stopPpm]]. DuckDB mirror:
+    * [[sourceStopPpmCte]]. */
+  private def sourceStopPpm(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir).select(col("doc_id"), col("source"), stopPpm.as("sc"))
+
+  /** CTE `t` (doc_id, source, sc): mirror of [[sourceStopPpm]]. */
+  private val sourceStopPpmCte: String =
+    s"""t AS (SELECT doc_id, source, $stopPpmSql AS sc
+       |      FROM documents)""".stripMargin
+
+  /** Stopword share of the token list column `toks` in integer
+    * per-mille: 1000 · stopword tokens div tokens. DuckDB mirror:
+    * [[stopMilliSql]]. */
+  private[operators] def stopMilli: Column =
+    expr(s"(1000 * cast(size(filter(toks, " +
+      s"t -> array_contains(array(${sqlStrings(stopwords)}), t))) as bigint)) " +
+      "div size(toks)")
+
+  /** DuckDB mirror of [[stopMilli]] over the token list `toks`. */
+  private[operators] def stopMilliSql(toks: String): String =
+    s"""(1000 * len(list_filter($toks,
+       |    t -> list_contains($stopwordsSql, t))))
+       |  // len($toks)""".stripMargin
+
+  /** (y, sc) per document with at least one whitespace token: y = 1 for
+    * lang 'en' (else 0), sc its [[stopMilli]]. DuckDB mirror:
+    * [[labelledStopMilliCte]]. */
+  private[operators] def labelledStopMilli(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .select(col("lang"), TextAnalysis.wsTokens(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 1)
+      .select(when(col("lang") === "en", 1L).otherwise(0L).as("y"),
+        stopMilli.as("sc"))
+
+  /** CTE `d` (y, sc): mirror of [[labelledStopMilli]]. */
+  private[operators] val labelledStopMilliCte: String =
+    s"""d AS (
+       |  SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
+       |         ${stopMilliSql(toksSql)} AS sc
+       |  FROM documents WHERE len($toksSql) >= 1)""".stripMargin
 
   /** Pinned q111 artifact: `LinearModel.fitRidgeNano` over the sf0.01
     * documents corpus AS OF THE PIN DATE (2026-08-14; features
@@ -281,7 +380,6 @@ object PipelineQueries {
     // first language (profile order) reaching the maximum wins ties —
     // same as the strictly-greater fold in TextAnalysis.langId
     val argmax = langNames.map(l => s"WHEN s_$l = g THEN '$l'").mkString(" ")
-    val allStops = TextAnalysis.stopwords.map(w => s"'$w'").mkString("[", ",", "]")
     s"""WITH t AS (
        |  SELECT doc_id, lang AS labeled_lang, text,
        |         ' ' || lower(text) || ' ' AS p,
@@ -298,7 +396,7 @@ object PipelineQueries {
        |         ELSE (length(text) - length(regexp_replace(text, '[^a-zA-Z ]', '', 'g')))
        |              * 1.0 / length(text) END AS punct_ratio,
        |    CASE WHEN len(toks) = 0 THEN 0.0
-       |         ELSE CAST(len(list_filter(toks, w -> list_contains($allStops, w))) AS DOUBLE)
+       |         ELSE CAST(len(list_filter(toks, w -> list_contains($textStopwordsSql, w))) AS DOUBLE)
        |              / len(toks) END AS stop_ratio
        |  FROM g)
        |SELECT doc_id, labeled_lang,
@@ -465,14 +563,7 @@ object PipelineQueries {
     //      oracle scale; the engine never does. ----
     QueryDef(
       "q31_minhash_neardup",
-      s"""WITH ${twinDocsCtes("graftplantedtail")},
-         |${shingle3Cte("t")},
-         |${bruteJaccardCtes("0.7")}
-         |SELECT id_a, id_b,
-         |       round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-         |FROM p
-         |WHERE round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.7
-         |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
+      twinPairsOracleSql) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       // plant near-duplicates: first 10 docs re-appear with one word added
       Dedup.nearDupPairs(twinDocs(docs, "graftplantedtail"), threshold = 0.7)
@@ -555,14 +646,7 @@ object PipelineQueries {
     //      benchmark dedup). Oracle: the same brute-force n² jaccard. ----
     QueryDef(
       "q91_prefix_jaccard",
-      s"""WITH ${twinDocsCtes("graftplantedtail")},
-         |${shingle3Cte("t")},
-         |${bruteJaccardCtes("0.7")}
-         |SELECT id_a, id_b,
-         |       round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-         |FROM p
-         |WHERE round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.7
-         |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
+      twinPairsOracleSql) { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       Dedup.prefixFilterNearDups(twinDocs(docs, "graftplantedtail"), threshold = 0.7)
         .orderBy("id_a", "id_b")
@@ -628,10 +712,7 @@ object PipelineQueries {
     //      set closed transitively with a recursive CTE. ----
     QueryDef(
       "q60_dedup_clusters",
-      s"""WITH RECURSIVE ${twinDocsCtes("graftplantedtail")},
-         |${shingle3Cte("t")},
-         |${bruteJaccardCtes("0.7")},
-         |$closureCtes
+      s"""WITH RECURSIVE $twinClosureCtes
          |SELECT id AS doc_id, least(id, min(r)) AS cluster_id
          |FROM reach
          |GROUP BY id
@@ -651,10 +732,7 @@ object PipelineQueries {
     //      q60 clustering; two tiny aggs on the cluster table. ----
     QueryDef(
       "q107_dedup_report",
-      s"""WITH RECURSIVE ${twinDocsCtes("graftplantedtail")},
-         |${shingle3Cte("t")},
-         |${bruteJaccardCtes("0.7")},
-         |$closureCtes,
+      s"""WITH RECURSIVE $twinClosureCtes,
          |cl AS (SELECT id, least(id, min(r)) AS cluster_id FROM reach GROUP BY id),
          |sz AS (SELECT cluster_id, count(*) AS cluster_size FROM cl GROUP BY 1)
          |SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
@@ -797,16 +875,8 @@ object PipelineQueries {
     // ---- rolling-hash fingerprint (portable md5-60bit shingle min) ----
     QueryDef(
       "q34_fingerprint",
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |         list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS toks
-         |  FROM documents),
-         |s AS (
-         |  SELECT doc_id,
-         |         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         |              ELSE list_transform(range(1, len(toks) - 1),
-         |                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) END AS sh
-         |  FROM t)
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |s AS (SELECT doc_id, ${OracleSql.shingles3Sql("toks")} AS sh FROM t)
          |SELECT doc_id,
          |       list_min(list_transform(sh,
          |         x -> ${OracleSql.md5Long("x")})) AS fp
@@ -1110,21 +1180,7 @@ object PipelineQueries {
       "q105_lm_quality",
       s"""WITH tk AS (
          |  SELECT doc_id, $toksSql AS t FROM documents),
-         |bi AS (
-         |  SELECT doc_id, t[i] AS prev, t[i+1] AS cur
-         |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-         |        FROM tk WHERE len(t) >= 2)),
-         |c2 AS (SELECT prev, cur, count(*) AS c2 FROM bi GROUP BY 1, 2),
-         |c1 AS (SELECT prev, CAST(sum(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1),
-         |v AS (SELECT count(DISTINCT cur) AS v FROM c2),
-         |q AS (
-         |  SELECT bi.doc_id,
-         |         CAST(round(1000000 *
-         |           ln(CAST(c1.c1 + v.v AS DOUBLE) / (c2.c2 + 1))) AS BIGINT) AS q
-         |  FROM bi
-         |  JOIN c2 USING (prev, cur)
-         |  JOIN c1 USING (prev)
-         |  CROSS JOIN v)
+         |${bigramSurprisalCtes("doc_id", "q")}
          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
          |       round(CAST(sum(q) AS DOUBLE) / count(*) / 1000000, 4) AS avg_nll
          |FROM q
@@ -1375,9 +1431,7 @@ object PipelineQueries {
       "q109_source_cap",
       s"""WITH m AS (
          |  SELECT source, doc_id,
-         |         len(list_filter(string_split(text, ' '),
-         |             w -> list_contains($stopwordsSql, w))) * 1000000
-         |           // len(string_split(text, ' ')) AS stop_ppm
+         |         $stopPpmSql AS stop_ppm
          |  FROM documents)
          |SELECT source, doc_id, stop_ppm, rank FROM (
          |  SELECT *, row_number() OVER (PARTITION BY source
@@ -1388,11 +1442,9 @@ object PipelineQueries {
       import org.apache.spark.sql.Encoders
       import graft.functions.{Scored, TopKAggregator}
       val topk = udaf(new TopKAggregator(10), Encoders.product[Scored])
-      val toks = split(col("text"), " ")
       Tables.documents(s, dir)
         .select(col("source"), col("doc_id"),
-          floor(size(filter(toks, w => w.isin(stopwords: _*))).cast("long") * 1000000L /
-            size(toks).cast("long")).cast("long").as("stop_ppm"))
+          stopPpm.as("stop_ppm"))
         .groupBy("source")
         .agg(topk(col("stop_ppm").cast("double"), col("doc_id")).as("top"))
         .select(col("source"), posexplode(col("top")).as(Seq("pos", "sc")))
@@ -1410,16 +1462,7 @@ object PipelineQueries {
     //      the approximation loss is value-checked, not eyeballed. ----
     QueryDef(
       "q110_ann_recall",
-      s"""WITH qs AS (SELECT vec_id AS query_id, embedding AS q_embedding
-         |            FROM embeddings WHERE vec_id < 5),
-         |bf AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.query_id, e.vec_id AS neighbor_id,
-         |           row_number() OVER (PARTITION BY q.query_id
-         |             ORDER BY ${cosineSql("q.q_embedding", "e.embedding")} DESC,
-         |                      e.vec_id) AS rank
-         |    FROM embeddings e JOIN qs q ON q.query_id <> e.vec_id) t
-         |  WHERE rank <= 10),
+      s"""WITH ${OracleSql.bruteTopKCtes(5, 10)},
          |ivf AS (SELECT query_id, neighbor_id FROM ($ivfOracleSql) t2),
          |hits AS (
          |  SELECT i.query_id, count(*) AS n
@@ -1533,16 +1576,7 @@ object PipelineQueries {
         val discCase = disc.zipWithIndex
           .map { case (v, i) => s"WHEN ${i + 1} THEN $v" }.mkString(" ")
         val idcg = 29966114L
-        s"""WITH qs AS (SELECT vec_id AS query_id, embedding AS q_embedding
-           |            FROM embeddings WHERE vec_id < 5),
-           |bf AS (
-           |  SELECT query_id, neighbor_id, rank FROM (
-           |    SELECT q.query_id, e.vec_id AS neighbor_id,
-           |           row_number() OVER (PARTITION BY q.query_id
-           |             ORDER BY ${cosineSql("q.q_embedding", "e.embedding")} DESC,
-           |                      e.vec_id) AS rank
-           |    FROM embeddings e JOIN qs q ON q.query_id <> e.vec_id) t
-           |  WHERE rank <= 10),
+        s"""WITH ${OracleSql.bruteTopKCtes(5, 10)},
            |ivf AS (SELECT query_id, neighbor_id, rank AS pos
            |        FROM ($ivfOracleSql) t2),
            |scored AS (
@@ -1601,9 +1635,7 @@ object PipelineQueries {
            |  SELECT doc_id,
            |         CAST(1 AS BIGINT) AS f_bias,
            |         CAST(len(string_split(text, ' ')) AS BIGINT) AS f_ntok,
-           |         CAST(floor(CAST(len(list_filter(string_split(text, ' '),
-           |             w -> list_contains($stopwordsSql, w))) * 1000000 AS DOUBLE)
-           |           / len(string_split(text, ' '))) AS BIGINT) AS f_stop_ppm,
+           |         $stopPpmSql AS f_stop_ppm,
            |         CAST(floor(CAST(len(list_distinct(string_split(text, ' ')))
            |             * 1000000 AS DOUBLE)
            |           / len(string_split(text, ' '))) AS BIGINT) AS f_distinct_ppm,
@@ -1625,8 +1657,7 @@ object PipelineQueries {
         .select(col("doc_id"),
           lit(1L).as("f_bias"),
           size(toks).cast("long").as("f_ntok"),
-          floor(size(filter(toks, w => w.isin(stopwords: _*))).cast("long") * 1000000L /
-            size(toks).cast("long")).cast("long").as("f_stop_ppm"),
+          stopPpm.as("f_stop_ppm"),
           floor(size(array_distinct(toks)).cast("long") * 1000000L /
             size(toks).cast("long")).cast("long").as("f_distinct_ppm"),
           when(col("lang") === "en", 1L).otherwise(-1L).as("y"))
@@ -1913,10 +1944,7 @@ object PipelineQueries {
     //      transitive closure + per-cluster argmax window. ----
     QueryDef(
       "q123_cluster_reps",
-      s"""WITH RECURSIVE ${twinDocsCtes("graftplantedtail")},
-         |${shingle3Cte("t")},
-         |${bruteJaccardCtes("0.7")},
-         |$closureCtes,
+      s"""WITH RECURSIVE $twinClosureCtes,
          |cl AS (SELECT id, least(id, min(r)) AS cluster_id FROM reach GROUP BY id),
          |sc AS (SELECT cl.cluster_id, cl.id, CAST(length(d.text) AS BIGINT) AS score
          |       FROM cl JOIN d ON d.doc_id = cl.id)
@@ -2637,21 +2665,7 @@ object PipelineQueries {
       "q146_domain_reweight",
       s"""WITH tk AS (
          |  SELECT source, $toksSql AS t FROM documents),
-         |bi AS (
-         |  SELECT source, t[i] AS prev, t[i+1] AS cur
-         |  FROM (SELECT source, t, unnest(range(1, len(t))) AS i
-         |        FROM tk WHERE len(t) >= 2)),
-         |c2 AS (SELECT prev, cur, count(*) AS c2 FROM bi GROUP BY 1, 2),
-         |c1 AS (SELECT prev, CAST(sum(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1),
-         |v AS (SELECT count(DISTINCT cur) AS v FROM c2),
-         |q AS (
-         |  SELECT bi.source,
-         |         CAST(round(1000000 *
-         |           ln(CAST(c1.c1 + v.v AS DOUBLE) / (c2.c2 + 1))) AS BIGINT) AS q
-         |  FROM bi
-         |  JOIN c2 USING (prev, cur)
-         |  JOIN c1 USING (prev)
-         |  CROSS JOIN v),
+         |${bigramSurprisalCtes("source", "q")},
          |per AS (
          |  SELECT source, CAST(count(*) AS BIGINT) AS n_bigrams,
          |         CAST(sum(q) AS BIGINT) AS sumq
@@ -2711,18 +2725,7 @@ object PipelineQueries {
          |  SELECT doc_id, CAST(max(nt) AS BIGINT) AS n_tokens,
          |         CAST(sum(q) // max(nt) AS BIGINT) AS ent_micronat
          |  FROM eq GROUP BY 1),
-         |bi AS (
-         |  SELECT doc_id, t[i] AS prev, t[i+1] AS cur
-         |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-         |        FROM tk WHERE len(t) >= 2)),
-         |c2 AS (SELECT prev, cur, count(*) AS c2 FROM bi GROUP BY 1, 2),
-         |c1 AS (SELECT prev, CAST(sum(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1),
-         |v AS (SELECT count(DISTINCT cur) AS v FROM c2),
-         |nq AS (
-         |  SELECT bi.doc_id,
-         |         CAST(round(1000000 *
-         |           ln(CAST(c1.c1 + v.v AS DOUBLE) / (c2.c2 + 1))) AS BIGINT) AS q
-         |  FROM bi JOIN c2 USING (prev, cur) JOIN c1 USING (prev) CROSS JOIN v),
+         |${bigramSurprisalCtes("doc_id", "nq")},
          |nll AS (
          |  SELECT doc_id, CAST(sum(q) // count(*) AS BIGINT) AS nll_micro
          |  FROM nq GROUP BY 1),
@@ -2796,16 +2799,7 @@ object PipelineQueries {
     //      AND the exact refine. ----
     QueryDef(
       "q155_pq_recall",
-      s"""WITH qs AS (SELECT vec_id AS query_id, embedding AS q_embedding
-         |            FROM embeddings WHERE vec_id < 8),
-         |bf AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.query_id, e.vec_id AS neighbor_id,
-         |           row_number() OVER (PARTITION BY q.query_id
-         |             ORDER BY ${l2Sql("q.q_embedding", "e.embedding")} ASC,
-         |                      e.vec_id) AS rank
-         |    FROM embeddings e JOIN qs q ON q.query_id <> e.vec_id) t
-         |  WHERE rank <= 5),
+      s"""WITH ${OracleSql.bruteTopKCtes(8, 5, s"${l2Sql("q.q_embedding", "e.embedding")} ASC")},
          |short AS (SELECT query_id, neighbor_id
          |          FROM (${pqOracleSqlCut(100)}) t2),
          |ref AS (
@@ -2904,10 +2898,7 @@ object PipelineQueries {
     //      the exact q104 md5-bucket rule on the rep. ----
     QueryDef(
       "q166_leakage_safe_split",
-      s"""WITH RECURSIVE ${twinDocsCtes("graftplantedtail")},
-         |${shingle3Cte("t")},
-         |${bruteJaccardCtes("0.7")},
-         |$closureCtes,
+      s"""WITH RECURSIVE $twinClosureCtes,
          |cl AS (SELECT id, least(id, min(r)) AS rep FROM reach GROUP BY id),
          |alld AS (
          |  SELECT t.doc_id, coalesce(cl.rep, t.doc_id) AS rep
@@ -3552,13 +3543,7 @@ object PipelineQueries {
     //      snapshot; every tie broken by doc_id. ----
     QueryDef(
       "q204_curriculum", {
-        s"""WITH t AS (
-           |  SELECT doc_id, source,
-           |         CAST(len(list_filter(string_split(text, ' '),
-           |                w -> list_contains($stopwordsSql, w)))
-           |              AS BIGINT) * 1000000
-           |           // CAST(len(string_split(text, ' ')) AS BIGINT) AS sc
-           |  FROM documents),
+        s"""WITH $sourceStopPpmCte,
            |b AS (
            |  SELECT doc_id, source, sc,
            |         11 - ntile(10) OVER (ORDER BY sc, doc_id) AS decile
@@ -3573,14 +3558,7 @@ object PipelineQueries {
            |FROM p ORDER BY train_pos""".stripMargin
       }) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val scored = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          expr(s"""CAST(size(filter(split(text, ' '),
-                  |  w -> array_contains(array(${stopwords
-                       .map(w => s"'$w'").mkString(", ")}), w)))
-                  |AS BIGINT) * 1000000
-                  |div CAST(size(split(text, ' ')) AS BIGINT)""".stripMargin)
-            .as("sc"))
+      val scored = sourceStopPpm(s, dir)
       val binned = Scale.equiDepthBins(scored, 10, "sc", "doc_id")
         .withColumn("decile", (lit(11) - col("bin")).cast("long"))
         .withColumn("pos",
@@ -3788,13 +3766,7 @@ object PipelineQueries {
     //      by source. ----
     QueryDef(
       "q207_bootstrap_ci",
-      s"""WITH t AS (
-         |  SELECT doc_id, source,
-         |         CAST(len(list_filter(string_split(text, ' '),
-         |                w -> list_contains($stopwordsSql, w)))
-         |              AS BIGINT) * 1000000
-         |           // CAST(len(string_split(text, ' ')) AS BIGINT) AS sc
-         |  FROM documents),
+      s"""WITH $sourceStopPpmCte,
          |r AS (
          |  SELECT t.*,
          |         row_number() OVER (PARTITION BY source ORDER BY doc_id)
@@ -3831,14 +3803,7 @@ object PipelineQueries {
          |JOIN mr hi ON hi.source = pt.source AND hi.q = 196
          |ORDER BY pt.source""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val t = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          expr(s"""CAST(size(filter(split(text, ' '),
-                  |  w -> array_contains(array(${stopwords
-                       .map(w => s"'$w'").mkString(", ")}), w)))
-                  |AS BIGINT) * 1000000
-                  |div CAST(size(split(text, ' ')) AS BIGINT)""".stripMargin)
-            .as("sc"))
+      val t = sourceStopPpm(s, dir)
         .localCheckpoint() // read by the rank frame and the point estimate
       val bySrc = Window.partitionBy("source")
       val r = t
@@ -4332,28 +4297,13 @@ object PipelineQueries {
              |  JOIN d$r du ON du.n = e.u AND du.d >= 3
              |  JOIN d$r dv ON dv.n = e.v AND dv.d >= 3)""".stripMargin
         }.mkString(",\n")
-        s"""WITH li AS (
-           |  SELECT l_orderkey, l_partkey FROM lineitem
-           |  WHERE l_orderkey % 3 = 0 AND l_partkey % 2 = 0),
-           |e0 AS (
-           |  SELECT DISTINCT x.l_partkey AS u, y.l_partkey AS v
-           |  FROM li x JOIN li y
-           |    ON x.l_orderkey = y.l_orderkey
-           |   AND x.l_partkey < y.l_partkey),
+        s"""WITH ${OracleSql.partPairsCtes},
            |$peels
            |SELECT n, CAST(count(*) AS BIGINT) AS degree FROM (
            |  SELECT u AS n FROM e4 UNION ALL SELECT v FROM e4) t
            |GROUP BY 1 ORDER BY n""".stripMargin
       }) { (s, dir) =>
-      val li = Tables.lineitem(s, dir)
-        .filter(col("l_orderkey") % 3 === 0 && col("l_partkey") % 2 === 0)
-        .select("l_orderkey", "l_partkey")
-      val e = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("u"), col("y.l_partkey").as("v"))
-        .distinct()
-      graft.graph.Graph.kCorePeel(e, k = 3, rounds = 4)
+      graft.graph.Graph.kCorePeel(Tables.partPairs(s, dir).distinct(), k = 3, rounds = 4)
         .orderBy("n")
     },
 
@@ -4415,13 +4365,7 @@ object PipelineQueries {
     //      aggregate → 1-row report. ----
     QueryDef(
       "q218_neyman_alloc",
-      s"""WITH t AS (
-         |  SELECT doc_id, source,
-         |         CAST(len(list_filter(string_split(text, ' '),
-         |                w -> list_contains($stopwordsSql, w)))
-         |              AS BIGINT) * 1000000
-         |           // CAST(len(string_split(text, ' ')) AS BIGINT) AS sc
-         |  FROM documents),
+      s"""WITH $sourceStopPpmCte,
          |m AS (
          |  SELECT source, count(*) AS n,
          |         CAST(round(CAST(sum(sc) AS DOUBLE) / count(*)) AS BIGINT)
@@ -4450,14 +4394,7 @@ object PipelineQueries {
          |            THEN (a * nn - b * b) * 10000 // (a * nn) END
          |         AS BIGINT) AS neyman_gain_bp
          |FROM agg""".stripMargin) { (s, dir) =>
-      val t = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          expr(s"""CAST(size(filter(split(text, ' '),
-                  |  w -> array_contains(array(${stopwords
-                       .map(w => s"'$w'").mkString(", ")}), w)))
-                  |AS BIGINT) * 1000000
-                  |div CAST(size(split(text, ' ')) AS BIGINT)""".stripMargin)
-            .as("sc"))
+      val t = sourceStopPpm(s, dir)
       val m = t.groupBy("source")
         .agg(count(lit(1)).as("n"), sum("sc").as("ssum"))
         .select(col("source"), col("n"),
@@ -4623,43 +4560,23 @@ object PipelineQueries {
     //      its three vertices. ----
     QueryDef(
       "q221_local_clustering",
-      """WITH li AS (
-        |  SELECT l_orderkey, l_partkey FROM lineitem
-        |  WHERE l_orderkey % 3 = 0 AND l_partkey % 2 = 0),
-        |e0 AS (
-        |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM li x JOIN li y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-        |deg AS (SELECT n, count(*) AS d FROM (
-        |  SELECT a AS n FROM e0 UNION ALL SELECT b FROM e0) t GROUP BY 1),
-        |o AS (
-        |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-        |              THEN e0.a ELSE e0.b END AS src,
-        |         CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-        |              THEN e0.b ELSE e0.a END AS dst
-        |  FROM e0 JOIN deg da ON da.n = e0.a JOIN deg db ON db.n = e0.b),
-        |w AS (SELECT e1.src AS s, e1.dst AS w1, e2.dst AS w2
-        |      FROM o e1 JOIN o e2 ON e1.src = e2.src AND e1.dst < e2.dst),
-        |tri AS (
-        |  SELECT n, count(*) AS n_tri FROM (
-        |    SELECT unnest([s, w1, w2]) AS n
-        |    FROM w JOIN e0 ON e0.a = w.w1 AND e0.b = w.w2) t
-        |  GROUP BY 1)
-        |SELECT deg.n, CAST(deg.d AS BIGINT) AS d,
-        |       CAST(coalesce(tri.n_tri, 0) AS BIGINT) AS n_tri,
-        |       CAST(CASE WHEN deg.d >= 2 THEN
-        |         CAST(10000 * 2 * coalesce(tri.n_tri, 0) AS HUGEINT)
-        |           // (deg.d * (deg.d - 1)) END AS BIGINT) AS lcc_bp
-        |FROM deg LEFT JOIN tri ON tri.n = deg.n
-        |ORDER BY deg.n""".stripMargin) { (s, dir) =>
-      val li = Tables.lineitem(s, dir)
-        .filter(col("l_orderkey") % 3 === 0 && col("l_partkey") % 2 === 0)
-        .select("l_orderkey", "l_partkey")
-      val e = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("u"), col("y.l_partkey").as("v"))
-      graft.graph.Graph.localClustering(e).orderBy("n")
+      s"""WITH ${OracleSql.partPairsCtes},
+         |${OracleSql.degreeOrientedCtes},
+         |w AS (SELECT e1.src AS s, e1.dst AS w1, e2.dst AS w2
+         |      FROM o e1 JOIN o e2 ON e1.src = e2.src AND e1.dst < e2.dst),
+         |tri AS (
+         |  SELECT n, count(*) AS n_tri FROM (
+         |    SELECT unnest([s, w1, w2]) AS n
+         |    FROM w JOIN e0 ON e0.u = w.w1 AND e0.v = w.w2) t
+         |  GROUP BY 1)
+         |SELECT deg.n, CAST(deg.d AS BIGINT) AS d,
+         |       CAST(coalesce(tri.n_tri, 0) AS BIGINT) AS n_tri,
+         |       CAST(CASE WHEN deg.d >= 2 THEN
+         |         CAST(10000 * 2 * coalesce(tri.n_tri, 0) AS HUGEINT)
+         |           // (deg.d * (deg.d - 1)) END AS BIGINT) AS lcc_bp
+         |FROM deg LEFT JOIN tri ON tri.n = deg.n
+         |ORDER BY deg.n""".stripMargin) { (s, dir) =>
+      graft.graph.Graph.localClustering(Tables.partPairs(s, dir)).orderBy("n")
     },
 
     // ---- C4 line-level cleaning (q222): Raffel JMLR 2020 §2.2 — keep
@@ -5014,24 +4931,7 @@ object PipelineQueries {
     QueryDef(
       "q306_dedup_agreement", {
         val winnowCtes =
-          s"""g AS (
-             |  SELECT doc_id,
-             |         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-             |              ELSE list_transform(range(1, len(toks) - 1),
-             |                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) END AS sh
-             |  FROM t),
-             |h AS (
-             |  SELECT doc_id,
-             |         list_transform(sh, x -> ${OracleSql.md5Long("x")}) AS hs
-             |  FROM g),
-             |f AS (
-             |  SELECT doc_id, unnest(
-             |    CASE WHEN len(hs) < 4 THEN [list_min(hs)]
-             |         ELSE list_distinct(list_transform(range(1, len(hs) - 2),
-             |              i -> list_min(hs[i:i+3]))) END) AS fp
-             |  FROM h),
-             |dfc AS (SELECT fp FROM f GROUP BY fp HAVING count(*) <= 50),
-             |ff AS (SELECT doc_id, fp FROM f JOIN dfc USING (fp)),
+          s"""${OracleSql.winnowCtes},
              |wp AS (
              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
              |  FROM ff a JOIN ff b ON a.fp = b.fp AND a.doc_id < b.doc_id
@@ -5106,16 +5006,7 @@ object PipelineQueries {
         val rows = levels.map(np =>
           s"SELECT $np AS nprobe, n AS n_hits, CAST(n * 10000 // den AS BIGINT) AS recall_bp FROM h$np CROSS JOIN bfn")
           .mkString(" UNION ALL ")
-        s"""WITH qs AS (SELECT vec_id AS query_id, embedding AS q_embedding
-           |            FROM embeddings WHERE vec_id < 5),
-           |bf AS (
-           |  SELECT query_id, neighbor_id FROM (
-           |    SELECT q.query_id, e.vec_id AS neighbor_id,
-           |           row_number() OVER (PARTITION BY q.query_id
-           |             ORDER BY ${cosineSql("q.q_embedding", "e.embedding")} DESC,
-           |                      e.vec_id) AS rank
-           |    FROM embeddings e JOIN qs q ON q.query_id <> e.vec_id) t
-           |  WHERE rank <= 10),
+        s"""WITH ${OracleSql.bruteTopKCtes(5, 10)},
            |bfn AS (SELECT greatest(CAST(count(*) AS BIGINT), 1) AS den FROM bf),
            |$hitCtes
            |SELECT nprobe, n_hits, recall_bp FROM ($rows) u

@@ -535,28 +535,8 @@ object ScienceQueries {
     //      dropped loudly by the cap, never corpus²). ----
     QueryDef(
       "q294_winnowing",
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |         list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS toks
-         |  FROM documents),
-         |g AS (
-         |  SELECT doc_id,
-         |         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         |              ELSE list_transform(range(1, len(toks) - 1),
-         |                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) END AS sh
-         |  FROM t),
-         |h AS (
-         |  SELECT doc_id,
-         |         list_transform(sh, x -> ${OracleSql.md5Long("x")}) AS hs
-         |  FROM g),
-         |f AS (
-         |  SELECT doc_id, unnest(
-         |    CASE WHEN len(hs) < 4 THEN [list_min(hs)]
-         |         ELSE list_distinct(list_transform(range(1, len(hs) - 2),
-         |              i -> list_min(hs[i:i+3]))) END) AS fp
-         |  FROM h),
-         |dfc AS (SELECT fp FROM f GROUP BY fp HAVING count(*) <= 50),
-         |ff AS (SELECT doc_id, fp FROM f JOIN dfc USING (fp))
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |${OracleSql.winnowCtes}
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |       CAST(count(*) AS BIGINT) AS shared_fps
          |FROM ff a JOIN ff b ON a.fp = b.fp AND a.doc_id < b.doc_id

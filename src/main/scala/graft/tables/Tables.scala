@@ -136,6 +136,21 @@ object Tables {
       .distinct()
   }
 
+  /** The part co-occurrence graph: (u, v) = two sampled parts on one
+    * order, u < v, one row per co-occurrence (not distinct). The sample
+    * keeps orders with l_orderkey % 3 = 0 and parts with l_partkey % 2 = 0.
+    * The one spelling every part-graph query builds on;
+    * `OracleSql.partPairsCtes` mirrors it (distinct). */
+  def partPairs(spark: SparkSession, dir: String): DataFrame = {
+    val li = lineitem(spark, dir)
+      .filter(col("l_orderkey") % 3 === 0 && col("l_partkey") % 2 === 0)
+      .select("l_orderkey", "l_partkey")
+    li.as("x").join(li.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey") &&
+          col("x.l_partkey") < col("y.l_partkey"))
+      .select(col("x.l_partkey").as("u"), col("y.l_partkey").as("v"))
+  }
+
   /** (s, c) pairs as a directed-both-ways (src, dst) edge list. */
   def bothWays(pairs: DataFrame): DataFrame =
     pairs.select(col("s").as("src"), col("c").as("dst"))

@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.LongType
 
 /** `Tables.load`'s schema memo: a table version's footer is read by one
   * Spark job the first time it loads, and never again while its files
-  * and the session's parquet confs stay the same.
+  * and the session's parquet confs stay the same. Also the part
+  * co-occurrence graph, `Tables.partPairs`, on a hand-built lineitem.
   */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
@@ -47,6 +48,20 @@ class TablesSpec extends SparkSpec {
     val part = new java.io.File(staging).listFiles()
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
     Files.copy(part.toPath, Paths.get(dir, s"$name.parquet"), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("partPairs: sampled parts of one order, u < v, one row per co-occurrence") {
+    val dir = tempDir("tables-parts")
+    // order 5 fails l_orderkey % 3 = 0; parts 7 and 9 fail l_partkey % 2 = 0;
+    // 8 (order 3) and 10 (order 6) share no order
+    writeTable(Seq(3L -> 8L, 3L -> 2L, 3L -> 7L, 3L -> 4L,
+        5L -> 2L, 5L -> 4L,
+        6L -> 4L, 6L -> 10L, 6L -> 9L, 6L -> 2L)
+      .toDF("l_orderkey", "l_partkey"), dir, "lineitem")
+    val pairs = Tables.partPairs(spark, dir)
+    assert(pairs.columns.toSeq == Seq("u", "v"))
+    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
+      Seq((2L, 4L), (2L, 4L), (2L, 8L), (2L, 10L), (4L, 8L), (4L, 10L)))
   }
 
   test("a second load of an unchanged table launches no job") {
